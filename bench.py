@@ -773,30 +773,35 @@ def _host_window(st0, sec: float) -> dict | None:
     }
 
 
+def _label_in_batches(texts, trie, ranks, cutoffs) -> None:
+    """Label ``texts`` with the fused stage-1 labeler in batches of the size
+    the Spark pass coalesces to."""
+    from ht_ner_spark.operators import fused_vec
+
+    step = fused_vec.COALESCE_ROWS
+    for lo in range(0, len(texts), step):
+        chunk = texts[lo:lo + step]
+        fused_vec.label_batch(range(lo, lo + len(chunk)), chunk, trie,
+                              ranks, cutoffs)
+
+
 def _calib_worker(shard, ranks, cutoffs, barrier, outq) -> None:
     """One model executor: generate own input shard (untimed), sync on the
-    barrier, then run the exact fused stage-1 inner loop over it."""
+    barrier, then run the fused stage-1 labeler (fused_vec.label_batch) over
+    it in production-sized batches."""
     import re as _re
 
     from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_rows_range
-    from ht_ner_spark.operators.fused import _label_row
     from ht_ner_spark.operators.gazetteer import build_trie
     from ht_ner_spark.operators.tokens import TOKEN_PATTERN
 
     texts = [r[5] for r in synthetic_rows_range(shard[0], shard[1])]
     trie = build_trie(dict(DEFAULT_GAZETTEER))
     tok_re = _re.compile(TOKEN_PATTERN)
+    n_toks = sum(len(tok_re.findall(t or "")) for t in texts)
     barrier.wait()
     t0 = time.monotonic()
-    n_toks = 0
-    for row_id, text in enumerate(texts):
-        matches = list(tok_re.finditer(text or ""))
-        toks = [m.group(0) for m in matches]
-        n_toks += len(toks)
-        out: list = []
-        _label_row(row_id, toks, [t.lower() for t in toks],
-                   [m.start() for m in matches], [m.end() for m in matches],
-                   trie, cutoffs, ranks, out)
+    _label_in_batches(texts, trie, ranks, cutoffs)
     outq.put((n_toks, time.monotonic() - t0))
 
 
@@ -806,8 +811,8 @@ def scaleout_calib(rows: int | None = None, levels: tuple[int, int] = (2, 8)
     INDEPENDENT PROCESSES — the sandbox model of the north rule's N vs 4N
     executors. A Spark executor is an isolated process with its own heap;
     local[k] task slots share one JVM (GC, daemon, allocator) and are the
-    wrong model for scale-OUT. Here the exact fused stage-1 labeling loop
-    (tokenize + _label_row, frequency branch active) runs over a fixed total
+    wrong model for scale-OUT. Here the fused stage-1 labeler
+    (fused_vec.label_batch, frequency branch active) runs over a fixed total
     input split across 2 vs 8 forked workers: same input, no shared runtime,
     no shuffle — the component a cluster scales by adding executors.
     Cross-executor stages (frequency agg, vote groupBy, stage-4 join) are
@@ -876,22 +881,16 @@ def variant_runs() -> dict:
     """One spark-submit run per engine variant at a fixed modest size, same
     cores — publishes the cost of the alternates the engine ships (VERDICT r2
     #5): 'hmm' = distributed Baum-Welch vote aggregation, 'bucketed' =
-    row_id-bucketed no-Exchange stage-4 join, 'loop_labeler' = the per-token
-    stage-1 reference loop (the round-4 columnar rewrite's win is
-    default vs this), 'relational_freq' = the exploded JVM frequency agg
-    (vs the default Arrow partial-count). 'default' at the same size
+    row_id-bucketed no-Exchange stage-4 join. 'default' at the same size
     anchors the comparison."""
-    # 150k: large enough that the Arrow-path wins are visible over fixed
-    # costs (at 100k the one-run table inverts — default measured 8.5k
-    # vs relational_freq 10.2k, pure floor noise)
+    # 150k: large enough that variant differences are visible over fixed
+    # costs (at 100k one-run differences were pure floor noise)
     rows = int(os.environ.get("SPARK_GRAFT_VARIANT_ROWS", "150000"))
     cores = SCALING_CORES[-1]
     out: dict = {"rows": rows, "cores": cores}
     for name, extra in (("default", ()),
                         ("hmm", ("--aggregator", "hmm")),
-                        ("bucketed", ("--bucket-buckets", "8")),
-                        ("loop_labeler", ("--fused-impl", "loop")),
-                        ("relational_freq", ("--freq-impl", "relational"))):
+                        ("bucketed", ("--bucket-buckets", "8"))):
         r = _one_scaling_run(cores, extra_args=extra, rows=rows)
         if r:
             out[name] = {"sec": r["sec"], "triples_per_sec": r["triples_per_sec"],
@@ -901,17 +900,15 @@ def variant_runs() -> dict:
 
 
 def fused_labeler_microbench(spark, rows: int = 4000) -> dict:
-    """tokens/s/core of the fused stage-1 labeler's inner loop — the engine's
-    CPU floor at 100x scale (VERDICT r2 #6). Runs the exact per-batch code
-    (tokenize + _label_row) single-threaded in THIS Python process over
-    synthetic corpus text collected once; no Spark task scheduling in the
-    timed window, so the number is per-core and comparable across rounds.
-    PLANS.md documents the C-extension path (ahocorasick) a production
-    deployment would swap into this loop."""
+    """tokens/s/core of the fused stage-1 labeler — the engine's CPU floor
+    at 100x scale (VERDICT r2 #6). Runs fused_vec.label_batch, the columnar
+    labeler the Spark pass runs per Arrow batch, single-threaded in THIS
+    Python process over synthetic corpus text collected once; no Spark task
+    scheduling in the timed window, so the number is per-core and
+    comparable across rounds."""
     import re as _re
 
     from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
-    from ht_ner_spark.operators.fused import _label_row
     from ht_ner_spark.operators.gazetteer import build_trie
     from ht_ner_spark.operators.tokens import TOKEN_PATTERN
 
@@ -925,47 +922,18 @@ def fused_labeler_microbench(spark, rows: int = 4000) -> dict:
     tok_re = _re.compile(TOKEN_PATTERN)
     # frequency ranks + cutoffs exactly as the pipeline broadcasts them —
     # without these the antirule vote branch never fires and the number
-    # overstates the loop
+    # overstates the labeler
     cnt = Counter(t for txt in texts for t in tok_re.findall(txt or ""))
+    n_toks = sum(cnt.values())
     max_k = max(int(len(cnt) * t) for t in THRESHOLDS)
     cutoffs = [(f"freq_{t}", int(len(cnt) * t)) for t in THRESHOLDS]
     ranks = {tok: i + 1 for i, (tok, _) in enumerate(cnt.most_common(max_k))}
-    n_toks = 0
     t0 = time.monotonic()
-    for row_id, text in enumerate(texts):
-        matches = list(tok_re.finditer(text or ""))
-        toks = [m.group(0) for m in matches]
-        n_toks += len(toks)
-        out: list = []
-        _label_row(row_id, toks, [t.lower() for t in toks],
-                   [m.start() for m in matches], [m.end() for m in matches],
-                   trie, cutoffs, ranks, out)
+    _label_in_batches(texts, trie, ranks, cutoffs)
     sec = time.monotonic() - t0
-    result = {"rows": rows, "tokens": n_toks, "sec": round(sec, 3),
-              "tokens_per_sec_core": round(n_toks / sec, 1) if sec > 0 else None,
-              "rows_per_sec_core": round(rows / sec, 1) if sec > 0 else None}
-    # gated TrieMatcher C-backend variant (VERDICT r3 next-#6): same loop,
-    # gazetteer matches from the pyahocorasick automaton — reported only
-    # where the extension exists, so the artifact records the CPU-floor
-    # lift the day it is installable.
-    from ht_ner_spark.operators.gazetteer import HAS_AHOCORASICK, TrieMatcher
-    if HAS_AHOCORASICK:  # pragma: no cover - extension absent in sandbox
-        matcher = TrieMatcher(dict(DEFAULT_GAZETTEER), backend="ahocorasick")
-        t0 = time.monotonic()
-        for row_id, text in enumerate(texts):
-            matches = list(tok_re.finditer(text or ""))
-            toks = [m.group(0) for m in matches]
-            low = [t.lower() for t in toks]
-            out = []
-            _label_row(row_id, toks, low,
-                       [m.start() for m in matches],
-                       [m.end() for m in matches],
-                       None, cutoffs, ranks, out,
-                       gaz_matches=sorted(matcher.matches(toks, low)))
-        ac_sec = time.monotonic() - t0
-        result["tokens_per_sec_core_ahocorasick"] = (
-            round(n_toks / ac_sec, 1) if ac_sec > 0 else None)
-    return result
+    return {"rows": rows, "tokens": n_toks, "sec": round(sec, 3),
+            "tokens_per_sec_core": round(n_toks / sec, 1) if sec > 0 else None,
+            "rows_per_sec_core": round(rows / sec, 1) if sec > 0 else None}
 
 
 def ann_tradeoff(spark, sf_dir: str, n_queries: int = 50, k: int = 10) -> dict | None:

@@ -7,13 +7,16 @@ first-seen order); FrequencyDetector(threshold t) labels any token whose text
 is in the top ``int(V * t)`` of that ranking as NOT_NAME, for
 t in {0.01, 0.02, 0.03, 0.04, 0.05}.
 
-Spark shape: explode -> filter -> groupBy(token).count() (map-side partial agg
-makes this one cheap shuffle) -> row_number window ordered by
+Production shape (pipeline._frequency_inputs): word_frequency_agg_arrow
+counts tokens per Arrow batch and merges the vocabulary-sized partials in
+one hash-agg shuffle; the driver collects the top-k ordered by
 (count DESC, first_seen ASC) — the deterministic stand-in for Counter's
-insertion-order tie-break, replicated by the oracle — -> top-k cut. The
-ranked list is tiny (vocabulary-sized) and is broadcast back as the
-anti-dimension; votes come from a broadcast semi-join, so the whole operator
-costs one aggregation shuffle regardless of corpus size.
+insertion-order tie-break, replicated by the oracle — and the fused labeler
+votes from that broadcast dict. When the top-k exceeds the broadcast
+budget, the relational form takes over: word_frequency (exploded token
+view, distributed exact rank) and frequency_votes (broadcast join of the
+ranked vocabulary). That relational form is also the composed reference
+the tests diff the fused path against.
 
 spacy is_stop/is_punct are approximated with a fixed stopword set + an
 all-punctuation regex (deviation shared with the oracle, SURVEY §7.0).
@@ -54,7 +57,8 @@ PUNCT_REGEX = r"^[\p{P}\p{S}]+$"
 
 def word_frequency_agg(token_view: DataFrame) -> DataFrame:
     """(tok, cnt, first_seen) — the frequency aggregation WITHOUT the global
-    rank (one hash-agg shuffle). The pipeline ranks driver-side when the
+    rank (one hash-agg shuffle) over the exploded token view. The pipeline
+    scans with word_frequency_agg_arrow and ranks driver-side when the
     vocabulary fits its broadcast budget; word_frequency() below adds the
     distributed exact rank for the oversized case.
 
@@ -74,35 +78,23 @@ def word_frequency_agg(token_view: DataFrame) -> DataFrame:
     )
 
 
-def word_frequency_agg_arrow(corpus: DataFrame, text_col: str = "content",
-                             pattern: str | None = None) -> DataFrame:
-    """word_frequency_agg computed from the corpus via an Arrow partial
-    aggregation — row-set identical output ON ASCII TEXT (see the
-    equivalence-domain note below), one corpus scan, no 25x token explode
-    through the JVM regex engine.
+def word_frequency_agg_arrow(corpus: DataFrame,
+                             text_col: str = "content") -> DataFrame:
+    """The production frequency scan: word_frequency_agg's (tok, cnt,
+    first_seen) computed from the corpus via an Arrow partial aggregation —
+    one corpus scan, no 25x token explode through the JVM regex engine.
 
-    EQUIVALENCE DOMAIN (round-5 clarification, per the round-4 advisor):
-    this path tokenizes with Python ``re`` — Unicode ``\\w``/``\\s``
-    semantics, the same semantics as the reference's nltk
-    RegexpTokenizer (/root/reference/src/preprocess/human_trafficking.py
-    tokenizes with Python re), so THIS path is the reference-faithful
-    one and the engine's default (PipelineConfig.freq_impl='vector').
-    The relational twin (word_frequency_agg over token_view) tokenizes
-    with JVM regexp_extract_all — ASCII ``\\w``/``\\s`` — so the two
-    DIVERGE on non-ASCII text: 'café' is one token here but
-    ['caf', 'é'] in the JVM, and NBSP separates tokens only here. The
-    row-set-identity claim and test_word_frequency_agg_arrow_parity
-    hold on ASCII corpora (the synthetic corpus is ASCII);
-    test_word_frequency_tokenizer_divergence_non_ascii pins the
-    non-ASCII divergence as an explicit, tested deviation with the
-    Python side authoritative.
+    It tokenizes with Python ``re`` through fused_vec.tokenize_batch, the
+    tokenizer of the fused labeler, so the two stage-1 passes cannot drift
+    from each other. That is Unicode ``\\w``/``\\s``, the semantics of the
+    reference's nltk RegexpTokenizer. word_frequency_agg over token_view
+    tokenizes with JVM regexp_extract_all (ASCII ``\\w``/``\\s``), so the
+    two agree on ASCII text only: 'café' is one token here but ['caf', 'é']
+    in the JVM, and NBSP separates tokens only here.
+    tests/test_fused_vec.py pins both the ASCII parity and the non-ASCII
+    divergence.
 
-    The JVM path pays regexp_extract_all + posexplode over every token
-    (~25 rows materialized per document) before its hash aggregate; this
-    path tokenizes each Arrow batch with the C-level findall + factorize
-    machinery (operators/fused_vec.tokenize_batch — the same tokenizer the
-    fused labeler uses, so the two stage-1 passes cannot drift from each
-    other) and emits ONE partial row per DISTINCT token per batch:
+    Each Arrow batch emits ONE partial row per DISTINCT token:
     (tok, cnt, r, p) with (r, p) the VALUE-minimum (row_id, pos) — two
     np.minimum.at passes, not scan order, because row_ids are not sorted
     within a batch on a real corpus. The final groupBy sums counts and
@@ -111,14 +103,7 @@ def word_frequency_agg_arrow(corpus: DataFrame, text_col: str = "content",
     word_frequency_agg (filter-then-agg == agg-then-filter for a per-key
     predicate), so JVM regex semantics (\\p{P}\\p{S}) are preserved
     bit-for-bit. Measured at 2M rows: the s1_freq stage's scan cost drops
-    ~3x (the aggregate itself was already vocabulary-sized).
-    tests/test_fused_vec.py::test_word_frequency_agg_arrow_parity holds
-    the two row-set identical."""
-    import re as _re
-
-    from ..functions.text import TOKEN_PATTERN as _TP
-
-    tok_re = _re.compile(pattern or _TP)
+    ~3x against the exploded-view aggregate."""
 
     def partials(batches):
         import numpy as np
@@ -128,7 +113,7 @@ def word_frequency_agg_arrow(corpus: DataFrame, text_col: str = "content",
 
         for pdf in batches:
             rid_tok, pos, _n, _s, _e, _tok, codes, uniques = tokenize_batch(
-                pdf["row_id"].to_numpy(), list(pdf[text_col]), tok_re)
+                pdf["row_id"].to_numpy(), list(pdf[text_col]))
             if len(codes) == 0:
                 yield pd.DataFrame({"tok": pd.Series(dtype=object),
                                     "cnt": pd.Series(dtype="int64"),

@@ -1,4 +1,4 @@
-"""Fused stage-1 labeler: every LF in ONE Arrow mapInPandas corpus pass.
+"""Fused stage-1 labeler: every LF in ONE Arrow mapInArrow corpus pass.
 
 The reference runs one full corpus pass per labeling function
 (/root/reference/sweet/run_sweet.py:52-55 — an LF loop inside a doc loop,
@@ -15,31 +15,27 @@ straight to the stage-1 table; the only remaining stage-1 shuffle is the
 corpus-global frequency aggregation, which is unavoidable — it is the
 reference's own two-pass barrier, sweet/create_lfs.py:17-34).
 
-Semantics are bit-identical to the composed relational operators
-(gazetteer.match_trie/match_relational, rules.rule_mentions,
-rules.all_caps_mentions, rules.name_case_mentions, votes.*,
-antirules.frequency_votes) — enforced by tests/test_fused.py which diffs the
-two paths row-set-wise on the synthetic corpus.
+There is one implementation: the columnar batch labeler in
+operators/fused_vec.py, which this module wraps as a Spark operator. Two
+references check it. tests/oracle.py is the Unicode-aware function-level
+reference (Python ``re`` tokenizer, same as production);
+tests/test_fused_vec.py holds the labeler row-multiset identical to it.
+The composed relational operators (gazetteer.match_trie, rules.*,
+votes.*, antirules.frequency_votes) are the Spark-level reference in
+tests/test_fused.py. They tokenize with the JVM regex engine (ASCII
+``\\w``), so they agree with this path on ASCII text only.
 
 Frequency antirules inside the fused pass: the ranked common-word list is
 collected and broadcast when its top-k fits ``max_broadcast_vocab``
 (reference vocabularies are 10k-30k entries); above that the caller falls
 back to the relational broadcast-join form — the adaptive path is chosen in
-pipeline.stage1_mentions.
-
-Two implementations share this contract (PipelineConfig.fused_impl):
-'vector' (default) is the columnar batch labeler in operators/fused_vec.py
-(per-unique predicate computation + numpy gather + columnar emission);
-'loop' is the per-token reference loop below (_label_row), kept as the
-parity twin — tests/test_fused_vec.py holds them row-multiset identical.
+pipeline.stage1_combined.
 """
 
 from __future__ import annotations
 
-import re
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -51,8 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.text import TOKEN_PATTERN
-from ..schemas import MENTIONS, VOTES
+from ..schemas import MENTIONS
 from .gazetteer import build_trie
 from .rules import RULE_PATTERNS
 
@@ -78,11 +73,6 @@ S1_COMBINED = StructType(
 )
 
 _COLS = [f.name for f in S1_COMBINED.fields]
-_TYPES = {
-    "row_id": "int64", "begin": "int32", "end": "int32",
-    "base_conf": "float64", "confidence": "float64", "weight": "float64",
-    "begin_char": "int32", "end_char": "int32",
-}
 
 
 # rule-trigger index: first trigger token -> [(lf_name, trigger, conf)].
@@ -94,193 +84,29 @@ for _idx, (_pname, _trig, _conf) in enumerate(RULE_PATTERNS):
     _TRIG_MAP.setdefault(_trig[0], []).append((f"rule{_idx}", _trig, _conf))
 
 
-def _label_row(row_id: int, toks: list[str], low: list[str],
-               starts: list[int], ends: list[int], trie: dict | None,
-               freq_cutoffs: list[tuple[str, int]],
-               common_ranks: dict[str, int], out: list,
-               gaz_matches: list[tuple[int, int, float]] | None = None
-               ) -> None:
-    n = len(toks)
-
-    # surface -> LFs whose J2 projection it feeds (built during extraction,
-    # applied in the single vote pass below)
-    surf_lfs: dict[str, list[str]] = {}
-
-    # method/local bindings: this loop IS the engine's CPU floor (PLANS.md
-    # §12), and attribute lookups inside it are measurable — bound append/
-    # get + the single-probe trie walk measured ~7% on the label loop
-    # (interleaved A/B, identical output hash)
-    emit = out.append
-    trig_get = _TRIG_MAP.get
-    setdef = surf_lfs.setdefault
-
-    # gazetteer matches either precomputed (TrieMatcher 'ahocorasick'
-    # backend — gaz_matches from the caller; emitted up front, identical
-    # row SET) or found by the inline dict-trie walk below (trie is None
-    # exactly when gaz_matches is given)
-    trie_get = trie.get if trie is not None else None
-    if gaz_matches is not None:
-        for gi, gj, w in gaz_matches:
-            surf = " ".join(toks[gi:gj])
-            lfs = setdef(surf, [])
-            if "dictionary" not in lfs:
-                lfs.append("dictionary")
-            emit(("m", row_id, "dictionary", gi, gj, surf,
-                  "PERSON_NAME", w, w, 0.0, starts[gi], ends[gj - 1]))
-
-    for i, t in enumerate(toks):
-        lt = low[i]
-
-        # -- gazetteer trie (PhraseMatcher(LOWER) semantics: all matches at
-        #    all positions — sweet/neat_extractors.py:159-183); one .get per
-        #    step instead of `in` + index (two hash probes)
-        if trie_get is not None:
-            node = trie_get(lt)
-            j = i
-            while node is not None:
-                j += 1
-                if "\0" in node:
-                    w = node["\0"]
-                    surf = " ".join(toks[i:j])
-                    lfs = setdef(surf, [])
-                    if "dictionary" not in lfs:
-                        lfs.append("dictionary")
-                    emit(("m", row_id, "dictionary", i, j, surf,
-                          "PERSON_NAME", w, w, 0.0, starts[i], ends[j - 1]))
-                node = node.get(low[j]) if j < n else None
-
-        # -- 27 rule patterns (neat_extractors.py:26-116; NNP = capitalized
-        #    proxy). Trigger window: i in range(n - k) in the per-pattern
-        #    form, i.e. the NNP index i+k must be < n.
-        cands = trig_get(lt)
-        if cands:
-            for lf, trig, conf in cands:
-                k = len(trig)
-                if i + k >= n:
-                    continue
-                if k == 2 and low[i + 1] != trig[1]:
-                    continue
-                nnp = toks[i + k]
-                c = nnp[0] if nnp else ""
-                if c.isupper() and c.isalpha():
-                    lfs = setdef(nnp, [])
-                    if lf not in lfs:
-                        lfs.append(lf)
-                    emit(("m", row_id, lf, i + k, i + k + 1, nnp,
-                          "PERSON_NAME", conf, conf, 0.0,
-                          starts[i + k], ends[i + k]))
-
-        # -- caps detectors (labeling_functions.py:76-97): position-faithful
-        if i >= 1:
-            lt_ = len(t)
-            if lt_ > 2:
-                if t.isupper():
-                    emit(("m", row_id, "all_caps", i, i + 1, t,
-                          "PERSON_NAME", 0.5, 0.5, 0.0, starts[i], ends[i]))
-                    emit(("v", row_id, "all_caps", i, i + 1, t,
-                          "PERSON_NAME", 0.0, 0.0, 1.0, 0, 0))
-                if i < n - 2 and lt_ < 15:
-                    c = t[0]
-                    if c.isupper() and c.isalpha():
-                        emit(("m", row_id, "name_case", i, i + 1, t,
-                              "PERSON_NAME", 0.5, 0.5, 0.0,
-                              starts[i], ends[i]))
-                        emit(("v", row_id, "name_case", i, i + 1, t,
-                              "PERSON_NAME", 0.0, 0.0, 1.0, 0, 0))
-
-    # -- J2 span re-projection quirk (labeling_functions.py:27-54): every
-    #    token whose EXACT text equals an extracted surface of that LF votes.
-    # -- frequency antirules (create_lfs.py:17-34 + labeling_functions.py:135-143)
-    surf_get = surf_lfs.get if surf_lfs else None
-    rank_get = common_ranks.get if common_ranks else None
-    if surf_get or rank_get:
-        for i, t in enumerate(toks):
-            lfs = surf_get(t) if surf_get else None
-            if lfs:
-                for lf in lfs:
-                    emit(("v", row_id, lf, i, i + 1, t,
-                          "PERSON_NAME", 0.0, 0.0, 1.0, 0, 0))
-            if rank_get:
-                r = rank_get(t)
-                if r is not None:
-                    for lf, max_rank in freq_cutoffs:
-                        if r <= max_rank:
-                            emit(("v", row_id, lf, i, i + 1, t,
-                                  "NOT_NAME", 0.0, 0.0, 1.0, 0, 0))
-
-
 def fused_stage1(corpus: DataFrame, gazetteer: dict[str, float],
                  common_ranks: dict[str, int] | None = None,
                  freq_cutoffs: list[tuple[str, int]] | None = None,
-                 text_col: str = "content",
-                 pattern: str = TOKEN_PATTERN,
-                 trie_backend: str = "pure",
-                 impl: str = "vector") -> DataFrame:
-    """corpus -> S1_COMBINED (mention + vote rows) in one Arrow pass.
+                 text_col: str = "content") -> DataFrame:
+    """corpus -> S1_COMBINED (mention + vote rows) in one Arrow pass of the
+    columnar labeler (operators/fused_vec.py)."""
+    from . import fused_vec
 
-    ``trie_backend``: 'pure' (default) walks the dict trie inline;
-    'ahocorasick' (import-gated, see gazetteer.TrieMatcher) precomputes the
-    gazetteer matches per row with the C automaton — identical output row
-    set, higher tokens/s/core where the extension exists.
-
-    ``impl``: 'vector' (default) runs the columnar batch labeler
-    (operators/fused_vec.py — per-unique predicate computation + numpy
-    gather + columnar emission, ~2-3x the loop path's tokens/s/core);
-    'loop' runs the per-token reference loop (_label_row). Row-set
-    identical by tests/test_fused.py and tests/test_fused_vec.py."""
     spark = corpus.sparkSession
-    trie_b = spark.sparkContext.broadcast(
-        build_trie(gazetteer) if trie_backend == "pure" else None)
-    weights_b = spark.sparkContext.broadcast(
-        dict(gazetteer) if trie_backend != "pure" else None)
+    trie_b = spark.sparkContext.broadcast(build_trie(gazetteer))
     ranks_b = spark.sparkContext.broadcast(common_ranks or {})
     cutoffs = freq_cutoffs or []
-    tok_re = re.compile(pattern)
 
-    if impl == "vector":
-        from . import fused_vec
+    def run_vec(batches) -> Iterator:
+        # mapInArrow: emission goes straight from the labeler's typed
+        # numpy arrays to RecordBatches — no pandas block manager on
+        # either the output (from_pandas introspection measured ~0.4 s
+        # per 220k-row batch) and one RecordBatch per LF family (no
+        # concat). Input column 1 is the text column (selected below).
+        yield from fused_vec.run_arrow_batches(
+            batches, 1, trie_b.value, ranks_b.value, cutoffs)
 
-        def run_vec(batches) -> Iterator:
-            from .gazetteer import TrieMatcher
-
-            trie = trie_b.value
-            factory = (
-                (lambda: TrieMatcher(weights_b.value, backend=trie_backend))
-                if trie is None else None)
-            # mapInArrow: emission goes straight from the labeler's typed
-            # numpy arrays to RecordBatches — no pandas block manager on
-            # either the output (from_pandas introspection measured ~0.4 s
-            # per 220k-row batch) and one RecordBatch per LF family (no
-            # concat). Input column 1 is the text column (selected below).
-            yield from fused_vec.run_arrow_batches(
-                batches, 1, tok_re, trie, factory, ranks_b.value, cutoffs)
-
-        return corpus.select("row_id", text_col).mapInArrow(
-            run_vec, S1_COMBINED)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .gazetteer import TrieMatcher
-
-        trie = trie_b.value
-        matcher = (TrieMatcher(weights_b.value, backend=trie_backend)
-                   if trie is None else None)
-        ranks = ranks_b.value
-        for pdf in batches:
-            out: list[tuple] = []
-            for row_id, text in zip(pdf["row_id"], pdf[text_col]):
-                # finditer: same token stream as findall, plus char spans
-                matches = list(tok_re.finditer(text or ""))
-                toks = [m.group(0) for m in matches]
-                low = [t.lower() for t in toks]
-                gm = (sorted(matcher.matches(toks, low))
-                      if matcher is not None else None)
-                _label_row(int(row_id), toks, low,
-                           [m.start() for m in matches],
-                           [m.end() for m in matches],
-                           trie, cutoffs, ranks, out, gaz_matches=gm)
-            yield pd.DataFrame(out, columns=_COLS).astype(_TYPES)
-
-    return corpus.select("row_id", text_col).mapInPandas(run, S1_COMBINED)
+    return corpus.select("row_id", text_col).mapInArrow(run_vec, S1_COMBINED)
 
 
 def split_mentions(combined: DataFrame) -> DataFrame:

@@ -1,17 +1,17 @@
-"""Columnar (batch-vectorized) twin of the fused stage-1 labeler.
+"""Columnar (batch-vectorized) fused stage-1 labeler — the one stage-1
+implementation; operators/fused.py wraps it as a Spark operator.
 
-`fused._label_row` is a per-token Python loop — the engine's CPU floor
-(PLANS.md §12).  Profiling at bench shape (23-token rows) splits its cost
-three ways: per-row regex `finditer` iteration (~43%), the per-token label
-loop (~28%), and the list-of-tuples -> pd.DataFrame conversion of the
+A per-token Python loop spends its time three ways at bench shape
+(23-token rows): per-row regex `finditer` iteration (~43%), the per-token
+label loop (~28%), and the list-of-tuples -> pd.DataFrame conversion of the
 output (~29%).  This module removes all three from the per-token path:
 
 - ONE regex pass over the whole Arrow batch: rows are joined with a
   newline separator (TOKEN_PATTERN's alternatives are all non-whitespace
-  runs, so no token can cross the separator and the match set over the
-  joined text is exactly the union of the per-row match sets); spans are
-  extracted with a single `m.span()` call per match and tokens sliced out
-  of the joined string (C-level), then assigned back to rows by
+  runs that together tile every maximal non-whitespace run, so no token
+  can cross the separator and the match set over the joined text is
+  exactly the union of the per-row match sets); spans are reconstructed
+  arithmetically from the token lengths and assigned back to rows by
   `np.searchsorted` against the row char offsets.
 - Per-UNIQUE-token property computation: `pd.factorize` compresses the
   batch's token stream to its vocabulary (Zipf: vocab << tokens), every
@@ -27,26 +27,29 @@ output (~29%).  This module removes all three from the per-token path:
   pandas hash join: (row, surface, lf) triples extracted this batch are
   merged against the token stream on (row, exact token text).
 
-Output is row-set identical to `fused._label_row` (which itself is
-row-set identical to the composed relational operators) — enforced by
-tests/test_fused.py (Spark path) and tests/test_fused_vec.py (direct
-function-level parity on adversarial unicode/caps/trigger corpora).
-The loop path remains available as `PipelineConfig(fused_impl='loop')`
-and is the parity reference; 'vector' is the default.
+tests/test_fused_vec.py holds `label_batch` row-multiset identical to the
+per-row reference in tests/oracle.py on adversarial Unicode, caps,
+trigger, embedded-newline and fuzz corpora; tests/test_fused.py diffs the
+Spark path against the composed relational operators (ASCII text: those
+tokenize with the JVM regex engine).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import re
 
 import numpy as np
 import pandas as pd
 
+from ..functions.text import TOKEN_PATTERN
 from .fused import _COLS, _TRIG_MAP
+
+_TOKEN_RE = re.compile(TOKEN_PATTERN)
+_WS_RE = re.compile(r"\s")
 
 _RANK_MISSING = 1 << 62
 
-# emission dtypes (match fused._TYPES / S1_COMBINED exactly)
+# emission dtypes (match S1_COMBINED exactly)
 _I32 = np.int32
 _I64 = np.int64
 _F64 = np.float64
@@ -76,7 +79,7 @@ def _part(kind, rid, lf, begin, end, surface, label, base, conf, weight,
     """One LF family's emission as a dict of typed numpy column arrays.
     Scalar args are broadcast; n is the row count (callers pass arrays of
     that length). Kept as raw arrays so the pandas wrapper (tests,
-    label_batch) and the Arrow wrapper (label_record_batches — no
+    label_batch) and the Arrow wrapper (run_arrow_batches — no
     pandas-block introspection, measured ~0.4 s per 220k-row batch in
     pa.Table.from_pandas) can share every emitter."""
 
@@ -106,45 +109,34 @@ def _part(kind, rid, lf, begin, end, surface, label, base, conf, weight,
     }
 
 
-import re as _re
-
-_WS_RE = _re.compile(r"\s")
-
-
-def tokenize_batch(row_ids, texts, tok_re):
-    """One C-level regex pass over the joined batch -> flat token arrays.
+def tokenize_batch(row_ids, texts):
+    """One C-level TOKEN_PATTERN pass over the joined batch -> flat token
+    arrays.
 
     `findall` (C loop) extracts the token strings; char spans are
     reconstructed ARITHMETICALLY instead of via per-match Python
     `m.span()` calls: TOKEN_PATTERN's three alternatives (\\w+ runs,
     $-number runs, rest-of-\\S-run) exactly tile every maximal
-    non-whitespace run, so a token's global start is its cumulative
-    non-whitespace offset re-based into its run (run boundaries come from
-    a vectorized whitespace mask over the codepoint array).  This holds
-    for any pattern whose matches tile \\S-runs; a debug assert cross-
-    checks against finditer when SPARK_GRAFT_VEC_CHECK is set.
+    non-whitespace run and never match whitespace, so a token's global
+    start is its cumulative non-whitespace offset re-based into its run
+    (run boundaries come from a vectorized whitespace mask over the
+    codepoint array).  A mismatch of the two char totals would mean the
+    tiling premise broke; it raises instead of emitting wrong spans.
 
     Returns (rid_tok, pos, n_tok, start, end, toks_obj, codes, uniques):
     per-token row id, within-row index, row token count, within-row char
     span, token text (object ndarray via unique gather), factorize codes
     and the unique token list.  All int arrays are int64.
     """
-    if tok_re.groups:
-        # findall would return group text, not full matches, silently
-        # misaligning tokens vs the finditer/run-derived spans below
-        raise ValueError(
-            "tokenize_batch requires a pattern without capture groups "
-            f"(got {tok_re.groups}); use (?:...) for grouping")
     txts = [t if isinstance(t, str) else ("" if t is None else str(t))
             for t in texts]
     nrows = len(txts)
     big = "\n".join(txts)
-    toks = tok_re.findall(big)
+    toks = _TOKEN_RE.findall(big)
     if not toks:
         z = np.zeros(0, dtype=_I64)
         return z, z, z, z, z, np.zeros(0, dtype=object), z, []
-    tok_obj0 = np.asarray(toks, dtype=object)
-    codes, uniq = pd.factorize(tok_obj0)
+    codes, uniq = pd.factorize(np.asarray(toks, dtype=object))
     codes = codes.astype(_I64, copy=False)
     uniques = list(uniq)
     u_len = np.fromiter(map(len, uniques), dtype=_I64, count=len(uniques))
@@ -159,48 +151,7 @@ def tokenize_batch(row_ids, texts, tok_re):
     table = np.zeros(int(ucp[-1]) + 1, dtype=np.bool_)
     if ws_present.size:
         table[ws_present] = True
-    # does any token CONTAIN whitespace? vectorized through the same
-    # codepoint table (every unique's chars occur in `big`, so the table
-    # covers them) — no per-unique Python regex on the hot path
-    u_cat = "".join(uniques)
-    has_ws_tok = bool(
-        u_cat
-        and table[np.frombuffer(u_cat.encode("utf-32-le"),
-                                dtype=np.uint32)].any())
-    if has_ws_tok:
-        # a ws-capable pattern can also match ACROSS the "\n" joiner of
-        # the batch scan above, merging tokens from adjacent rows with
-        # out-of-range spans — rescan PER ROW (also the loop-labeler
-        # parity semantics). Slow path; only non-default patterns hit it.
-        r_toks: list = []
-        r_s: list = []
-        r_e: list = []
-        r_ri: list = []
-        for i, t in enumerate(txts):
-            for m in tok_re.finditer(t):
-                r_toks.append(m.group(0))
-                r_s.append(m.start())
-                r_e.append(m.end())
-                r_ri.append(i)
-        if not r_toks:
-            z = np.zeros(0, dtype=_I64)
-            return z, z, z, z, z, np.zeros(0, dtype=object), z, []
-        codes, uniq = pd.factorize(np.asarray(r_toks, dtype=object))
-        codes = codes.astype(_I64, copy=False)
-        uniques = list(uniq)
-        ridx = np.asarray(r_ri, dtype=_I64)
-        start = np.asarray(r_s, dtype=_I64)
-        end = np.asarray(r_e, dtype=_I64)
-        row_len = np.bincount(ridx, minlength=nrows).astype(_I64)
-        rid_arr = np.asarray(row_ids, dtype=_I64)
-        row_first = np.concatenate(([0], np.cumsum(row_len[:-1])))
-        pos = np.arange(len(r_toks), dtype=_I64) - row_first[ridx]
-        tok_obj = np.asarray(uniq, dtype=object)[codes]
-        return (rid_arr[ridx], pos, row_len[ridx], start, end, tok_obj,
-                codes, uniques)
-
-    ws = table[arr]
-    ns = ~ws
+    ns = ~table[arr]
     run_start_idx = np.nonzero(ns & ~np.concatenate(([False], ns[:-1])))[0]
     run_end_idx = np.nonzero(ns & ~np.concatenate((ns[1:], [False])))[0] + 1
     run_lens = run_end_idx - run_start_idx
@@ -208,21 +159,14 @@ def tokenize_batch(row_ids, texts, tok_re):
     run_cum0 = run_cum - run_lens
     cum = np.cumsum(tok_lens)
     if run_cum.size == 0 or cum[-1] != run_cum[-1]:
-        # pattern does not tile the \S-runs (a skipped char is a gap and
-        # every gap breaks the char totals, so the totals check is exact
-        # for ws-free tokens — the ws-token case returned above): fall
-        # back to per-match spans (slow but pattern-agnostic). groups==0
-        # is asserted at entry, so finditer spans align with findall
-        # text, and ws-free matches can never cross the "\n" joiner.
-        gs_ge = np.asarray([m.span() for m in tok_re.finditer(big)],
-                           dtype=_I64)
-        gs, ge = gs_ge[:, 0], gs_ge[:, 1]
-        assert gs_ge.shape[0] == len(toks)
-    else:
-        start_in_concat = cum - tok_lens
-        runi = np.searchsorted(run_cum, start_in_concat, side="right")
-        gs = run_start_idx[runi] + (start_in_concat - run_cum0[runi])
-        ge = gs + tok_lens
+        raise RuntimeError(
+            f"tokens cover {int(cum[-1])} chars but the batch has "
+            f"{int(run_cum[-1]) if run_cum.size else 0} non-whitespace "
+            "chars: TOKEN_PATTERN no longer tiles the \\S runs")
+    start_in_concat = cum - tok_lens
+    runi = np.searchsorted(run_cum, start_in_concat, side="right")
+    gs = run_start_idx[runi] + (start_in_concat - run_cum0[runi])
+    ge = gs + tok_lens
 
     # char offset of each row's first character inside `big`
     lens = np.fromiter((len(t) for t in txts), dtype=_I64, count=nrows)
@@ -240,31 +184,25 @@ def tokenize_batch(row_ids, texts, tok_re):
     return rid_tok, pos, n_tok, start, end, tok_obj, codes, uniques
 
 
-def label_batch(row_ids, texts, tok_re, trie, common_ranks, freq_cutoffs,
-                matcher=None) -> pd.DataFrame:
+def label_batch(row_ids, texts, trie, common_ranks,
+                freq_cutoffs) -> pd.DataFrame:
     """Columnar stage-1 labeling of one batch, as a pandas frame (the
-    shape tests and the mapInPandas wrapper consume); the Spark hot path
-    uses label_record_batches below, which shares _label_parts."""
-    parts = _label_parts(row_ids, texts, tok_re, trie, common_ranks,
-                         freq_cutoffs, matcher=matcher)
+    function-level entry point tests use); the Spark path runs
+    run_arrow_batches below, which shares _label_parts."""
+    parts = _label_parts(row_ids, texts, trie, common_ranks, freq_cutoffs)
     if not parts:
         return _empty_out()
     return pd.concat([pd.DataFrame(p) for p in parts],
                      ignore_index=True)[_COLS]
 
 
-def _label_parts(row_ids, texts, tok_re, trie, common_ranks, freq_cutoffs,
-                 matcher=None) -> list[dict]:
+def _label_parts(row_ids, texts, trie, common_ranks,
+                 freq_cutoffs) -> list[dict]:
     """Columnar stage-1 labeling of one batch -> list of per-LF-family
-    column-array dicts (see _part).
-
-    Exactly one of (trie, matcher) is non-None: `trie` is the pure dict
-    trie (gazetteer walked inline); `matcher` is a gazetteer.TrieMatcher
-    (e.g. the ahocorasick backend) queried per row.
-    Output row set == looping fused._label_row over the same rows.
-    """
+    column-array dicts (see _part). ``trie`` is gazetteer.build_trie's
+    dict trie."""
     (rid_tok, pos, n_tok, start, end, tok_obj, codes,
-     uniques) = tokenize_batch(row_ids, texts, tok_re)
+     uniques) = tokenize_batch(row_ids, texts)
     if len(codes) == 0:
         return []
 
@@ -280,9 +218,10 @@ def _label_parts(row_ids, texts, tok_re, trie, common_ranks, freq_cutoffs,
 
     parts: list[dict] = []
     # (rid, surface, lf) triples feeding the J2 re-projection vote pass.
-    # Bulk emitters append ARRAY parts (deduped later by drop_duplicates —
-    # same effect as the loop path's per-row surf_lfs "if lf not in lfs");
-    # the small loops (rules, multi-word trie walks) append to j2_small.
+    # Bulk emitters append ARRAY parts (deduped later by drop_duplicates:
+    # one vote per (row, token, lf) however many extractions share the
+    # surface); the small loops (rules, multi-word trie walks) append to
+    # j2_small.
     j2_rids: list[np.ndarray] = []
     j2_surfs: list[np.ndarray] = []
     j2_lfs: list[np.ndarray] = []
@@ -290,104 +229,68 @@ def _label_parts(row_ids, texts, tok_re, trie, common_ranks, freq_cutoffs,
 
     # ---- gazetteer (PhraseMatcher(LOWER): all matches at all positions,
     #      sweet/neat_extractors.py:159-183)
-    if trie is not None:
-        u_entry = np.zeros(nu, dtype=np.bool_)
-        u_w = np.zeros(nu, dtype=_F64)
-        u_children = np.zeros(nu, dtype=np.bool_)
-        tget = trie.get
-        for ui, lw in enumerate(u_low):
-            node = tget(lw)
-            if node is None:
-                continue
-            w = node.get("\0")
-            if w is not None:
-                u_entry[ui] = True
-                u_w[ui] = w
-            if len(node) > (1 if w is not None else 0):
-                u_children[ui] = True
-        # single-token entries: fully columnar
-        idx1 = np.nonzero(u_entry[codes])[0]
-        if idx1.size:
-            w1 = u_w[codes[idx1]]
-            s1 = tok_obj[idx1]
-            parts.append(_part("m", rid_tok[idx1], "dictionary",
-                               pos[idx1], pos[idx1] + 1, s1, "PERSON_NAME",
-                               w1, w1, 0.0, start[idx1], end[idx1],
-                               idx1.size))
-            j2_rids.append(rid_tok[idx1])
-            j2_surfs.append(s1)
-            j2_lfs.append(np.full(idx1.size, "dictionary", dtype=object))
-        # multi-token matches: walk only roots that have children
-        hits2 = np.nonzero(u_children[codes])[0].tolist()
-        if hits2:
-            gf: list[int] = []
-            gj: list[int] = []
-            gw: list[float] = []
-            gsurf: list[str] = []
-            pos_l = pos.tolist()
-            n_l = n_tok.tolist()
-            codes_l = codes.tolist()
-            for f in hits2:
-                n_end = f - pos_l[f] + n_l[f]
-                node = trie[u_low[codes_l[f]]]
-                j = f + 1
-                while j < n_end:
-                    node = node.get(u_low[codes_l[j]])
-                    if node is None:
-                        break
-                    j += 1
-                    w = node.get("\0")
-                    if w is not None:
-                        gf.append(f)
-                        gj.append(j)
-                        gw.append(w)
-                        gsurf.append(" ".join(
-                            uniques[codes_l[x]] for x in range(f, j)))
-            if gf:
-                gfa = np.asarray(gf, dtype=_I64)
-                gja = np.asarray(gj, dtype=_I64)
-                parts.append(_part("m", rid_tok[gfa], "dictionary",
-                                   pos[gfa], pos[gfa] + (gja - gfa), gsurf,
-                                   "PERSON_NAME", np.asarray(gw, _F64),
-                                   np.asarray(gw, _F64), 0.0,
-                                   start[gfa], end[gja - 1], len(gf)))
-                for f, s in zip(gfa.tolist(), gsurf):
-                    j2_small.add((int(rid_tok[f]), s, "dictionary"))
-    elif matcher is not None:
-        # external automaton backend: query per row over slices
-        # reconstructed from the flat layout
-        rids_l = rid_tok.tolist()
+    u_entry = np.zeros(nu, dtype=np.bool_)
+    u_w = np.zeros(nu, dtype=_F64)
+    u_children = np.zeros(nu, dtype=np.bool_)
+    tget = trie.get
+    for ui, lw in enumerate(u_low):
+        node = tget(lw)
+        if node is None:
+            continue
+        w = node.get("\0")
+        if w is not None:
+            u_entry[ui] = True
+            u_w[ui] = w
+        if len(node) > (1 if w is not None else 0):
+            u_children[ui] = True
+    # single-token entries: fully columnar
+    idx1 = np.nonzero(u_entry[codes])[0]
+    if idx1.size:
+        w1 = u_w[codes[idx1]]
+        s1 = tok_obj[idx1]
+        parts.append(_part("m", rid_tok[idx1], "dictionary",
+                           pos[idx1], pos[idx1] + 1, s1, "PERSON_NAME",
+                           w1, w1, 0.0, start[idx1], end[idx1],
+                           idx1.size))
+        j2_rids.append(rid_tok[idx1])
+        j2_surfs.append(s1)
+        j2_lfs.append(np.full(idx1.size, "dictionary", dtype=object))
+    # multi-token matches: walk only roots that have children
+    hits2 = np.nonzero(u_children[codes])[0].tolist()
+    if hits2:
+        gf: list[int] = []
+        gj: list[int] = []
+        gw: list[float] = []
+        gsurf: list[str] = []
         pos_l = pos.tolist()
         n_l = n_tok.tolist()
-        toks_l = tok_obj.tolist()
-        low_flat = np.asarray(u_low, dtype=object)[codes]
-        low_l = low_flat.tolist()
-        gf2: list[int] = []
-        gj2: list[int] = []
-        gw2: list[float] = []
-        gsurf2: list[str] = []
-        f = 0
-        total = len(toks_l)
-        while f < total:
-            n = n_l[f]
-            toks_row = toks_l[f:f + n]
-            low_row = low_l[f:f + n]
-            for gi, gjj, w in sorted(matcher.matches(toks_row, low_row)):
-                gf2.append(f + gi)
-                gj2.append(f + gjj)
-                gw2.append(w)
-                surf = " ".join(toks_row[gi:gjj])
-                gsurf2.append(surf)
-                j2_small.add((rids_l[f], surf, "dictionary"))
-            f += n
-        if gf2:
-            gfa = np.asarray(gf2, dtype=_I64)
-            gja = np.asarray(gj2, dtype=_I64)
+        codes_l = codes.tolist()
+        for f in hits2:
+            n_end = f - pos_l[f] + n_l[f]
+            node = trie[u_low[codes_l[f]]]
+            j = f + 1
+            while j < n_end:
+                node = node.get(u_low[codes_l[j]])
+                if node is None:
+                    break
+                j += 1
+                w = node.get("\0")
+                if w is not None:
+                    gf.append(f)
+                    gj.append(j)
+                    gw.append(w)
+                    gsurf.append(" ".join(
+                        uniques[codes_l[x]] for x in range(f, j)))
+        if gf:
+            gfa = np.asarray(gf, dtype=_I64)
+            gja = np.asarray(gj, dtype=_I64)
             parts.append(_part("m", rid_tok[gfa], "dictionary",
-                               pos[gfa], pos[gfa] + (gja - gfa), gsurf2,
-                               "PERSON_NAME", np.asarray(gw2, _F64),
-                               np.asarray(gw2, _F64), 0.0,
-                               start[gfa], end[gja - 1], len(gf2)))
+                               pos[gfa], pos[gfa] + (gja - gfa), gsurf,
+                               "PERSON_NAME", np.asarray(gw, _F64),
+                               np.asarray(gw, _F64), 0.0,
+                               start[gfa], end[gja - 1], len(gf)))
+            for f, s in zip(gfa.tolist(), gsurf):
+                j2_small.add((int(rid_tok[f]), s, "dictionary"))
 
     # ---- 27 rule patterns (neat_extractors.py:26-116): loop over trigger
     #      hits only; every per-token predicate is a per-unique gather
@@ -477,7 +380,8 @@ def _label_parts(row_ids, texts, tok_re, trie, common_ranks, freq_cutoffs,
 
     # ---- frequency antirules (create_lfs.py:17-34 +
     #      labeling_functions.py:135-143): rank gather per unique token
-    #      (original case — quirk-faithful to the loop path's rank_get(t))
+    #      (looked up by original-case token text, as the reference's
+    #      `tok.text in common_words`)
     if common_ranks and freq_cutoffs:
         rg = common_ranks.get
         u_rank = np.fromiter((rg(t, _RANK_MISSING) for t in uniques),
@@ -507,37 +411,6 @@ def _label_parts(row_ids, texts, tok_re, trie, common_ranks, freq_cutoffs,
 COALESCE_ROWS = 10_000
 
 
-def run_batches(batches: Iterator[pd.DataFrame], text_col: str, tok_re,
-                trie, matcher_factory, common_ranks,
-                freq_cutoffs) -> Iterator[pd.DataFrame]:
-    """mapInPandas body for the vectorized fused pass."""
-    matcher = matcher_factory() if matcher_factory is not None else None
-
-    def one(pdfs: list[pd.DataFrame]) -> pd.DataFrame:
-        if len(pdfs) == 1:
-            p = pdfs[0]
-            return label_batch(p["row_id"].to_numpy(), list(p[text_col]),
-                               tok_re, trie, common_ranks, freq_cutoffs,
-                               matcher=matcher)
-        rid = np.concatenate([p["row_id"].to_numpy() for p in pdfs])
-        texts: list = []
-        for p in pdfs:
-            texts.extend(p[text_col])
-        return label_batch(rid, texts, tok_re, trie, common_ranks,
-                           freq_cutoffs, matcher=matcher)
-
-    buf: list[pd.DataFrame] = []
-    nbuf = 0
-    for pdf in batches:
-        buf.append(pdf)
-        nbuf += len(pdf)
-        if nbuf >= COALESCE_ROWS:
-            yield one(buf)
-            buf, nbuf = [], 0
-    if buf:
-        yield one(buf)
-
-
 def _parts_to_record_batches(parts: list[dict]):
     """Per-LF-family column dicts -> pyarrow RecordBatches matching
     S1_COMBINED. Built column-by-column with pa.array over the typed numpy
@@ -560,11 +433,11 @@ def _parts_to_record_batches(parts: list[dict]):
             [pa.array(p[c], type=types[c]) for c in _COLS], schema=schema)
 
 
-def run_arrow_batches(batches, text_col_idx: int, tok_re, trie,
-                      matcher_factory, common_ranks, freq_cutoffs):
-    """mapInArrow body for the vectorized fused pass. Same coalescing
-    policy as run_batches; input RecordBatches carry (row_id, text)."""
-    matcher = matcher_factory() if matcher_factory is not None else None
+def run_arrow_batches(batches, text_col_idx: int, trie, common_ranks,
+                      freq_cutoffs):
+    """mapInArrow body of the fused pass: coalesce input RecordBatches
+    (row_id, text) up to COALESCE_ROWS, label, stream one RecordBatch per
+    LF family."""
 
     def one(chunks: list) -> list[dict]:
         if len(chunks) == 1:
@@ -574,8 +447,7 @@ def run_arrow_batches(batches, text_col_idx: int, tok_re, trie,
             texts = []
             for c in chunks:
                 texts.extend(c[1])
-        return _label_parts(rid, texts, tok_re, trie, common_ranks,
-                            freq_cutoffs, matcher=matcher)
+        return _label_parts(rid, texts, trie, common_ranks, freq_cutoffs)
 
     buf: list = []
     nbuf = 0

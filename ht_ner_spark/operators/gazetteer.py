@@ -6,17 +6,19 @@ spacy PhraseMatcher(attr="LOWER") over a weighted dictionary
 base_conf is the weight of its lower-cased surface (missing -> 0, the
 KeyError fallback at :175-179).
 
-Two Spark implementations that must agree (cross-checked in tests):
+Production stage 1 matches the gazetteer inside the columnar fused labeler
+(operators/fused_vec.py), walking the `build_trie` dict trie below. The two
+standalone Spark operators here are the contract-query forms and the
+composed reference that tests diff the fused path against; they must agree
+(cross-checked in tests):
 
 * relational (`match_relational`): token n-gram expansion + **broadcast hash
   join** against the gazetteer dimension — fully Catalyst-visible, DuckDB
   oracle-checkable. n-gram expansion is a within-row array transform (narrow);
   the join is broadcast, so the whole operator is shuffle-free.
-* trie (`match_trie`): the north_star's "gazetteer trie" — a token-level dict
-  trie broadcast once per executor, scanned inside an Arrow `mapInPandas`
-  batch loop. Preferred at 10^12-file scale: no n-gram fan-out (the relational
-  variant multiplies the exploded-token row count by max phrase length), one
-  pass per batch, zero shuffle.
+* trie (`match_trie`): the same broadcast dict trie, walked per row by
+  `trie_matches` inside an Arrow `mapInPandas` batch loop — no n-gram
+  fan-out, one pass per batch, zero shuffle.
 
 The J2 vote-projection quirk (label EVERY token whose exact text equals a
 matched surface — /root/reference/sweet/labeling_functions.py:40-42) lives in
@@ -25,6 +27,7 @@ votes.py, not here: mentions keep true span positions for linking.
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import pandas as pd
@@ -118,145 +121,38 @@ def build_trie(weights: dict[str, float]) -> dict:
     return trie
 
 
-try:  # pragma: no cover - exercised only where the C extension exists
-    import ahocorasick as _ahocorasick
-
-    HAS_AHOCORASICK = True
-except ImportError:
-    _ahocorasick = None
-    HAS_AHOCORASICK = False
-
-
-class TrieMatcher:
-    """Gazetteer phrase matcher with selectable backend (VERDICT r3 #6):
-
-    * ``pure`` — the dict-trie walk (always available; the engine default,
-      bit-stable with the DuckDB oracle and the relational variant).
-    * ``ahocorasick`` — pyahocorasick's C automaton over the space-joined
-      lowered token stream, import-gated like HFScorer: available it raises
-      the fused labeler's single-core CPU floor (the trie walk is the
-      dominant term, PLANS.md §12); absent it raises NotImplementedError
-      with the swap instructions.
-    * ``auto`` — ahocorasick when importable, else pure.
-
-    Both backends return the IDENTICAL match set — every phrase occurrence
-    at every token position, overlapping and nested included (spacy
-    PhraseMatcher(LOWER) semantics) — as (begin_tok, end_tok, weight)
-    triples; tests/test_trie_backend.py asserts set equality per row.
-
-    Token-boundary correctness for the char-level automaton: tokens are
-    joined with a single space, and a char match [s, e] is accepted only
-    when s is 0-or-after-space and e is end-or-before-space — then the
-    char offsets map back to token indices via the precomputed start
-    table. Tokens never contain spaces (TOKEN_PATTERN), so the alignment
-    is exact."""
-
-    def __init__(self, weights: dict[str, float], backend: str = "pure",
-                 prebuilt_trie: dict | None = None):
-        if backend == "auto":
-            backend = "ahocorasick" if HAS_AHOCORASICK else "pure"
-        if backend == "ahocorasick" and not HAS_AHOCORASICK:
-            raise NotImplementedError(
-                "TrieMatcher(backend='ahocorasick') needs pyahocorasick; "
-                "use backend='pure' (identical matches, slower walk) in "
-                "environments without the C extension")
-        if backend not in ("pure", "ahocorasick"):
-            raise ValueError(f"unknown TrieMatcher backend: {backend!r}")
-        self.backend = backend
-        if backend == "pure":
-            # prebuilt_trie lets callers build once on the driver and
-            # broadcast (dict tries pickle fine; match_trie does this so a
-            # large gazetteer isn't re-trie'd once per input task — the C
-            # automaton can't pickle, so the ahocorasick path always builds
-            # per-process from the broadcast weights)
-            self._trie = (prebuilt_trie if prebuilt_trie is not None
-                          else build_trie(weights))
-        else:  # pragma: no cover - needs the C extension
-            auto = _ahocorasick.Automaton()
-            for phrase, w in weights.items():
-                key = " ".join(phrase.lower().split())
-                # same last-write-wins on duplicate normalized phrases as
-                # build_trie's "\0" overwrite
-                auto.add_word(key, (len(key), key.count(" ") + 1, float(w)))
-            auto.make_automaton()
-            self._auto = auto
-
-    def matches(self, toks: list[str], low: list[str]
-                ) -> list[tuple[int, int, float]]:
-        """All (begin_tok, end_tok_exclusive, weight) phrase matches."""
-        if self.backend == "pure":
-            out = []
-            trie_get = self._trie.get
-            n = len(toks)
-            for i in range(n):
-                node = trie_get(low[i])
-                j = i
-                while node is not None:
-                    j += 1
-                    if "\0" in node:
-                        out.append((i, j, node["\0"]))
-                    node = node.get(low[j]) if j < n else None
-            return out
-        return self._matches_ac(low)  # pragma: no cover - needs C extension
-
-    def _matches_ac(self, low: list[str]
-                    ) -> list[tuple[int, int, float]]:  # pragma: no cover
-        joined = " ".join(low)
-        # char start offset of each token in `joined` -> token index
-        starts: dict[int, int] = {}
-        pos = 0
-        for idx, t in enumerate(low):
-            starts[pos] = idx
-            pos += len(t) + 1
-        total = len(joined)
-        out = []
-        for end_pos, (klen, n_toks, w) in self._auto.iter(joined):
-            # end boundary: the char after the match is a space or the end
-            nxt = end_pos + 1
-            if nxt < total and joined[nxt] != " ":
-                continue
-            # start boundary: the char before the match is a space or BOS
-            s = end_pos - klen + 1
-            if s > 0 and joined[s - 1] != " ":
-                continue
-            i = starts.get(s)
-            if i is None:  # defensive; boundary checks already imply a hit
-                continue
-            out.append((i, i + n_toks, w))
-        return out
+def trie_matches(trie: dict, low: list[str]) -> list[tuple[int, int, float]]:
+    """All (begin_tok, end_tok_exclusive, weight) phrase matches of the
+    lowered token list ``low`` against a build_trie() trie: every match at
+    every start position, overlapping and nested included (PhraseMatcher
+    LOWER semantics), in (begin, end) order."""
+    out = []
+    trie_get = trie.get
+    n = len(low)
+    for i in range(n):
+        node = trie_get(low[i])
+        j = i
+        while node is not None:
+            j += 1
+            if "\0" in node:
+                out.append((i, j, node["\0"]))
+            node = node.get(low[j]) if j < n else None
+    return out
 
 
 def match_trie(corpus: DataFrame, weights: dict[str, float],
-               lf_name: str = LF_NAME, text_col: str = "content",
-               pattern: str = TOKEN_PATTERN,
-               backend: str = "pure") -> DataFrame:
+               lf_name: str = LF_NAME, text_col: str = "content") -> DataFrame:
     """Arrow mapInPandas trie match -> MENTIONS rows (greedy-all semantics:
-    every match at every start position, longest-first exploration, exactly
-    the span set PhraseMatcher returns). ``backend`` selects the per-row
-    matcher (see TrieMatcher): 'pure' is the default/oracle-stable path;
-    'ahocorasick' is the import-gated C-automaton fast path, identical
-    matches (tests/test_trie_backend.py). Rows are emitted sorted by
-    (begin, end) per document so the output row SET and order are
-    backend-independent."""
+    every match at every start position, exactly the span set
+    PhraseMatcher returns), sorted by (begin, end) per document. The trie is
+    built once on the driver and broadcast: building it per input task is
+    O(|gazetteer|) repeated work."""
     spark = corpus.sparkSession
-    # resolve 'auto' on the driver (local/--py-files ship one env, so the
-    # driver's import probe matches the executors'), then broadcast the
-    # BUILT trie for the pure backend — dict tries pickle fine, and building
-    # per input task is O(|gazetteer|) repeated work on the engine's CPU
-    # floor (r4 review). The C automaton doesn't pickle, so the ahocorasick
-    # path broadcasts weights and builds once per executor process.
-    resolved = ("ahocorasick" if HAS_AHOCORASICK else "pure") \
-        if backend == "auto" else backend
-    weights_b = spark.sparkContext.broadcast(dict(weights))
-    trie_b = spark.sparkContext.broadcast(
-        build_trie(dict(weights)) if resolved == "pure" else None)
-    import re
-
-    tok_re = re.compile(pattern)
+    trie_b = spark.sparkContext.broadcast(build_trie(dict(weights)))
+    tok_re = re.compile(TOKEN_PATTERN)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = TrieMatcher(weights_b.value, backend=resolved,
-                              prebuilt_trie=trie_b.value)
+        trie = trie_b.value
         for pdf in batches:
             rows_out: list[tuple] = []
             for row_id, text in zip(pdf["row_id"], pdf[text_col]):
@@ -264,8 +160,7 @@ def match_trie(corpus: DataFrame, weights: dict[str, float],
                 # spans that feed MENTIONS.begin_char/end_char for free
                 matches = list(tok_re.finditer(text or ""))
                 toks = [m.group(0) for m in matches]
-                low = [t.lower() for t in toks]
-                for i, j, w in sorted(matcher.matches(toks, low)):
+                for i, j, w in trie_matches(trie, [t.lower() for t in toks]):
                     rows_out.append(
                         (row_id, lf_name, i, j, " ".join(toks[i:j]),
                          "PERSON_NAME", w, w,

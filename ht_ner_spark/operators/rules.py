@@ -132,9 +132,10 @@ def rule_mentions_arrays(tokens_df: DataFrame, patterns=None,
     toks = F.col("tokens")
 
     def elem_hits(x, i):
-        # x = tokens[i]; 1-based element_at for the lookahead tokens
-        t1 = F.element_at(toks, i + 2)
-        t2 = F.element_at(toks, i + 3)
+        # x = tokens[i]; 0-based get for the lookahead tokens: NULL past
+        # the row end (element_at raises there under ANSI mode)
+        t1 = F.get(toks, i + 1)
+        t2 = F.get(toks, i + 2)
         hits = []
         for idx, (pname, trig, conf) in enumerate(patterns):
             if len(trig) == 2:

@@ -23,11 +23,8 @@ from pyspark.sql import functions as F
 
 from .corpus import DEFAULT_GAZETTEER
 from .operators import antirules as ar
-from .operators import rules as ru
-from .operators import votes as vo
 from .operators.aggregate import predicted_entities, weighted_vote
 from .operators.components import connected_components
-from .operators.gazetteer import gazetteer_df, match_relational, match_trie
 from .operators.linking import link_surfaces
 from .operators.tokens import token_view, with_tokens
 from .operators.triples import build_triples, dedup_triples, sha_invariant_audit
@@ -40,16 +37,6 @@ class PipelineConfig:
     warehouse: str
     run_id: str = "run0"
     gazetteer: dict[str, float] = field(default_factory=lambda: dict(DEFAULT_GAZETTEER))
-    fused: bool = True             # ONE mapInPandas corpus pass for all LFs
-    # fused-pass labeler implementation: 'vector' = columnar batch labeler
-    # (operators/fused_vec.py, the throughput default), 'loop' = per-token
-    # reference loop (the parity twin). Row-set identical by test.
-    fused_impl: str = "vector"
-    # frequency-pass scan implementation: 'vector' = Arrow partial-count
-    # (antirules.word_frequency_agg_arrow), 'relational' = exploded token
-    # view + JVM hash agg (the parity twin). Row-set identical by test.
-    freq_impl: str = "vector"
-    use_trie: bool = True          # composed path: trie vs relational join
     vote_threshold: float = 0.0
     lsh_bands: int = 8
     lsh_min_jaccard: float = 0.5
@@ -103,10 +90,10 @@ AUDIT_BROADCAST_MAX_ROWS = 4_000_000
 
 def _frequency_inputs(corpus: DataFrame, cfg: PipelineConfig):
     """Corpus-global frequency pass (the reference's own two-pass barrier,
-    sweet/create_lfs.py:17-34): one explode + hash agg shuffle. Returns
-    (common_ranks dict | None, freq DataFrame | None, tview | None):
-    dict when the top-k fits the broadcast budget, else the relational
-    fallback inputs.
+    sweet/create_lfs.py:17-34): one Arrow partial-count scan + hash agg
+    shuffle. Returns (common_ranks dict | None, cutoffs, freq DataFrame |
+    None, tview | None): dict when the top-k fits the broadcast budget,
+    else the relational fallback inputs.
 
     Serial-floor discipline (this block was the scaling bottleneck the
     per-stage bench decomposition exposed — s1_freq efficiency 0.40):
@@ -131,18 +118,13 @@ def _frequency_inputs(corpus: DataFrame, cfg: PipelineConfig):
     from pyspark import StorageLevel
 
     spark = corpus.sparkSession
-    tview = token_view(with_tokens(corpus))
     budget = cfg.max_broadcast_vocab
     coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
     prev = spark.conf.get(coalesce_key, "true")
     spark.conf.set(coalesce_key, "false")
-    # Arrow partial-count scan (default): same C tokenizer as the fused
-    # labeler, one vocab-sized partial per batch — no 25x JVM-regex token
-    # explode; 'relational' keeps the exploded-view aggregate (the parity
-    # twin and the composed path's shape). Row-set identical by test.
-    agg = (ar.word_frequency_agg_arrow(corpus)
-           if cfg.freq_impl == "vector"
-           else ar.word_frequency_agg(tview)).persist(
+    # Arrow partial-count scan: same C tokenizer as the fused labeler, one
+    # vocab-sized partial per batch — no 25x JVM-regex token explode
+    agg = ar.word_frequency_agg_arrow(corpus).persist(
         StorageLevel.MEMORY_AND_DISK)
     try:
         vocab_size = agg.count()
@@ -158,6 +140,7 @@ def _frequency_inputs(corpus: DataFrame, cfg: PipelineConfig):
         agg.unpersist()
         spark.conf.set(coalesce_key, prev)
     # oversized vocabulary: relational fallback (distributed exact rank)
+    tview = token_view(with_tokens(corpus))
     freq = ar.word_frequency(tview).cache()
     vocab_size = freq.count()
     max_k = max(int(vocab_size * t) for t in ar.THRESHOLDS)
@@ -187,7 +170,6 @@ def stage1_combined(corpus: DataFrame, cfg: PipelineConfig,
     combined = fused_stage1(
         corpus, cfg.gazetteer,
         common_ranks=ranks, freq_cutoffs=cutoffs if ranks else [],
-        impl=cfg.fused_impl,
     )
     extra = None
     if cfg.frequency_antirules and ranks is None:
@@ -198,80 +180,32 @@ def stage1_combined(corpus: DataFrame, cfg: PipelineConfig,
 
 
 def stage1_mentions(corpus: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
-    """-> (mentions, votes).
+    """-> (mentions, votes): corpus-global frequency agg (pass 1) -> ONE
+    Arrow pass emitting all mentions + votes (pass 2), split by kind."""
+    from .operators.fused import split_mentions, split_votes
 
-    Fused path (default, the 100 TB design): corpus-global frequency agg
-    (pass 1) -> ONE mapInPandas pass emitting all mentions + votes (pass 2).
-    Composed path (oracle-checkable): relational operators over a shared
-    token view — kept for cross-validation and DuckDB parity.
-    """
-    spark = corpus.sparkSession
-
-    if cfg.fused:
-        from .operators.fused import split_mentions, split_votes
-
-        combined, extra_votes = stage1_combined(corpus, cfg)
-        votes = split_votes(combined)
-        if extra_votes is not None:
-            votes = votes.unionByName(extra_votes)
-        return split_mentions(combined), votes
-
-    from .operators.tokens import attach_char_offsets, char_token_view
-
-    toks = with_tokens(corpus)
-    tview = token_view(toks)
-    # char offsets (MENTIONS.begin_char/end_char): the fused path emits them
-    # inline; the composed path derives them once from a char-offset token
-    # view and attaches them to every token-span mention frame.
-    ctv = char_token_view(corpus).localCheckpoint()
-    if cfg.use_trie:
-        gaz_mentions = match_trie(corpus, cfg.gazetteer)  # offsets inline
-    else:
-        gaz_mentions = attach_char_offsets(
-            match_relational(
-                toks, gazetteer_df(spark, cfg.gazetteer),
-                lengths=sorted({len(k.split()) for k in cfg.gazetteer}),
-            ),
-            ctv,
-        )
-    rule_ments = attach_char_offsets(ru.rule_mentions_arrays(toks), ctv)
-    caps = attach_char_offsets(ru.all_caps_mentions(tview), ctv)
-    name_case = attach_char_offsets(ru.name_case_mentions(tview), ctv)
-    mentions = gaz_mentions.unionByName(rule_ments).unionByName(caps).unionByName(name_case)
-
-    # votes: J2 projection for span LFs (gazetteer + rules), position-faithful
-    # for caps detectors, frequency antirules as NOT_NAME.
-    span_votes = vo.project_mentions_to_votes(
-        tview, gaz_mentions.unionByName(rule_ments)
-    )
-    caps_votes = vo.mentions_to_votes_direct(caps.unionByName(name_case))
-    votes = span_votes.unionByName(caps_votes)
-    if cfg.frequency_antirules:
-        freq = ar.word_frequency(tview)
-        votes = votes.unionByName(ar.frequency_votes(tview, freq))
-    return mentions, votes
+    combined, extra_votes = stage1_combined(corpus, cfg)
+    votes = split_votes(combined)
+    if extra_votes is not None:
+        votes = votes.unionByName(extra_votes)
+    return split_mentions(combined), votes
 
 
-def _read_mentions(spark: SparkSession, wh: str, cfg: PipelineConfig) -> DataFrame:
+def _read_mentions(spark: SparkSession, wh: str) -> DataFrame:
     """Stage-1 mentions: a kind-filtered projection of the stored combined
-    table on the fused path (parquet pushdown); falls back to a physical
-    ``mentions`` table (composed path, or a warehouse written by one)."""
-    if cfg.fused and cat.table_exists(spark, wh, "s1_combined"):
-        from .operators.fused import split_mentions
+    table (parquet pushdown)."""
+    from .operators.fused import split_mentions
 
-        return split_mentions(cat.read_table(spark, wh, "s1_combined"))
-    return cat.read_table(spark, wh, "mentions")
+    return split_mentions(cat.read_table(spark, wh, "s1_combined"))
 
 
-def _read_votes(spark: SparkSession, wh: str, cfg: PipelineConfig) -> DataFrame:
-    if cfg.fused and cat.table_exists(spark, wh, "s1_combined"):
-        from .operators.fused import split_votes
+def _read_votes(spark: SparkSession, wh: str) -> DataFrame:
+    from .operators.fused import split_votes
 
-        votes = split_votes(cat.read_table(spark, wh, "s1_combined"))
-        if cat.table_exists(spark, wh, "votes_extra"):
-            votes = votes.unionByName(cat.read_table(spark, wh, "votes_extra"))
-        return votes
-    return cat.read_table(spark, wh, "votes")
+    votes = split_votes(cat.read_table(spark, wh, "s1_combined"))
+    if cat.table_exists(spark, wh, "votes_extra"):
+        votes = votes.unionByName(cat.read_table(spark, wh, "votes_extra"))
+    return votes
 
 
 def _bucket_table_name(warehouse: str, run_id: str, table: str) -> str:
@@ -395,51 +329,42 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
     if "s1" not in done:
         with _timed(timings, "s1"):
             freq_inputs = None
-            if cfg.fused and cfg.frequency_antirules:
+            if cfg.frequency_antirules:
                 # sub-time the corpus-global frequency pass (pass 1 of 2)
                 # so the committed stage decomposition separates it from
                 # the labeling pass + write: it is a full corpus scan with
                 # its own shuffle and scales differently.
                 with _timed(timings, "s1_freq"):
                     freq_inputs = _frequency_inputs(corpus, cfg)
-            if cfg.fused:
-                # ONE corpus pass, ONE write: the combined mention+vote frame IS
-                # the stage-1 table; mentions/votes are kind-filtered projections
-                # of the stored copy. partitionBy(kind) prunes those reads at
-                # directory level (no repartition — each task writes both kind
-                # dirs, write parallelism intact). NOTE: a localCheckpoint of
-                # this frame was tried and is 4x SLOWER — 26M rows pinned as
-                # deserialized JVM objects blow the heap; the columnar zstd
-                # round-trip through the stored table is the cheap path.
-                corpus_in, in_obs = _observed_count(corpus, "s1_in")
-                combined, extra_votes = stage1_combined(corpus_in, cfg,
-                                                        freq_inputs=freq_inputs)
-                cat.write_table(combined, wh, "s1_combined", partition_by=["kind"])
-                rows_in = int(in_obs.get["n"])
-                if extra_votes is not None:
-                    cat.write_table(extra_votes, wh, "votes_extra")
-                mentions = _read_mentions(spark, wh, cfg)
-                votes = _read_votes(spark, wh, cfg)
-            else:
-                mentions, votes = stage1_mentions(corpus, cfg)
-                cat.write_table(mentions, wh, "mentions")
-                cat.write_table(votes, wh, "votes")
-                rows_in = 0  # composed path: input count not observed
-                mentions = cat.read_table(spark, wh, "mentions")
-                votes = cat.read_table(spark, wh, "votes")
+            # ONE corpus pass, ONE write: the combined mention+vote frame IS
+            # the stage-1 table; mentions/votes are kind-filtered projections
+            # of the stored copy. partitionBy(kind) prunes those reads at
+            # directory level (no repartition — each task writes both kind
+            # dirs, write parallelism intact). NOTE: a localCheckpoint of
+            # this frame was tried and is 4x SLOWER — 26M rows pinned as
+            # deserialized JVM objects blow the heap; the columnar zstd
+            # round-trip through the stored table is the cheap path.
+            corpus_in, in_obs = _observed_count(corpus, "s1_in")
+            combined, extra_votes = stage1_combined(corpus_in, cfg,
+                                                    freq_inputs=freq_inputs)
+            cat.write_table(combined, wh, "s1_combined", partition_by=["kind"])
+            rows_in = int(in_obs.get["n"])
+            if extra_votes is not None:
+                cat.write_table(extra_votes, wh, "votes_extra")
+            mentions = _read_mentions(spark, wh)
+            votes = _read_votes(spark, wh)
             # per-partition lineage from the written files' parquet footers —
             # driver-side metadata read, NO table re-scan job (mentions = the
-            # kind=m partition of the combined table on the fused path).
-            sub = os.path.join(wh, "s1_combined", "kind=m") if cfg.fused else \
-                os.path.join(wh, "mentions")
-            pstats_rows = ck.partition_stats_files(sub)
+            # kind=m partition of the combined table).
+            pstats_rows = ck.partition_stats_files(
+                os.path.join(wh, "s1_combined", "kind=m"))
             rows_out = sum(n for _, n in pstats_rows)
             ck.record_stage(spark, wh, cfg.run_id, "s1",
                             partition_rows=pstats_rows, rows_in=rows_in,
                             rows_out=rows_out, counters=ck.LINEAGE_SOURCE_FILES)
     if mentions is None:
-        mentions = _read_mentions(spark, wh, cfg)
-        votes = _read_votes(spark, wh, cfg)
+        mentions = _read_mentions(spark, wh)
+        votes = _read_votes(spark, wh)
 
     # ---- aggregate votes -> per-row entities (part of stage 1 output contract)
     entities = None

@@ -107,14 +107,6 @@ def main() -> None:
     ap.add_argument("--bucket-buckets", type=int, default=0,
                     help=">0: row_id-bucketed stage-4 inputs (no-Exchange "
                          "join bench variant)")
-    ap.add_argument("--fused-impl", default="vector",
-                    choices=["vector", "loop"],
-                    help="stage-1 labeler: columnar batch (default) or the "
-                         "per-token reference loop (bench variant)")
-    ap.add_argument("--freq-impl", default="vector",
-                    choices=["vector", "relational"],
-                    help="frequency scan: Arrow partial-count (default) or "
-                         "exploded JVM hash agg (bench variant)")
     args = ap.parse_args()
 
     # session comes from spark-submit conf — this script never sets a master.
@@ -151,9 +143,7 @@ def main() -> None:
             run(spark, synthetic_corpus(spark, args.warmup_rows, seed=args.seed + 1),
                 PipelineConfig(warehouse=wwh, run_id="warmup",
                                aggregator=args.aggregator,
-                               bucket_buckets=args.bucket_buckets,
-                               fused_impl=args.fused_impl,
-                               freq_impl=args.freq_impl)).count()
+                               bucket_buckets=args.bucket_buckets)).count()
         finally:
             shutil.rmtree(wwh, ignore_errors=True)
 
@@ -165,8 +155,6 @@ def main() -> None:
                                  run_id=args.run_id,
                                  aggregator=args.aggregator,
                                  bucket_buckets=args.bucket_buckets,
-                                 fused_impl=args.fused_impl,
-                                 freq_impl=args.freq_impl,
                                  # measured above, outside the timed window —
                                  # gates the audit's broadcast anti-join plan
                                  corpus_rows_hint=n_in),

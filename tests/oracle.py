@@ -167,6 +167,48 @@ def stage1_entities(docs: dict[int, str], gazetteer: dict[str, float],
     return predicted_entities(toks, labels)
 
 
+# ---- fused stage-1 rows (the S1_COMBINED shape of operators/fused.py) -----
+
+def stage1_rows(rows, gazetteer: dict[str, float], ranks: dict[str, int],
+                cutoffs: list[tuple[str, int]]) -> list[tuple]:
+    """(row_id, text) pairs -> the fused labeler's combined mention ('m') and
+    vote ('v') rows, one row at a time from the per-LF oracles above. Vote
+    rows carry the token as surface and weight 1.0; frequency ranks and
+    cutoffs are injected (corpus-global in the pipeline)."""
+    out = []
+    for rid, text in rows:
+        ms = list(TOKEN_RE.finditer(text or ""))
+        toks = [m.group(0) for m in ms]
+
+        def mention(lf, b, e, surface, conf):
+            out.append(("m", rid, lf, b, e, surface, "PERSON_NAME", conf,
+                        conf, 0.0, ms[b].start(), ms[e - 1].end()))
+
+        def vote(lf, i, label="PERSON_NAME"):
+            out.append(("v", rid, lf, i, i + 1, toks[i], label,
+                        0.0, 0.0, 1.0, 0, 0))
+
+        span_surfaces: dict[str, set[str]] = {}
+        for b, e, surface, w in gazetteer_mentions(toks, gazetteer):
+            mention("dictionary", b, e, surface, w)
+            span_surfaces.setdefault("dictionary", set()).add(surface)
+        for lf, b, e, surface, conf in rule_mentions(toks):
+            mention(lf, b, e, surface, conf)
+            span_surfaces.setdefault(lf, set()).add(surface)
+        for lf, surfaces in span_surfaces.items():
+            for _row, i, *_ in project_to_votes(toks, rid, lf, surfaces):
+                vote(lf, i)
+        for lf, detector in (("all_caps", all_caps), ("name_case", name_case)):
+            for i, t in detector(toks):
+                mention(lf, i, i + 1, t, 0.5)
+                vote(lf, i)
+        for i, t in enumerate(toks):
+            for lf, max_rank in cutoffs:
+                if ranks.get(t, max_rank + 1) <= max_rank:
+                    vote(lf, i, "NOT_NAME")
+    return out
+
+
 # ---- combiner (neat_extractors.py:224-302) ---------------------------------
 
 def compute_combined(dict_res: dict, rule_res: dict) -> dict:

@@ -1,13 +1,73 @@
 """Fused single-pass stage 1 must be row-set identical to the composed
 relational operators (SURVEY §2 J1/J2/W3/W5/A1 — the fusion is a physical
-optimization, never a semantic change)."""
+optimization, never a semantic change).
+
+The composed path lives here, as a test-only reference: it tokenizes with
+the JVM regex engine (ASCII ``\\w``), so it agrees with the fused path on
+ASCII corpora only. tests/test_fused_vec.py covers Unicode against the
+function-level oracle."""
 
 from __future__ import annotations
 
-from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from ht_ner_spark.corpus import synthetic_corpus
+from ht_ner_spark.operators import antirules as ar
+from ht_ner_spark.operators import rules as ru
+from ht_ner_spark.operators import votes as vo
+from ht_ner_spark.operators.gazetteer import match_trie
+from ht_ner_spark.operators.tokens import (
+    attach_char_offsets,
+    char_token_view,
+    token_view,
+    with_tokens,
+)
 from ht_ner_spark.pipeline import PipelineConfig, stage1_mentions
+from ht_ner_spark.schemas import CORPUS
 
 N_ROWS = 120
+
+# rule triggers among a row's last tokens: the lookahead runs past the row
+# end (these crashed the array rule operator under ANSI mode)
+EDGE_ROWS = list(enumerate(
+    ["hello aka", "call me", "I", "call me Bob", "aka Zed ok"], start=10_000))
+
+
+def edge_rows_corpus(spark) -> DataFrame:
+    rows = [(rid, "r", "p", "c", "md", t) for rid, t in EDGE_ROWS]
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                       for f in CORPUS.fields[:-1])
+    return spark.createDataFrame(rows, schema).withColumn(
+        "content_sha256", F.sha2(F.col("content"), 256))
+
+
+def stage1_composed(corpus: DataFrame, cfg: PipelineConfig
+                    ) -> tuple[DataFrame, DataFrame]:
+    """-> (mentions, votes) from the relational operators over a shared
+    token view: one corpus pass per LF family plus one per projection."""
+    toks = with_tokens(corpus)
+    tview = token_view(toks)
+    # char offsets (MENTIONS.begin_char/end_char): match_trie emits them
+    # inline; token-span mention frames get them from a char-offset view
+    ctv = char_token_view(corpus).localCheckpoint()
+    gaz_mentions = match_trie(corpus, cfg.gazetteer)
+    rule_ments = attach_char_offsets(ru.rule_mentions_arrays(toks), ctv)
+    caps = attach_char_offsets(ru.all_caps_mentions(tview), ctv)
+    name_case = attach_char_offsets(ru.name_case_mentions(tview), ctv)
+    mentions = (gaz_mentions.unionByName(rule_ments).unionByName(caps)
+                .unionByName(name_case))
+
+    # votes: J2 projection for span LFs (gazetteer + rules), position-faithful
+    # for caps detectors, frequency antirules as NOT_NAME.
+    span_votes = vo.project_mentions_to_votes(
+        tview, gaz_mentions.unionByName(rule_ments))
+    caps_votes = vo.mentions_to_votes_direct(caps.unionByName(name_case))
+    votes = span_votes.unionByName(caps_votes)
+    if cfg.frequency_antirules:
+        freq = ar.word_frequency(tview)
+        votes = votes.unionByName(ar.frequency_votes(tview, freq))
+    return mentions, votes
 
 
 def _rowset(df, cols):
@@ -15,16 +75,20 @@ def _rowset(df, cols):
 
 
 def test_fused_equals_composed(spark, tmp_path):
-    c = synthetic_corpus(spark, N_ROWS).cache()
-    fused_cfg = PipelineConfig(warehouse=str(tmp_path), fused=True)
-    comp_cfg = PipelineConfig(warehouse=str(tmp_path), fused=False, use_trie=True)
+    c = synthetic_corpus(spark, N_ROWS).unionByName(
+        edge_rows_corpus(spark)).cache()
+    cfg = PipelineConfig(warehouse=str(tmp_path))
 
-    fm, fv = stage1_mentions(c, fused_cfg)
-    cm, cv = stage1_mentions(c, comp_cfg)
+    fm, fv = stage1_mentions(c, cfg)
+    cm, cv = stage1_composed(c, cfg)
 
     mcols = ["row_id", "lf_name", "begin", "end", "surface", "label",
              "base_conf", "confidence", "begin_char", "end_char"]
-    assert _rowset(fm, mcols) == _rowset(cm, mcols)
+    got_m = _rowset(fm, mcols)
+    assert got_m == _rowset(cm, mcols)
+    # of the edge rows, only the two whose name token exists yield mentions
+    assert {(m[0], m[4]) for m in got_m if m[0] >= 10_000} == {
+        (10_003, "Bob"), (10_004, "Zed")}
 
     vcols = ["row_id", "pos", "lf_name", "label", "weight", "tok"]
     got, want = _rowset(fv, vcols), _rowset(cv, vcols)
@@ -32,31 +96,9 @@ def test_fused_equals_composed(spark, tmp_path):
     assert len(got) > 0
 
 
-def test_fused_vector_equals_loop_impl(spark, tmp_path):
-    """The columnar labeler (fused_impl='vector', the default) and the
-    per-token loop twin must agree through the full Spark path."""
-    c = synthetic_corpus(spark, N_ROWS).cache()
-    vec_cfg = PipelineConfig(warehouse=str(tmp_path), fused=True,
-                             fused_impl="vector")
-    loop_cfg = PipelineConfig(warehouse=str(tmp_path), fused=True,
-                              fused_impl="loop")
-
-    vm, vv = stage1_mentions(c, vec_cfg)
-    lm, lv = stage1_mentions(c, loop_cfg)
-
-    mcols = ["row_id", "lf_name", "begin", "end", "surface", "label",
-             "base_conf", "confidence", "begin_char", "end_char"]
-    assert _rowset(vm, mcols) == _rowset(lm, mcols)
-    vcols = ["row_id", "pos", "lf_name", "label", "weight", "tok"]
-    got, want = _rowset(vv, vcols), _rowset(lv, vcols)
-    assert got == want
-    assert len(got) > 0
-
-
 def test_fused_no_frequency(spark, tmp_path):
     c = synthetic_corpus(spark, 40)
-    cfg = PipelineConfig(warehouse=str(tmp_path), fused=True,
-                         frequency_antirules=False)
+    cfg = PipelineConfig(warehouse=str(tmp_path), frequency_antirules=False)
     _, votes = stage1_mentions(c, cfg)
     lfs = {r["lf_name"] for r in votes.select("lf_name").distinct().collect()}
     assert not any(lf.startswith("freq_") for lf in lfs)
@@ -66,8 +108,8 @@ def test_fused_relational_vocab_fallback(spark, tmp_path):
     """Forcing max_broadcast_vocab=0 exercises the relational frequency
     fallback; the vote set must not change."""
     c = synthetic_corpus(spark, 60).cache()
-    a = PipelineConfig(warehouse=str(tmp_path), fused=True)
-    b = PipelineConfig(warehouse=str(tmp_path), fused=True, max_broadcast_vocab=0)
+    a = PipelineConfig(warehouse=str(tmp_path))
+    b = PipelineConfig(warehouse=str(tmp_path), max_broadcast_vocab=0)
     _, va = stage1_mentions(c, a)
     _, vb = stage1_mentions(c, b)
     vcols = ["row_id", "pos", "lf_name", "label", "weight", "tok"]

@@ -1,45 +1,39 @@
 """Columnar fused labeler (operators/fused_vec.py) must be row-MULTISET
-identical to the per-token reference loop (fused._label_row) — the
-vectorization is a physical optimization, never a semantic change.
+identical to the per-row reference in tests/oracle.py (stage1_rows, built
+from the per-LF oracle functions) — the vectorization is a physical
+optimization, never a semantic change.
 
 Function-level (no Spark) on adversarial corpora: unicode case edges,
-empty/None texts, multi-word gazetteer phrases, $-number tokens,
-punctuation-glued \\S+ tokens, trigger bigrams at row boundaries, and the
-frequency-antirule original-case rank quirk.  The Spark-level knob
-(PipelineConfig.fused_impl) is covered in tests/test_fused.py.
+empty/None texts, embedded newlines (the batch joiner is a newline),
+multi-word gazetteer phrases, $-number tokens, punctuation-glued \\S+
+tokens, trigger bigrams at row boundaries, and the frequency-antirule
+original-case rank quirk.  Both sides tokenize with Python ``re``, so the
+Unicode fixtures are in the equivalence domain; the Spark path is diffed
+against the composed operators in tests/test_fused.py.
 """
 
 from __future__ import annotations
-
-import re
 
 import pandas as pd
 import pytest
 
 from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_rows
-from ht_ner_spark.functions.text import TOKEN_PATTERN
 from ht_ner_spark.operators import fused_vec
-from ht_ner_spark.operators.fused import _COLS, _TYPES, _label_row
+from ht_ner_spark.operators.fused import _COLS
 from ht_ner_spark.operators.gazetteer import build_trie
 
-TOK_RE = re.compile(TOKEN_PATTERN)
+from . import oracle
 
 
-def loop_frame(rows, trie, ranks, cutoffs):
-    out = []
-    for rid, text in rows:
-        ms = list(TOK_RE.finditer(text or ""))
-        toks = [m.group(0) for m in ms]
-        low = [t.lower() for t in toks]
-        _label_row(rid, toks, low, [m.start() for m in ms],
-                   [m.end() for m in ms], trie, cutoffs, ranks, out)
-    return pd.DataFrame(out, columns=_COLS).astype(_TYPES)
+def oracle_frame(rows, gaz, ranks, cutoffs):
+    return pd.DataFrame(oracle.stage1_rows(rows, gaz, ranks, cutoffs),
+                        columns=_COLS)
 
 
-def vec_frame(rows, trie, ranks, cutoffs):
+def vec_frame(rows, gaz, ranks, cutoffs):
     return fused_vec.label_batch([r[0] for r in rows],
                                  [r[1] for r in rows],
-                                 TOK_RE, trie, ranks, cutoffs)
+                                 build_trie(gaz), ranks, cutoffs)
 
 
 def multiset(df):
@@ -47,10 +41,10 @@ def multiset(df):
 
 
 def assert_parity(rows, gaz=None, ranks=None, cutoffs=None):
-    trie = build_trie(gaz if gaz is not None else dict(DEFAULT_GAZETTEER))
-    lk = multiset(loop_frame(rows, trie, ranks or {}, cutoffs or []))
-    vk = multiset(vec_frame(rows, trie, ranks or {}, cutoffs or []))
-    assert lk == vk
+    gaz = gaz if gaz is not None else dict(DEFAULT_GAZETTEER)
+    ok = multiset(oracle_frame(rows, gaz, ranks or {}, cutoffs or []))
+    vk = multiset(vec_frame(rows, gaz, ranks or {}, cutoffs or []))
+    assert ok == vk
 
 
 def test_synthetic_corpus_parity():
@@ -98,12 +92,15 @@ def test_multiword_gazetteer_walks():
         (1, "jane smith spoke; Jane alone; smith jane reversed"),
         (2, "Jane Smith"),          # phrase ends exactly at row end
         (3, "prefix Jane"),         # partial phrase at row end
+        (4, "Jane\nSmith"),         # phrase across an in-row newline
+        (5, "Jane"),                # phrase split across two rows must
+        (6, "Smith"),               # NOT match (the batch joiner is \n)
     ]
     assert_parity(rows, gaz=gaz)
 
 
 def test_trigger_bigrams_and_row_boundaries():
-    # bigram trigger split across rows must NOT fire (the loop path is
+    # bigram trigger split across rows must NOT fire (the oracle is
     # per-row; the vec path joins rows — boundary handling must match)
     rows = [
         (0, "according to"),
@@ -112,12 +109,15 @@ def test_trigger_bigrams_and_row_boundaries():
         (3, "Mr"),
         (4, "Smith arrived"),
         (5, "Mr Smith arrived"),
+        (6, "call me\nBob"),        # trigger across an in-row newline
+        (7, "call me"),             # trigger at row end, name in next row
+        (8, "Bob"),
     ]
     assert_parity(rows)
 
 
 def test_rank_lookup_is_original_case():
-    # the loop path looks ranks up by ORIGINAL token text (quirk);
+    # ranks are looked up by ORIGINAL token text (quirk);
     # lower-cased keys must not match capitalized occurrences
     rows = [(0, "The the THE tHe"), (1, "the said The")]
     ranks = {"the": 1, "The": 2}
@@ -131,64 +131,14 @@ def test_j2_reprojection_exact_case():
     assert_parity(rows)
 
 
-def test_non_tiling_pattern_falls_back():
-    # a pattern without a \S+ fallback skips chars -> the arithmetic-span
-    # fast path must detect the gap and fall back to per-match spans
-    pat = re.compile(r"[A-Za-z]+")
-    rows = [(7, "ab,cd EF--gh")]
-    out = []
-    for rid, text in rows:
-        ms = list(pat.finditer(text))
-        toks = [m.group(0) for m in ms]
-        low = [t.lower() for t in toks]
-        _label_row(rid, toks, low, [m.start() for m in ms],
-                   [m.end() for m in ms], build_trie({"ab": 0.9}), [], {},
-                   out)
-    ldf = pd.DataFrame(out, columns=_COLS).astype(_TYPES)
-    vdf = fused_vec.label_batch([7], [rows[0][1]], pat,
-                                build_trie({"ab": 0.9}), {}, [])
-    assert multiset(ldf) == multiset(vdf)
+def test_non_tiling_tokenizer_raises(monkeypatch):
+    # the arithmetic spans assume TOKEN_PATTERN tiles every \\S run; a
+    # tokenizer that skips chars must fail loudly, not emit shifted spans
+    import re
 
-
-def test_capture_group_pattern_rejected():
-    # findall on a grouped pattern returns group text, not full matches —
-    # tokenize_batch refuses rather than silently misaligning spans
-    pat = re.compile(r"([A-Za-z]+)")
-    with pytest.raises(ValueError, match="capture group"):
-        fused_vec.tokenize_batch([0], ["ab cd"], pat)
-    # the non-capturing form is accepted
-    fused_vec.tokenize_batch([0], ["ab cd"], re.compile(r"(?:[A-Za-z])+"))
-
-
-def test_whitespace_matching_pattern_spans_correct():
-    # a pattern whose tokens CONTAIN whitespace can tile the \S-run char
-    # totals coincidentally; the fallback must kick in and emit true spans
-    pat = re.compile(r"\w+ \w+|\w+")
-    text = "ab cd"  # one token "ab cd" (5 chars) vs \S runs "ab"+"cd" (4)
-    _, _, _, start, end, toks, _, _ = fused_vec.tokenize_batch(
-        [0], [text], pat)
-    assert list(toks) == ["ab cd"]
-    assert list(start) == [0] and list(end) == [5]
-    # and a case where totals DO coincide: token "b c" (3 chars, skips the
-    # \S char 'a', includes the ws char ' ') over runs "ab"(2)+"c"(1) = 3
-    # — only the ws-containing-token check routes this to the fallback;
-    # the arithmetic fast path would emit the wrong span (0,3) = "ab "
-    text2 = "ab c"
-    pat2 = re.compile(r"b c")
-    _, _, _, s2, e2, t2, _, _ = fused_vec.tokenize_batch([0], [text2], pat2)
-    assert list(zip(t2, s2, e2)) == [("b c", 1, 4)]
-    # cross-row guard: a ws-capable pattern must NEVER match across the
-    # "\n" joiner between batch rows — the joined scan would emit a
-    # phantom token "ab\ncd" for row 0 with span (0, 5) on a 2-char row;
-    # the ws-token branch rescans per row (here: no matches at all)
-    rid3, _, _, _, _, t3, _, _ = fused_vec.tokenize_batch(
-        [0, 1], ["ab", "cd"], re.compile(r"\w+\s\w+|\w+ \w+"))
-    assert len(t3) == 0 and len(rid3) == 0
-    # and per-row matches stay row-local with row-local spans
-    rid4, pos4, _, s4, e4, t4, _, _ = fused_vec.tokenize_batch(
-        [7, 9], ["x y", "p q"], re.compile(r"\w \w|\w+\s\w+"))
-    assert list(zip(rid4, t4, s4, e4)) == [(7, "x y", 0, 3), (9, "p q", 0, 3)]
-    assert list(pos4) == [0, 0]
+    monkeypatch.setattr(fused_vec, "_TOKEN_RE", re.compile(r"[A-Za-z]+"))
+    with pytest.raises(RuntimeError, match="tiles"):
+        fused_vec.tokenize_batch([7], ["ab,cd EF--gh"])
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
@@ -198,7 +148,8 @@ def test_randomized_fuzz(seed):
     rng = random.Random(seed)
     vocab = ["Alice", "BOB", "the", "Mr", "mr", "according", "to", "$3.5",
              "x,y", "İ", "ß", "CAFÉ", "ok", "Jane", "Smith", "a", "AB",
-             "ALLCAPSWORD", "Capitalized", "notcap", "X" * 20, "..", "()"]
+             "ALLCAPSWORD", "Capitalized", "notcap", "X" * 20, "..", "()",
+             "Fourteenletter", "Fifteencharname"]
     rows = []
     for i in range(200):
         n = rng.randint(0, 12)
@@ -287,20 +238,3 @@ def test_word_frequency_tokenizer_divergence_non_ascii(spark):
         token_view(with_tokens(df2))).collect()}
     assert arrow2 == {"bistro", "menu"}
     assert rel2 == {"bistro", " menu"}
-
-
-def test_pipeline_freq_impl_parity(spark, tmp_path):
-    """End-to-end: pipeline triples identical under freq_impl
-    'vector' vs 'relational'."""
-    from ht_ner_spark.corpus import synthetic_corpus
-    from ht_ner_spark.pipeline import PipelineConfig, run
-
-    c = synthetic_corpus(spark, 200).cache()
-    a = run(spark, c, PipelineConfig(warehouse=str(tmp_path / "a"),
-                                     freq_impl="vector"))
-    b = run(spark, c, PipelineConfig(warehouse=str(tmp_path / "b"),
-                                     freq_impl="relational"))
-    ka = {(r["subj"], r["pred"], r["obj"]) for r in a.collect()}
-    kb = {(r["subj"], r["pred"], r["obj"]) for r in b.collect()}
-    assert ka == kb and len(ka) > 0
-    c.unpersist()

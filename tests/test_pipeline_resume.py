@@ -38,18 +38,19 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     tsha = {r["lineage"]["content_sha256"] for r in t1.select("lineage").limit(50).collect()}
     assert tsha <= shas
 
-    # resume: run stages 1-2 under run_id r2, then "crash"; a fresh run()
+    # resume: run stage 1 under run_id r2, then "crash"; a fresh run()
     # with the same run_id must skip completed stages (checkpoint rows) and
     # produce identical triples.
     wh2 = str(tmp_path / "wh_resume")
     cfg2 = PipelineConfig(warehouse=wh2, run_id="r2")
-    from ht_ner_spark.pipeline import stage1_mentions
+    from ht_ner_spark.operators.fused import split_mentions
+    from ht_ner_spark.pipeline import stage1_combined
     from ht_ner_spark.storage import catalog as cat
 
-    mentions, votes = stage1_mentions(c, cfg2)
-    cat.write_table(mentions, wh2, "mentions")
-    cat.write_table(votes, wh2, "votes")
-    m = cat.read_table(spark, wh2, "mentions")
+    combined, extra_votes = stage1_combined(c, cfg2)
+    assert extra_votes is None
+    cat.write_table(combined, wh2, "s1_combined", partition_by=["kind"])
+    m = split_mentions(cat.read_table(spark, wh2, "s1_combined"))
     ck.record_stage(spark, wh2, "r2", "s1", rows_out=m.count())
     # crash here -> restart
     t2 = run(spark, c, cfg2)

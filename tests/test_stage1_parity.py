@@ -9,12 +9,19 @@ from ht_ner_spark.operators.aggregate import predicted_entities, weighted_vote
 from ht_ner_spark.operators import antirules as ar
 from ht_ner_spark.operators import rules as ru
 from ht_ner_spark.operators import votes as vo
-from ht_ner_spark.operators.gazetteer import gazetteer_df, match_relational, match_trie
+from ht_ner_spark.operators.gazetteer import (
+    build_trie,
+    gazetteer_df,
+    match_relational,
+    match_trie,
+    trie_matches,
+)
 from ht_ner_spark.operators.metrics import f1_scores
 from ht_ner_spark.operators.tokens import token_view, with_tokens
 from ht_ner_spark.pipeline import PipelineConfig, stage1_mentions
 
 from . import oracle
+from .test_fused import EDGE_ROWS, edge_rows_corpus
 
 N_ROWS = 120
 
@@ -42,6 +49,28 @@ def test_trie_and_relational_gazetteer_agree(spark):
     assert len(a) > 0
 
 
+def test_trie_matches_fixture():
+    # hand-computed: overlaps, nesting, prefix phrases, case folding
+    trie = build_trie({"ana": 0.9, "ana maria": 0.8, "maria": 0.7,
+                       "de la cruz": 0.6, "la": 0.5})
+
+    def matches(text):
+        return trie_matches(trie, [t.lower() for t in oracle.tokenize(text)])
+
+    assert matches("Ana Maria de la Cruz spoke.") == [
+        (0, 1, 0.9),   # ana
+        (0, 2, 0.8),   # ana maria
+        (1, 2, 0.7),   # maria
+        (2, 5, 0.6),   # de la cruz
+        (3, 4, 0.5),   # la
+    ]
+    assert matches("la la la") == [(0, 1, 0.5), (1, 2, 0.5), (2, 3, 0.5)]
+    assert matches("ana ANA Maria") == [(0, 1, 0.9), (1, 2, 0.9),
+                                        (1, 3, 0.8), (2, 3, 0.7)]
+    assert matches("nothing to see") == []
+    assert matches("") == []
+
+
 def test_gazetteer_matches_oracle(spark):
     c = _corpus(spark)
     trie = match_trie(c, DEFAULT_GAZETTEER)
@@ -58,16 +87,20 @@ def test_gazetteer_matches_oracle(spark):
 
 
 def test_rule_mentions_match_oracle(spark):
-    tview = token_view(with_tokens(_corpus(spark)))
+    # plus rows whose trigger sits among the last tokens (lookahead past
+    # the row end)
+    corpus = _corpus(spark).unionByName(edge_rows_corpus(spark))
+    tview = token_view(with_tokens(corpus))
     got = {
         (r["row_id"], r["lf_name"], r["begin"], r["end"], r["surface"])
         for r in ru.rule_mentions(tview).collect()
     }
+    texts = [(row[0], row[5]) for row in synthetic_rows(N_ROWS)] + EDGE_ROWS
     want = set()
-    for row in synthetic_rows(N_ROWS):
-        toks = oracle.tokenize(row[5])
+    for rid, text in texts:
+        toks = oracle.tokenize(text)
         for lf, b, e, s, _ in oracle.rule_mentions(toks):
-            want.add((row[0], lf, b, e, s))
+            want.add((rid, lf, b, e, s))
     assert got == want
     assert len(got) > 0
     # dead patterns never fire (LOWER-attr quirk)
@@ -77,7 +110,7 @@ def test_rule_mentions_match_oracle(spark):
     # run) is row-set identical to the windowed exploded-view one
     got_arrays = {
         (r["row_id"], r["lf_name"], r["begin"], r["end"], r["surface"])
-        for r in ru.rule_mentions_arrays(with_tokens(_corpus(spark))).collect()
+        for r in ru.rule_mentions_arrays(with_tokens(corpus)).collect()
     }
     assert got_arrays == want
 
@@ -110,7 +143,7 @@ def test_frequency_votes_match_oracle(spark):
 
 def test_stage1_entities_match_oracle_and_gold(spark, tmp_path):
     c = _corpus(spark)
-    cfg = PipelineConfig(warehouse=str(tmp_path), use_trie=True)
+    cfg = PipelineConfig(warehouse=str(tmp_path))
     mentions, votes = stage1_mentions(c, cfg)
     agg = weighted_vote(votes, threshold=cfg.vote_threshold)
     ents = predicted_entities(agg, token_view(with_tokens(c)))
