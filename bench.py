@@ -880,17 +880,15 @@ def scaleout_calib(rows: int | None = None, levels: tuple[int, int] = (2, 8)
 def variant_runs() -> dict:
     """One spark-submit run per engine variant at a fixed modest size, same
     cores — publishes the cost of the alternates the engine ships (VERDICT r2
-    #5): 'hmm' = distributed Baum-Welch vote aggregation, 'bucketed' =
-    row_id-bucketed no-Exchange stage-4 join. 'default' at the same size
-    anchors the comparison."""
+    #5): 'hmm' = distributed Baum-Welch vote aggregation. 'default' at the
+    same size anchors the comparison."""
     # 150k: large enough that variant differences are visible over fixed
     # costs (at 100k one-run differences were pure floor noise)
     rows = int(os.environ.get("SPARK_GRAFT_VARIANT_ROWS", "150000"))
     cores = SCALING_CORES[-1]
     out: dict = {"rows": rows, "cores": cores}
     for name, extra in (("default", ()),
-                        ("hmm", ("--aggregator", "hmm")),
-                        ("bucketed", ("--bucket-buckets", "8"))):
+                        ("hmm", ("--aggregator", "hmm"))):
         r = _one_scaling_run(cores, extra_args=extra, rows=rows)
         if r:
             out[name] = {"sec": r["sec"], "triples_per_sec": r["triples_per_sec"],
@@ -899,40 +897,45 @@ def variant_runs() -> dict:
     return out
 
 
-def fused_labeler_microbench(spark, rows: int = 4000) -> dict:
+def fused_labeler_microbench(spark, rows: int | None = None) -> dict:
     """tokens/s/core of the fused stage-1 labeler — the engine's CPU floor
     at 100x scale (VERDICT r2 #6). Runs fused_vec.label_batch, the columnar
     labeler the Spark pass runs per Arrow batch, single-threaded in THIS
     Python process over synthetic corpus text collected once; no Spark task
     scheduling in the timed window, so the number is per-core and
-    comparable across rounds."""
+    comparable across rounds. The default is four production-sized batches
+    (``COALESCE_ROWS`` each): a smaller input weighs in the per-batch fixed
+    cost the Spark pass amortizes."""
     import re as _re
+    from collections import Counter
 
     from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
+    from ht_ner_spark.operators import fused_vec
+    from ht_ner_spark.operators.antirules import STOPWORDS, THRESHOLDS
     from ht_ner_spark.operators.gazetteer import build_trie
     from ht_ner_spark.operators.tokens import TOKEN_PATTERN
 
-    from collections import Counter
-
-    from ht_ner_spark.operators.antirules import THRESHOLDS
-
+    rows = rows or 4 * fused_vec.COALESCE_ROWS
     texts = [r["content"] for r in
              synthetic_corpus(spark, rows).select("content").collect()]
     trie = build_trie(dict(DEFAULT_GAZETTEER))
     tok_re = _re.compile(TOKEN_PATTERN)
-    # frequency ranks + cutoffs exactly as the pipeline broadcasts them —
-    # without these the antirule vote branch never fires and the number
+    punct_re = _re.compile(r"^[^\w\s]+$")
+    # frequency ranks + cutoffs as the pipeline broadcasts them: stopwords
+    # and punctuation are not ranked (antirules._freq_filter_expr), and
+    # without ranks the antirule vote branch never fires and the number
     # overstates the labeler
-    cnt = Counter(t for txt in texts for t in tok_re.findall(txt or ""))
-    n_toks = sum(cnt.values())
+    toks = [t for txt in texts for t in tok_re.findall(txt or "")]
+    cnt = Counter(t for t in toks
+                  if t.lower() not in STOPWORDS and not punct_re.match(t))
     max_k = max(int(len(cnt) * t) for t in THRESHOLDS)
     cutoffs = [(f"freq_{t}", int(len(cnt) * t)) for t in THRESHOLDS]
     ranks = {tok: i + 1 for i, (tok, _) in enumerate(cnt.most_common(max_k))}
     t0 = time.monotonic()
     _label_in_batches(texts, trie, ranks, cutoffs)
     sec = time.monotonic() - t0
-    return {"rows": rows, "tokens": n_toks, "sec": round(sec, 3),
-            "tokens_per_sec_core": round(n_toks / sec, 1) if sec > 0 else None,
+    return {"rows": rows, "tokens": len(toks), "sec": round(sec, 3),
+            "tokens_per_sec_core": round(len(toks) / sec, 1) if sec > 0 else None,
             "rows_per_sec_core": round(rows / sec, 1) if sec > 0 else None}
 
 

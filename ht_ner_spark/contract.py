@@ -5913,6 +5913,13 @@ WHERE t.rn = 1
 # breaks the hash gate. Frequency LFs are frozen-off on the stream
 # (module-documented deviation); they emit only NOT_NAME votes, never
 # PERSON_NAME mentions, so the mention-level facts are unaffected.
+# The rule-pattern and caps LFs (all_caps, name_case) DO emit PERSON_NAME
+# mentions, and stream_triples folds every PERSON_NAME mention. The
+# gazetteer-only oracle holds because the sf0.01 doc_id < 300 slice has no
+# capital letter and no rule trigger sequence (0 rows each, counted with
+# pyarrow over documents.parquet), and every rule also needs a capitalized
+# name token. A testdata refresh with cased text must extend the oracle to
+# those LFs, or this query must filter to lf_name = 'dictionary'.
 
 STREAM_SLICE = 300  # docs: row_id < 300, split round-robin into 2 files
 

@@ -13,10 +13,12 @@ one hash-agg shuffle; the driver collects the top-k ordered by
 (count DESC, first_seen ASC) — the deterministic stand-in for Counter's
 insertion-order tie-break, replicated by the oracle — and the fused labeler
 votes from that broadcast dict. When the top-k exceeds the broadcast
-budget, the relational form takes over: word_frequency (exploded token
-view, distributed exact rank) and frequency_votes (broadcast join of the
-ranked vocabulary). That relational form is also the composed reference
-the tests diff the fused path against.
+budget, the same aggregate is ranked distributed (rank.exact_global_rank)
+and frequency_votes broadcast-joins the ranked vocabulary against a
+Python-``re`` token view (tokens.char_token_view), so both shapes vote on
+the tokens the labeler emits. word_frequency (exploded JVM-regex token
+view) is the composed reference the tests diff the fused path against;
+the pipeline does not run it.
 
 spacy is_stop/is_punct are approximated with a fixed stopword set + an
 all-punctuation regex (deviation shared with the oracle, SURVEY §7.0).
@@ -59,8 +61,8 @@ def word_frequency_agg(token_view: DataFrame) -> DataFrame:
     """(tok, cnt, first_seen) — the frequency aggregation WITHOUT the global
     rank (one hash-agg shuffle) over the exploded token view. The pipeline
     scans with word_frequency_agg_arrow and ranks driver-side when the
-    vocabulary fits its broadcast budget; word_frequency() below adds the
-    distributed exact rank for the oversized case.
+    top-k fits its broadcast budget; word_frequency() below adds the
+    distributed exact rank (the composed reference the tests use).
 
     ``first_seen`` is the lexicographic MIN of struct(row_id, pos) — the
     global first occurrence. A struct min (not an arithmetic encoding like

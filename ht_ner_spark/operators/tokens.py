@@ -40,9 +40,12 @@ def char_token_view(corpus: DataFrame, text_col: str = "content",
     """(row_id, pos, tok, char_start, char_end) — the token view WITH
     character offsets (Entity.begin_offset semantics,
     /root/reference/sweet/neat_base_classes.py:33-34). Regex match offsets
-    are not relationally derivable, so this is ONE Arrow pass (finditer);
-    the fused stage-1 path gets the same offsets inside its own single pass
-    and never needs this view — it exists for the composed/oracle path."""
+    are not relationally derivable, so this is ONE Arrow pass (finditer).
+    Python ``re`` with TOKEN_PATTERN yields the tokens of
+    fused_vec.tokenize_batch on any text, so this view is also the token
+    view of the pipeline's relational frequency-vote fallback
+    (pipeline._frequency_inputs); the fused labeler gets the same offsets
+    inside its own single pass."""
     import re
     from typing import Iterator
 

@@ -26,7 +26,7 @@ from .operators import antirules as ar
 from .operators.aggregate import predicted_entities, weighted_vote
 from .operators.components import connected_components
 from .operators.linking import link_surfaces
-from .operators.tokens import token_view, with_tokens
+from .operators.tokens import char_token_view, with_tokens
 from .operators.triples import build_triples, dedup_triples, sha_invariant_audit
 from .storage import catalog as cat
 from .storage import checkpoint as ck
@@ -51,15 +51,6 @@ class PipelineConfig:
     # skweak HMM analog (run_sweet.py:60-65).
     aggregator: str = "vote"
     hmm_iter: int = 5
-    # >0 -> co-located stage-4 join: corpus and entities are ALSO written as
-    # row_id-bucketed tables (this many buckets), so the corpus ⋈ entities
-    # join runs with NO Exchange on either side (the write-side distribution
-    # replaces the join-time shuffle — the 100 TB pattern for a table joined
-    # on the same key every run). The parquet stage tables remain the durable
-    # resume format (the session catalog is in-memory without a metastore);
-    # on Iceberg the bucketing is a bucket(n, row_id) partition transform on
-    # the table itself — one write, not two.
-    bucket_buckets: int = 0
     # Known corpus row count, when the caller has one (bench/submit generate
     # the corpus and know it; a resume re-run can read it from the s1
     # checkpoint). When set and <= AUDIT_BROADCAST_MAX_ROWS, the stage-4 sha
@@ -69,16 +60,6 @@ class PipelineConfig:
     # only shape that survives a corpus whose distinct shas exceed one
     # executor's memory, so the scale-safe path needs no hint.
     corpus_rows_hint: int | None = None
-    # 'write-fast' (default): triples land in the dedup agg's arrival order
-    # — zero extra work on the write path. 'read-optimized': one
-    # repartitionByRange(pred, subj) + sortWithinPartitions(subj, obj)
-    # before the write lays each pred directory out as near-disjoint subj
-    # ranges per file, so entity point-lookups (WHERE subj = ...) skip
-    # whole files/row-groups on parquet min/max stats. Costs one extra
-    # full-table range shuffle inside the write — the standard layout
-    # investment for a KG written once and read many times (on Iceberg this
-    # is the table's sort order; here it is the write-side distribution).
-    triples_layout: str = "write-fast"
 
 
 # Broadcast the audit's corpus-sha set only when the corpus is known to be
@@ -91,9 +72,12 @@ AUDIT_BROADCAST_MAX_ROWS = 4_000_000
 def _frequency_inputs(corpus: DataFrame, cfg: PipelineConfig):
     """Corpus-global frequency pass (the reference's own two-pass barrier,
     sweet/create_lfs.py:17-34): one Arrow partial-count scan + hash agg
-    shuffle. Returns (common_ranks dict | None, cutoffs, freq DataFrame |
-    None, tview | None): dict when the top-k fits the broadcast budget,
-    else the relational fallback inputs.
+    shuffle, tokenized by the fused labeler's own tokenizer. Returns
+    (common_ranks dict | None, cutoffs, freq DataFrame | None,
+    tview | None): the dict when the top-k fits the broadcast budget,
+    else the ranked vocabulary and a token view for the relational
+    broadcast-join fallback. Both shapes rank the same aggregate and see
+    the same tokens, so they yield the same votes.
 
     Serial-floor discipline (this block was the scaling bottleneck the
     per-stage bench decomposition exposed — s1_freq efficiency 0.40):
@@ -112,13 +96,14 @@ def _frequency_inputs(corpus: DataFrame, cfg: PipelineConfig):
     the cached multi-partition frame (per-partition bounded top-k,
     driver merge; no full-vocab single task and no driver-side Python
     sort). The (-cnt, first_seen) order is total — one token per
-    (row, pos) — so the collected prefix is deterministic. The
-    distributed exact rank (operators/rank.py) remains the
-    oversized-vocabulary fallback: correct at 10^9 tokens."""
+    (row, pos) — so the collected prefix is deterministic. Above the
+    budget the same cached aggregate is ranked by the distributed exact
+    rank (operators/rank.py): correct at 10^9 tokens."""
     from pyspark import StorageLevel
 
+    from .operators.rank import exact_global_rank
+
     spark = corpus.sparkSession
-    budget = cfg.max_broadcast_vocab
     coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
     prev = spark.conf.get(coalesce_key, "true")
     spark.conf.set(coalesce_key, "false")
@@ -128,36 +113,27 @@ def _frequency_inputs(corpus: DataFrame, cfg: PipelineConfig):
         StorageLevel.MEMORY_AND_DISK)
     try:
         vocab_size = agg.count()
-        if vocab_size <= budget:
-            max_k = max(int(vocab_size * t) for t in ar.THRESHOLDS)
-            cutoffs = [(f"freq_{t}", int(vocab_size * t))
-                       for t in ar.THRESHOLDS]
-            head = (agg.orderBy(F.desc("cnt"), F.asc("first_seen"))
-                    .limit(max_k).collect())
+        max_k = max(int(vocab_size * t) for t in ar.THRESHOLDS)
+        cutoffs = [(f"freq_{t}", int(vocab_size * t)) for t in ar.THRESHOLDS]
+        order = [F.desc("cnt"), F.asc("first_seen")]
+        if max_k <= cfg.max_broadcast_vocab:
+            head = agg.orderBy(*order).limit(max_k).collect()
             ranks = {r["tok"]: i + 1 for i, r in enumerate(head)}
             return ranks, cutoffs, None, None
+        # exact_global_rank materializes its input (localCheckpoint), so the
+        # ranked frame outlives the cached aggregate
+        freq = exact_global_rank(agg, order, "rank")
     finally:
         agg.unpersist()
         spark.conf.set(coalesce_key, prev)
-    # oversized vocabulary: relational fallback (distributed exact rank)
-    tview = token_view(with_tokens(corpus))
-    freq = ar.word_frequency(tview).cache()
-    vocab_size = freq.count()
-    max_k = max(int(vocab_size * t) for t in ar.THRESHOLDS)
-    cutoffs = [(f"freq_{t}", int(vocab_size * t)) for t in ar.THRESHOLDS]
-    if max_k <= cfg.max_broadcast_vocab:
-        ranks = {r["tok"]: r["rank"]
-                 for r in freq.where(F.col("rank") <= max_k).collect()}
-        freq.unpersist()
-        return ranks, cutoffs, None, None
-    return None, cutoffs, freq, tview
+    return None, cutoffs, freq, char_token_view(corpus)
 
 
 def stage1_combined(corpus: DataFrame, cfg: PipelineConfig,
                     freq_inputs: tuple | None = None
                     ) -> tuple[DataFrame, DataFrame | None]:
     """Fused stage 1 -> (combined S1_COMBINED frame, extra relational votes
-    or None). extra votes appear only when the frequency vocabulary exceeds
+    or None). extra votes appear only when the frequency top-k exceeds
     the broadcast budget (relational join fallback). ``freq_inputs`` lets the
     caller pre-run (and sub-time) the frequency pass."""
     from .operators.fused import fused_stage1
@@ -173,7 +149,7 @@ def stage1_combined(corpus: DataFrame, cfg: PipelineConfig,
     )
     extra = None
     if cfg.frequency_antirules and ranks is None:
-        # vocabulary too large to broadcast as a dict: relational
+        # top-k too large to broadcast as a dict: relational
         # broadcast-join fallback (one extra tokenize scan).
         extra = ar.frequency_votes(tview, freq)
     return combined, extra
@@ -208,37 +184,6 @@ def _read_votes(spark: SparkSession, wh: str) -> DataFrame:
     return votes
 
 
-def _bucket_table_name(warehouse: str, run_id: str, table: str) -> str:
-    """Session-catalog name for a run's bucketed stage-4 input. Sanitizing
-    alone collides ('a-b' and 'a.b' both -> 'a_b'), and run_ids repeat across
-    warehouses, so a short hash of (warehouse, run_id) disambiguates."""
-    import hashlib
-    import re
-
-    tag = hashlib.sha256(f"{warehouse}\0{run_id}".encode()).hexdigest()[:10]
-    return re.sub(r"[^0-9a-zA-Z_]", "_", f"b_{run_id}") + f"_{tag}_{table}"
-
-
-def _bucketed_stage4_inputs(spark: SparkSession, corpus: DataFrame,
-                            entities: DataFrame, cfg: PipelineConfig
-                            ) -> tuple[DataFrame, DataFrame]:
-    """Write corpus + entities as row_id-bucketed tables and return bucketed
-    readers: the stage-4 row_id join then needs no Exchange on either side
-    (asserted by tests/test_bucketing.py).
-
-    The write is UNCONDITIONAL overwrite: an exists-skip keyed on table name
-    silently joined stage 4 against a stale bucketed corpus when a later
-    run() in the same session reused a run_id with a different input. Stage
-    4 itself is already resume-gated ('s4' in completed stages), so a true
-    resume never reaches this code path twice."""
-    n = cfg.bucket_buckets
-    ct = _bucket_table_name(cfg.warehouse, cfg.run_id, "corpus")
-    et = _bucket_table_name(cfg.warehouse, cfg.run_id, "entities")
-    cat.write_bucketed(corpus, ct, ["row_id"], n, sort_cols=["row_id"])
-    cat.write_bucketed(entities, et, ["row_id"], n, sort_cols=["row_id"])
-    return cat.read_bucketed(spark, ct), cat.read_bucketed(spark, et)
-
-
 def _observed_count(df: DataFrame, name: str):
     """Attach an Observation so the write action itself yields the row count —
     no separate count() job (one fewer corpus-scale pass per stage)."""
@@ -246,55 +191,6 @@ def _observed_count(df: DataFrame, name: str):
 
     obs = Observation(name)
     return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
-
-
-def near_dup_run(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
-                 text_col: str = "text", id_col: str = "doc_id", k: int = 3,
-                 num_bands: int = 8, min_shared_bands: int = 2,
-                 max_block: int = 500) -> DataFrame:
-    """Checkpointed MinHash near-duplicate pass over a documents frame.
-
-    The standalone operator RETURNS (pairs, dropped_blocks); run as a
-    pipeline entry the dropped-block count is also durably RECORDED in the
-    run's checkpoint counters — a 100 TB dedup whose hub-skew guard silently
-    discards blocks is unauditable. Resume-gated like the KG stages."""
-    from .operators import dedup as dd
-
-    wh = cfg.warehouse
-    os.makedirs(wh, exist_ok=True)
-    if "dedup" not in ck.completed_stages(spark, wh, cfg.run_id):
-        sigs = dd.doc_minhash(docs, text_col=text_col, id_col=id_col, k=k,
-                              num_bands=num_bands)
-        pairs, dropped = dd.minhash_dupe_pairs(
-            sigs, min_shared_bands=min_shared_bands, max_block=max_block)
-        pairs, obs = _observed_count(pairs, "dedup")
-        cat.write_table(pairs, wh, "dup_pairs")
-        ck.record_stage(spark, wh, cfg.run_id, "dedup", rows_out=obs.get["n"],
-                        counters={"dropped_blocks": dropped.count(),
-                                  "max_block": max_block})
-    return cat.read_table(spark, wh, "dup_pairs")
-
-
-def embedding_dedup_run(spark: SparkSession, vectors: DataFrame,
-                        cfg: PipelineConfig, min_cosine: float = 0.95,
-                        bits: int = 6, max_block: int = 1000) -> DataFrame:
-    """Checkpointed embedding near-duplicate pass (sign-bucket blocking +
-    exact cosine verify); dropped oversized buckets land in checkpoint
-    counters, same contract as near_dup_run."""
-    from .operators.similarity import embedding_near_dupes
-
-    wh = cfg.warehouse
-    os.makedirs(wh, exist_ok=True)
-    if "embdedup" not in ck.completed_stages(spark, wh, cfg.run_id):
-        pairs, dropped = embedding_near_dupes(
-            vectors, min_cosine=min_cosine, bits=bits, max_block=max_block)
-        pairs, obs = _observed_count(pairs, "embdedup")
-        cat.write_table(pairs, wh, "emb_dup_pairs")
-        ck.record_stage(spark, wh, cfg.run_id, "embdedup",
-                        rows_out=obs.get["n"],
-                        counters={"dropped_blocks": dropped.count(),
-                                  "max_block": max_block})
-    return cat.read_table(spark, wh, "emb_dup_pairs")
 
 
 @contextmanager
@@ -417,12 +313,7 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
     # ---- stage 4
     if "s4" not in done:
         with _timed(timings, "s4"):
-            corpus4, entities4 = corpus, entities
-            if cfg.bucket_buckets > 0:
-                corpus4, entities4 = _bucketed_stage4_inputs(
-                    spark, corpus, entities, cfg
-                )
-            triples = dedup_triples(build_triples(corpus4, entities4, comps))
+            triples = dedup_triples(build_triples(corpus, entities, comps))
             # write straight off the dedup agg: its hash exchange on
             # (subj, pred, obj) already spreads rows uniformly across all
             # tasks (every core writes; each task emits at most |preds|
@@ -434,14 +325,6 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
             # AQE's coalescing keeps >= defaultParallelism partitions
             # (coalescePartitions.parallelismFirst=true default), so the
             # encode stays parallel at small sizes too.
-            if cfg.triples_layout == "read-optimized":
-                # opt-in layout shuffle (see PipelineConfig.triples_layout):
-                # near-disjoint subj ranges per file -> min/max skipping for
-                # entity point-lookups on the written KG
-                triples = (
-                    triples.repartitionByRange("pred", "subj")
-                    .sortWithinPartitions("subj", "obj")
-                )
             with _timed(timings, "s4_write"):
                 cat.write_table(triples, wh, "triples", partition_by=["pred"])
             # audit the WRITTEN table (what consumers will read): auditing the
@@ -460,6 +343,5 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
             ck.record_stage(spark, wh, cfg.run_id, "s4",
                             partition_rows=pstats_rows, rows_out=rows_out,
                             sha_ok=sha_ok,
-                            counters={"bucket_buckets": cfg.bucket_buckets,
-                                      **ck.LINEAGE_SOURCE_FILES})
+                            counters=ck.LINEAGE_SOURCE_FILES)
     return cat.read_table(spark, wh, "triples")

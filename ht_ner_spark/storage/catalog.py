@@ -51,7 +51,7 @@ def write_table(
             # first micro-batch of a stream: the table does not exist yet and
             # overwritePartitions() would fail with table-not-found — create
             # it, then later batches overwrite only their own partitions
-            # (ADVICE r2: stream_stage1 could never create its Iceberg table)
+            # (stream_triples' first batch creates triple_deltas this way)
             if not df.sparkSession.catalog.tableExists(f"{cat}.{name}"):
                 writer.createOrReplace()
             else:
@@ -74,34 +74,6 @@ def write_table(
     os.makedirs(os.path.join(warehouse, "_meta"), exist_ok=True)
     with open(os.path.join(warehouse, "_meta", f"{name}.json"), "w") as f:
         json.dump(meta, f)
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    bucket_cols: list[str],
-    num_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table (co-located joins): two tables bucketed the
-    same way join WITHOUT a shuffle — the join key distribution is baked
-    into the file layout. The 100 TB pattern for repeatedly-joined tables
-    (mentions ⋈ edges by surface, corpus ⋈ entities by row_id): pay one
-    write-side distribution, skip the Exchange on EVERY later join
-    (tests/test_bucketing.py asserts the plan is Exchange-free).
-
-    Uses the session catalog (`saveAsTable` — parquet bucketing needs a
-    table identity, not a bare path); on Iceberg the equivalent is a
-    `bucket(n, col)` partition transform in write_table."""
-    w = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(name)
-
-
-def read_bucketed(spark: SparkSession, name: str) -> DataFrame:
-    return spark.read.table(name)
 
 
 def _recover_compact(warehouse: str, name: str) -> None:

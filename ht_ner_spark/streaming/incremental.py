@@ -1,4 +1,4 @@
-"""Incremental stage-1 ingestion via Structured Streaming.
+"""Incremental KG maintenance via Structured Streaming.
 
 The reference is pure batch (SURVEY §1.4) and the north rule demands batch
 resumability (checkpoint table + keyed skip, storage/checkpoint.py) — this
@@ -11,9 +11,11 @@ Design:
 * `readStream` over the corpus directory (explicit CORPUS schema — streaming
   sources cannot infer), sha256 attached at scan (the per-row invariant).
 * `foreachBatch`: each micro-batch runs the SAME fused stage-1 labeler as
-  the batch pipeline (operators/fused.py — one code path, two drivers) and
-  writes the warehouse mentions/votes tables, recording a checkpoint row
-  per batch (stage "s1-stream", partition_id = batch_id).
+  the batch pipeline (operators/fused.py — one code path, two drivers),
+  folds its PERSON_NAME mentions into (repo, mentions_name, surface) facts
+  and writes them to the ``triple_deltas`` table, recording a checkpoint
+  row per batch (stage "s4-stream"). ``merged_triples`` folds the deltas
+  at read time.
 * **Exactly-once data, at-least-once metrics**: foreachBatch alone is
   at-least-once (a crash between the data write and the offset commit
   re-runs the batch). The data writes are made idempotent by keying every
@@ -26,10 +28,11 @@ Design:
   files; a long-running `trigger(processingTime=...)` works unchanged).
 
 Corpus-global frequency antirules are inherently batch (a stream has no
-final vocabulary); streaming stage-1 therefore runs with a FROZEN common-word
+final vocabulary); the stream therefore labels with a FROZEN common-word
 ranking computed by a prior batch pass (passed in via ``common_ranks``), or
-with frequency LFs disabled — the same adaptive broadcast contract as
-pipeline._frequency_inputs. Documented deviation, not a silent one.
+with frequency LFs disabled. They emit only NOT_NAME votes, never
+mentions, so the streamed facts do not depend on them. Documented
+deviation, not a silent one.
 """
 
 from __future__ import annotations
@@ -56,49 +59,6 @@ def read_corpus_stream(spark: SparkSession, corpus_dir: str) -> DataFrame:
         .parquet(corpus_dir)
     )
     return stream.withColumn("content_sha256", F.sha2(F.col("content"), 256))
-
-
-def stream_stage1(spark: SparkSession, corpus_dir: str, warehouse: str,
-                  gazetteer: dict[str, float],
-                  common_ranks: dict[str, int] | None = None,
-                  freq_cutoffs: list[tuple[str, int]] | None = None,
-                  run_id: str = "stream") -> None:
-    """Drain all new corpus files through fused stage 1, writing the
-    warehouse mentions/votes tables. Exactly-once per source file: the
-    stream's offset checkpoint prevents re-reads across restarts, and each
-    micro-batch lands in its own ``batch_id`` partition via dynamic
-    partition overwrite, so a crash-and-retry of one batch replaces its
-    partition instead of duplicating rows. Returns when the backlog is
-    drained (Trigger.AvailableNow)."""
-    from ..operators.fused import fused_stage1, split_mentions, split_votes
-
-    os.makedirs(warehouse, exist_ok=True)
-    stream = read_corpus_stream(spark, corpus_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        combined = fused_stage1(
-            batch_df, gazetteer,
-            common_ranks=common_ranks, freq_cutoffs=freq_cutoffs or [],
-        ).localCheckpoint()  # materialize once; the two writes below reuse it
-        mentions = split_mentions(combined).withColumn("batch_id", F.lit(int(batch_id)))
-        votes = split_votes(combined).withColumn("batch_id", F.lit(int(batch_id)))
-        cat.write_table(mentions, warehouse, "mentions", mode="overwrite",
-                        partition_by=["batch_id"], dynamic_overwrite=True)
-        cat.write_table(votes, warehouse, "votes", mode="overwrite",
-                        partition_by=["batch_id"], dynamic_overwrite=True)
-        ck.record_stage(
-            spark, warehouse, run_id, "s1-stream",
-            rows_out=combined.count(),
-            counters={"batch_id": int(batch_id), **ck.LINEAGE_SOURCE_BATCH},
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(warehouse, "_stream_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def stream_triples(spark: SparkSession, corpus_dir: str, warehouse: str,

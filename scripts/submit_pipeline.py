@@ -104,9 +104,6 @@ def main() -> None:
     ap.add_argument("--aggregator", default="vote", choices=["vote", "hmm"],
                     help="vote aggregation: weighted majority or distributed "
                          "Baum-Welch HMM (bench variant)")
-    ap.add_argument("--bucket-buckets", type=int, default=0,
-                    help=">0: row_id-bucketed stage-4 inputs (no-Exchange "
-                         "join bench variant)")
     args = ap.parse_args()
 
     # session comes from spark-submit conf — this script never sets a master.
@@ -142,8 +139,7 @@ def main() -> None:
         try:
             run(spark, synthetic_corpus(spark, args.warmup_rows, seed=args.seed + 1),
                 PipelineConfig(warehouse=wwh, run_id="warmup",
-                               aggregator=args.aggregator,
-                               bucket_buckets=args.bucket_buckets)).count()
+                               aggregator=args.aggregator)).count()
         finally:
             shutil.rmtree(wwh, ignore_errors=True)
 
@@ -154,7 +150,6 @@ def main() -> None:
                   PipelineConfig(warehouse=args.warehouse,
                                  run_id=args.run_id,
                                  aggregator=args.aggregator,
-                                 bucket_buckets=args.bucket_buckets,
                                  # measured above, outside the timed window —
                                  # gates the audit's broadcast anti-join plan
                                  corpus_rows_hint=n_in),

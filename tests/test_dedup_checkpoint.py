@@ -1,55 +1,34 @@
-"""Dropped-block counters from dedup/similarity runs must land in checkpoint
-counters (VERDICT r2 #7): the standalone operators return dropped blocks; the
-pipeline entries record them durably and resume-gate the pass."""
-
-import tempfile
+"""Checkpoint counters and warehouse maintenance: run() records stage 2's
+dropped LSH blocks durably (a linking pass whose hub-skew guard silently
+discards blocks is unauditable), and compact_table rewrites a table's small
+files without changing its content."""
 
 from pyspark.sql import functions as F
 
-from ht_ner_spark.pipeline import PipelineConfig, embedding_dedup_run, near_dup_run
+from ht_ner_spark.corpus import synthetic_corpus
+from ht_ner_spark.pipeline import PipelineConfig, run
 from ht_ner_spark.storage.checkpoint import read_checkpoints
 
-SF = "/root/testdata/sf0.001"
+
+def _stage_row(spark, wh, stage):
+    return read_checkpoints(spark, wh).where(F.col("stage") == stage).first()
 
 
-def _counters(spark, wh, stage):
-    row = (
-        read_checkpoints(spark, wh)
-        .where(F.col("stage") == stage)
-        .select("counters", "rows_out")
-        .first()
-    )
-    return dict(row["counters"]), row["rows_out"]
-
-
-def test_near_dup_run_records_dropped_blocks(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    wh = tempfile.mkdtemp(prefix="htner_dedup_")
-    cfg = PipelineConfig(warehouse=wh, run_id="d1")
-    # max_block=2: the synthetic corpus has shared shingles, so some band
-    # buckets exceed 2 members and MUST be dropped + counted
-    pairs = near_dup_run(spark, docs, cfg, max_block=2)
-    n1 = pairs.count()
-    counters, rows_out = _counters(spark, wh, "dedup")
-    assert counters["max_block"] == 2
-    assert counters["dropped_blocks"] > 0
-    assert rows_out == n1
-    # resume: second call must skip the stage (counters not duplicated)
-    pairs2 = near_dup_run(spark, docs, cfg, max_block=2)
-    assert pairs2.count() == n1
-    ckpt = read_checkpoints(spark, wh).where(F.col("stage") == "dedup")
-    assert ckpt.count() == 1
-
-
-def test_embedding_dedup_run_records_dropped_blocks(spark):
-    vecs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    wh = tempfile.mkdtemp(prefix="htner_embdedup_")
-    cfg = PipelineConfig(warehouse=wh, run_id="e1")
-    # bits=1 -> 2 buckets over 100+ vectors: both exceed max_block=10
-    pairs = embedding_dedup_run(spark, vecs, cfg, bits=1, max_block=10)
-    assert pairs.count() == 0  # everything dropped -> no candidate pairs
-    counters, _ = _counters(spark, wh, "embdedup")
-    assert counters["dropped_blocks"] > 0
+def test_run_records_s2_dropped_blocks(spark, tmp_path):
+    c = synthetic_corpus(spark, 200).cache()
+    # lsh_max_block=2: the synthetic aliases share bands, so some LSH blocks
+    # exceed 2 surfaces and MUST be dropped + counted; linking still finds
+    # edges in the blocks that fit
+    small = str(tmp_path / "small")
+    t = run(spark, c, PipelineConfig(warehouse=small, lsh_max_block=2))
+    assert _stage_row(spark, small, "s2")["counters"]["dropped_blocks"] > 0
+    assert t.where(F.col("pred") == "alias_of").count() > 0
+    assert _stage_row(spark, small, "s4")["sha_ok"]
+    # at the default block limit nothing is dropped
+    dflt = str(tmp_path / "default")
+    run(spark, c, PipelineConfig(warehouse=dflt))
+    assert _stage_row(spark, dflt, "s2")["counters"]["dropped_blocks"] == 0
+    c.unpersist()
 
 
 def test_compact_table(spark, tmp_path):

@@ -34,8 +34,15 @@ EDGE_ROWS = list(enumerate(
     ["hello aka", "call me", "I", "call me Bob", "aka Zed ok"], start=10_000))
 
 
-def edge_rows_corpus(spark) -> DataFrame:
-    rows = [(rid, "r", "p", "c", "md", t) for rid, t in EDGE_ROWS]
+# non-ASCII text, where the JVM regex splits 'café' into 'caf', 'é': every
+# frequency tier must vote on the tokens the labeler emits
+UNICODE_ROWS = list(enumerate(
+    [f"café café w{i} w{i % 7} naïve" for i in range(200)]
+    + ["é. Bob", "CAFÉ Zoë", "", None], start=20_000))
+
+
+def edge_rows_corpus(spark, edge_rows=EDGE_ROWS) -> DataFrame:
+    rows = [(rid, "r", "p", "c", "md", t) for rid, t in edge_rows]
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in CORPUS.fields[:-1])
     return spark.createDataFrame(rows, schema).withColumn(
@@ -105,12 +112,22 @@ def test_fused_no_frequency(spark, tmp_path):
 
 
 def test_fused_relational_vocab_fallback(spark, tmp_path):
-    """Forcing max_broadcast_vocab=0 exercises the relational frequency
-    fallback; the vote set must not change."""
-    c = synthetic_corpus(spark, 60).cache()
-    a = PipelineConfig(warehouse=str(tmp_path))
-    b = PipelineConfig(warehouse=str(tmp_path), max_broadcast_vocab=0)
-    _, va = stage1_mentions(c, a)
-    _, vb = stage1_mentions(c, b)
+    """The frequency votes must not depend on the broadcast budget: 0
+    forces the relational fallback, and a budget between the top-k and
+    the vocabulary size keeps the dict. Non-ASCII rows included."""
+    c = synthetic_corpus(spark, 60).unionByName(
+        edge_rows_corpus(spark, UNICODE_ROWS)).cache()
+    vocab = ar.word_frequency_agg_arrow(c).count()
+    max_k = max(int(vocab * t) for t in ar.THRESHOLDS)
+    assert 0 < max_k < vocab - 1
+
     vcols = ["row_id", "pos", "lf_name", "label", "weight", "tok"]
-    assert _rowset(va, vcols) == _rowset(vb, vcols)
+
+    def votes(**kw):
+        _, v = stage1_mentions(c, PipelineConfig(warehouse=str(tmp_path), **kw))
+        return _rowset(v, vcols)
+
+    want = votes()
+    assert any(v[5] == "café" for v in want)
+    assert votes(max_broadcast_vocab=0) == want
+    assert votes(max_broadcast_vocab=vocab - 1) == want

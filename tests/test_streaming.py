@@ -1,16 +1,15 @@
-"""Incremental stage-1 (streaming/incremental.py): each corpus file is
-labeled exactly once across restarts; output matches the batch fused path."""
+"""Streaming KG maintenance (streaming/incremental.py): each corpus file is
+labeled exactly once across restarts, a retried micro-batch replaces its own
+delta partition, and merge-on-read equals the batch recompute."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
 from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
 from ht_ner_spark.operators.fused import fused_stage1, split_mentions
 from ht_ner_spark.storage import catalog as cat
-from ht_ner_spark.streaming.incremental import stream_stage1
+from ht_ner_spark.streaming.incremental import merged_triples, stream_triples
 
 
 def _drop_files(spark, corpus_dir, lo, hi, seed=42):
@@ -20,63 +19,35 @@ def _drop_files(spark, corpus_dir, lo, hi, seed=42):
     df.coalesce(1).write.mode("append").parquet(corpus_dir)
 
 
-def test_streaming_incremental_exactly_once(spark, tmp_path):
-    corpus_dir = str(tmp_path / "corpus")
-    wh = str(tmp_path / "wh")
-
-    _drop_files(spark, corpus_dir, 0, 30)
-    stream_stage1(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
-    n1 = cat.read_table(spark, wh, "mentions").count()
-    assert n1 > 0
-
-    # no new files -> drain again -> nothing appended
-    stream_stage1(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
-    assert cat.read_table(spark, wh, "mentions").count() == n1
-
-    # second drop -> only the new rows are appended
-    _drop_files(spark, corpus_dir, 30, 50)
-    stream_stage1(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
-    got = cat.read_table(spark, wh, "mentions")
-    assert got.count() > n1
-
-    # result set == the batch fused path over the full corpus (no freq LFs)
-    batch = split_mentions(
-        fused_stage1(
-            synthetic_corpus(spark, 50).where(F.col("row_id") < 50),
-            DEFAULT_GAZETTEER,
-        )
+def _facts(corpus):
+    """The per-batch mention facts stream_triples writes, over ``corpus``."""
+    combined = fused_stage1(corpus, DEFAULT_GAZETTEER)
+    return (
+        split_mentions(combined)
+        .where(F.col("label") == "PERSON_NAME")
+        .join(corpus.select("row_id", "repo"), "row_id")
+        .groupBy(F.col("repo").alias("subj"),
+                 F.lit("mentions_name").alias("pred"),
+                 F.lower(F.col("surface")).alias("obj"))
+        .agg(F.countDistinct("row_id").alias("n_witnesses"),
+             F.max("confidence").alias("conf"))
     )
-    cols = ["row_id", "lf_name", "begin", "end", "surface"]
-    assert {tuple(r[c] for c in cols) for r in got.collect()} == \
-           {tuple(r[c] for c in cols) for r in batch.collect()}
+
+
+def _keyed(rows):
+    return {(r["subj"], r["pred"], r["obj"]): (r["n_witnesses"], r["conf"])
+            for r in rows}
 
 
 def test_stream_triples_merge_on_read_equals_batch(spark, tmp_path):
-    from ht_ner_spark.streaming.incremental import merged_triples, stream_triples
-
     corpus_dir = str(tmp_path / "corpus")
     wh = str(tmp_path / "wh")
 
     def batch_expected(hi):
-        corpus = synthetic_corpus(spark, hi, seed=42)
-        combined = fused_stage1(corpus, DEFAULT_GAZETTEER)
-        return {
-            (r["subj"], r["pred"], r["obj"]): (r["n_witnesses"], r["conf"])
-            for r in (
-                split_mentions(combined)
-                .where(F.col("label") == "PERSON_NAME")
-                .join(corpus.select("row_id", "repo"), "row_id")
-                .groupBy(F.col("repo").alias("subj"),
-                         F.lit("mentions_name").alias("pred"),
-                         F.lower(F.col("surface")).alias("obj"))
-                .agg(F.countDistinct("row_id").alias("n_witnesses"),
-                     F.max("confidence").alias("conf"))
-            ).collect()
-        }
+        return _keyed(_facts(synthetic_corpus(spark, hi, seed=42)).collect())
 
     def merged():
-        return {(r["subj"], r["pred"], r["obj"]): (r["n_witnesses"], r["conf"])
-                for r in merged_triples(spark, wh).collect()}
+        return _keyed(merged_triples(spark, wh).collect())
 
     _drop_files(spark, corpus_dir, 0, 30)
     stream_triples(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
@@ -90,3 +61,32 @@ def test_stream_triples_merge_on_read_equals_batch(spark, tmp_path):
     _drop_files(spark, corpus_dir, 30, 50)
     stream_triples(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
     assert merged() == batch_expected(50)
+
+
+def test_stream_triples_retried_batch_replaces_partition(spark, tmp_path):
+    """A crash between a batch's write and its offset commit re-runs the
+    batch: its second write must replace partition batch_id=N, not append a
+    second copy that would double the merged witness counts, and must
+    leave the other batches' partitions in place."""
+    corpus_dir = str(tmp_path / "corpus")
+    wh = str(tmp_path / "wh")
+    # two drains -> two delta partitions; retry the first
+    _drop_files(spark, corpus_dir, 0, 30)
+    stream_triples(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
+    (batch_id,) = [r["batch_id"] for r in cat.read_table(
+        spark, wh, "triple_deltas").select("batch_id").distinct().collect()]
+    _drop_files(spark, corpus_dir, 30, 50)
+    stream_triples(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
+    deltas = cat.read_table(spark, wh, "triple_deltas")
+    assert deltas.select("batch_id").distinct().count() == 2
+    n_rows = deltas.count()
+    before = _keyed(merged_triples(spark, wh).collect())
+    assert before
+
+    # the retry: the same batch's facts written again, the way process does
+    retry = _facts(synthetic_corpus(spark, 30, seed=42)).withColumn(
+        "batch_id", F.lit(int(batch_id)))
+    cat.write_table(retry, wh, "triple_deltas", mode="overwrite",
+                    partition_by=["batch_id"], dynamic_overwrite=True)
+    assert cat.read_table(spark, wh, "triple_deltas").count() == n_rows
+    assert _keyed(merged_triples(spark, wh).collect()) == before
