@@ -1,67 +1,47 @@
 #!/usr/bin/env python
-"""Benchmark harness for the ht_ner_spark KG-construction engine.
+"""Benchmark CLI for the ht_ner_spark KG-construction engine.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <total_sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>,
-   "pipeline": {"triples": N, "sec": S, "triples_per_sec": T},
-   "scaling": {"cores_lo": 8, "cores_hi": 32, "thrpt_lo": ..,
-               "thrpt_hi": .., "efficiency": ..}}
+``perfbench/`` is the benchmark of record (``BENCHMARK.json``): warm
+``kg_names`` builds and ``stream_append`` updates with a per-layer trace.
+This script measures what perfbench does not, in three sections:
 
-Headline suite = representative queries from __spark_entry__.queries() over
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS],
-plus the full 4-stage pipeline (the BASELINE.json metric is triples/sec
-end-to-end).
+1. **Suite.** Each ``HEADLINE`` contract query of
+   ``__spark_entry__.queries()`` is timed once, warm, over
+   ``$SPARK_GRAFT_SF_DIR`` on ``local[$SPARK_GRAFT_CPUS]``, and so is the
+   4-stage pipeline on a ``PIPELINE_ROWS``-row synthetic corpus. The headline
+   ``value`` is their summed seconds. ``EXTRA_OPS`` are timed afterwards in
+   their own section, and ``ann_tradeoff`` reports cost and recall@k of every
+   ANN path on the same query set.
+2. **Kernel rate.** ``fused_labeler_microbench``: tokens/s of the fused
+   stage-1 labeler on one core, the median of ``MICROBENCH_REPS`` warm calls.
+3. **Scaling.** ``SCALING_PAIRS`` pairs of ``spark-submit --py-files`` runs of
+   the pipeline over ``SCALING_ROWS`` rows, at ``local[1]`` and ``local[4]``
+   (``SCALING_CORES``), alternating which level runs first. Reported as the
+   per-level medians, each pair's efficiency ``(tps_hi / tps_lo) / 4`` and
+   the per-stage medians and efficiencies. There is no pass/fail gate.
 
-Scaling evidence (north rule: >=0.8 efficiency from N to 4N executors): the
-same pipeline job is re-run in two fresh subprocesses at local[8] and
-local[32] on identical input; efficiency = (thrpt_hi / thrpt_lo) / (hi/lo).
-Disable with SPARK_GRAFT_NO_SCALING=1 (e.g. quick iteration).
+After each section the whole result so far is printed as one JSON line, so
+the last line on stdout is always the most complete one, even if the run is
+killed part-way.
+
+Environment:
+  SPARK_GRAFT_SF_DIR        testdata directory of the suite (default sf0.1)
+  SPARK_GRAFT_CPUS          cores of the suite session (default 32)
+  SPARK_GRAFT_WARM_DIR      testdata directory of the untimed warm-up
+  SPARK_GRAFT_BENCH_SCRATCH parent directory of the bench warehouses
+  SPARK_GRAFT_SCALING_ROWS  corpus rows of a scaling run (default 600000)
+  SPARK_GRAFT_NO_SCALING    set to skip the scaling section
 
 Usage:
-  python bench.py                 # full bench, one JSON line on stdout
-  python bench.py --pipeline-only --cores 8 --rows 20000
-                                  # internal: one pipeline run, JSON on stdout
-
-Incremental emission (round-4, VERDICT r3 wrong-#1): the artifact JSON line
-is printed as soon as the headline suite finishes and RE-printed, enriched,
-after every subsequent section (ann, scaling campaigns, calib, variants).
-Each print is a complete self-contained JSON object on its own stdout line,
-so a driver that takes the last parseable line always gets the most complete
-artifact and a driver-side timeout can no longer lose everything (r03: rc
-124, parsed null). A wall-clock budget (SPARK_GRAFT_BENCH_BUDGET_SEC,
-default 2400 s) truncates the campaign sections gracefully from inside:
-every section checks the deadline before starting, campaigns check it
-before each individual run, and whatever is skipped is recorded in
-`sections_skipped` with the reason.
-
-Two live N->4N series (round-4 session 2): `scaling_large` (2M rows,
-2->8 cores — the cross-round protocol pair) and `scaling_n4` (2M rows,
-1->4 cores — the same criterion measured below the single box's DRAM
-ceiling; campaigns 8-10 pinned the box's saturation curve at
-7.6/13.9/25.7/40-44k triples/s for 1/2/4/8 cores). The gate reports BOTH
-values whenever both ran and is met if either live N->4N pair reaches
-0.8 — on a real cluster each added executor brings its own memory
-subsystem, which is the regime the 1->4 pair models. Explicit
-`met_1to4`/`met_2to8` booleans report each criterion pair separately
-(round-4 advisor: `met` alone is an OR and not comparable to pre-r4
-artifacts), and committed campaigns are tagged with their core pair.
-
-Round-5 budget order (VERDICT r4 next-#3/#5): scaling_n4 runs FIRST with
-2-3 pre-declared pairs (the primary gate citation must never rest on an
-n=1 pair), then the cheap scaleout_calib + variants sections (the r4
-verdict's done-criterion is both non-null in the DRIVER artifact, so they
-precede every 2->8 campaign), then scaling_large at 2+1 pairs, then the
-600k cross-round headline series — budget truncation lands on the
-least-load-bearing sections last.
+  python bench.py
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -88,8 +68,8 @@ HEADLINE = [
     "dedup_exact",
 ]
 
-# round-3 additions, timed into their own section (NOT the headline value:
-# the headline list is pinned since round 2 for cross-round comparability).
+# timed into their own section, after the headline loop, so the headline
+# list stays comparable across rounds
 EXTRA_OPS = [
     "chunk_documents",
     "inverted_index",
@@ -101,19 +81,19 @@ EXTRA_OPS = [
     "adamic_adar",
     "random_walks",
     "trending_events",
-    # round-4 code-aware family (same pinned-headline rule)
+    # code-aware family
     "code_triples",
     "repo_similarity",
     "clone_pairs",
     "call_edges",
     "secret_scan",
-    # round-4 KG-lifecycle family
+    # KG-lifecycle family
     "kg_diff",
     "kg_asof",
     "scd2_intervals",
     "alias_canonical",
     "pred_cardinality",
-    # round-4 post-stage-4 consumers + ER evaluation + fusion
+    # post-stage-4 consumers, ER evaluation and fusion
     "entity_types",
     "pg_export",
     "blocking_quality",
@@ -123,72 +103,39 @@ EXTRA_OPS = [
     "schema_graph",
 ]
 
-# 600k rows: large enough that the pipeline's fixed multi-job floor (stage
-# scheduling, tiny s2/s3 frames — profiled ~15 s in a degraded window, ~5 s
-# quiet) is small against the parallel stage-1/stage-4 work, small enough
-# that one run fits inside a quiet window of this shared host. Pinned since
-# round 2 so BENCH_r{N} artifacts stay apples-to-apples. At this size the
-# residual floor caps clean end-to-end 2->8 efficiency around 0.6-0.75; the
-# floor-amortized evidence runs as a second series at SCALING_LARGE_ROWS
-# below (clean-window-gated — long runs straddle more host-noise minutes).
-SCALING_ROWS = int(os.environ.get("SPARK_GRAFT_SCALING_ROWS", "600000"))
-# N and 4N task slots for the scaling-efficiency evidence. Default 2 -> 8:
-# on this 32-core box each Spark core drives a JVM task thread AND a Python
-# UDF worker, so both levels stay un-oversubscribed (local[32] would schedule
-# ~64 runnable threads on 32 cores — a single-JVM local-mode artifact, see
-# BASELINE.md). On a real cluster this pair models per-executor core scaling
-# (spark.executor.cores=2 vs 8); multi-executor scale-out multiplies JVMs.
-SCALING_CORES = tuple(
-    int(c) for c in os.environ.get("SPARK_GRAFT_SCALING_CORES", "2,8").split(",")
-)
+# rows of the in-session pipeline run of the suite
+PIPELINE_ROWS = 20_000
 
-# Floor-amortized second series: same protocol at 2M rows, where the fixed
-# multi-job floor (~5-10 s) is <5% of the parallel work and end-to-end
-# efficiency approaches stage-1's intrinsic scaling (the round-1 0.978 pair
-# ran at this size). Long runs straddle more host-noise minutes, so this
-# series leans on the clean-window classifier: fewer pairs, each only
-# meaningful when its telemetry is clean. The pinned 600k series above stays
-# the cross-round headline.
-SCALING_LARGE_ROWS = int(os.environ.get("SPARK_GRAFT_SCALING_LARGE_ROWS",
-                                        "2000000"))
-SCALING_LARGE_PAIRS = int(os.environ.get("SPARK_GRAFT_SCALING_LARGE_PAIRS", "3"))
+# 600k rows: large enough that the pipeline's fixed multi-job floor is small
+# against the parallel stage-1/stage-4 work, pinned since round 2 so runs
+# stay comparable across rounds
+SCALING_ROWS = int(os.environ.get("SPARK_GRAFT_SCALING_ROWS", "600000"))
+SCALING_CORES = (1, 4)
+SCALING_PAIRS = 3
+
+# timed calls of the kernel microbench, after one untimed warm-up call
+MICROBENCH_REPS = 5
 
 # Minimum rows per synthetic-corpus input task (see run_pipeline): stands in
 # for spark.sql.files.maxPartitionBytes, which only applies to file scans.
-ROWS_PER_INPUT_TASK = int(os.environ.get("SPARK_GRAFT_ROWS_PER_TASK", "2500"))
+ROWS_PER_INPUT_TASK = 2500
 
-# Total wall-clock budget for a full `python bench.py` invocation. Sized
-# from the driver evidence: the ~40-min round-2 bench completed under the
-# driver, the longer round-3 one was killed (rc 124), so 40 min is the
-# largest PROVEN-safe envelope. Sections are ordered most- to
-# least-important and each checks the deadline before starting; campaigns
-# additionally check before every individual run (scaling_run deadline
-# param). Whatever is cut is listed in `sections_skipped` — and because the
-# artifact line is re-printed after every section, even an external kill
-# below this budget still leaves a complete JSON line on stdout.
-BENCH_BUDGET_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "2400"))
-
-# Cold estimates (sec/run) for the deadline check before a campaign has its
-# own observations — worst-case CLEAN-window walls from the committed r03/r04
-# campaign artifacts (degraded windows run longer, but the per-run subprocess
-# timeout bounds those).
-EST_RUN_SEC_600K = {2: 115.0, 8: 80.0}
-EST_RUN_SEC_2M = {2: 330.0, 8: 165.0}
-# 1->4-core confirmation series (campaign-10 observed walls + margin)
-EST_RUN_SEC_N4 = {1: 300.0, 4: 120.0}
-
+# Driver heap of a scaling run: 4 GB per core, capped at half the host's
+# physical memory, since -XX:+AlwaysPreTouch commits all of it at JVM start.
+PHYS_GB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
 
 
 def _scratch_dir(prefix: str) -> str:
     """Bench warehouses live on tmpfs when available: stage-table I/O on a
-    real cluster hits node-local NVMe / parallel object storage, while this
-    sandbox's single virtio disk swings 8-500 MB/s with co-tenant load —
-    routing the (deleted-after) bench warehouse through it measures the
-    neighbors, not the engine. Override with SPARK_GRAFT_BENCH_SCRATCH."""
+    real cluster hits node-local NVMe / parallel object storage, while a
+    shared VM disk swings 8-500 MB/s with co-tenant load — routing the
+    (deleted-after) bench warehouse through it measures the neighbors, not
+    the engine. Override with SPARK_GRAFT_BENCH_SCRATCH."""
     base = os.environ.get("SPARK_GRAFT_BENCH_SCRATCH") or (
         "/dev/shm" if os.path.isdir("/dev/shm") else None
     )
     return tempfile.mkdtemp(prefix=prefix, dir=base)
+
 
 def _session(cores: int):
     from ht_ner_spark.session import get_spark
@@ -198,13 +145,11 @@ def _session(cores: int):
                      extra_conf={"spark.ui.showConsoleProgress": "false"})
 
 
-def run_pipeline(spark, n_rows: int, warmup_rows: int = 2000) -> dict:
-    """Full 4-stage pipeline over the deterministic synthetic corpus.
-
-    A small untimed warm-up run precedes the measurement: first-run JVM cost
-    (codegen JIT, Python worker spin-up, shuffle service init) dominates at
-    small scale and is not part of steady-state throughput (measured: the
-    same 5k-row pipeline runs 111s cold, 22s warm in one JVM)."""
+def run_pipeline(spark, n_rows: int) -> dict:
+    """Full 4-stage pipeline over the deterministic synthetic corpus, timed
+    in ``spark``'s session. No warm-up run: the caller warms the session
+    first (first-run JVM cost — codegen JIT, Python worker spin-up — made
+    the same 5k-row pipeline run 111 s cold vs 22 s warm in one JVM)."""
     from ht_ner_spark.corpus import synthetic_corpus
     from ht_ner_spark.pipeline import PipelineConfig, run
 
@@ -216,16 +161,6 @@ def run_pipeline(spark, n_rows: int, warmup_rows: int = 2000) -> dict:
     # 64 partitions 22.4 s vs 8 partitions 6.5 s, identical triples).
     slots2 = spark.sparkContext.defaultParallelism * 2
     par = max(1, min(slots2, n_rows // ROWS_PER_INPUT_TASK))
-    if warmup_rows:
-        wwh = _scratch_dir("htner_warm_")
-        try:
-            # warmup spreads over ALL task slots regardless of its row count:
-            # its job is JIT/codegen + spinning up every Python worker once
-            run(spark, synthetic_corpus(spark, warmup_rows, partitions=slots2),
-                PipelineConfig(warehouse=wwh, run_id="warmup")).count()
-        finally:
-            shutil.rmtree(wwh, ignore_errors=True)
-
     corpus = synthetic_corpus(spark, n_rows, partitions=par).cache()
     corpus.count()  # materialize input outside the timed window
     wh = _scratch_dir("htner_bench_")
@@ -243,125 +178,19 @@ def run_pipeline(spark, n_rows: int, warmup_rows: int = 2000) -> dict:
             "rows_in": n_rows}
 
 
-def pipeline_only(cores: int, rows: int) -> None:
-    spark = _session(cores)
-    out = run_pipeline(spark, rows)
-    out["cores"] = cores
-    spark.stop()
-    print(json.dumps(out))
-
-
 def _spark_submit_bin() -> str:
-    for cand in (shutil.which("spark-submit"),):
-        if cand:
-            return cand
+    found = shutil.which("spark-submit")
+    if found:
+        return found
     import pyspark
 
     return os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
 
 
-# FIXED number of interleaved (lo,hi) pairs — round-2's advisor flagged the
-# previous clear-the-target-and-stop loop as optional stopping (stop on the
-# first lucky window, keep sampling when unlucky -> upward-biased best-of).
-# Five pairs always run; the headline efficiency is MEDIAN-based, best-of is
-# reported alongside for reference. Protocol pinned round 3: 600k rows,
-# cores 2->8, 5 pairs — keep these constants across rounds so BENCH_r{N}
-# artifacts stay apples-to-apples.
-SCALING_PAIRS = int(os.environ.get("SPARK_GRAFT_SCALING_PAIRS", "5"))
-
-# A run is 'interference-clean' when the hypervisor stole less than half a
-# core's worth of CPU during its timed window (submit_pipeline samples
-# /proc/stat around the measurement; steal jumps to MANY cores' worth in the
-# windows where co-tenants land — 7.7 cores observed while diagnosing the
-# round-2 bimodal hi-level runs, vs ~0.02 quiet). The threshold is fixed
-# here, BEFORE the campaign runs — classification is pre-declared outlier
-# attribution on an external measurement, not post-hoc selection; every
-# run's telemetry is committed either way.
-STEAL_CLEAN_CORES = float(os.environ.get("SPARK_GRAFT_STEAL_CLEAN", "0.5"))
-
-# Second cleanliness dimension: steal only counts CPU the hypervisor withheld
-# while our vCPU was runnable — a co-tenant saturating the socket's memory
-# bandwidth slows every instruction while steal stays low and busy_cores
-# stays HIGH (the r03_campaign2 window: hi-level runs 3x slower at steal
-# 0.7-0.9, busy 12-15 "cores", while the fixed single-core probe doubled
-# 0.61 -> 1.33 s). So each scaling run is now preceded by the pinned
-# single-core probe and a run is clean only if the host executed that fixed
-# work at near its quiet speed. Threshold pre-declared from the committed
-# campaign telemetry: quiet windows measure ~0.55-0.70 s, degraded windows
-# 1.0-1.33 s.
-CPU_PROBE_CLEAN_SEC = float(os.environ.get("SPARK_GRAFT_PROBE_CLEAN", "0.85"))
-
-# Third cleanliness dimension: CPU consumed vs CPU requested. Good local[k]
-# runs consume k + <=0.6 cores (the Python workers overlap the JVM slots,
-# they don't add to them); the pathological runs burn k+1.3 to k+6 while
-# progressing 3-5x slower — a mid-run contention burst amplified by GC,
-# invisible to steal and to probes taken outside the run window. This is
-# the one criterion computed from the run's own resource telemetry rather
-# than an external probe, so two safeguards keep it honest: (a) the JVM's
-# GC threads are capped at the run's core count (above), so the engine
-# cannot legitimately exceed the band the way an unconstrained JVM could,
-# and (b) as with every cleanliness rule, ALL runs stay in the committed
-# artifact with their telemetry, and raw medians are always co-reported.
-BUSY_CLEAN_MARGIN_CORES = float(os.environ.get("SPARK_GRAFT_BUSY_MARGIN", "0.8"))
-
-
-def _is_clean(r: dict) -> bool:
-    host = r.get("host") or {}
-    if float(host.get("steal_cores") or 0.0) >= STEAL_CLEAN_CORES:
-        return False
-    busy = host.get("busy_cores")
-    cores = r.get("cores")
-    if busy is not None and cores and busy > cores + BUSY_CLEAN_MARGIN_CORES:
-        return False
-    probe = max(filter(None, (r.get("cpu_probe_sec"),
-                              r.get("cpu_probe_sec_after"))), default=None)
-    return probe is None or probe <= CPU_PROBE_CLEAN_SEC
-
-
-def _cpu_probe_sec() -> float:
-    """Pinned single-core CPU calibration (same fixed work every round):
-    sha256 over 512 MB of constant bytes + a 2M-iteration pure-Python loop.
-    Recorded before/after the scaling campaign so a cross-round wall-time
-    regression can be attributed (host degraded vs code got slower) — the
-    round-2 artifact could not separate the two (VERDICT r2 wrong-#2)."""
-    import hashlib
-
-    buf = b"\x5a" * (32 * 1024 * 1024)
-    t0 = time.monotonic()
-    h = hashlib.sha256()
-    for _ in range(16):
-        h.update(buf)
-    acc = 0
-    for i in range(2_000_000):
-        acc = (acc * 31 + i) & 0xFFFFFFFF
-    return round(time.monotonic() - t0, 3)
-
-
-def _disk_probe_mbps() -> float:
-    """Sequential-write probe of the warehouse filesystem. The sandbox's
-    virtio disk has been measured anywhere from 20 to 500 MB/s depending on
-    co-tenant load — recording it alongside each bench run is the only way
-    to interpret cross-run differences."""
-    buf = os.urandom(32 * 1024 * 1024)
-    path = tempfile.mktemp(prefix="htner_iop_")
-    t0 = time.monotonic()
-    try:
-        with open(path, "wb") as f:
-            for _ in range(4):
-                f.write(buf)
-            f.flush()
-            os.fsync(f.fileno())
-        return round(128 / (time.monotonic() - t0), 1)
-    finally:
-        try:
-            os.remove(path)
-        except OSError:
-            pass
-
-
-def _one_scaling_run(cores: int, extra_args: tuple[str, ...] = (),
-                     rows: int | None = None,
-                     timeout: float = 900.0) -> dict | None:
+def _one_scaling_run(cores: int) -> dict | None:
+    """One pipeline run in a fresh JVM via ``spark-submit --py-files`` (the
+    cluster run shape) at ``local[cores]``; the JSON line of
+    ``scripts/submit_pipeline.py``, or None if the run failed."""
     wh = _scratch_dir(f"htner_scale{cores}_")
     cmd = [
         _spark_submit_bin(),
@@ -370,407 +199,125 @@ def _one_scaling_run(cores: int, extra_args: tuple[str, ...] = (),
         "--conf", f"spark.sql.shuffle.partitions={2 * cores}",
         "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
         "--conf", "spark.ui.enabled=false",
-        # no console progress bars: they are pure noise in the captured
-        # output, and the driver-side artifact records a bounded output
-        # tail — progress spam can push the JSON artifact line out of it
+        # no console progress bars: they would crowd the JSON line out of a
+        # bounded output tail
         "--conf", "spark.ui.showConsoleProgress=false",
         # zstd: stage writes are disk-bandwidth-bound (BASELINE.md)
         "--conf", "spark.sql.parquet.compression.codec=zstd",
-        # level 1 for STAGE-TABLE writes: the hunt campaign's per-stage split
-        # shows s4_write is the pipeline's encode-bandwidth ceiling (2M rows:
-        # per-stage efficiency 0.47 while s1 scales at 0.95) — intermediates
-        # that live minutes favor encode speed over ratio; a durable final
-        # sink would pick its own level.
+        # level 1 for stage-table writes: s4_write is the pipeline's encode
+        # bandwidth ceiling, and intermediates that live minutes favor encode
+        # speed over ratio
         "--conf", "spark.hadoop.parquet.compression.codec.zstd.level=1",
         # shuffle/localCheckpoint scratch on tmpfs (cluster-local-NVMe
-        # stand-in; the sandbox virtio disk is slow and noisy)
+        # stand-in)
         "--conf", "spark.local.dir=/dev/shm/spark-local",
         "--conf", "spark.io.compression.codec=zstd",
-        # memory PER CORE constant across levels (a cluster scales executor
-        # memory with executor cores; a fixed heap would starve the hi level).
-        # 4 GB/core: concurrent tasks in ONE local JVM share a heap, and GC
-        # pressure rises with task count — stage-1 at 8 cores measured 24%
-        # faster at 24g than 16g; per-core memory is kept equal across levels
-        # so the comparison stays fair.
-        "--conf", f"spark.driver.memory={max(8, 4 * cores)}g",
-        # pre-touch the heap at JVM startup (untimed) instead of paying
-        # first-touch page faults of a multi-ten-GB lazily-committed heap
-        # inside the measured window — the hi level's sporadic multi-10s
-        # JVM-side stalls (measured: s1b 6.5s vs 39.3s across identical
-        # idle-box runs) disappear with a pre-committed heap.
-        # GC threads sized to the run's core count, not the VM's 32 CPUs:
-        # an unconstrained JVM spawns ~23 parallel GC threads, so a GC burst
-        # during a local[8] run can consume 13-14 cores' CPU (measured in the
-        # r03 campaigns' pathological hi runs) and amplify any external
-        # memory-bandwidth contention — a real k-core executor container is
-        # confined to k GC threads, which is what these levels model.
-        "--conf", "spark.driver.extraJavaOptions=" + os.environ.get(
-            "SPARK_GRAFT_JVM_OPTS",
-            f"-XX:+AlwaysPreTouch -XX:ParallelGCThreads={cores}"
-            f" -XX:ConcGCThreads={max(1, cores // 4)}"),
+        "--conf", f"spark.driver.memory={min(4 * cores, PHYS_GB // 2)}g",
+        # pre-touch the heap at JVM start (untimed) instead of paying
+        # first-touch page faults inside the measured window; GC threads
+        # sized to the run's cores, as a k-core executor container would be
+        "--conf", "spark.driver.extraJavaOptions=-XX:+AlwaysPreTouch"
+                  f" -XX:ParallelGCThreads={cores}"
+                  f" -XX:ConcGCThreads={max(1, cores // 4)}",
         "--py-files", os.path.join(REPO, "dist", "ht_ner_spark.zip"),
         os.path.join(REPO, "scripts", "submit_pipeline.py"),
-        "--rows", str(rows if rows is not None else SCALING_ROWS),
+        "--rows", str(SCALING_ROWS),
         "--warehouse", wh,
         "--run-id", f"scale{cores}",
-        *extra_args,
     ]
     try:
-        # a hard timeout per run: a rare pyspark Arrow writer/reader race has
-        # been observed to deadlock a local run (both sides socket-waiting,
-        # box idle) — one hung run must cost one slot, not the whole bench
+        # a hard timeout per run: one hung run must cost one slot, not the
+        # whole bench
         proc = subprocess.run(cmd, capture_output=True, text=True,
-                              timeout=timeout)
+                              timeout=900)
     except subprocess.TimeoutExpired:
         sys.stderr.write(f"scaling run cores={cores} timed out (killed)\n")
-        shutil.rmtree(wh, ignore_errors=True)
         return None
     finally:
         shutil.rmtree(wh, ignore_errors=True)
-    line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else ""
+    lines = proc.stdout.strip().splitlines()
     try:
-        return json.loads(line)
+        return json.loads(lines[-1])
     except (json.JSONDecodeError, IndexError):
         sys.stderr.write(f"scaling run cores={cores} failed:\n{proc.stderr[-2000:]}\n")
         return None
 
 
-def _median(xs: list[float]) -> float:
-    xs = sorted(xs)
-    n = len(xs)
-    return xs[n // 2] if n % 2 else (xs[n // 2 - 1] + xs[n // 2]) / 2
-
-
-def _level_stats(runs: list[dict], cores: int, clean_only: bool = False
-                 ) -> dict | None:
-    sel = [r for r in runs if r["cores"] == cores and r.get("triples_per_sec")
-           and (not clean_only or _is_clean(r))]
-    if not sel:
-        return None
-    ts = [r["triples_per_sec"] for r in sel]
-    secs = [r["sec"] for r in sel]
-    out = {"n": len(ts), "median_tps": round(_median(ts), 2),
-           "best_tps": round(max(ts), 2), "median_sec": round(_median(secs), 3),
-           "best_sec": round(min(secs), 3)}
-    busy = [r["host"]["busy_cores"] for r in sel
-            if (r.get("host") or {}).get("busy_cores")]
-    steal = [(r.get("host") or {}).get("steal_cores", 0.0) for r in sel
-             if r.get("host")]
-    if busy:
-        out["median_busy_cores"] = round(_median(busy), 2)
-    if steal:
-        out["median_steal_cores"] = round(_median(steal), 2)
-    return out
-
-
 def _stage_decomposition(runs: list[dict], lo_c: int, hi_c: int) -> dict:
-    """Per-stage MEDIAN wall at each level + per-stage scaling efficiency
-    ((t_lo/t_hi)/(hi/lo)). Shows which stages scale with cores and which are
-    the fixed multi-job floor — the committed evidence the round-2 verdict
-    asked for ('end-to-end number plus a per-stage decomposition')."""
+    """Per-stage median wall at each level and per-stage efficiency
+    ``(t_lo / t_hi) / (hi / lo)``: which stages scale with cores and which
+    are fixed cost. A stage missing from a run's ``stage_sec`` is left out
+    of that level's median."""
     out: dict = {}
-    keys = sorted({k for r in runs for k in (r.get("stage_sec") or {})})
+    keys = sorted({k for r in runs for k in r["stage_sec"]})
     ratio = hi_c / lo_c
     for k in keys:
         lo = [r["stage_sec"][k] for r in runs
-              if r["cores"] == lo_c and k in (r.get("stage_sec") or {})]
+              if r["cores"] == lo_c and k in r["stage_sec"]]
         hi = [r["stage_sec"][k] for r in runs
-              if r["cores"] == hi_c and k in (r.get("stage_sec") or {})]
+              if r["cores"] == hi_c and k in r["stage_sec"]]
         if not lo or not hi:
             continue
-        mlo, mhi = _median(lo), _median(hi)
+        mlo, mhi = statistics.median(lo), statistics.median(hi)
         out[k] = {"median_sec_lo": round(mlo, 3), "median_sec_hi": round(mhi, 3),
                   "efficiency": round((mlo / mhi) / ratio, 3) if mhi > 0 else None}
     return out
 
 
 def _pair_efficiencies(runs: list[dict], lo_c: int, hi_c: int) -> list[dict]:
-    """Efficiency of each tightly-interleaved (lo, hi) pair — pairs sample
-    the same few-minute host window, so per-pair ratios cancel slow-drift
-    co-tenant load that per-level medians across the whole campaign do not."""
-    ratio = hi_c / lo_c
-    by_pair: dict[int, dict] = {}
+    """Efficiency of each (lo, hi) pair that has both runs: a pair samples
+    one few-minute host window, so its ratio cancels slow drift in
+    co-tenant load that per-level medians over the whole series do not."""
+    by_pair: dict[int, dict[int, float]] = {}
     for r in runs:
-        if "pair" in r:
-            by_pair.setdefault(r["pair"], {})[r["cores"]] = r
-    out = []
-    for idx in sorted(by_pair):
-        p = by_pair[idx]
-        lo, hi = p.get(lo_c), p.get(hi_c)
-        if not lo or not hi or not lo.get("triples_per_sec") \
-                or not hi.get("triples_per_sec"):
-            continue
-        out.append({
-            "pair": idx,
-            "tps_lo": lo["triples_per_sec"], "tps_hi": hi["triples_per_sec"],
-            "efficiency": round(
-                (hi["triples_per_sec"] / lo["triples_per_sec"]) / ratio, 3),
-            "clean": _is_clean(lo) and _is_clean(hi),
-        })
-    return out
-
-
-def _scaling_summary(runs: list[dict], lo_c: int, hi_c: int,
-                     rows: int | None = None,
-                     pairs: int | None = None) -> dict | None:
-    lo = _level_stats(runs, lo_c)
-    hi = _level_stats(runs, hi_c)
-    if lo is None or hi is None:
-        return None
+        by_pair.setdefault(r["pair"], {})[r["cores"]] = r["triples_per_sec"]
     ratio = hi_c / lo_c
-    out = {
-        "cores_lo": lo_c, "cores_hi": hi_c,
-        "rows": SCALING_ROWS if rows is None else rows,
-        "pairs": SCALING_PAIRS if pairs is None else pairs,
-        "thrpt_lo": lo["median_tps"], "thrpt_hi": hi["median_tps"],
-        "sec_lo": lo["median_sec"], "sec_hi": hi["median_sec"],
-        "efficiency_raw_median": round(
-            (hi["median_tps"] / lo["median_tps"]) / ratio, 3),
-        # best-of for reference (upper bound under co-tenant noise)
-        "best_thrpt_lo": lo["best_tps"], "best_thrpt_hi": hi["best_tps"],
-        "efficiency_best": round((hi["best_tps"] / lo["best_tps"]) / ratio, 3),
-        "levels": {str(lo_c): lo, str(hi_c): hi},
-        "steal_clean_cores_threshold": STEAL_CLEAN_CORES,
-    }
-    # interference-clean view: same statistic over runs whose own telemetry
-    # shows <0.5 stolen cores. Headline = clean median when >=2 clean runs
-    # per level, else the raw median — rule fixed here, before any data.
-    clo = _level_stats(runs, lo_c, clean_only=True)
-    chi = _level_stats(runs, hi_c, clean_only=True)
-    basis = "raw_median"
-    eff = out["efficiency_raw_median"]
-    if clo and chi:
-        out["levels_clean"] = {str(lo_c): clo, str(hi_c): chi}
-        out["efficiency_clean_median"] = round(
-            (chi["median_tps"] / clo["median_tps"]) / ratio, 3)
-        if clo["n"] >= 2 and chi["n"] >= 2:
-            basis = f"clean_median(steal<{STEAL_CLEAN_CORES})"
-            eff = out["efficiency_clean_median"]
-        # effective-cores efficiency: per ACTUALLY-CONSUMED-core throughput
-        # ratio. local[2] is not a 2-core execution — GC/compiler/shuffle/
-        # Python-daemon threads run on free host cores beside the 2 task
-        # slots (a cluster's 2-core container would confine them), inflating
-        # the lo denominator. /proc busy-cores measured during the timed
-        # window (campaign runs serially: the run is the only load) gives
-        # the honest per-core ratio.
-        if clo.get("median_busy_cores") and chi.get("median_busy_cores"):
-            out["efficiency_effective_cores"] = round(
-                (chi["median_tps"] / chi["median_busy_cores"])
-                / (clo["median_tps"] / clo["median_busy_cores"]), 3)
-    out["efficiency"] = eff
-    out["headline_basis"] = basis
-    pairs = _pair_efficiencies(runs, lo_c, hi_c)
-    if pairs:
-        out["pair_efficiencies"] = pairs
-        out["median_pair_efficiency"] = round(
-            _median([p["efficiency"] for p in pairs]), 3)
-        clean_pairs = [p["efficiency"] for p in pairs if p["clean"]]
-        if clean_pairs:
-            out["median_clean_pair_efficiency"] = round(_median(clean_pairs), 3)
-    # stage decomposition over clean runs when possible (a stolen window
-    # lands in whichever stage was executing and corrupts its median)
-    clean_runs = [r for r in runs if _is_clean(r)]
-    use_clean = (clo and chi and clo["n"] >= 2 and chi["n"] >= 2)
-    out["stages"] = _stage_decomposition(
-        clean_runs if use_clean else runs, lo_c, hi_c)
-    out["stages_basis"] = "clean" if use_clean else "all"
-    return out
+    return [{"pair": p, "tps_lo": tps[lo_c], "tps_hi": tps[hi_c],
+             "efficiency": round((tps[hi_c] / tps[lo_c]) / ratio, 3)}
+            for p, tps in sorted(by_pair.items())
+            if tps.get(lo_c) and tps.get(hi_c)]
 
 
-def _steal_cores_now(probe_sec: float = 5.0) -> float | None:
-    """Average stolen cores over a short idle probe window."""
-    st0 = _proc_stat()
-    if st0 is None:
-        return None
-    time.sleep(probe_sec)
-    st1 = _proc_stat()
-    return (st1["steal"] - st0["steal"]) / os.sysconf("SC_CLK_TCK") / probe_sec
+def scaling_summary(runs: list[dict]) -> dict | None:
+    """Summarize scaling runs (dicts with ``pair``, ``cores``, ``sec``,
+    ``triples_per_sec`` and ``stage_sec``): per-level medians, per-pair
+    efficiencies and the per-stage decomposition. None unless both levels
+    have a run."""
+    lo_c, hi_c = SCALING_CORES
+    levels = {}
+    for c in SCALING_CORES:
+        sel = [r for r in runs if r["cores"] == c and r["triples_per_sec"]]
+        if not sel:
+            return None
+        levels[str(c)] = {
+            "n": len(sel),
+            "median_sec": round(statistics.median(r["sec"] for r in sel), 3),
+            "median_tps": round(statistics.median(
+                r["triples_per_sec"] for r in sel), 2)}
+    return {"cores_lo": lo_c, "cores_hi": hi_c, "levels": levels,
+            "pair_efficiencies": _pair_efficiencies(runs, lo_c, hi_c),
+            "stages": _stage_decomposition(runs, lo_c, hi_c)}
 
 
-def _wait_for_quiet(max_wait_sec: float, threshold: float = None) -> dict:
-    """Hold the next measurement pair until hypervisor steal subsides (or the
-    bounded budget runs out). This gates on the HOST's exogenous state before
-    running — never on a run's outcome — so it cannot bias the sampled
-    distribution the way result-conditioned stopping does; it only raises the
-    chance a pair lands in a measurable window. Waited time and the steal
-    trace are recorded in the artifact."""
-    threshold = STEAL_CLEAN_CORES if threshold is None else threshold
-    t0 = time.monotonic()
-    trace = []
-    while True:
-        s = _steal_cores_now()
-        if s is None:
-            return {"waited_sec": 0, "steal_trace": []}
-        trace.append(round(s, 2))
-        if s < threshold or (time.monotonic() - t0) >= max_wait_sec:
-            return {"waited_sec": round(time.monotonic() - t0, 1),
-                    "steal_trace": trace[-24:]}
-        time.sleep(min(25.0, max_wait_sec / 8))
-
-
-# bounded per-pair quiet-wait budget (seconds); 0 disables the gate
-QUIET_WAIT_SEC = float(os.environ.get("SPARK_GRAFT_QUIET_WAIT", "300"))
-
-
-# Telemetry-conditioned top-up: after the fixed pairs, if fewer than
-# CLEAN_TARGET pairs were interference-clean (steal + probe, measured
-# EXTERNALLY to the metric), up to EXTRA_PAIRS more run. This conditions
-# continuation on the host's state, never on the efficiency value, so it
-# cannot bias the sampled ratio the way the round-2 clear-target-and-stop
-# loop could — a filthy campaign gets more chances to land a measurable
-# window, a clean one never runs extra pairs. Both knobs are pre-declared.
-SCALING_CLEAN_TARGET = int(os.environ.get("SPARK_GRAFT_CLEAN_TARGET", "3"))
-SCALING_EXTRA_PAIRS = int(os.environ.get("SPARK_GRAFT_EXTRA_PAIRS", "2"))
-
-
-def scaling_run(rows: int | None = None, pairs: int | None = None,
-                clean_target: int | None = None,
-                extra_pairs: int | None = None,
-                timeout: float = 900.0,
-                make_pyfiles: bool = True,
-                deadline: float | None = None,
-                est_sec: dict[int, float] | None = None,
-                on_pair=None,
-                cores: tuple[int, int] | None = None) -> dict | None:
-    """Same job via spark-submit --py-files (north_rule run shape), two
-    parallelism levels, fresh JVM each — the sandbox stand-in for N vs 4N
-    executors. A FIXED number of (lo,hi) pairs run tightly interleaved (the
-    shared host's throughput swings 2-3x minute-to-minute; disk probes around
-    a single bench have recorded 8-500 MB/s), the headline efficiency is the
-    MEDIAN per-level throughput ratio, and every individual run — including
-    its per-stage decomposition, per-run host telemetry + CPU probe, disk
-    probes, and campaign-level CPU calibration — lands in the artifact.
-    No metric-conditioned stopping (see SCALING_CLEAN_TARGET above).
-
-    deadline (monotonic seconds) makes the campaign budget-aware: before
-    each individual run the remaining wall is checked against that level's
-    estimated run time (campaign's own observed max, falling back to
-    est_sec); a run that would not fit is not started and the summary is
-    marked truncated_by_budget. Truncation conditions on TIME, never on the
-    measured efficiency, so it cannot bias the sampled ratio."""
-    if make_pyfiles:
-        subprocess.run(["bash", os.path.join(REPO, "scripts", "make_pyfiles.sh")],
-                       check=True, capture_output=True)
-    rows = SCALING_ROWS if rows is None else rows
-    pairs = SCALING_PAIRS if pairs is None else pairs
-    clean_target = SCALING_CLEAN_TARGET if clean_target is None else clean_target
-    extra_pairs = SCALING_EXTRA_PAIRS if extra_pairs is None else extra_pairs
-    lo_c, hi_c = cores if cores is not None else SCALING_CORES
-    disk_before = _disk_probe_mbps()
-    cpu_before = _cpu_probe_sec()
-    runs: list[dict] = []
-    quiet_waits = []
-    rep = 0
-    truncated = False
-    max_pairs = max(1, pairs) + max(0, extra_pairs)
-
-    def _est_run_sec(cores: int) -> float:
-        obs = [r["sec"] for r in runs if r["cores"] == cores and r.get("sec")]
-        if obs:
-            return max(obs)
-        return (est_sec or {}).get(cores, 150.0)
-
-    while rep < max_pairs:
-        if rep >= max(1, pairs):
-            clean_pairs = sum(
-                1 for p in _pair_efficiencies(runs, lo_c, hi_c) if p["clean"])
-            if clean_pairs >= clean_target:
-                break
-        if deadline is not None:
-            # a pair only starts if BOTH its runs are expected to fit — a
-            # lone lo run that can't be paired is wasted budget
-            need = 1.15 * (_est_run_sec(lo_c) + _est_run_sec(hi_c)) + 20
-            if time.monotonic() + need > deadline:
-                truncated = True
-                break
-        for cores in (lo_c, hi_c):
-            if deadline is not None:
-                slack = deadline - time.monotonic()
-                need = 1.15 * _est_run_sec(cores) + 15
-                if slack < need:
-                    truncated = True
-                    break
-                wait_budget = min(QUIET_WAIT_SEC, max(0.0, slack - need))
-            else:
-                wait_budget = QUIET_WAIT_SEC
-            # gate EACH run, not each pair: the r03_campaign7 artifact shows
-            # a lo run's ~200 s wall is long enough for the window to turn
-            # (its pair-0 hi started degraded and recovered mid-run — s1
-            # 62 s vs 40 s on later pristine pairs). Exogenous host state
-            # only, waits recorded — same no-bias argument as the pair gate.
-            if wait_budget > 0:
-                quiet_waits.append(_wait_for_quiet(wait_budget))
-            probe = _cpu_probe_sec()
-            r = _one_scaling_run(cores, rows=rows, timeout=timeout)
+def scaling_series() -> dict | None:
+    """SCALING_PAIRS pairs of runs at the two SCALING_CORES levels, each in a
+    fresh JVM on identical input; odd pairs run the high level first, so a
+    host that speeds up or slows down over the series does not favour one
+    level."""
+    subprocess.run(["bash", os.path.join(REPO, "scripts", "make_pyfiles.sh")],
+                   check=True, capture_output=True)
+    runs = []
+    for pair in range(SCALING_PAIRS):
+        for cores in SCALING_CORES[::-1] if pair % 2 else SCALING_CORES:
+            r = _one_scaling_run(cores)
             if r is not None:
-                r["cores"] = cores
-                r["pair"] = rep
-                r["cpu_probe_sec"] = probe
-                # post-run probe: catches windows that degrade DURING the
-                # run and persist (the pre-run probe alone missed the
-                # r03_campaign2 mid-campaign doubling)
-                r["cpu_probe_sec_after"] = _cpu_probe_sec()
-                runs.append(r)
-        if truncated:
-            break
-        rep += 1
-        # incremental evidence (r4): after every completed pair, hand the
-        # summary-so-far to the caller so it reaches the emitted artifact —
-        # an external kill mid-campaign costs only the unfinished pair, not
-        # the whole section (same rationale as main()'s per-section _emit).
-        if on_pair is not None:
-            partial = _scaling_summary(runs, lo_c, hi_c, rows=rows, pairs=rep)
-            if partial is not None:
-                partial["partial"] = True
-                partial["runs"] = [
-                    {k: r[k] for k in ("pair", "cores", "sec",
-                                       "triples_per_sec", "stage_sec", "host",
-                                       "cpu_probe_sec", "cpu_probe_sec_after")
-                     if k in r} for r in runs]
-                on_pair(partial)
-    disk_after = _disk_probe_mbps()
-    cpu_after = _cpu_probe_sec()
-    s = _scaling_summary(runs, lo_c, hi_c, rows=rows, pairs=rep)
-    if s is None:
-        return None
-    s.update({
-        "runs": [{k: r[k] for k in ("pair", "cores", "sec", "triples_per_sec",
-                                    "stage_sec", "host", "cpu_probe_sec",
-                                    "cpu_probe_sec_after")
-                  if k in r}
-                 for r in runs],
-        "disk_mbps_before": disk_before, "disk_mbps_after": disk_after,
-        "cpu_probe_sec_before": cpu_before, "cpu_probe_sec_after": cpu_after,
-        "cpu_probe_clean_sec_threshold": CPU_PROBE_CLEAN_SEC,
-        "busy_clean_margin_cores": BUSY_CLEAN_MARGIN_CORES,
-        "quiet_waits": quiet_waits,
-        "truncated_by_budget": truncated,
-    })
-    return s
-
-
-def _proc_stat() -> dict | None:
-    """Host CPU jiffies (user+nice+system+irq+softirq = busy of THIS VM;
-    steal = hypervisor ran a co-tenant while our vCPU was runnable)."""
-    try:
-        with open("/proc/stat") as f:
-            v = [int(x) for x in f.readline().split()[1:]]
-        return {"busy": v[0] + v[1] + v[2] + v[5] + v[6], "iowait": v[4],
-                "steal": v[7] if len(v) > 7 else 0}
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _host_window(st0, sec: float) -> dict | None:
-    st1 = _proc_stat()
-    if st0 is None or st1 is None or sec <= 0:
-        return None
-    clk = os.sysconf("SC_CLK_TCK")
-    return {
-        "busy_cores": round((st1["busy"] - st0["busy"]) / clk / sec, 2),
-        "steal_cores": round((st1["steal"] - st0["steal"]) / clk / sec, 2),
-        "iowait_cores": round((st1["iowait"] - st0["iowait"]) / clk / sec, 2),
-    }
+                runs.append({"pair": pair, "cores": cores, "sec": r["sec"],
+                             "triples_per_sec": r["triples_per_sec"],
+                             "stage_sec": r["stage_sec"]})
+    summary = scaling_summary(runs)
+    if summary is not None:
+        summary.update(rows=SCALING_ROWS, pairs=SCALING_PAIRS, runs=runs)
+    return summary
 
 
 def _label_in_batches(texts, trie, ranks, cutoffs) -> None:
@@ -785,139 +332,27 @@ def _label_in_batches(texts, trie, ranks, cutoffs) -> None:
                               ranks, cutoffs)
 
 
-def _calib_worker(shard, ranks, cutoffs, barrier, outq) -> None:
-    """One model executor: generate own input shard (untimed), sync on the
-    barrier, then run the fused stage-1 labeler (fused_vec.label_batch) over
-    it in production-sized batches."""
-    import re as _re
-
-    from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_rows_range
-    from ht_ner_spark.operators.gazetteer import build_trie
-    from ht_ner_spark.operators.tokens import TOKEN_PATTERN
-
-    texts = [r[5] for r in synthetic_rows_range(shard[0], shard[1])]
-    trie = build_trie(dict(DEFAULT_GAZETTEER))
-    tok_re = _re.compile(TOKEN_PATTERN)
-    n_toks = sum(len(tok_re.findall(t or "")) for t in texts)
-    barrier.wait()
-    t0 = time.monotonic()
-    _label_in_batches(texts, trie, ranks, cutoffs)
-    outq.put((n_toks, time.monotonic() - t0))
-
-
-def scaleout_calib(rows: int | None = None, levels: tuple[int, int] = (2, 8)
-                   ) -> dict | None:
-    """Strong-scaling calibration of the engine's CPU-dominant work across
-    INDEPENDENT PROCESSES — the sandbox model of the north rule's N vs 4N
-    executors. A Spark executor is an isolated process with its own heap;
-    local[k] task slots share one JVM (GC, daemon, allocator) and are the
-    wrong model for scale-OUT. Here the fused stage-1 labeler
-    (fused_vec.label_batch, frequency branch active) runs over a fixed total
-    input split across 2 vs 8 forked workers: same input, no shared runtime,
-    no shuffle — the component a cluster scales by adding executors.
-    Cross-executor stages (frequency agg, vote groupBy, stage-4 join) are
-    hash-partitioned shuffles measured separately in scaling.stages."""
-    import multiprocessing as mp
+def fused_labeler_microbench(rows: int | None = None) -> dict:
+    """tokens/s/core of the fused stage-1 labeler, the engine's CPU floor.
+    Runs fused_vec.label_batch, the columnar labeler the Spark pass runs per
+    Arrow batch, single-threaded in THIS Python process over the text of
+    ``synthetic_rows`` (the rows ``synthetic_corpus`` holds). No Spark runs,
+    so the number is per-core and comparable across rounds. The default is
+    four production-sized batches (``COALESCE_ROWS`` each): a smaller input
+    weighs in the per-batch fixed cost the Spark pass amortizes. One
+    untimed call warms up; MICROBENCH_REPS timed calls over the same texts,
+    ranks and cutoffs give the median rate and its IQR."""
     import re as _re
     from collections import Counter
 
-    from ht_ner_spark.corpus import synthetic_rows_range
-    from ht_ner_spark.operators.antirules import THRESHOLDS
-    from ht_ner_spark.operators.tokens import TOKEN_PATTERN
-
-    rows = rows or 2 * SCALING_ROWS
-    # frequency ranks from a fixed 50k-row sample (calibration measures the
-    # loop's throughput, not rank exactness; the real pipeline computes
-    # ranks corpus-globally in its own measured stage)
-    sample = [r[5] for r in synthetic_rows_range(0, min(rows, 50000))]
-    tok_re = _re.compile(TOKEN_PATTERN)
-    cnt = Counter(t for txt in sample for t in tok_re.findall(txt))
-    max_k = max(int(len(cnt) * t) for t in THRESHOLDS)
-    cutoffs = [(f"freq_{t}", int(len(cnt) * t)) for t in THRESHOLDS]
-    ranks = {tok: i + 1 for i, (tok, _) in enumerate(cnt.most_common(max_k))}
-
-    results: dict[str, dict] = {}
-    try:
-        ctx = mp.get_context("fork")
-        for n in levels:
-            barrier = ctx.Barrier(n + 1)
-            outq = ctx.Queue()
-            step = rows // n
-            procs = [
-                ctx.Process(
-                    target=_calib_worker,
-                    args=(((i * step), (rows if i == n - 1 else (i + 1) * step)),
-                          ranks, cutoffs, barrier, outq),
-                )
-                for i in range(n)
-            ]
-            for p in procs:
-                p.start()
-            barrier.wait()          # release all workers together (prep untimed)
-            t0 = time.monotonic()
-            res = [outq.get() for _ in range(n)]
-            wall = time.monotonic() - t0
-            for p in procs:
-                p.join()
-            toks = sum(r[0] for r in res)
-            results[str(n)] = {
-                "procs": n, "wall_sec": round(wall, 3), "tokens": toks,
-                "tokens_per_sec": round(toks / wall, 1) if wall > 0 else None,
-                "worker_sec": [round(r[1], 3) for r in res],
-            }
-    except Exception as exc:  # noqa: BLE001 - calib must never sink the bench
-        sys.stderr.write(f"scaleout_calib failed: {exc}\n")
-        return None
-    lo, hi = results[str(levels[0])], results[str(levels[-1])]
-    ratio = levels[-1] / levels[0]
-    return {
-        "rows": rows, "levels": results,
-        "efficiency": round(
-            (hi["tokens_per_sec"] / lo["tokens_per_sec"]) / ratio, 3),
-    }
-
-
-def variant_runs() -> dict:
-    """One spark-submit run per engine variant at a fixed modest size, same
-    cores — publishes the cost of the alternates the engine ships (VERDICT r2
-    #5): 'hmm' = distributed Baum-Welch vote aggregation. 'default' at the
-    same size anchors the comparison."""
-    # 150k: large enough that variant differences are visible over fixed
-    # costs (at 100k one-run differences were pure floor noise)
-    rows = int(os.environ.get("SPARK_GRAFT_VARIANT_ROWS", "150000"))
-    cores = SCALING_CORES[-1]
-    out: dict = {"rows": rows, "cores": cores}
-    for name, extra in (("default", ()),
-                        ("hmm", ("--aggregator", "hmm"))):
-        r = _one_scaling_run(cores, extra_args=extra, rows=rows)
-        if r:
-            out[name] = {"sec": r["sec"], "triples_per_sec": r["triples_per_sec"],
-                         "triples": r["triples"], "stage_sec": r.get("stage_sec"),
-                         "host": r.get("host")}
-    return out
-
-
-def fused_labeler_microbench(spark, rows: int | None = None) -> dict:
-    """tokens/s/core of the fused stage-1 labeler — the engine's CPU floor
-    at 100x scale (VERDICT r2 #6). Runs fused_vec.label_batch, the columnar
-    labeler the Spark pass runs per Arrow batch, single-threaded in THIS
-    Python process over synthetic corpus text collected once; no Spark task
-    scheduling in the timed window, so the number is per-core and
-    comparable across rounds. The default is four production-sized batches
-    (``COALESCE_ROWS`` each): a smaller input weighs in the per-batch fixed
-    cost the Spark pass amortizes."""
-    import re as _re
-    from collections import Counter
-
-    from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
+    from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_rows
     from ht_ner_spark.operators import fused_vec
     from ht_ner_spark.operators.antirules import STOPWORDS, THRESHOLDS
     from ht_ner_spark.operators.gazetteer import build_trie
     from ht_ner_spark.operators.tokens import TOKEN_PATTERN
 
     rows = rows or 4 * fused_vec.COALESCE_ROWS
-    texts = [r["content"] for r in
-             synthetic_corpus(spark, rows).select("content").collect()]
+    texts = [r[5] for r in synthetic_rows(rows)]
     trie = build_trie(dict(DEFAULT_GAZETTEER))
     tok_re = _re.compile(TOKEN_PATTERN)
     punct_re = _re.compile(r"^[^\w\s]+$")
@@ -931,24 +366,37 @@ def fused_labeler_microbench(spark, rows: int | None = None) -> dict:
     max_k = max(int(len(cnt) * t) for t in THRESHOLDS)
     cutoffs = [(f"freq_{t}", int(len(cnt) * t)) for t in THRESHOLDS]
     ranks = {tok: i + 1 for i, (tok, _) in enumerate(cnt.most_common(max_k))}
-    t0 = time.monotonic()
     _label_in_batches(texts, trie, ranks, cutoffs)
-    sec = time.monotonic() - t0
-    return {"rows": rows, "tokens": len(toks), "sec": round(sec, 3),
-            "tokens_per_sec_core": round(len(toks) / sec, 1) if sec > 0 else None,
-            "rows_per_sec_core": round(rows / sec, 1) if sec > 0 else None}
+    secs = []
+    for _ in range(MICROBENCH_REPS):
+        t0 = time.monotonic()
+        _label_in_batches(texts, trie, ranks, cutoffs)
+        secs.append(time.monotonic() - t0)
+    rates = [len(toks) / s for s in secs]
+    q1, _, q3 = statistics.quantiles(rates, n=4, method="inclusive")
+    sec = statistics.median(secs)
+    return {"rows": rows, "tokens": len(toks), "reps": MICROBENCH_REPS,
+            "sec": round(sec, 3),
+            "tokens_per_sec_core": round(statistics.median(rates), 1),
+            "tokens_per_sec_core_iqr": round(q3 - q1, 1),
+            "rows_per_sec_core": round(rows / sec, 1)}
 
 
 def ann_tradeoff(spark, sf_dir: str, n_queries: int = 50, k: int = 10) -> dict | None:
-    """Measured cost/recall of every ANN path the engine ships, on the same
-    embeddings table and query set: exact brute force (the recall=1 anchor),
-    multi-table sign-bucket LSH, IVF with the deterministic seed-medoid
-    quantizer, and IVF with the production pyspark.ml kmeans quantizer
-    (its one-off training cost reported separately). Recall@k is measured
-    against the brute-force pairs, not assumed — the committed artifact is
-    the trade-off table a deployment would tune (cells, nprobe, tables,
-    bits) from."""
+    """Measured cost and recall@k of every ANN path the engine ships, on the
+    same embeddings table and query set, against exact brute force. Each
+    row has one ``role``:
+
+    - ``default``: the LSH operator's default configuration;
+    - ``production``: the IVF point a deployment runs (kmeans quantizer,
+      ``IVF_NPROBE_PROD``);
+    - ``diagnostic``: a reference point for reading the others (brute force,
+      disjoint medoids, kmeans at the contract's nprobe);
+    - ``leaky``: the contract's seed-medoid IVF, whose queries are among its
+      own centroids, so its recall is inflated."""
     try:
+        import inspect
+
         from pyspark.sql import functions as F
 
         from ht_ner_spark.contract import IVF_CELLS, IVF_NPROBE, IVF_NPROBE_PROD
@@ -968,56 +416,38 @@ def ann_tradeoff(spark, sf_dir: str, n_queries: int = 50, k: int = 10) -> dict |
         exact, sec_bf = timed_pairs(sim.brute_force_topk(vecs, queries, k=k))
         out: dict = {
             "n_vectors": n_vecs, "n_queries": n_queries, "k": k,
-            "brute_force": {"sec": round(sec_bf, 3), "recall_at_k": 1.0},
+            "brute_force": {"sec": round(sec_bf, 3), "recall_at_k": 1.0,
+                            "role": "diagnostic"},
         }
 
-        def add(name: str, df, extra: dict | None = None) -> None:
+        def add(name: str, df, role: str, **params) -> None:
             pairs, sec = timed_pairs(df)
             out[name] = {"sec": round(sec, 3),
                          "recall_at_k": round(len(exact & pairs) / len(exact), 3),
-                         **(extra or {})}
-
-        import inspect
+                         "role": role, **params}
 
         lsh_defaults = {
             p: inspect.signature(sim.bucketed_ann_topk).parameters[p].default
             for p in ("tables", "bits", "radius")}
         add("lsh_bucketed", sim.bucketed_ann_topk(vecs, queries, k=k),
-            {**lsh_defaults, "default": True})
-        # round-4 default config, retired in round 5 (recall 0.658), kept
-        # for the cross-round trade-off table
-        add("lsh_bucketed_r4_anchor",
-            sim.bucketed_ann_topk(vecs, queries, k=k, bits=8, tables=8,
-                                  radius=1),
-            {"tables": 8, "bits": 8, "radius": 1})
-        # round-3 anchor config, kept for the cross-round trade-off table
-        anchor_c = sim.seed_centroids(vecs, n_cells=16)
-        add("ivf_seed_r3_anchor",
-            sim.ivf_topk(vecs, queries, anchor_c, k=k, nprobe=4),
-            {"cells": 16, "nprobe": 4})
+            "default", **lsh_defaults)
+        ivf = {"cells": IVF_CELLS, "nprobe": IVF_NPROBE}
         seed_c = sim.seed_centroids(vecs, n_cells=IVF_CELLS)
         add("ivf_seed", sim.ivf_topk(vecs, queries, seed_c, k=k, nprobe=IVF_NPROBE),
-            {"cells": IVF_CELLS, "nprobe": IVF_NPROBE, "contract_default": True,
-             # queries (vec_id < n_queries) overlap the lowest-id medoids,
-             # so this row's recall is inflated by self-centered probing —
-             # compare ivf_medoid_disjoint (honest medoids) and ivf_kmeans
-             "queries_are_centroids": True})
-        # honest medoid baseline: centroids drawn DISJOINT from the query set
+            "leaky", **ivf)
         disj_c = sim.seed_centroids(vecs, n_cells=IVF_CELLS,
                                     min_id=n_queries + 50)
         add("ivf_medoid_disjoint",
             sim.ivf_topk(vecs, queries, disj_c, k=k, nprobe=IVF_NPROBE),
-            {"cells": IVF_CELLS, "nprobe": IVF_NPROBE})
+            "diagnostic", **ivf)
         t0 = time.monotonic()
         km_c = sim.kmeans_centroids(vecs, n_cells=IVF_CELLS)
-        train_sec = time.monotonic() - t0
+        train_sec = round(time.monotonic() - t0, 3)
         add("ivf_kmeans", sim.ivf_topk(vecs, queries, km_c, k=k, nprobe=IVF_NPROBE),
-            {"cells": IVF_CELLS, "nprobe": IVF_NPROBE,
-             "train_sec": round(train_sec, 3)})
+            "diagnostic", **ivf, train_sec=train_sec)
         add("ivf_kmeans_prod",
             sim.ivf_topk(vecs, queries, km_c, k=k, nprobe=IVF_NPROBE_PROD),
-            {"cells": IVF_CELLS, "nprobe": IVF_NPROBE_PROD,
-             "production_default": True})
+            "production", cells=IVF_CELLS, nprobe=IVF_NPROBE_PROD)
         vecs.unpersist()
         return out
     except Exception as exc:  # noqa: BLE001 - a trade-off probe must never sink the bench
@@ -1026,10 +456,7 @@ def ann_tradeoff(spark, sf_dir: str, n_queries: int = 50, k: int = 10) -> dict |
 
 
 def _emit(out: dict, t_start: float) -> None:
-    """Print the artifact as ONE complete JSON line (re-printed, enriched,
-    after every section — the driver's last parseable stdout line is always
-    the most complete state; an external kill costs only unfinished
-    sections, never the whole artifact)."""
+    """Print the result so far as one complete JSON line."""
     out["elapsed_sec"] = round(time.monotonic() - t_start, 1)
     sys.stdout.write(json.dumps(out) + "\n")
     sys.stdout.flush()
@@ -1037,7 +464,6 @@ def _emit(out: dict, t_start: float) -> None:
 
 def main() -> None:
     t_start = time.monotonic()
-    deadline = t_start + BENCH_BUDGET_SEC
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -1047,9 +473,8 @@ def main() -> None:
     spark = _session(cores)
     qmap = entrymod.queries()
     # untimed warm-up: each headline query once at the smallest SF, so the
-    # timed pass measures warm steady-state (same rationale as run_pipeline's
-    # warm-up — codegen JIT + Python worker spin-up once per query family,
-    # not as part of the first queries' reported seconds)
+    # timed pass measures warm steady-state (codegen JIT + Python worker
+    # spin-up once per query family)
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if os.path.isdir(warm_dir):
         for name in HEADLINE:
@@ -1060,28 +485,14 @@ def main() -> None:
                 except Exception as exc:  # noqa: BLE001 - warmup must not sink
                     sys.stderr.write(f"warmup {name} failed: {exc}\n")
     timings: dict[str, float] = {}
-    # per-query host telemetry (VERDICT r3 next-#7): busy/steal/iowait cores
-    # measured over each query's own timed window, so a single slow query in
-    # a committed artifact is attributable without a rerun.
-    queries_host: dict[str, dict | None] = {}
-    total = 0.0
-    probe_before = _cpu_probe_sec()
-    st0 = _proc_stat()
-    t_suite = time.monotonic()
     for name in HEADLINE:
         fn = qmap.get(name)
         if fn is None:
             continue
-        st_q = _proc_stat()
         t0 = time.monotonic()
         fn(spark, sf_dir).count()
-        dt = time.monotonic() - t0
-        timings[name] = round(dt, 3)
-        queries_host[name] = _host_window(st_q, dt)
-        total += dt
+        timings[name] = round(time.monotonic() - t0, 3)
 
-    # round-3 extra ops: timed AFTER the pinned headline loop so they can
-    # never perturb it; recorded in their own artifact section.
     extra_timings: dict[str, float] = {}
     for name in EXTRA_OPS:
         fn = qmap.get(name)
@@ -1094,416 +505,31 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 - extras must not sink bench
             sys.stderr.write(f"extra op {name} failed: {exc}\n")
 
-    # in-session pipeline timing (modest size; the session's core count is
-    # whatever the driver chose, which may oversubscribe JVM+Python threads —
-    # the authoritative throughput comes from the scaling runs below). The
-    # session is already warm from the query suite, so no warm-up run.
-    st_q = _proc_stat()
-    pipe = run_pipeline(spark, int(os.environ.get("SPARK_GRAFT_BENCH_ROWS",
-                                                  "20000")), warmup_rows=0)
+    # the session is already warm from the query suite
+    pipe = run_pipeline(spark, PIPELINE_ROWS)
     timings["kg_pipeline"] = pipe["sec"]
-    queries_host["kg_pipeline"] = _host_window(st_q, pipe["sec"])
-    total += pipe["sec"]
-    micro = fused_labeler_microbench(spark)
-    # host telemetry over the whole in-session suite: a cross-round headline
-    # regression can now be read against the steal/busy it ran under
-    # (round-2's 1.9x suite swing was unattributable — VERDICT r2 wrong-#2)
-    suite_host = _host_window(st0, time.monotonic() - t_suite)
 
     out = {
         "metric": "headline suite wall time (kg pipeline + operator queries)",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "queries_host": queries_host,
         "extra_queries": extra_timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cores": cores,
-        "suite_host": suite_host,
-        "cpu_probe_sec_suite_before": probe_before,
-        "cpu_probe_sec_suite_after": _cpu_probe_sec(),
-        "budget_sec": BENCH_BUDGET_SEC,
         "pipeline": pipe,
-        "fused_labeler_1core": micro,
-        "scaling": None,
-        "scaling_large": None,
-        "scaling_n4": None,
-        "scaleout_calib": None,
-        "scaleout_calib_n4": None,
-        "variants": None,
+        "fused_labeler_1core": fused_labeler_microbench(),
         "ann_tradeoff": None,
-        "sections_done": ["suite"],
-        "sections_skipped": [],
+        "scaling": None,
     }
-    # the gate verdict is present from the FIRST emission: before any live
-    # campaign it already carries the committed-campaign evidence, so even a
-    # suite-only artifact records whether the >=0.8 criterion is met by
-    # committed same-protocol campaigns.
-    out["scaling_gate"] = _scaling_gate(None, None)
     _emit(out, t_start)
-
-    def room_for(est: float) -> bool:
-        return time.monotonic() + est < deadline
-
-    def _mark(out: dict, section: str) -> None:
-        """sections_done must mean 'evidence present': a section whose
-        runner returned None (all runs timed out / internal error) is
-        recorded as skipped with reason no_result, not as done (r4 review)."""
-        if out.get(section) is not None:
-            out["sections_done"].append(section)
-        else:
-            out["sections_skipped"].append(
-                {"section": section, "reason": "no_result"})
-
-    # measured cost/recall of the ANN paths on the same query set (needs the
-    # live session; cheap relative to campaigns)
-    if room_for(120):
-        out["ann_tradeoff"] = ann_tradeoff(spark, sf_dir)
-        _mark(out, "ann_tradeoff")
-        _emit(out, t_start)
-    else:
-        out["sections_skipped"].append(
-            {"section": "ann_tradeoff", "reason": "budget"})
+    out["ann_tradeoff"] = ann_tradeoff(spark, sf_dir)
+    _emit(out, t_start)
     spark.stop()
-
-    if os.environ.get("SPARK_GRAFT_NO_SCALING"):
-        out["sections_skipped"].append(
-            {"section": "scaling", "reason": "SPARK_GRAFT_NO_SCALING"})
+    if not os.environ.get("SPARK_GRAFT_NO_SCALING"):
+        out["scaling"] = scaling_series()
         _emit(out, t_start)
-        return
-
-    # campaign order (round 5, VERDICT r4 next-#3/#5): the 1->4-core 2M
-    # series FIRST — it is the scaling_gate's primary citation and must
-    # carry >=2 live pairs — then scaleout_calib + variants (cheap,
-    # driver-artifact-mandated), then the 2->8 2M protocol series
-    # (trimmed to 2+1 pairs), then the 600k cross-round headline series.
-    # Budget truncation lands on the tail.
-    pyfiles_made = False
-
-    def _ensure_pyfiles() -> None:
-        nonlocal pyfiles_made
-        if not pyfiles_made:
-            subprocess.run(["bash", os.path.join(REPO, "scripts",
-                                                 "make_pyfiles.sh")],
-                           check=True, capture_output=True)
-            pyfiles_made = True
-
-    # 1->4-core series at 2M rows: the N->4N criterion measured BELOW the
-    # single box's DRAM ceiling. Campaigns 8-10 pinned the box's saturation
-    # curve (1/2/4/8 cores = 7.6/13.9/25.7/40-44k triples/s — near-linear
-    # to 4 cores, bandwidth-bound beyond), so the 2->8 series measures the
-    # box in windows where co-tenants hold DRAM headroom and the 1->4
-    # series measures the ENGINE's N->4N scaling on any clean window. Both
-    # are always reported; the gate cites each.
-    if (not os.environ.get("SPARK_GRAFT_NO_LARGE")
-            and not os.environ.get("SPARK_GRAFT_NO_N4")
-            and room_for(1.15 * (EST_RUN_SEC_N4[1] + EST_RUN_SEC_N4[4]) + 40)):
-        _ensure_pyfiles()
-
-        def _partial_n4(s: dict) -> None:
-            out["scaling_n4"] = s
-            out["scaling_gate"] = _scaling_gate(
-                out.get("scaling"), out.get("scaling_large"), s)
-            _emit(out, t_start)
-
-        out["scaling_n4"] = scaling_run(
-            # 2 pre-declared pairs + 1 contingency (VERDICT r4 next-#3:
-            # the gate citation must never rest on an n=1 pair)
-            rows=SCALING_LARGE_ROWS, pairs=2, clean_target=2, extra_pairs=1,
-            timeout=900.0, make_pyfiles=False, deadline=deadline,
-            est_sec=EST_RUN_SEC_N4, on_pair=_partial_n4, cores=(1, 4))
-        _mark(out, "scaling_n4")
-        out["scaling_gate"] = _scaling_gate(out["scaling"],
-                                            out.get("scaling_large"),
-                                            out["scaling_n4"])
-        _emit(out, t_start)
-    else:
-        # always record the skip, whatever the cause (round-4 advisor: the
-        # old elif dropped the record when SPARK_GRAFT_NO_LARGE was set)
-        out["sections_skipped"].append(
-            {"section": "scaling_n4",
-             "reason": "SPARK_GRAFT_NO_LARGE"
-             if os.environ.get("SPARK_GRAFT_NO_LARGE")
-             else "SPARK_GRAFT_NO_N4"
-             if os.environ.get("SPARK_GRAFT_NO_N4") else "budget"})
-
-    # scaleout_calib + variants run BEFORE the 2->8 campaigns since round
-    # 5.1: the round-4 verdict's done-criterion is both sections non-null
-    # in the DRIVER's artifact, and in a degraded window scaling_large's
-    # contingency pair would otherwise push them past the deadline (the
-    # final2 rehearsal missed variants by ~60 s). Model of N->4N executor
-    # scale-out: independent forked processes over the same fixed input
-    # (see scaleout_calib docstring), at BOTH criterion pairs so the
-    # process model lines up with each live series.
-    if room_for(240):
-        out["scaleout_calib"] = scaleout_calib()
-        _mark(out, "scaleout_calib")
-        out["scaleout_calib_n4"] = scaleout_calib(levels=(1, 4))
-        _emit(out, t_start)
-    else:
-        out["sections_skipped"].append(
-            {"section": "scaleout_calib", "reason": "budget"})
-
-    if room_for(350):  # 5 variants x ~60-70 s spark-submit at 150k rows
-        _ensure_pyfiles()
-        out["variants"] = variant_runs()
-        _mark(out, "variants")
-        _emit(out, t_start)
-    else:
-        out["sections_skipped"].append(
-            {"section": "variants", "reason": "budget"})
-
-    if not os.environ.get("SPARK_GRAFT_NO_LARGE") and room_for(
-            1.15 * (EST_RUN_SEC_2M[2] + EST_RUN_SEC_2M[8]) + 60):
-        _ensure_pyfiles()
-
-        def _partial_large(s: dict) -> None:
-            out["scaling_large"] = s
-            out["scaling_gate"] = _scaling_gate(out.get("scaling"), s,
-                                               out.get("scaling_n4"))
-            _emit(out, t_start)
-
-        out["scaling_large"] = scaling_run(
-            # 2+1 pairs since round 5 (r4 ran SCALING_LARGE_PAIRS=3+1):
-            # this series is corroboration, not the gate citation, and the
-            # freed ~500 s funds the thicker scaling_n4 + calib/variants
-            rows=SCALING_LARGE_ROWS, pairs=2,
-            # 900s per-run cap = the dev-campaign protocol (ade87a2): a 2M
-            # run needing more is >=3x any clean run and always classifies
-            # unclean; 600 killed degraded-window runs that still complete
-            clean_target=2, extra_pairs=1, timeout=900.0,
-            make_pyfiles=False, deadline=deadline, est_sec=EST_RUN_SEC_2M,
-            on_pair=_partial_large)
-        _mark(out, "scaling_large")
-        out["scaling_gate"] = _scaling_gate(out["scaling"],
-                                            out["scaling_large"],
-                                            out.get("scaling_n4"))
-        _emit(out, t_start)
-    else:
-        out["sections_skipped"].append(
-            {"section": "scaling_large",
-             "reason": "SPARK_GRAFT_NO_LARGE"
-             if os.environ.get("SPARK_GRAFT_NO_LARGE") else "budget"})
-
-    if room_for(1.15 * (EST_RUN_SEC_600K[2] + EST_RUN_SEC_600K[8]) + 40):
-        _ensure_pyfiles()
-        def _partial_600k(s: dict) -> None:
-            out["scaling"] = s
-            out["scaling_gate"] = _scaling_gate(s, out.get("scaling_large"),
-                                               out.get("scaling_n4"))
-            _emit(out, t_start)
-
-        # trimmed to 2+1 pairs in round 5 (was 5+2): this series is the
-        # cross-round headline, no longer the gate citation, and the freed
-        # budget funds the thicker scaling_n4 + calib/variants sections
-        scaling = scaling_run(pairs=2, clean_target=2, extra_pairs=1,
-                              make_pyfiles=False, deadline=deadline,
-                              timeout=600.0, est_sec=EST_RUN_SEC_600K,
-                              on_pair=_partial_600k)
-        out["scaling"] = scaling
-        _mark(out, "scaling")
-        out["scaling_gate"] = _scaling_gate(scaling, out["scaling_large"],
-                                        out.get("scaling_n4"))
-        if scaling:
-            # authoritative throughput: the spark-submit runs at the higher
-            # parallelism with un-oversubscribed threads (BASELINE.md
-            # protocol); median is the headline — on the same clean basis as
-            # the efficiency headline when enough clean runs exist — best-of
-            # is the noise-window upper bound
-            hi_key = str(scaling["cores_hi"])
-            hi_lev = scaling["levels"][hi_key]
-            if scaling["headline_basis"].startswith("clean"):
-                hi_lev = scaling.get("levels_clean", {}).get(hi_key, hi_lev)
-            out["pipeline"] = {
-                **out["pipeline"],
-                "median_triples_per_sec": hi_lev["median_tps"],
-                "median_basis": scaling["headline_basis"],
-                "best_triples_per_sec": scaling["best_thrpt_hi"],
-                "best_cores": scaling["cores_hi"],
-                "best_rows": scaling["rows"]}
-        _emit(out, t_start)
-    else:
-        out["sections_skipped"].append(
-            {"section": "scaling", "reason": "budget"})
-    _emit(out, t_start)
-
-
-def _scaling_gate(scaling: dict | None, scaling_large: dict | None,
-                  scaling_n4: dict | None = None) -> dict:
-    """Self-describing north-rule summary: the >=0.8 N->4N criterion is
-    evidenced by the floor-amortized 2M series (BASELINE.md protocol note
-    12 — at 600k the fixed multi-job floor is ~25% of a hi-level run and
-    caps end-to-end efficiency by construction; at cluster scale per-job
-    input is never this small). The pinned 600k series stays co-reported
-    as the cross-round headline.
-
-    Always returns a gate dict: before any live campaign has run (or if all
-    were budget-skipped) the committed-campaign fields alone carry the
-    verdict, with value/met null and evidence saying so."""
-    ev, basis = None, None
-    if scaling_large and scaling_large.get("efficiency") is not None:
-        ev, basis = scaling_large, "scaling_large"
-    elif scaling and scaling.get("efficiency") is not None:
-        ev, basis = scaling, "scaling"
-    campaigns = _committed_campaigns()
-    met_committed = [c for c in campaigns if (c.get("efficiency") or 0) >= 0.8]
-    gate = {
-        "criterion": "throughput efficiency >= 0.8 scaling cores N -> 4N",
-        "evidence": "no live campaign in this artifact (pending or "
-                    "budget-skipped) — see committed_campaigns",
-        "value": None,
-        "met": None,
-        # explicit per-criterion-pair verdicts (round-4 advisor: `met` is
-        # an OR of the 2->8 and 1->4 pairs since r4 and is not comparable
-        # to the same-named pre-r4 field; cross-round consumers should
-        # read these). None = that pair did not run in this artifact.
-        "met_2to8": None,
-        "met_1to4": None,
-        # corroboration: every committed dev campaign artifact in the repo
-        # (same protocol, run in hunted quiet windows between rounds). The
-        # live `value` above stays the gate; these let a reader judge whether
-        # a sub-gate live number is the code or the host window (the listed
-        # files carry full per-run telemetry).
-        "committed_campaigns": campaigns,
-        # machine-readable committed-evidence verdict: does ANY committed
-        # same-protocol campaign meet the criterion? (the live window above
-        # samples one host state; the campaigns sample many) — plus the
-        # same verdict filtered by core pair, so 1->4 and 2->8 evidence
-        # can't silently mix (round-4 advisor)
-        "met_by_committed_campaign": bool(met_committed),
-        "met_by_committed_campaign_2to8": bool(
-            [c for c in met_committed if c.get("pair") == "2to8"]),
-        "met_by_committed_campaign_1to4": bool(
-            [c for c in met_committed if c.get("pair") == "1to4"]),
-        "best_committed": (max(campaigns, key=lambda c: c["efficiency"])
-                           if campaigns else None),
-        # per-pair bests: 1->4 efficiencies run systematically higher than
-        # 2->8 on this box, so the overall best_committed switched pairs in
-        # r5 — cross-round readers comparing against pre-r5 artifacts
-        # (2to8-only by construction) should use the pair-scoped field
-        "best_committed_2to8": max(
-            (c for c in campaigns if c.get("pair") == "2to8"),
-            key=lambda c: c["efficiency"], default=None),
-        "best_committed_1to4": max(
-            (c for c in campaigns if c.get("pair") == "1to4"),
-            key=lambda c: c["efficiency"], default=None),
-    }
-    # the 1->4-core confirmation series: the same N->4N criterion measured
-    # below the single-box DRAM ceiling (see the scaling_n4 section note).
-    # ALWAYS reported when present — never silently dropped — so a reader
-    # sees both parallelism pairs regardless of which one met.
-    if scaling_n4 and scaling_n4.get("efficiency") is not None:
-        gate["value_1to4"] = scaling_n4["efficiency"]
-        gate["evidence_1to4"] = (
-            f"scaling_n4.efficiency ({scaling_n4['headline_basis']}, "
-            f"{scaling_n4['rows']} rows, {scaling_n4['cores_lo']}->"
-            f"{scaling_n4['cores_hi']} cores)")
-    if gate.get("value_1to4") is not None:
-        gate["met_1to4"] = bool(gate["value_1to4"] >= 0.8)
-    if ev is None:
-        if gate.get("value_1to4") is not None:
-            gate["value"] = gate["value_1to4"]
-            gate["evidence"] = gate["evidence_1to4"]
-            gate["met"] = bool(gate["value_1to4"] >= 0.8)
-            gate["met_basis"] = "scaling_n4"
-        return gate
-    gate["evidence"] = (
-        f"{basis}.efficiency ({ev['headline_basis']}, "
-        f"{ev['rows']} rows, {ev['cores_lo']}->{ev['cores_hi']} cores)")
-    gate["value"] = ev["efficiency"]
-    gate["met"] = bool(ev["efficiency"] >= 0.8)
-    if (ev.get("cores_lo"), ev.get("cores_hi")) == (2, 8):
-        gate["met_2to8"] = gate["met"]
-    gate["met_basis"] = basis if gate["met"] else None
-    if not gate["met"] and (gate.get("value_1to4") or 0) >= 0.8:
-        # the criterion is N->4N; the 1->4 pair satisfies it even when the
-        # 2->8 pair is DRAM-bound on this box — both values stay reported
-        gate["met"] = True
-        gate["met_basis"] = "scaling_n4 (1->4 cores; 2->8 DRAM-bound " \
-                            "on-box — see BASELINE.md saturation curve)"
-    # per-stage decomposition of the SAME live runs: where sub-gate live
-    # efficiency comes from (the dominant compute stage s1 scales near-
-    # linearly; the residual is the fixed shared-JVM multi-job floor —
-    # scheduler, shuffle service, py4j — that a real multi-executor cluster
-    # does not share; scaleout_calib models that case at ~1.0)
-    stages = ev.get("stages") or {}
-    if "s1" in stages and stages["s1"].get("efficiency") is not None:
-        gate["stage1_efficiency"] = stages["s1"]["efficiency"]
-    return gate
-
-
-def _committed_campaigns() -> list[dict]:
-    import glob
-    out = []
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(glob.glob(os.path.join(here, "BENCH_dev_*.json"))):
-        try:
-            with open(path) as f:
-                d = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        # one row PER series: a campaign file may carry a 2M 2->8 series
-        # AND a 1->4 series (r4 finals do) — both are evidence, each under
-        # its own criterion-pair tag (round-4 advisor). The 2M large
-        # series outranks the 600k one within a file (same pair, less
-        # floor), so 'scaling' is only read when 'scaling_large' is absent.
-        series = [d.get("scaling_n4"), d.get("scaling_large") or d.get("scaling")]
-        for s in series:
-            if not isinstance(s, dict) or s.get("efficiency") is None:
-                continue
-            lo, hi = s.get("cores_lo"), s.get("cores_hi")
-            out.append({
-                "file": os.path.basename(path),
-                "efficiency": s["efficiency"],
-                "basis": s.get("headline_basis"),
-                "rows": s.get("rows"),
-                "cores": f"{lo}->{hi}",
-                "pair": ("1to4" if (lo, hi) == (1, 4)
-                         else "2to8" if (lo, hi) == (2, 8)
-                         else f"{lo}to{hi}"),
-            })
-    return out
-
-
-def scaling_only(include_large: bool = True) -> None:
-    """Dev entry point: the scaling campaign alone (no suite/variants), for
-    quiet-window hunts between driver rounds. Same artifact shape as the
-    'scaling'/'scaling_large' sections of the full bench."""
-    out = {"scaling": scaling_run()}
-    if include_large:
-        out["scaling_large"] = scaling_run(
-            rows=SCALING_LARGE_ROWS, pairs=SCALING_LARGE_PAIRS,
-            clean_target=2, extra_pairs=1, timeout=900.0, make_pyfiles=False)
-    print(json.dumps(out))
-
-
-def scaling_n4_only(pairs: int = 3) -> None:
-    """Dev entry point: the 1->4-core 2M series alone — the gate's primary
-    criterion pair (round 5). Artifact shape matches the full bench's
-    'scaling_n4' section (plus the gate summary), so committed campaign
-    files feed _committed_campaigns with pair='1to4'."""
-    s = scaling_run(rows=SCALING_LARGE_ROWS, pairs=pairs, clean_target=pairs,
-                    extra_pairs=1, timeout=900.0, cores=(1, 4),
-                    est_sec=EST_RUN_SEC_N4)
-    print(json.dumps({"scaling_n4": s,
-                      "scaling_gate": _scaling_gate(None, None, s)}))
 
 
 if __name__ == "__main__":
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--pipeline-only", action="store_true")
-    ap.add_argument("--scaling-only", action="store_true")
-    ap.add_argument("--scaling-n4-only", action="store_true")
-    ap.add_argument("--no-large", action="store_true")
-    ap.add_argument("--cores", type=int, default=32)
-    ap.add_argument("--rows", type=int, default=SCALING_ROWS)
-    ap.add_argument("--pairs", type=int, default=3)
-    args = ap.parse_args()
-    if args.pipeline_only:
-        pipeline_only(args.cores, args.rows)
-    elif args.scaling_n4_only:
-        scaling_n4_only(pairs=args.pairs)
-    elif args.scaling_only:
-        scaling_only(include_large=not args.no_large)
-    else:
-        main()
+    main()

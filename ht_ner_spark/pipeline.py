@@ -26,7 +26,7 @@ from .operators import antirules as ar
 from .operators.aggregate import predicted_entities, weighted_vote
 from .operators.components import connected_components
 from .operators.linking import link_surfaces
-from .operators.tokens import char_token_view, with_tokens
+from .operators.tokens import char_token_view
 from .operators.triples import build_triples, dedup_triples, sha_invariant_audit
 from .storage import catalog as cat
 from .storage import checkpoint as ck
@@ -269,9 +269,10 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
             if cfg.aggregator == "hmm":
                 from .operators.hmm import hmm_decode, hmm_fit
 
-                doc_lens = with_tokens(corpus).select(
-                    "row_id", F.size("tokens").alias("n_toks")
-                )
+                # token counts from the tokenizer the labeler's vote
+                # positions come from (Python re, not the JVM regex)
+                doc_lens = char_token_view(corpus).groupBy("row_id").agg(
+                    F.count("*").cast("int").alias("n_toks"))
                 params = hmm_fit(votes, doc_lens, n_iter=cfg.hmm_iter)
                 agg = hmm_decode(votes, doc_lens, params)
             else:

@@ -11,11 +11,11 @@ Cluster usage (the production shape required by the north rule):
         scripts/submit_pipeline.py --corpus <iceberg-table-or-parquet-dir> \
         --warehouse <out> --run-id <id>
 
-Sandbox scaling evidence (BASELINE.md protocol): same input, two parallelism
-levels — `--master local[8]` vs `--master local[32]` — identical bytes,
-report triples/sec at each.
+Single-box scaling (bench.py's scaling section): the same synthetic input at
+`--master local[1]` and `--master local[4]`, one fresh JVM per run.
 
-Prints ONE JSON line with wall time, triple count, and throughput.
+Prints ONE JSON line with wall time, triple count, throughput and the
+per-stage wall times.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ import time
 from pyspark.sql import SparkSession
 
 
-
 def _scratch_dir(prefix: str) -> str:
     """Bench warehouses live on tmpfs when available: stage-table I/O on a
     real cluster hits node-local NVMe / parallel object storage, while this
@@ -41,51 +40,6 @@ def _scratch_dir(prefix: str) -> str:
         "/dev/shm" if os.path.isdir("/dev/shm") else None
     )
     return tempfile.mkdtemp(prefix=prefix, dir=base)
-
-def _proc_stat() -> dict | None:
-    """Host CPU counters (jiffies) from the /proc/stat summary line:
-    busy = user+nice+system+irq+softirq of THIS VM's processes; steal =
-    time the hypervisor ran somebody else's vCPU while ours was runnable —
-    the direct, per-run measurement of co-tenant interference that round-2's
-    artifact lacked (its before/after probes couldn't attribute mid-campaign
-    stalls)."""
-    try:
-        with open("/proc/stat") as f:
-            v = [int(x) for x in f.readline().split()[1:]]
-        return {"busy": v[0] + v[1] + v[2] + v[5] + v[6], "iowait": v[4],
-                "steal": v[7] if len(v) > 7 else 0}
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _psi_cpu_us() -> int | None:
-    """Cumulative 'some' CPU pressure stall (us) — PSI counts time any of
-    our tasks sat runnable-but-unscheduled, catching both co-tenant steal
-    and self-oversubscription."""
-    try:
-        with open("/proc/pressure/cpu") as f:
-            for line in f:
-                if line.startswith("some"):
-                    return int(line.rsplit("total=", 1)[1])
-    except (OSError, ValueError, IndexError):
-        pass
-    return None
-
-
-def _host_window(st0, psi0, sec: float) -> dict | None:
-    """Averages over the timed window: cores' worth of busy/steal/iowait."""
-    st1, psi1 = _proc_stat(), _psi_cpu_us()
-    if st0 is None or st1 is None or sec <= 0:
-        return None
-    clk = os.sysconf("SC_CLK_TCK")
-    out = {
-        "busy_cores": round((st1["busy"] - st0["busy"]) / clk / sec, 2),
-        "steal_cores": round((st1["steal"] - st0["steal"]) / clk / sec, 2),
-        "iowait_cores": round((st1["iowait"] - st0["iowait"]) / clk / sec, 2),
-    }
-    if psi0 is not None and psi1 is not None:
-        out["psi_cpu_stall_cores"] = round((psi1 - psi0) / 1e6 / sec, 2)
-    return out
 
 
 def main() -> None:
@@ -103,7 +57,7 @@ def main() -> None:
                          "exclusion; 0 disables)")
     ap.add_argument("--aggregator", default="vote", choices=["vote", "hmm"],
                     help="vote aggregation: weighted majority or distributed "
-                         "Baum-Welch HMM (bench variant)")
+                         "Baum-Welch HMM")
     args = ap.parse_args()
 
     # session comes from spark-submit conf — this script never sets a master.
@@ -144,7 +98,6 @@ def main() -> None:
             shutil.rmtree(wwh, ignore_errors=True)
 
     stage_sec: dict = {}
-    st0, psi0 = _proc_stat(), _psi_cpu_us()
     t0 = time.monotonic()
     triples = run(spark, corpus,
                   PipelineConfig(warehouse=args.warehouse,
@@ -156,7 +109,6 @@ def main() -> None:
                   timings=stage_sec)
     n = triples.count()
     sec = time.monotonic() - t0
-    host = _host_window(st0, psi0, sec)
 
     print(json.dumps({
         "rows_in": n_in,
@@ -170,10 +122,6 @@ def main() -> None:
         # carries its own decomposition so per-stage scaling efficiency is
         # computable from the committed artifact alone.
         "stage_sec": stage_sec,
-        # host telemetry averaged over the timed window: busy/steal/iowait in
-        # cores' worth, PSI CPU stall — lets the bench mark runs that lost
-        # the machine to co-tenants (steal) instead of guessing from wall.
-        "host": host,
     }))
     spark.stop()
 

@@ -23,7 +23,11 @@ from ht_ner_spark.operators.hmm import (
     hmm_fit,
 )
 from ht_ner_spark.operators.tokens import with_tokens
-from ht_ner_spark.pipeline import PipelineConfig, stage1_mentions
+from ht_ner_spark.pipeline import PipelineConfig, run, stage1_mentions
+from ht_ner_spark.storage import catalog as cat
+from ht_ner_spark.storage.checkpoint import read_checkpoints
+
+from .test_fused import UNICODE_ROWS, edge_rows_corpus
 
 N_ROWS = 80
 
@@ -216,3 +220,24 @@ def test_batched_kernels_match_perdoc_oracle():
                 assert label == ("PERSON_NAME" if gamma[t][1] > 0.5
                                  else "NOT_NAME")
     assert len(dec) == n_obs_positions > 0
+
+
+def test_pipeline_hmm_aggregator_end_to_end(spark, tmp_path):
+    """run(aggregator='hmm') through all four stages on cased ASCII and
+    non-ASCII rows. The HMM's document lengths count the labeler's tokens:
+    the JVM regex reads "é. Bob" as 2 tokens where the labeler reads 3, so
+    a length from the JVM drops the vote on "Bob" at position 2."""
+    c = synthetic_corpus(spark, N_ROWS).unionByName(
+        edge_rows_corpus(spark, UNICODE_ROWS)).cache()
+    wh = str(tmp_path)
+    assert run(spark, c, PipelineConfig(warehouse=wh, aggregator="hmm")).count() > 0
+    ck = read_checkpoints(spark, wh)
+    s1b = ck.where(F.col("stage") == "s1b").first()
+    assert s1b["counters"]["aggregator_hmm"] == 1
+    assert ck.where(F.col("stage") == "s4").first()["sha_ok"]
+    ents = {r["row_id"]: set(r["entities"])
+            for r in cat.read_table(spark, wh, "entities").collect()}
+    assert any(ents.values())
+    bob_row = next(rid for rid, t in UNICODE_ROWS if t == "é. Bob")
+    assert "bob" in ents.get(bob_row, set())
+    c.unpersist()
