@@ -145,6 +145,26 @@ def _session(cores: int):
                      extra_conf={"spark.ui.showConsoleProgress": "false"})
 
 
+def _stop_jvm(spark) -> None:
+    """Stop the session AND its py4j gateway JVM. ``spark.stop()`` ends the
+    SparkContext but leaves the gateway process resident (2.0 GB RSS) next
+    to the JVM of every later scaling run; the gateway exits when its stdin
+    pipe closes."""
+    from pyspark import SparkContext
+
+    spark.stop()
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return
+    gateway.shutdown()
+    proc = getattr(gateway, "proc", None)
+    if proc is not None:
+        proc.stdin.close()
+        proc.wait(timeout=120)
+    SparkContext._gateway = None
+    SparkContext._jvm = None
+
+
 def run_pipeline(spark, n_rows: int) -> dict:
     """Full 4-stage pipeline over the deterministic synthetic corpus, timed
     in ``spark``'s session. No warm-up run: the caller warms the session
@@ -320,39 +340,46 @@ def scaling_series() -> dict | None:
     return summary
 
 
-def _label_in_batches(texts, trie, ranks, cutoffs) -> None:
-    """Label ``texts`` with the fused stage-1 labeler in batches of the size
-    the Spark pass coalesces to."""
+def _label_in_batches(batches, trie, ranks, cutoffs) -> None:
+    """Label the RecordBatches with the fused pass's mapInArrow body,
+    emission included."""
     from ht_ner_spark.operators import fused_vec
 
-    step = fused_vec.COALESCE_ROWS
-    for lo in range(0, len(texts), step):
-        chunk = texts[lo:lo + step]
-        fused_vec.label_batch(range(lo, lo + len(chunk)), chunk, trie,
-                              ranks, cutoffs)
+    for _ in fused_vec.run_arrow_batches(batches, 1, trie, ranks, cutoffs):
+        pass
 
 
 def fused_labeler_microbench(rows: int | None = None) -> dict:
     """tokens/s/core of the fused stage-1 labeler, the engine's CPU floor.
-    Runs fused_vec.label_batch, the columnar labeler the Spark pass runs per
-    Arrow batch, single-threaded in THIS Python process over the text of
-    ``synthetic_rows`` (the rows ``synthetic_corpus`` holds). No Spark runs,
-    so the number is per-core and comparable across rounds. The default is
-    four production-sized batches (``COALESCE_ROWS`` each): a smaller input
-    weighs in the per-batch fixed cost the Spark pass amortizes. One
-    untimed call warms up; MICROBENCH_REPS timed calls over the same texts,
-    ranks and cutoffs give the median rate and its IQR."""
+    Runs fused_vec.run_arrow_batches, the mapInArrow body the Spark pass
+    runs (tokenize, label, Arrow emission), single-threaded in THIS Python
+    process over ``ARROW_BATCH_ROWS``-row RecordBatches of the text of
+    ``synthetic_rows`` (the rows ``synthetic_corpus`` holds), the batches
+    the session hands the pass. No Spark runs, so the number is per-core
+    and comparable across rounds. The default is four production-sized
+    labeling batches (``COALESCE_ROWS`` each): a smaller input weighs in
+    the per-batch fixed cost the Spark pass amortizes. One untimed call
+    warms up; MICROBENCH_REPS timed calls over the same batches, ranks and
+    cutoffs give the median rate and its IQR."""
     import re as _re
     from collections import Counter
 
+    import pyarrow as pa
+
     from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_rows
     from ht_ner_spark.operators import fused_vec
-    from ht_ner_spark.operators.antirules import STOPWORDS, THRESHOLDS
+    from ht_ner_spark.operators.antirules import STOPWORDS, frequency_cutoffs
     from ht_ner_spark.operators.gazetteer import build_trie
     from ht_ner_spark.operators.tokens import TOKEN_PATTERN
+    from ht_ner_spark.session import ARROW_BATCH_ROWS
 
     rows = rows or 4 * fused_vec.COALESCE_ROWS
     texts = [r[5] for r in synthetic_rows(rows)]
+    batches = [pa.RecordBatch.from_pydict(
+        {"row_id": pa.array(range(lo, min(lo + ARROW_BATCH_ROWS, rows)),
+                            pa.int64()),
+         "content": texts[lo:lo + ARROW_BATCH_ROWS]})
+        for lo in range(0, rows, ARROW_BATCH_ROWS)]
     trie = build_trie(dict(DEFAULT_GAZETTEER))
     tok_re = _re.compile(TOKEN_PATTERN)
     punct_re = _re.compile(r"^[^\w\s]+$")
@@ -363,14 +390,14 @@ def fused_labeler_microbench(rows: int | None = None) -> dict:
     toks = [t for txt in texts for t in tok_re.findall(txt or "")]
     cnt = Counter(t for t in toks
                   if t.lower() not in STOPWORDS and not punct_re.match(t))
-    max_k = max(int(len(cnt) * t) for t in THRESHOLDS)
-    cutoffs = [(f"freq_{t}", int(len(cnt) * t)) for t in THRESHOLDS]
+    cutoffs = frequency_cutoffs(len(cnt))
+    max_k = max(k for _, k in cutoffs)
     ranks = {tok: i + 1 for i, (tok, _) in enumerate(cnt.most_common(max_k))}
-    _label_in_batches(texts, trie, ranks, cutoffs)
+    _label_in_batches(batches, trie, ranks, cutoffs)
     secs = []
     for _ in range(MICROBENCH_REPS):
         t0 = time.monotonic()
-        _label_in_batches(texts, trie, ranks, cutoffs)
+        _label_in_batches(batches, trie, ranks, cutoffs)
         secs.append(time.monotonic() - t0)
     rates = [len(toks) / s for s in secs]
     q1, _, q3 = statistics.quantiles(rates, n=4, method="inclusive")
@@ -525,7 +552,7 @@ def main() -> None:
     _emit(out, t_start)
     out["ann_tradeoff"] = ann_tradeoff(spark, sf_dir)
     _emit(out, t_start)
-    spark.stop()
+    _stop_jvm(spark)
     if not os.environ.get("SPARK_GRAFT_NO_SCALING"):
         out["scaling"] = scaling_series()
         _emit(out, t_start)

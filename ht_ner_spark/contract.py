@@ -1689,11 +1689,10 @@ def q_hmm_entities(spark, sf_dir):
     of the documents corpus; oracle = pinned golden parquet (see above)."""
     from .operators.aggregate import predicted_entities
     from .operators.hmm import hmm_decode, hmm_fit
-    from .pipeline import PipelineConfig, stage1_mentions
+    from .pipeline import stage1_mentions
 
     corpus = load_corpus_shape(spark, sf_dir).where(F.col("row_id") < 200)
-    cfg = PipelineConfig(warehouse="/tmp/unused", gazetteer=GAZ_Q)
-    _, votes = stage1_mentions(corpus, cfg)
+    _, votes = stage1_mentions(corpus, GAZ_Q)
     doc_lens = with_tokens(corpus).select("row_id", F.size("tokens").alias("n_toks"))
     params = hmm_fit(votes, doc_lens, n_iter=2)
     ents = predicted_entities(hmm_decode(votes, doc_lens, params))
@@ -2578,11 +2577,10 @@ def q_kg_pipeline_triples(spark, sf_dir):
     from .corpus import load_documents
     from .operators.aggregate import predicted_entities, weighted_vote
     from .operators.triples import build_triples, dedup_triples
-    from .pipeline import PipelineConfig, stage1_mentions
+    from .pipeline import stage1_mentions
 
     corpus = load_documents(spark, sf_dir).where(F.col("row_id") < 500)
-    cfg = PipelineConfig(warehouse="/tmp/unused", gazetteer=GAZ_Q)
-    mentions, votes = stage1_mentions(corpus, cfg)
+    _, votes = stage1_mentions(corpus, GAZ_Q)
     ents = predicted_entities(weighted_vote(votes))  # votes carry tok
     return dedup_triples(build_triples(corpus, ents)).select("subj", "pred", "obj", "conf")
 

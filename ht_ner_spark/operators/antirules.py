@@ -31,6 +31,13 @@ from pyspark.sql import functions as F
 
 THRESHOLDS = [0.01, 0.02, 0.03, 0.04, 0.05]
 
+
+def frequency_cutoffs(vocab_size: int) -> list[tuple[str, int]]:
+    """(lf_name, max_rank) per threshold LF: FrequencyDetector(t) votes on
+    the top ``int(V * t)`` tokens of a V-token ranking."""
+    return [(f"freq_{t}", int(vocab_size * t)) for t in THRESHOLDS]
+
+
 # the non-stop, non-punct predicate — shared verbatim by the exploded-view
 # aggregate (filter before agg) and the Arrow-partial aggregate (filter on
 # the vocabulary-sized result; equivalent for a per-key predicate), so the
@@ -80,8 +87,7 @@ def word_frequency_agg(token_view: DataFrame) -> DataFrame:
     )
 
 
-def word_frequency_agg_arrow(corpus: DataFrame,
-                             text_col: str = "content") -> DataFrame:
+def word_frequency_agg_arrow(corpus: DataFrame) -> DataFrame:
     """The production frequency scan: word_frequency_agg's (tok, cnt,
     first_seen) computed from the corpus via an Arrow partial aggregation —
     one corpus scan, no 25x token explode through the JVM regex engine.
@@ -115,7 +121,7 @@ def word_frequency_agg_arrow(corpus: DataFrame,
 
         for pdf in batches:
             rid_tok, pos, _n, _s, _e, _tok, codes, uniques = tokenize_batch(
-                pdf["row_id"].to_numpy(), list(pdf[text_col]))
+                pdf["row_id"].to_numpy(), list(pdf["content"]))
             if len(codes) == 0:
                 yield pd.DataFrame({"tok": pd.Series(dtype=object),
                                     "cnt": pd.Series(dtype="int64"),
@@ -134,7 +140,7 @@ def word_frequency_agg_arrow(corpus: DataFrame,
             yield pd.DataFrame({"tok": np.asarray(uniques, dtype=object),
                                 "cnt": cnt, "r": min_r, "p": min_p})
 
-    part = corpus.select("row_id", text_col).mapInPandas(
+    part = corpus.select("row_id", "content").mapInPandas(
         partials, "tok string, cnt long, r long, p long")
     agg = part.groupBy("tok").agg(
         F.sum("cnt").alias("cnt"),
@@ -160,13 +166,12 @@ def word_frequency(token_view: DataFrame) -> DataFrame:
 
 
 def frequency_votes(token_view: DataFrame, freq: DataFrame,
-                    thresholds: list[float] | None = None) -> DataFrame:
-    """NOT_NAME votes for each threshold LF. Membership is on the exact token
-    text (reference `tok.text in self.common_words`), via broadcast join of
-    the tiny ranked vocabulary."""
-    thresholds = thresholds or THRESHOLDS
-    vocab_size = freq.count()
-    max_k = max(int(vocab_size * t) for t in thresholds)
+                    cutoffs: list[tuple[str, int]]) -> DataFrame:
+    """NOT_NAME votes for each threshold LF of ``cutoffs``
+    (frequency_cutoffs over ``freq``'s vocabulary size). Membership is on
+    the exact token text (reference `tok.text in self.common_words`), via
+    broadcast join of the tiny ranked vocabulary."""
+    max_k = max(k for _, k in cutoffs)
     # ONE broadcast join against the widest top-k, then one explode emitting
     # each threshold LF whose cutoff the token's rank clears — single corpus
     # pass for all five antirule LFs.
@@ -174,12 +179,7 @@ def frequency_votes(token_view: DataFrame, freq: DataFrame,
         F.col("tok").alias("common_tok"), "rank"
     )
     lf_hits = F.filter(
-        F.array(
-            *[
-                F.when(F.col("rank") <= int(vocab_size * t), F.lit(f"freq_{t}"))
-                for t in thresholds
-            ]
-        ),
+        F.array(*[F.when(F.col("rank") <= k, F.lit(lf)) for lf, k in cutoffs]),
         lambda x: x.isNotNull(),
     )
     return (

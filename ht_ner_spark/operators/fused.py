@@ -26,10 +26,11 @@ tests/test_fused.py. They tokenize with the JVM regex engine (ASCII
 ``\\w``), so they agree with this path on ASCII text only.
 
 Frequency antirules inside the fused pass: the ranked common-word list is
-collected and broadcast when its top-k fits ``max_broadcast_vocab``
+collected and broadcast when its top-k fits ``pipeline.MAX_BROADCAST_VOCAB``
 (reference vocabularies are 10k-30k entries); above that the caller falls
 back to the relational broadcast-join form — the adaptive path is chosen in
-pipeline.stage1_combined.
+pipeline.stage1_combined. A caller that passes no ranks (a stream
+micro-batch, whose facts keep mentions only) gets no frequency votes.
 """
 
 from __future__ import annotations
@@ -86,8 +87,8 @@ for _idx, (_pname, _trig, _conf) in enumerate(RULE_PATTERNS):
 
 def fused_stage1(corpus: DataFrame, gazetteer: dict[str, float],
                  common_ranks: dict[str, int] | None = None,
-                 freq_cutoffs: list[tuple[str, int]] | None = None,
-                 text_col: str = "content") -> DataFrame:
+                 freq_cutoffs: list[tuple[str, int]] | None = None
+                 ) -> DataFrame:
     """corpus -> S1_COMBINED (mention + vote rows) in one Arrow pass of the
     columnar labeler (operators/fused_vec.py)."""
     from . import fused_vec
@@ -102,11 +103,11 @@ def fused_stage1(corpus: DataFrame, gazetteer: dict[str, float],
         # numpy arrays to RecordBatches — no pandas block manager on
         # either the output (from_pandas introspection measured ~0.4 s
         # per 220k-row batch) and one RecordBatch per LF family (no
-        # concat). Input column 1 is the text column (selected below).
+        # concat). Input column 1 is the content (selected below).
         yield from fused_vec.run_arrow_batches(
             batches, 1, trie_b.value, ranks_b.value, cutoffs)
 
-    return corpus.select("row_id", text_col).mapInArrow(run_vec, S1_COMBINED)
+    return corpus.select("row_id", "content").mapInArrow(run_vec, S1_COMBINED)
 
 
 def split_mentions(combined: DataFrame) -> DataFrame:

@@ -27,11 +27,14 @@ output (~29%).  This module removes all three from the per-token path:
   pandas hash join: (row, surface, lf) triples extracted this batch are
   merged against the token stream on (row, exact token text).
 
-tests/test_fused_vec.py holds `label_batch` row-multiset identical to the
-per-row reference in tests/oracle.py on adversarial Unicode, caps,
-trigger, embedded-newline and fuzz corpora; tests/test_fused.py diffs the
-Spark path against the composed relational operators (ASCII text: those
-tokenize with the JVM regex engine).
+The one entry point is run_arrow_batches, the mapInArrow body of the
+fused pass: RecordBatches in, one RecordBatch per LF family out.
+tests/test_fused_vec.py feeds it 2,048-row RecordBatches, the size the
+session's Arrow conf produces, and holds its output row-multiset
+identical to the per-row reference in tests/oracle.py on adversarial
+Unicode, caps, trigger, embedded-newline and fuzz corpora;
+tests/test_fused.py diffs the Spark path against the composed relational
+operators (ASCII text: those tokenize with the JVM regex engine).
 """
 
 from __future__ import annotations
@@ -40,9 +43,10 @@ import re
 
 import numpy as np
 import pandas as pd
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.text import TOKEN_PATTERN
-from .fused import _COLS, _TRIG_MAP
+from .fused import _TRIG_MAP, S1_COMBINED
 
 _TOKEN_RE = re.compile(TOKEN_PATTERN)
 _WS_RE = re.compile(r"\s")
@@ -54,34 +58,17 @@ _I32 = np.int32
 _I64 = np.int64
 _F64 = np.float64
 
-
-def _empty_out() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "kind": pd.Series(dtype=object),
-            "row_id": pd.Series(dtype=_I64),
-            "lf_name": pd.Series(dtype=object),
-            "begin": pd.Series(dtype=_I32),
-            "end": pd.Series(dtype=_I32),
-            "surface": pd.Series(dtype=object),
-            "label": pd.Series(dtype=object),
-            "base_conf": pd.Series(dtype=_F64),
-            "confidence": pd.Series(dtype=_F64),
-            "weight": pd.Series(dtype=_F64),
-            "begin_char": pd.Series(dtype=_I32),
-            "end_char": pd.Series(dtype=_I32),
-        }
-    )[_COLS]
+# the emitted RecordBatches' schema: S1_COMBINED in Arrow terms
+_ARROW_SCHEMA = to_arrow_schema(S1_COMBINED)
 
 
 def _part(kind, rid, lf, begin, end, surface, label, base, conf, weight,
           bc, ec, n) -> dict:
     """One LF family's emission as a dict of typed numpy column arrays.
     Scalar args are broadcast; n is the row count (callers pass arrays of
-    that length). Kept as raw arrays so the pandas wrapper (tests,
-    label_batch) and the Arrow wrapper (run_arrow_batches — no
-    pandas-block introspection, measured ~0.4 s per 220k-row batch in
-    pa.Table.from_pandas) can share every emitter."""
+    that length). Kept as raw arrays so run_arrow_batches can build
+    RecordBatches without pandas-block introspection (measured ~0.4 s per
+    220k-row batch in pa.Table.from_pandas)."""
 
     def arr(v, dtype):
         if isinstance(v, np.ndarray):
@@ -182,18 +169,6 @@ def tokenize_batch(row_ids, texts):
     pos = np.arange(len(toks), dtype=_I64) - row_first[ridx]
     tok_obj = np.asarray(uniq, dtype=object)[codes]
     return rid_tok, pos, n_tok, start, end, tok_obj, codes, uniques
-
-
-def label_batch(row_ids, texts, trie, common_ranks,
-                freq_cutoffs) -> pd.DataFrame:
-    """Columnar stage-1 labeling of one batch, as a pandas frame (the
-    function-level entry point tests use); the Spark path runs
-    run_arrow_batches below, which shares _label_parts."""
-    parts = _label_parts(row_ids, texts, trie, common_ranks, freq_cutoffs)
-    if not parts:
-        return _empty_out()
-    return pd.concat([pd.DataFrame(p) for p in parts],
-                     ignore_index=True)[_COLS]
 
 
 def _label_parts(row_ids, texts, trie, common_ranks,
@@ -420,17 +395,10 @@ def _parts_to_record_batches(parts: list[dict]):
     own batch, so there is no concat either."""
     import pyarrow as pa
 
-    types = {
-        "kind": pa.string(), "row_id": pa.int64(), "lf_name": pa.string(),
-        "begin": pa.int32(), "end": pa.int32(), "surface": pa.string(),
-        "label": pa.string(), "base_conf": pa.float64(),
-        "confidence": pa.float64(), "weight": pa.float64(),
-        "begin_char": pa.int32(), "end_char": pa.int32(),
-    }
-    schema = pa.schema([(c, types[c]) for c in _COLS])
     for p in parts:
         yield pa.RecordBatch.from_arrays(
-            [pa.array(p[c], type=types[c]) for c in _COLS], schema=schema)
+            [pa.array(p[f.name], type=f.type) for f in _ARROW_SCHEMA],
+            schema=_ARROW_SCHEMA)
 
 
 def run_arrow_batches(batches, text_col_idx: int, trie, common_ranks,

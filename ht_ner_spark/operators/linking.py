@@ -133,22 +133,23 @@ def jaccard_verify(pairs: DataFrame, n: int = 3, min_jaccard: float = 0.4) -> Da
     )
 
 
-def link_surfaces(mentions: DataFrame, num_bands: int = 8, n: int = 3,
-                  min_jaccard: float = 0.4, max_block: int = 50,
-                  use_md5: bool = False) -> tuple[DataFrame, DataFrame]:
+def link_surfaces(mentions: DataFrame, num_bands: int = 8,
+                  min_jaccard: float = 0.5, max_block: int = 50
+                  ) -> tuple[DataFrame, DataFrame]:
     """mentions -> (edges(src,dst,sim), dropped_blocks). Edges connect alias
-    surface variants (lower-cased); exact-equality duplicates collapse in the
-    initial distinct."""
+    surface variants (lower-cased) over char 3-grams with the xxhash64
+    signatures; exact-equality duplicates collapse in the initial
+    distinct."""
     surfaces = mentions.select(F.lower(F.col("surface")).alias("surface")).distinct()
-    grams = surface_grams(surfaces, n=n)
-    sigs = minhash_signatures(grams, num_bands=num_bands, use_md5=use_md5)
+    grams = surface_grams(surfaces)
+    sigs = minhash_signatures(grams, num_bands=num_bands)
     # materialize once: both downstream branches (candidate pairs AND the
     # dropped-block report) read the signatures; localCheckpoint (unlike
     # persist) is auto-released by the ContextCleaner when dereferenced, so
     # repeated pipeline runs in one session don't accumulate cache entries.
     sigs = sigs.localCheckpoint()
     pairs, dropped = lsh_candidates(sigs, max_block=max_block)
-    edges = jaccard_verify(pairs, n=n, min_jaccard=min_jaccard)
+    edges = jaccard_verify(pairs, min_jaccard=min_jaccard)
     return edges, dropped
 
 

@@ -35,8 +35,7 @@ def token_view(tokens_df: DataFrame) -> DataFrame:
     )
 
 
-def char_token_view(corpus: DataFrame, text_col: str = "content",
-                    pattern: str = TOKEN_PATTERN) -> DataFrame:
+def char_token_view(corpus: DataFrame) -> DataFrame:
     """(row_id, pos, tok, char_start, char_end) — the token view WITH
     character offsets (Entity.begin_offset semantics,
     /root/reference/sweet/neat_base_classes.py:33-34). Regex match offsets
@@ -51,12 +50,12 @@ def char_token_view(corpus: DataFrame, text_col: str = "content",
 
     import pandas as pd
 
-    tok_re = re.compile(pattern)
+    tok_re = re.compile(TOKEN_PATTERN)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for row_id, text in zip(pdf["row_id"], pdf[text_col]):
+            for row_id, text in zip(pdf["row_id"], pdf["content"]):
                 for pos, m in enumerate(tok_re.finditer(text or "")):
                     rows.append((int(row_id), pos, m.group(0),
                                  m.start(), m.end()))
@@ -65,7 +64,7 @@ def char_token_view(corpus: DataFrame, text_col: str = "content",
             ).astype({"row_id": "int64", "pos": "int32",
                       "char_start": "int32", "char_end": "int32"})
 
-    return corpus.select("row_id", text_col).mapInPandas(
+    return corpus.select("row_id", "content").mapInPandas(
         run, "row_id long, pos int, tok string, char_start int, char_end int"
     )
 

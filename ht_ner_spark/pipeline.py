@@ -37,20 +37,10 @@ class PipelineConfig:
     warehouse: str
     run_id: str = "run0"
     gazetteer: dict[str, float] = field(default_factory=lambda: dict(DEFAULT_GAZETTEER))
-    vote_threshold: float = 0.0
-    lsh_bands: int = 8
-    lsh_min_jaccard: float = 0.5
-    lsh_max_block: int = 50
-    frequency_antirules: bool = True
-    # frequency top-k lists larger than this fall back from the fused
-    # broadcast-dict path to the relational broadcast-join path.
-    max_broadcast_vocab: int = 1_000_000
-    cc_max_iter: int = 20
     # vote aggregator: 'vote' = weighted majority (single groupBy);
     # 'hmm' = distributed Baum-Welch EM (SURVEY §2.4 A3), the reference's
     # skweak HMM analog (run_sweet.py:60-65).
     aggregator: str = "vote"
-    hmm_iter: int = 5
     # Known corpus row count, when the caller has one (bench/submit generate
     # the corpus and know it; a resume re-run can read it from the s1
     # checkpoint). When set and <= AUDIT_BROADCAST_MAX_ROWS, the stage-4 sha
@@ -68,8 +58,14 @@ class PipelineConfig:
 # and whenever the size is unknown — the audit keeps its shuffle plan.
 AUDIT_BROADCAST_MAX_ROWS = 4_000_000
 
+# Frequency top-k lists up to this many tokens are collected and broadcast
+# as a dict into the fused labeler (reference vocabularies are 10k-30k
+# entries); larger ones are ranked distributed and voted by a broadcast
+# join (_frequency_inputs).
+MAX_BROADCAST_VOCAB = 1_000_000
 
-def _frequency_inputs(corpus: DataFrame, cfg: PipelineConfig):
+
+def _frequency_inputs(corpus: DataFrame):
     """Corpus-global frequency pass (the reference's own two-pass barrier,
     sweet/create_lfs.py:17-34): one Arrow partial-count scan + hash agg
     shuffle, tokenized by the fused labeler's own tokenizer. Returns
@@ -113,10 +109,10 @@ def _frequency_inputs(corpus: DataFrame, cfg: PipelineConfig):
         StorageLevel.MEMORY_AND_DISK)
     try:
         vocab_size = agg.count()
-        max_k = max(int(vocab_size * t) for t in ar.THRESHOLDS)
-        cutoffs = [(f"freq_{t}", int(vocab_size * t)) for t in ar.THRESHOLDS]
+        cutoffs = ar.frequency_cutoffs(vocab_size)
+        max_k = max(k for _, k in cutoffs)
         order = [F.desc("cnt"), F.asc("first_seen")]
-        if max_k <= cfg.max_broadcast_vocab:
+        if max_k <= MAX_BROADCAST_VOCAB:
             head = agg.orderBy(*order).limit(max_k).collect()
             ranks = {r["tok"]: i + 1 for i, r in enumerate(head)}
             return ranks, cutoffs, None, None
@@ -129,7 +125,7 @@ def _frequency_inputs(corpus: DataFrame, cfg: PipelineConfig):
     return None, cutoffs, freq, char_token_view(corpus)
 
 
-def stage1_combined(corpus: DataFrame, cfg: PipelineConfig,
+def stage1_combined(corpus: DataFrame, gazetteer: dict[str, float],
                     freq_inputs: tuple | None = None
                     ) -> tuple[DataFrame, DataFrame | None]:
     """Fused stage 1 -> (combined S1_COMBINED frame, extra relational votes
@@ -138,29 +134,25 @@ def stage1_combined(corpus: DataFrame, cfg: PipelineConfig,
     caller pre-run (and sub-time) the frequency pass."""
     from .operators.fused import fused_stage1
 
-    ranks, cutoffs, freq, tview = (None, [], None, None)
-    if cfg.frequency_antirules:
-        ranks, cutoffs, freq, tview = (
-            freq_inputs if freq_inputs is not None
-            else _frequency_inputs(corpus, cfg))
-    combined = fused_stage1(
-        corpus, cfg.gazetteer,
-        common_ranks=ranks, freq_cutoffs=cutoffs if ranks else [],
-    )
+    ranks, cutoffs, freq, tview = (
+        freq_inputs if freq_inputs is not None else _frequency_inputs(corpus))
+    combined = fused_stage1(corpus, gazetteer,
+                            common_ranks=ranks, freq_cutoffs=cutoffs)
     extra = None
-    if cfg.frequency_antirules and ranks is None:
+    if ranks is None:
         # top-k too large to broadcast as a dict: relational
         # broadcast-join fallback (one extra tokenize scan).
-        extra = ar.frequency_votes(tview, freq)
+        extra = ar.frequency_votes(tview, freq, cutoffs)
     return combined, extra
 
 
-def stage1_mentions(corpus: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
+def stage1_mentions(corpus: DataFrame, gazetteer: dict[str, float]
+                    ) -> tuple[DataFrame, DataFrame]:
     """-> (mentions, votes): corpus-global frequency agg (pass 1) -> ONE
     Arrow pass emitting all mentions + votes (pass 2), split by kind."""
     from .operators.fused import split_mentions, split_votes
 
-    combined, extra_votes = stage1_combined(corpus, cfg)
+    combined, extra_votes = stage1_combined(corpus, gazetteer)
     votes = split_votes(combined)
     if extra_votes is not None:
         votes = votes.unionByName(extra_votes)
@@ -216,6 +208,9 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
     row counts ride the write actions via ``df.observe`` instead of separate
     count() jobs; completed stages are read once per run, not per stage.
     """
+    if cfg.aggregator not in ("vote", "hmm"):
+        raise ValueError(f"unknown aggregator {cfg.aggregator!r}: "
+                         "expected 'vote' or 'hmm'")
     wh = cfg.warehouse
     os.makedirs(wh, exist_ok=True)
     done = ck.completed_stages(spark, wh, cfg.run_id)
@@ -224,14 +219,12 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
     mentions = votes = None
     if "s1" not in done:
         with _timed(timings, "s1"):
-            freq_inputs = None
-            if cfg.frequency_antirules:
-                # sub-time the corpus-global frequency pass (pass 1 of 2)
-                # so the committed stage decomposition separates it from
-                # the labeling pass + write: it is a full corpus scan with
-                # its own shuffle and scales differently.
-                with _timed(timings, "s1_freq"):
-                    freq_inputs = _frequency_inputs(corpus, cfg)
+            # sub-time the corpus-global frequency pass (pass 1 of 2) so
+            # the committed stage decomposition separates it from the
+            # labeling pass + write: it is a full corpus scan with its own
+            # shuffle and scales differently.
+            with _timed(timings, "s1_freq"):
+                freq_inputs = _frequency_inputs(corpus)
             # ONE corpus pass, ONE write: the combined mention+vote frame IS
             # the stage-1 table; mentions/votes are kind-filtered projections
             # of the stored copy. partitionBy(kind) prunes those reads at
@@ -241,7 +234,7 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
             # deserialized JVM objects blow the heap; the columnar zstd
             # round-trip through the stored table is the cheap path.
             corpus_in, in_obs = _observed_count(corpus, "s1_in")
-            combined, extra_votes = stage1_combined(corpus_in, cfg,
+            combined, extra_votes = stage1_combined(corpus_in, cfg.gazetteer,
                                                     freq_inputs=freq_inputs)
             cat.write_table(combined, wh, "s1_combined", partition_by=["kind"])
             rows_in = int(in_obs.get["n"])
@@ -273,10 +266,10 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
                 # positions come from (Python re, not the JVM regex)
                 doc_lens = char_token_view(corpus).groupBy("row_id").agg(
                     F.count("*").cast("int").alias("n_toks"))
-                params = hmm_fit(votes, doc_lens, n_iter=cfg.hmm_iter)
+                params = hmm_fit(votes, doc_lens)
                 agg = hmm_decode(votes, doc_lens, params)
             else:
-                agg = weighted_vote(votes, threshold=cfg.vote_threshold)
+                agg = weighted_vote(votes)
             ents = predicted_entities(agg)  # votes carry tok: no corpus re-join
             ents, obs = _observed_count(ents, "s1b")
             cat.write_table(ents, wh, "entities")
@@ -288,10 +281,7 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
     # ---- stage 2
     if "s2" not in done:
         with _timed(timings, "s2"):
-            edges, dropped = link_surfaces(
-                mentions, num_bands=cfg.lsh_bands,
-                min_jaccard=cfg.lsh_min_jaccard, max_block=cfg.lsh_max_block,
-            )
+            edges, dropped = link_surfaces(mentions)
             edges, obs = _observed_count(edges, "s2")
             cat.write_table(edges, wh, "edges")
             n_dropped = dropped.count()
@@ -303,9 +293,7 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
     # ---- stage 3
     if "s3" not in done:
         with _timed(timings, "s3"):
-            comps = connected_components(
-                edges.where(F.col("sim") >= cfg.lsh_min_jaccard), max_iter=cfg.cc_max_iter
-            )
+            comps = connected_components(edges)
             comps, obs = _observed_count(comps, "s3")
             cat.write_table(comps, wh, "components")
             ck.record_stage(spark, wh, cfg.run_id, "s3", rows_out=obs.get["n"])

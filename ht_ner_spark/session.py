@@ -13,6 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Rows per Arrow batch into every pandas UDF / mapInArrow: bounded so fused
+# stage-1 UDF batches fit model memory (SURVEY.md §7.3.5).
+ARROW_BATCH_ROWS = 2048
+
 
 def get_spark(
     app_name: str = "ht-ner-spark",
@@ -43,9 +47,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow: all pandas UDF / mapInPandas traffic is columnar.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Bound Arrow batch size so fused stage-1 UDF batches fit model memory
-        # (SURVEY.md §7.3.5).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
+                str(ARROW_BATCH_ROWS))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Parquet scans: vectorized reader + pushdown are defaults; keep
         # session timezone fixed for determinism.

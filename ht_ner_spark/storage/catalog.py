@@ -33,14 +33,14 @@ def write_table(
     warehouse: str,
     name: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
     dynamic_overwrite: bool = False,
 ) -> None:
-    """dynamic_overwrite=True replaces ONLY the partitions present in ``df``
-    (per-write option — deliberately not the session-wide conf, which would
-    leak stale partitions into full-stage rewrites). Used for idempotent
-    micro-batch writes keyed by batch_id (streaming/incremental.py); the
-    Iceberg equivalent is overwritePartitions()."""
+    """Overwrite the table with ``df``. dynamic_overwrite=True replaces ONLY
+    the partitions present in ``df`` (per-write option — deliberately not
+    the session-wide conf, which would leak stale partitions into
+    full-stage rewrites). Used for idempotent micro-batch writes keyed by
+    batch_id (streaming/incremental.py); the Iceberg equivalent is
+    overwritePartitions()."""
     cat = _iceberg_enabled(df.sparkSession)
     if cat:
         writer = df.writeTo(f"{cat}.{name}")
@@ -60,7 +60,7 @@ def write_table(
             writer.createOrReplace()
         return
     path = os.path.join(warehouse, name)
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if dynamic_overwrite:
         w = w.option("partitionOverwriteMode", "dynamic")
     if partition_by:

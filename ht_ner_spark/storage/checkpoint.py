@@ -18,7 +18,6 @@ import datetime as _dt
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..schemas import CHECKPOINT
 
@@ -44,10 +43,6 @@ def _read_stages_arrow(warehouse: str, run_id: str) -> set[str]:
     return {r["stage"] for r in data if r["run_id"] == run_id}
 
 
-def stage_done(spark: SparkSession, warehouse: str, run_id: str, stage: str) -> bool:
-    return stage in _read_stages_arrow(warehouse, run_id)
-
-
 def completed_stages(spark: SparkSession, warehouse: str, run_id: str) -> set[str]:
     """All completed stages for a run in one driver-side read."""
     return _read_stages_arrow(warehouse, run_id)
@@ -58,24 +53,17 @@ def record_stage(
     warehouse: str,
     run_id: str,
     stage: str,
-    partition_stats: DataFrame | None = None,
     rows_in: int = 0,
     rows_out: int = 0,
     counters: dict[str, int] | None = None,
     sha_ok: bool = True,
     partition_rows: list[tuple[int, int]] | None = None,
 ) -> None:
-    """Append checkpoint rows. ``partition_stats`` (partition_id, rows_out)
-    or ``partition_rows`` [(partition_id, rows_out)] (the no-Spark-job
-    variant from partition_stats_files) give per-partition lineage;
-    otherwise a single stage-level row is written."""
+    """Append checkpoint rows. ``partition_rows`` [(partition_id, rows_out)]
+    (from partition_stats_files) gives per-partition lineage; otherwise a
+    single stage-level row is written."""
     ts = _dt.datetime.now(_dt.timezone.utc).isoformat()
-    if partition_stats is not None or partition_rows is not None:
-        if partition_rows is None:
-            partition_rows = [
-                (int(r["partition_id"]), int(r["rows_out"]))
-                for r in partition_stats.collect()
-            ]
+    if partition_rows is not None:
         rows = [
             (run_id, stage, int(pid), int(rows_in), int(n),
              counters or {}, bool(sha_ok), ts)
@@ -121,32 +109,20 @@ def _append_rows_arrow(warehouse: str, rows: list[tuple]) -> None:
     pq.write_table(table, os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"))
 
 
-def partition_stats(df: DataFrame) -> DataFrame:
-    """(partition_id, rows_out) of the df's current partitioning — one small
-    agg, reused as the per-partition lineage record."""
-    return (
-        df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(F.count(F.lit(1)).alias("rows_out"))
-    )
-
-
 def partition_stats_files(path: str) -> list[tuple[int, int]]:
     """(partition_id, rows_out) per OUTPUT FILE of a written stage table,
     from parquet footers only (pyarrow, driver-side, zero Spark jobs).
 
-    Replaces the post-write `partition_stats` table re-scan in the pipeline:
-    per-partition lineage of a stage WRITE is a property of the files the
-    write produced, and parquet already stores exact per-file row counts —
-    re-reading the whole table to count it was two corpus-scale jobs per
-    run (s1 mentions + s4 triples) inside the timed window.
+    Per-partition lineage of a stage WRITE is a property of the files the
+    write produced, and parquet already stores exact per-file row counts,
+    so no Spark job re-scans the table to count it.
 
     partition_id here is the FILE index under path-sorted order — stable
     across re-reads (pyarrow fragment enumeration order is not guaranteed)
     and recoverable from the file list. It is a different id space from
-    Spark partition ids (record_stage with partition_stats) and streaming
-    batch ids; callers mark the source via the LINEAGE_SOURCE_* counter so
-    one checkpoint column never mixes unlabeled id semantics (ADVICE r2)."""
+    streaming batch ids; callers mark the source via the LINEAGE_SOURCE_*
+    counter so one checkpoint column never mixes unlabeled id semantics
+    (ADVICE r2)."""
     import pyarrow.dataset as ds
 
     if not os.path.isdir(path):
@@ -162,7 +138,6 @@ def partition_stats_files(path: str) -> list[tuple[int, int]]:
 # values for the 'lineage_source' counter recorded with per-partition rows:
 # which id space the partition_id column of those checkpoint rows lives in.
 LINEAGE_SOURCE_FILES = {"lineage_source_files": 1}      # file index (sorted)
-LINEAGE_SOURCE_SPARK = {"lineage_source_spark": 1}      # spark_partition_id()
 LINEAGE_SOURCE_BATCH = {"lineage_source_batch": 1}      # streaming batch_id
 
 

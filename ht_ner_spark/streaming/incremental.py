@@ -28,11 +28,9 @@ Design:
   files; a long-running `trigger(processingTime=...)` works unchanged).
 
 Corpus-global frequency antirules are inherently batch (a stream has no
-final vocabulary); the stream therefore labels with a FROZEN common-word
-ranking computed by a prior batch pass (passed in via ``common_ranks``), or
-with frequency LFs disabled. They emit only NOT_NAME votes, never
-mentions, so the streamed facts do not depend on them. Documented
-deviation, not a silent one.
+final vocabulary), and the stream runs none: they emit only NOT_NAME
+votes, never mentions, and the streamed facts are built from mentions
+alone, so no frequency ranking could change them.
 """
 
 from __future__ import annotations
@@ -63,8 +61,6 @@ def read_corpus_stream(spark: SparkSession, corpus_dir: str) -> DataFrame:
 
 def stream_triples(spark: SparkSession, corpus_dir: str, warehouse: str,
                    gazetteer: dict[str, float],
-                   common_ranks: dict[str, int] | None = None,
-                   freq_cutoffs: list[tuple[str, int]] | None = None,
                    run_id: str = "stream") -> None:
     """Streaming KG maintenance, merge-on-read: each micro-batch runs fused
     stage 1 and lands its mention-level facts as an APPEND-ONLY delta
@@ -87,12 +83,8 @@ def stream_triples(spark: SparkSession, corpus_dir: str, warehouse: str,
     stream = read_corpus_stream(spark, corpus_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        combined = fused_stage1(
-            batch_df, gazetteer,
-            common_ranks=common_ranks, freq_cutoffs=freq_cutoffs or [],
-        )
         facts = (
-            split_mentions(combined)
+            split_mentions(fused_stage1(batch_df, gazetteer))
             .where(F.col("label") == "PERSON_NAME")
             .join(batch_df.select("row_id", "repo"), "row_id")
             .groupBy(F.col("repo").alias("subj"),
@@ -106,7 +98,7 @@ def stream_triples(spark: SparkSession, corpus_dir: str, warehouse: str,
         # count() below re-runs the whole fused-stage-1 DAG a second time
         facts = facts.persist()
         try:
-            cat.write_table(facts, warehouse, "triple_deltas", mode="overwrite",
+            cat.write_table(facts, warehouse, "triple_deltas",
                             partition_by=["batch_id"], dynamic_overwrite=True)
             ck.record_stage(
                 spark, warehouse, run_id, "s4-stream",

@@ -5,9 +5,16 @@ files without changing its content."""
 
 from pyspark.sql import functions as F
 
-from ht_ner_spark.corpus import synthetic_corpus
+from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
 from ht_ner_spark.pipeline import PipelineConfig, run
 from ht_ner_spark.storage.checkpoint import read_checkpoints
+
+from .test_fused import edge_rows_corpus
+
+# a hub alias: 100 surfaces that share a 12-letter stem and differ in two
+# letters, so 11 of each surface's 14 char 3-grams are shared and most of
+# them land in one (band, sig) LSH block per band, over the cap of 50
+HUB_SURFACES = [f"bartholomewx{a}{b}" for a in "abcdefghij" for b in "klmnopqrst"]
 
 
 def _stage_row(spark, wh, stage):
@@ -16,15 +23,18 @@ def _stage_row(spark, wh, stage):
 
 def test_run_records_s2_dropped_blocks(spark, tmp_path):
     c = synthetic_corpus(spark, 200).cache()
-    # lsh_max_block=2: the synthetic aliases share bands, so some LSH blocks
-    # exceed 2 surfaces and MUST be dropped + counted; linking still finds
-    # edges in the blocks that fit
-    small = str(tmp_path / "small")
-    t = run(spark, c, PipelineConfig(warehouse=small, lsh_max_block=2))
-    assert _stage_row(spark, small, "s2")["counters"]["dropped_blocks"] > 0
+    # the hub's blocks exceed the default block cap and MUST be dropped +
+    # counted; linking still finds edges in the blocks that fit
+    hub = c.unionByName(edge_rows_corpus(spark, [
+        (50_000 + i, f"thanks to {s} for the fix")
+        for i, s in enumerate(HUB_SURFACES)]))
+    gaz = {**DEFAULT_GAZETTEER, **{s: 0.9 for s in HUB_SURFACES}}
+    hub_wh = str(tmp_path / "hub")
+    t = run(spark, hub, PipelineConfig(warehouse=hub_wh, gazetteer=gaz))
+    assert _stage_row(spark, hub_wh, "s2")["counters"]["dropped_blocks"] > 0
     assert t.where(F.col("pred") == "alias_of").count() > 0
-    assert _stage_row(spark, small, "s4")["sha_ok"]
-    # at the default block limit nothing is dropped
+    assert _stage_row(spark, hub_wh, "s4")["sha_ok"]
+    # on the plain corpus nothing is dropped
     dflt = str(tmp_path / "default")
     run(spark, c, PipelineConfig(warehouse=dflt))
     assert _stage_row(spark, dflt, "s2")["counters"]["dropped_blocks"] == 0

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ht_ner_spark.corpus import synthetic_corpus
+from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
 from ht_ner_spark.operators import antirules as ar
 from ht_ner_spark.operators import rules as ru
 from ht_ner_spark.operators import votes as vo
@@ -23,7 +23,8 @@ from ht_ner_spark.operators.tokens import (
     token_view,
     with_tokens,
 )
-from ht_ner_spark.pipeline import PipelineConfig, stage1_mentions
+from ht_ner_spark import pipeline
+from ht_ner_spark.pipeline import stage1_mentions
 from ht_ner_spark.schemas import CORPUS
 
 N_ROWS = 120
@@ -49,7 +50,7 @@ def edge_rows_corpus(spark, edge_rows=EDGE_ROWS) -> DataFrame:
         "content_sha256", F.sha2(F.col("content"), 256))
 
 
-def stage1_composed(corpus: DataFrame, cfg: PipelineConfig
+def stage1_composed(corpus: DataFrame, gazetteer: dict[str, float]
                     ) -> tuple[DataFrame, DataFrame]:
     """-> (mentions, votes) from the relational operators over a shared
     token view: one corpus pass per LF family plus one per projection."""
@@ -58,7 +59,7 @@ def stage1_composed(corpus: DataFrame, cfg: PipelineConfig
     # char offsets (MENTIONS.begin_char/end_char): match_trie emits them
     # inline; token-span mention frames get them from a char-offset view
     ctv = char_token_view(corpus).localCheckpoint()
-    gaz_mentions = match_trie(corpus, cfg.gazetteer)
+    gaz_mentions = match_trie(corpus, gazetteer)
     rule_ments = attach_char_offsets(ru.rule_mentions_arrays(toks), ctv)
     caps = attach_char_offsets(ru.all_caps_mentions(tview), ctv)
     name_case = attach_char_offsets(ru.name_case_mentions(tview), ctv)
@@ -70,10 +71,10 @@ def stage1_composed(corpus: DataFrame, cfg: PipelineConfig
     span_votes = vo.project_mentions_to_votes(
         tview, gaz_mentions.unionByName(rule_ments))
     caps_votes = vo.mentions_to_votes_direct(caps.unionByName(name_case))
-    votes = span_votes.unionByName(caps_votes)
-    if cfg.frequency_antirules:
-        freq = ar.word_frequency(tview)
-        votes = votes.unionByName(ar.frequency_votes(tview, freq))
+    freq = ar.word_frequency(tview)
+    freq_votes = ar.frequency_votes(tview, freq,
+                                    ar.frequency_cutoffs(freq.count()))
+    votes = span_votes.unionByName(caps_votes).unionByName(freq_votes)
     return mentions, votes
 
 
@@ -81,13 +82,12 @@ def _rowset(df, cols):
     return {tuple(r[c] for c in cols) for r in df.collect()}
 
 
-def test_fused_equals_composed(spark, tmp_path):
+def test_fused_equals_composed(spark):
     c = synthetic_corpus(spark, N_ROWS).unionByName(
         edge_rows_corpus(spark)).cache()
-    cfg = PipelineConfig(warehouse=str(tmp_path))
 
-    fm, fv = stage1_mentions(c, cfg)
-    cm, cv = stage1_composed(c, cfg)
+    fm, fv = stage1_mentions(c, DEFAULT_GAZETTEER)
+    cm, cv = stage1_composed(c, DEFAULT_GAZETTEER)
 
     mcols = ["row_id", "lf_name", "begin", "end", "surface", "label",
              "base_conf", "confidence", "begin_char", "end_char"]
@@ -103,31 +103,25 @@ def test_fused_equals_composed(spark, tmp_path):
     assert len(got) > 0
 
 
-def test_fused_no_frequency(spark, tmp_path):
-    c = synthetic_corpus(spark, 40)
-    cfg = PipelineConfig(warehouse=str(tmp_path), frequency_antirules=False)
-    _, votes = stage1_mentions(c, cfg)
-    lfs = {r["lf_name"] for r in votes.select("lf_name").distinct().collect()}
-    assert not any(lf.startswith("freq_") for lf in lfs)
-
-
-def test_fused_relational_vocab_fallback(spark, tmp_path):
+def test_fused_relational_vocab_fallback(spark, monkeypatch):
     """The frequency votes must not depend on the broadcast budget: 0
     forces the relational fallback, and a budget between the top-k and
     the vocabulary size keeps the dict. Non-ASCII rows included."""
     c = synthetic_corpus(spark, 60).unionByName(
         edge_rows_corpus(spark, UNICODE_ROWS)).cache()
     vocab = ar.word_frequency_agg_arrow(c).count()
-    max_k = max(int(vocab * t) for t in ar.THRESHOLDS)
+    max_k = max(k for _, k in ar.frequency_cutoffs(vocab))
     assert 0 < max_k < vocab - 1
 
     vcols = ["row_id", "pos", "lf_name", "label", "weight", "tok"]
 
-    def votes(**kw):
-        _, v = stage1_mentions(c, PipelineConfig(warehouse=str(tmp_path), **kw))
+    def votes(budget=None):
+        if budget is not None:
+            monkeypatch.setattr(pipeline, "MAX_BROADCAST_VOCAB", budget)
+        _, v = stage1_mentions(c, DEFAULT_GAZETTEER)
         return _rowset(v, vcols)
 
     want = votes()
     assert any(v[5] == "café" for v in want)
-    assert votes(max_broadcast_vocab=0) == want
-    assert votes(max_broadcast_vocab=vocab - 1) == want
+    assert votes(0) == want
+    assert votes(vocab - 1) == want

@@ -15,12 +15,14 @@ against the composed operators in tests/test_fused.py.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_rows
 from ht_ner_spark.operators import fused_vec
 from ht_ner_spark.operators.fused import _COLS
 from ht_ner_spark.operators.gazetteer import build_trie
+from ht_ner_spark.session import ARROW_BATCH_ROWS
 
 from . import oracle
 
@@ -30,10 +32,22 @@ def oracle_frame(rows, gaz, ranks, cutoffs):
                         columns=_COLS)
 
 
+def arrow_batches(rows):
+    """(row_id, content) RecordBatches of ARROW_BATCH_ROWS rows, the shape
+    the fused pass receives from the session (arrow.maxRecordsPerBatch)."""
+    schema = pa.schema([("row_id", pa.int64()), ("content", pa.string())])
+    return [pa.RecordBatch.from_pydict(
+        {"row_id": [r[0] for r in rows[lo:lo + ARROW_BATCH_ROWS]],
+         "content": [r[1] for r in rows[lo:lo + ARROW_BATCH_ROWS]]},
+        schema=schema)
+        for lo in range(0, len(rows), ARROW_BATCH_ROWS)]
+
+
 def vec_frame(rows, gaz, ranks, cutoffs):
-    return fused_vec.label_batch([r[0] for r in rows],
-                                 [r[1] for r in rows],
-                                 build_trie(gaz), ranks, cutoffs)
+    out = fused_vec.run_arrow_batches(arrow_batches(rows), 1,
+                                      build_trie(gaz), ranks, cutoffs)
+    return pa.Table.from_batches(list(out), schema=fused_vec._ARROW_SCHEMA
+                                 ).to_pandas()
 
 
 def multiset(df):

@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ht_ner_spark.corpus import synthetic_corpus
+from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
 from ht_ner_spark.operators.aggregate import predicted_entities
 from ht_ner_spark.operators.hmm import (
     HMMParams,
@@ -100,10 +100,9 @@ def _local_fit(votes_rows, lens, lfs, n_iter):
     return params
 
 
-def test_distributed_fit_matches_local(spark, tmp_path):
+def test_distributed_fit_matches_local(spark):
     c = synthetic_corpus(spark, N_ROWS).cache()
-    cfg = PipelineConfig(warehouse=str(tmp_path))
-    _, votes = stage1_mentions(c, cfg)
+    _, votes = stage1_mentions(c, DEFAULT_GAZETTEER)
     votes = votes.cache()
     doc_lens = with_tokens(c).select("row_id", F.size("tokens").alias("n_toks"))
     lfs = sorted(r["lf_name"] for r in votes.select("lf_name").distinct().collect())
@@ -121,12 +120,11 @@ def test_distributed_fit_matches_local(spark, tmp_path):
         assert dist.emit[lf] == pytest.approx(local.emit[lf], rel=1e-6)
 
 
-def test_hmm_decode_recovers_planted_entities(spark, tmp_path):
-    from ht_ner_spark.corpus import DEFAULT_GAZETTEER, gold_entities
+def test_hmm_decode_recovers_planted_entities(spark):
+    from ht_ner_spark.corpus import gold_entities
 
     c = synthetic_corpus(spark, N_ROWS).cache()
-    cfg = PipelineConfig(warehouse=str(tmp_path))
-    _, votes = stage1_mentions(c, cfg)
+    _, votes = stage1_mentions(c, DEFAULT_GAZETTEER)
     doc_lens = with_tokens(c).select("row_id", F.size("tokens").alias("n_toks"))
     params = hmm_fit(votes, doc_lens, n_iter=3)
     decoded = hmm_decode(votes, doc_lens, params)

@@ -47,7 +47,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     from ht_ner_spark.pipeline import stage1_combined
     from ht_ner_spark.storage import catalog as cat
 
-    combined, extra_votes = stage1_combined(c, cfg2)
+    combined, extra_votes = stage1_combined(c, cfg2.gazetteer)
     assert extra_votes is None
     cat.write_table(combined, wh2, "s1_combined", partition_by=["kind"])
     m = split_mentions(cat.read_table(spark, wh2, "s1_combined"))

@@ -18,7 +18,7 @@ from ht_ner_spark.operators.gazetteer import (
 )
 from ht_ner_spark.operators.metrics import f1_scores
 from ht_ner_spark.operators.tokens import token_view, with_tokens
-from ht_ner_spark.pipeline import PipelineConfig, stage1_mentions
+from ht_ner_spark.pipeline import stage1_mentions
 
 from . import oracle
 from .test_fused import EDGE_ROWS, edge_rows_corpus
@@ -133,7 +133,8 @@ def test_frequency_votes_match_oracle(spark):
     freq = ar.word_frequency(tview)
     got = {
         (r["row_id"], r["pos"], r["lf_name"])
-        for r in ar.frequency_votes(tview, freq).collect()
+        for r in ar.frequency_votes(
+            tview, freq, ar.frequency_cutoffs(freq.count())).collect()
     }
     toks = {row[0]: oracle.tokenize(row[5]) for row in synthetic_rows(N_ROWS)}
     want = {(rid, pos, lf) for rid, pos, lf, _, _ in oracle.frequency_votes(toks)}
@@ -141,11 +142,10 @@ def test_frequency_votes_match_oracle(spark):
     assert len(got) > 0
 
 
-def test_stage1_entities_match_oracle_and_gold(spark, tmp_path):
+def test_stage1_entities_match_oracle_and_gold(spark):
     c = _corpus(spark)
-    cfg = PipelineConfig(warehouse=str(tmp_path))
-    mentions, votes = stage1_mentions(c, cfg)
-    agg = weighted_vote(votes, threshold=cfg.vote_threshold)
+    mentions, votes = stage1_mentions(c, DEFAULT_GAZETTEER)
+    agg = weighted_vote(votes)
     ents = predicted_entities(agg, token_view(with_tokens(c)))
     got = {r["row_id"]: set(r["entities"]) for r in ents.collect()}
 

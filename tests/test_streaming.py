@@ -86,7 +86,7 @@ def test_stream_triples_retried_batch_replaces_partition(spark, tmp_path):
     # the retry: the same batch's facts written again, the way process does
     retry = _facts(synthetic_corpus(spark, 30, seed=42)).withColumn(
         "batch_id", F.lit(int(batch_id)))
-    cat.write_table(retry, wh, "triple_deltas", mode="overwrite",
+    cat.write_table(retry, wh, "triple_deltas",
                     partition_by=["batch_id"], dynamic_overwrite=True)
     assert cat.read_table(spark, wh, "triple_deltas").count() == n_rows
     assert _keyed(merged_triples(spark, wh).collect()) == before
