@@ -345,7 +345,7 @@ def _label_in_batches(batches, trie, ranks, cutoffs) -> None:
     emission included."""
     from ht_ner_spark.operators import fused_vec
 
-    for _ in fused_vec.run_arrow_batches(batches, 1, trie, ranks, cutoffs):
+    for _ in fused_vec.run_arrow_batches(batches, trie, ranks, cutoffs):
         pass
 
 

@@ -14,11 +14,12 @@ one hash-agg shuffle; the driver collects the top-k ordered by
 insertion-order tie-break, replicated by the oracle — and the fused labeler
 votes from that broadcast dict. When the top-k exceeds the broadcast
 budget, the same aggregate is ranked distributed (rank.exact_global_rank)
-and frequency_votes broadcast-joins the ranked vocabulary against a
-Python-``re`` token view (tokens.char_token_view), so both shapes vote on
-the tokens the labeler emits. word_frequency (exploded JVM-regex token
-view) is the composed reference the tests diff the fused path against;
-the pipeline does not run it.
+and frequency_votes broadcast-joins the ranked vocabulary against
+tokens.char_token_view, built on the labeler's own tokenizer
+(fused_vec.tokenize_batch), so both shapes vote on the tokens the labeler
+emits. word_frequency (exploded JVM-regex token view) is the composed
+reference the tests diff the fused path against; the pipeline does not
+run it.
 
 spacy is_stop/is_punct are approximated with a fixed stopword set + an
 all-punctuation regex (deviation shared with the oracle, SURVEY §7.0).

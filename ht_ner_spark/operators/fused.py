@@ -28,7 +28,8 @@ tests/test_fused.py. They tokenize with the JVM regex engine (ASCII
 Frequency antirules inside the fused pass: the ranked common-word list is
 collected and broadcast when its top-k fits ``pipeline.MAX_BROADCAST_VOCAB``
 (reference vocabularies are 10k-30k entries); above that the caller falls
-back to the relational broadcast-join form — the adaptive path is chosen in
+back to the relational broadcast-join form, whose votes join this frame as
+kind='v' rows (votes_as_combined) — the adaptive path is chosen in
 pipeline.stage1_combined. A caller that passes no ranks (a stream
 micro-batch, whose facts keep mentions only) gets no frequency votes.
 """
@@ -103,9 +104,9 @@ def fused_stage1(corpus: DataFrame, gazetteer: dict[str, float],
         # numpy arrays to RecordBatches — no pandas block manager on
         # either the output (from_pandas introspection measured ~0.4 s
         # per 220k-row batch) and one RecordBatch per LF family (no
-        # concat). Input column 1 is the content (selected below).
+        # concat). Input columns are (row_id, content), selected below.
         yield from fused_vec.run_arrow_batches(
-            batches, 1, trie_b.value, ranks_b.value, cutoffs)
+            batches, trie_b.value, ranks_b.value, cutoffs)
 
     return corpus.select("row_id", "content").mapInArrow(run_vec, S1_COMBINED)
 
@@ -127,4 +128,24 @@ def split_votes(combined: DataFrame) -> DataFrame:
         "label",
         "weight",
         F.col("surface").alias("tok"),
+    )
+
+
+def votes_as_combined(votes: DataFrame) -> DataFrame:
+    """VOTES -> S1_COMBINED kind='v' rows, the inverse of split_votes
+    (pos->begin, tok->surface), shaped as the labeler emits its votes:
+    end = pos + 1, zero confidences and char offsets."""
+    return votes.select(
+        F.lit("v").alias("kind"),
+        "row_id",
+        "lf_name",
+        F.col("pos").alias("begin"),
+        (F.col("pos") + 1).alias("end"),
+        F.col("tok").alias("surface"),
+        "label",
+        F.lit(0.0).alias("base_conf"),
+        F.lit(0.0).alias("confidence"),
+        "weight",
+        F.lit(0).alias("begin_char"),
+        F.lit(0).alias("end_char"),
     )

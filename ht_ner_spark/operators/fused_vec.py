@@ -401,8 +401,7 @@ def _parts_to_record_batches(parts: list[dict]):
             schema=_ARROW_SCHEMA)
 
 
-def run_arrow_batches(batches, text_col_idx: int, trie, common_ranks,
-                      freq_cutoffs):
+def run_arrow_batches(batches, trie, common_ranks, freq_cutoffs):
     """mapInArrow body of the fused pass: coalesce input RecordBatches
     (row_id, text) up to COALESCE_ROWS, label, stream one RecordBatch per
     LF family."""
@@ -421,7 +420,7 @@ def run_arrow_batches(batches, text_col_idx: int, trie, common_ranks,
     nbuf = 0
     for rb in batches:
         rid = rb.column(0).to_numpy(zero_copy_only=False)
-        texts = rb.column(text_col_idx).to_pylist()
+        texts = rb.column(1).to_pylist()
         buf.append((rid, texts))
         nbuf += len(rid)
         if nbuf >= COALESCE_ROWS:

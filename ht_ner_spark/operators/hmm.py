@@ -227,18 +227,6 @@ def _clustered(votes: DataFrame, doc_lens: DataFrame, cols: list[str]) -> DataFr
             .repartition("row_id").sortWithinPartitions("row_id"))
 
 
-def _doc_slices(pdf: pd.DataFrame):
-    """Yield (start, end) row ranges of each complete document in a chunk
-    whose row_id column is sorted."""
-    ids = pdf["row_id"].values
-    if len(ids) == 0:
-        return []
-    bnd = np.flatnonzero(ids[1:] != ids[:-1]) + 1
-    starts = np.concatenate(([0], bnd))
-    ends = np.concatenate((bnd, [len(ids)]))
-    return zip(starts, ends)
-
-
 def _split_carry(pdf: pd.DataFrame, carry: pd.DataFrame | None):
     """Prepend the previous batch's trailing (possibly incomplete) document,
     then split off this batch's own trailing document as the new carry —

@@ -5,7 +5,7 @@ Arrow batches, UDF signatures, batch shapes. The actual codec work is stubbed
 (this container has no image/audio libraries): ``decode_media(real=True)``
 raises NotImplementedError; the default path produces DETERMINISTIC fake
 features derived from the bytes, so downstream operators (dedup by content
-digest, feature joins, frame sampling shapes) are exercised end-to-end.
+digest, feature joins) are exercised end-to-end.
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
@@ -104,16 +103,3 @@ def extract_features(media: DataFrame, real_decode: bool = False) -> DataFrame:
             )
 
     return media.select("media_id", "kind", "payload").mapInPandas(run, FEATURES)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 500) -> DataFrame:
-    """(media_id, frame_idx, ts_ms) — the frame-sampling fan-out for videos,
-    computed relationally (sequence + explode); the decode of each frame is
-    the stubbed step above."""
-    vids = media.where(F.col("kind") == "video").select("media_id", "duration_ms")
-    return vids.select(
-        "media_id",
-        F.posexplode(
-            F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
-        ).alias("frame_idx", "ts_ms"),
-    )

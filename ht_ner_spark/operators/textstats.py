@@ -18,12 +18,6 @@ LANG_PROFILES: dict[str, list[str]] = {
 }
 
 
-def token_count(col: Column) -> Column:
-    """whitespace token count (the cheap counter; the BPE-ish estimate below
-    approximates subword counts without a tokenizer model)."""
-    return F.size(F.split(F.trim(col), r"\s+"))
-
-
 def bpe_token_estimate(col: Column) -> Column:
     """BPE-ish token-count estimate: words + extra splits for long words
     (every 6 chars beyond the first 6) + punctuation runs — a deterministic

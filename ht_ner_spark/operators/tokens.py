@@ -39,32 +39,32 @@ def char_token_view(corpus: DataFrame) -> DataFrame:
     """(row_id, pos, tok, char_start, char_end) — the token view WITH
     character offsets (Entity.begin_offset semantics,
     /root/reference/sweet/neat_base_classes.py:33-34). Regex match offsets
-    are not relationally derivable, so this is ONE Arrow pass (finditer).
-    Python ``re`` with TOKEN_PATTERN yields the tokens of
-    fused_vec.tokenize_batch on any text, so this view is also the token
-    view of the pipeline's relational frequency-vote fallback
-    (pipeline._frequency_inputs); the fused labeler gets the same offsets
-    inside its own single pass."""
-    import re
+    are not relationally derivable, so this is ONE Arrow pass of
+    fused_vec.tokenize_batch, the fused labeler's own tokenizer: this view
+    is the token view of the pipeline's relational frequency-vote fallback
+    (pipeline._frequency_inputs) and of the HMM's document lengths, and it
+    sees exactly the tokens and offsets the labeler emits."""
     from typing import Iterator
 
-    import pandas as pd
+    import numpy as np
+    import pyarrow as pa
 
-    tok_re = re.compile(TOKEN_PATTERN)
+    from .fused_vec import tokenize_batch
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row_id, text in zip(pdf["row_id"], pdf["content"]):
-                for pos, m in enumerate(tok_re.finditer(text or "")):
-                    rows.append((int(row_id), pos, m.group(0),
-                                 m.start(), m.end()))
-            yield pd.DataFrame(
-                rows, columns=["row_id", "pos", "tok", "char_start", "char_end"]
-            ).astype({"row_id": "int64", "pos": "int32",
-                      "char_start": "int32", "char_end": "int32"})
+    names = ["row_id", "pos", "tok", "char_start", "char_end"]
 
-    return corpus.select("row_id", "content").mapInPandas(
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            rid, pos, _, start, end, tok, _, _ = tokenize_batch(
+                rb.column(0).to_numpy(zero_copy_only=False),
+                rb.column(1).to_pylist())
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(rid), pa.array(pos.astype(np.int32)),
+                 pa.array(tok, pa.string()),
+                 pa.array(start.astype(np.int32)),
+                 pa.array(end.astype(np.int32))], names=names)
+
+    return corpus.select("row_id", "content").mapInArrow(
         run, "row_id long, pos int, tok string, char_start int, char_end int"
     )
 

@@ -6,9 +6,9 @@ Emitted predicates:
 * (canonical_entity, 'appears_in', repo)    — repo-level rollup
 
 Write discipline (north_rule): dropDuplicates on (subj,pred,obj) (partial+
-final hash agg), repartition('pred') so each output partition is written by
-one task set, then write.partitionBy('pred'). Lineage struct carries
-(repo, path, commit, content_sha256, stage versions, LF provenance).
+final hash agg), written straight off the agg with partitionBy('pred') by
+pipeline.run's stage 4. Lineage struct carries (repo, path, commit,
+content_sha256, stage versions, LF provenance — an empty array).
 """
 
 from __future__ import annotations
@@ -25,8 +25,7 @@ def doc_uri():
 
 
 def build_triples(corpus: DataFrame, entities: DataFrame,
-                  components: DataFrame | None = None,
-                  lf_provenance: list[str] | None = None) -> DataFrame:
+                  components: DataFrame | None = None) -> DataFrame:
     """corpus ⋈ per-row predicted entities (row_id, entities:array) ⋈ optional
     canonical components -> TRIPLES rows."""
     ex = entities.select("row_id", F.explode("entities").alias("entity"))
@@ -49,8 +48,7 @@ def build_triples(corpus: DataFrame, entities: DataFrame,
         F.col("repo"), F.col("path"), F.col("commit"), F.col("content_sha256"),
         F.array(*[F.lit(s) for s in STAGE_VERSIONS]).cast("array<string>")
         .alias("stage_versions"),
-        F.array(*[F.lit(s) for s in (lf_provenance or [])]).cast("array<string>")
-        .alias("lf_provenance"),
+        F.array().cast("array<string>").alias("lf_provenance"),
     )
 
     mentions_t = joined.select(
@@ -208,15 +206,6 @@ def dangling_refs(triples: DataFrame, ref_pred: str = "imports",
     return refs.join(defs, "obj", "left").select(
         "obj", "n_refs",
         F.coalesce(F.col("resolved"), F.lit(False)).alias("resolved"))
-
-
-def write_triples(triples: DataFrame, path: str, pred_partitions: int | None = None) -> None:
-    out = dedup_triples(triples)
-    # hash (pred, subj), never pred alone: with a handful of predicates a
-    # pred-only repartition caps the write at |preds| tasks (serial funnel).
-    n = pred_partitions or out.sparkSession.sparkContext.defaultParallelism * 2
-    out = out.repartition(n, "pred", "subj")
-    out.write.mode("overwrite").partitionBy("pred").parquet(path)
 
 
 def sha_invariant_audit(corpus: DataFrame, triples: DataFrame,

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import preprocess, string_to_entities
+from ..functions.text import preprocess
 
 
 def project_mentions_to_votes(token_view: DataFrame, mentions: DataFrame,
@@ -104,11 +104,6 @@ def mentions_to_votes_direct(mentions: DataFrame, weight: float = 1.0) -> DataFr
         F.lit(weight).alias("weight"),
         F.col("surface").alias("tok"),
     )
-
-
-def parse_entity_column(df: DataFrame, col: str, out: str = "entities") -> DataFrame:
-    """Eval-side '|'-string -> normalized array (T5/P2/P3)."""
-    return df.withColumn(out, string_to_entities(col))
 
 
 def _argmax_label(df: DataFrame, item_cols: list[str], weight_col: str,

@@ -69,11 +69,10 @@ def _frequency_inputs(corpus: DataFrame):
     """Corpus-global frequency pass (the reference's own two-pass barrier,
     sweet/create_lfs.py:17-34): one Arrow partial-count scan + hash agg
     shuffle, tokenized by the fused labeler's own tokenizer. Returns
-    (common_ranks dict | None, cutoffs, freq DataFrame | None,
-    tview | None): the dict when the top-k fits the broadcast budget,
-    else the ranked vocabulary and a token view for the relational
-    broadcast-join fallback. Both shapes rank the same aggregate and see
-    the same tokens, so they yield the same votes.
+    (common_ranks dict | None, cutoffs, fallback_votes DataFrame | None):
+    the dict when the top-k fits the broadcast budget, else the NOT_NAME
+    votes of the relational broadcast-join fallback. Both shapes rank the
+    same aggregate and see the same tokens, so they yield the same votes.
 
     Serial-floor discipline (this block was the scaling bottleneck the
     per-stage bench decomposition exposed — s1_freq efficiency 0.40):
@@ -115,35 +114,33 @@ def _frequency_inputs(corpus: DataFrame):
         if max_k <= MAX_BROADCAST_VOCAB:
             head = agg.orderBy(*order).limit(max_k).collect()
             ranks = {r["tok"]: i + 1 for i, r in enumerate(head)}
-            return ranks, cutoffs, None, None
+            return ranks, cutoffs, None
         # exact_global_rank materializes its input (localCheckpoint), so the
         # ranked frame outlives the cached aggregate
         freq = exact_global_rank(agg, order, "rank")
     finally:
         agg.unpersist()
         spark.conf.set(coalesce_key, prev)
-    return None, cutoffs, freq, char_token_view(corpus)
+    return None, cutoffs, ar.frequency_votes(char_token_view(corpus), freq,
+                                             cutoffs)
 
 
 def stage1_combined(corpus: DataFrame, gazetteer: dict[str, float],
-                    freq_inputs: tuple | None = None
-                    ) -> tuple[DataFrame, DataFrame | None]:
-    """Fused stage 1 -> (combined S1_COMBINED frame, extra relational votes
-    or None). extra votes appear only when the frequency top-k exceeds
-    the broadcast budget (relational join fallback). ``freq_inputs`` lets the
-    caller pre-run (and sub-time) the frequency pass."""
-    from .operators.fused import fused_stage1
+                    freq_inputs: tuple | None = None) -> DataFrame:
+    """Fused stage 1 -> the S1_COMBINED frame. When the frequency top-k
+    exceeds the broadcast budget, the relational fallback's votes are
+    unioned in as kind='v' rows, so stage 1 is one table either way.
+    ``freq_inputs`` lets the caller pre-run (and sub-time) the frequency
+    pass."""
+    from .operators.fused import fused_stage1, votes_as_combined
 
-    ranks, cutoffs, freq, tview = (
+    ranks, cutoffs, fallback_votes = (
         freq_inputs if freq_inputs is not None else _frequency_inputs(corpus))
     combined = fused_stage1(corpus, gazetteer,
                             common_ranks=ranks, freq_cutoffs=cutoffs)
-    extra = None
-    if ranks is None:
-        # top-k too large to broadcast as a dict: relational
-        # broadcast-join fallback (one extra tokenize scan).
-        extra = ar.frequency_votes(tview, freq, cutoffs)
-    return combined, extra
+    if fallback_votes is not None:
+        combined = combined.unionByName(votes_as_combined(fallback_votes))
+    return combined
 
 
 def stage1_mentions(corpus: DataFrame, gazetteer: dict[str, float]
@@ -152,11 +149,8 @@ def stage1_mentions(corpus: DataFrame, gazetteer: dict[str, float]
     Arrow pass emitting all mentions + votes (pass 2), split by kind."""
     from .operators.fused import split_mentions, split_votes
 
-    combined, extra_votes = stage1_combined(corpus, gazetteer)
-    votes = split_votes(combined)
-    if extra_votes is not None:
-        votes = votes.unionByName(extra_votes)
-    return split_mentions(combined), votes
+    combined = stage1_combined(corpus, gazetteer)
+    return split_mentions(combined), split_votes(combined)
 
 
 def _read_mentions(spark: SparkSession, wh: str) -> DataFrame:
@@ -170,10 +164,7 @@ def _read_mentions(spark: SparkSession, wh: str) -> DataFrame:
 def _read_votes(spark: SparkSession, wh: str) -> DataFrame:
     from .operators.fused import split_votes
 
-    votes = split_votes(cat.read_table(spark, wh, "s1_combined"))
-    if cat.table_exists(spark, wh, "votes_extra"):
-        votes = votes.unionByName(cat.read_table(spark, wh, "votes_extra"))
-    return votes
+    return split_votes(cat.read_table(spark, wh, "s1_combined"))
 
 
 def _observed_count(df: DataFrame, name: str):
@@ -213,7 +204,7 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
                          "expected 'vote' or 'hmm'")
     wh = cfg.warehouse
     os.makedirs(wh, exist_ok=True)
-    done = ck.completed_stages(spark, wh, cfg.run_id)
+    done = ck.completed_stages(wh, cfg.run_id)
 
     # ---- stage 1
     mentions = votes = None
@@ -234,12 +225,10 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
             # deserialized JVM objects blow the heap; the columnar zstd
             # round-trip through the stored table is the cheap path.
             corpus_in, in_obs = _observed_count(corpus, "s1_in")
-            combined, extra_votes = stage1_combined(corpus_in, cfg.gazetteer,
-                                                    freq_inputs=freq_inputs)
+            combined = stage1_combined(corpus_in, cfg.gazetteer,
+                                       freq_inputs=freq_inputs)
             cat.write_table(combined, wh, "s1_combined", partition_by=["kind"])
             rows_in = int(in_obs.get["n"])
-            if extra_votes is not None:
-                cat.write_table(extra_votes, wh, "votes_extra")
             mentions = _read_mentions(spark, wh)
             votes = _read_votes(spark, wh)
             # per-partition lineage from the written files' parquet footers —
@@ -262,8 +251,8 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
             if cfg.aggregator == "hmm":
                 from .operators.hmm import hmm_decode, hmm_fit
 
-                # token counts from the tokenizer the labeler's vote
-                # positions come from (Python re, not the JVM regex)
+                # token counts from the labeler's own tokenizer, which
+                # its vote positions come from (not the JVM regex)
                 doc_lens = char_token_view(corpus).groupBy("row_id").agg(
                     F.count("*").cast("int").alias("n_toks"))
                 params = hmm_fit(votes, doc_lens)

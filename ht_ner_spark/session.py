@@ -60,15 +60,11 @@ def get_spark(
         # sandbox's virtio disk sustains only ~20-50 MB/s with co-tenant
         # noise, while a real cluster node has local NVMe for exactly this
         # traffic. Warehouse/table writes still go to the real filesystem.
-        # SPARK_LOCAL_DIRS always wins when set (the previous conditional
-        # ordering ignored it whenever /dev/shm was absent); set
-        # SPARK_GRAFT_NO_TMPFS=1 to opt out of the tmpfs scratch dir (large
-        # shuffles on a RAM-backed dir consume memory).
+        # SPARK_LOCAL_DIRS always wins when set: point it at a disk dir to
+        # keep large shuffles off RAM-backed tmpfs.
         .config("spark.local.dir",
                 os.environ.get("SPARK_LOCAL_DIRS")
-                or ("/dev/shm/spark-local"
-                    if os.path.isdir("/dev/shm")
-                    and not os.environ.get("SPARK_GRAFT_NO_TMPFS")
+                or ("/dev/shm/spark-local" if os.path.isdir("/dev/shm")
                     else "/tmp"))
         .config("spark.io.compression.codec", "zstd")
         .config("spark.sql.session.timeZone", "UTC")

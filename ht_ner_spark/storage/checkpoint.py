@@ -28,10 +28,11 @@ def _ckpt_dir(warehouse: str) -> str:
     return os.path.join(warehouse, CHECKPOINT_TABLE)
 
 
-def _read_stages_arrow(warehouse: str, run_id: str) -> set[str]:
-    """Driver-side checkpoint scan (pyarrow, no Spark job): the table is a
-    handful of metadata rows; scheduling a cluster job to read it is pure
-    serial overhead on every resume check."""
+def completed_stages(warehouse: str, run_id: str) -> set[str]:
+    """All completed stages for a run, in one driver-side checkpoint scan
+    (pyarrow, no Spark job): the table is a handful of metadata rows, and
+    scheduling a cluster job to read it is pure serial overhead on every
+    resume check."""
     import pyarrow.dataset as ds
 
     path = _ckpt_dir(warehouse)
@@ -41,11 +42,6 @@ def _read_stages_arrow(warehouse: str, run_id: str) -> set[str]:
         columns=["run_id", "stage"]
     ).to_pylist()
     return {r["stage"] for r in data if r["run_id"] == run_id}
-
-
-def completed_stages(spark: SparkSession, warehouse: str, run_id: str) -> set[str]:
-    """All completed stages for a run in one driver-side read."""
-    return _read_stages_arrow(warehouse, run_id)
 
 
 def record_stage(
@@ -60,20 +56,15 @@ def record_stage(
     partition_rows: list[tuple[int, int]] | None = None,
 ) -> None:
     """Append checkpoint rows. ``partition_rows`` [(partition_id, rows_out)]
-    (from partition_stats_files) gives per-partition lineage; otherwise a
-    single stage-level row is written."""
+    (from partition_stats_files) gives per-partition lineage; when it is
+    absent or empty, a single stage-level row (partition -1, ``rows_out``)
+    is written."""
     ts = _dt.datetime.now(_dt.timezone.utc).isoformat()
-    if partition_rows is not None:
-        rows = [
-            (run_id, stage, int(pid), int(rows_in), int(n),
-             counters or {}, bool(sha_ok), ts)
-            for pid, n in partition_rows
-        ]
-        if not rows:
-            rows = [(run_id, stage, -1, int(rows_in), 0, counters or {}, bool(sha_ok), ts)]
-    else:
-        rows = [(run_id, stage, -1, int(rows_in), int(rows_out), counters or {},
-                 bool(sha_ok), ts)]
+    rows = [
+        (run_id, stage, int(pid), int(rows_in), int(n), counters or {},
+         bool(sha_ok), ts)
+        for pid, n in partition_rows or [(-1, rows_out)]
+    ]
     _append_rows_arrow(warehouse, rows)
 
 

@@ -15,7 +15,8 @@ Design:
   folds its PERSON_NAME mentions into (repo, mentions_name, surface) facts
   and writes them to the ``triple_deltas`` table, recording a checkpoint
   row per batch (stage "s4-stream"). ``merged_triples`` folds the deltas
-  at read time.
+  at read time. Nothing rewrites the delta partitions afterwards: the file
+  count grows with the number of batches, and every read folds them all.
 * **Exactly-once data, at-least-once metrics**: foreachBatch alone is
   at-least-once (a crash between the data write and the offset commit
   re-runs the batch). The data writes are made idempotent by keying every
@@ -78,6 +79,7 @@ def stream_triples(spark: SparkSession, corpus_dir: str, warehouse: str,
     the standard streaming-extract / batch-consolidate split, documented
     rather than silently approximated."""
     from ..operators.fused import fused_stage1, split_mentions
+    from ..pipeline import _observed_count
 
     os.makedirs(warehouse, exist_ok=True)
     stream = read_corpus_stream(spark, corpus_dir)
@@ -94,19 +96,16 @@ def stream_triples(spark: SparkSession, corpus_dir: str, warehouse: str,
                  F.max("confidence").alias("conf"))
             .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        # one materialization per batch: without the persist the counter's
-        # count() below re-runs the whole fused-stage-1 DAG a second time
-        facts = facts.persist()
-        try:
-            cat.write_table(facts, warehouse, "triple_deltas",
-                            partition_by=["batch_id"], dynamic_overwrite=True)
-            ck.record_stage(
-                spark, warehouse, run_id, "s4-stream",
-                rows_out=facts.count(),
-                counters={"batch_id": int(batch_id), **ck.LINEAGE_SOURCE_BATCH},
-            )
-        finally:
-            facts.unpersist()
+        # the write itself yields the row count (one job per batch: a
+        # separate count() would re-run the fused-stage-1 DAG)
+        facts, obs = _observed_count(facts, "s4-stream")
+        cat.write_table(facts, warehouse, "triple_deltas",
+                        partition_by=["batch_id"], dynamic_overwrite=True)
+        ck.record_stage(
+            spark, warehouse, run_id, "s4-stream",
+            rows_out=int(obs.get["n"]),
+            counters={"batch_id": int(batch_id), **ck.LINEAGE_SOURCE_BATCH},
+        )
 
     q = (
         stream.writeStream.foreachBatch(process)
@@ -120,9 +119,8 @@ def stream_triples(spark: SparkSession, corpus_dir: str, warehouse: str,
 
 def merged_triples(spark: SparkSession, warehouse: str) -> DataFrame:
     """Merge-on-read view of the streamed triple deltas: one row per
-    (subj, pred, obj) with summed witnesses and max confidence.  A
-    compaction pass (storage/catalog.compact_table) can fold the delta
-    partitions into fewer files without changing this reader."""
+    (subj, pred, obj) with summed witnesses and max confidence, read
+    over every ``batch_id`` delta partition."""
     d = cat.read_table(spark, warehouse, "triple_deltas")
     return d.groupBy("subj", "pred", "obj").agg(
         F.sum("n_witnesses").alias("n_witnesses"),

@@ -1,7 +1,6 @@
-"""Checkpoint counters and warehouse maintenance: run() records stage 2's
-dropped LSH blocks durably (a linking pass whose hub-skew guard silently
-discards blocks is unauditable), and compact_table rewrites a table's small
-files without changing its content."""
+"""Checkpoint counters: run() records stage 2's dropped LSH blocks durably
+(a linking pass whose hub-skew guard silently discards blocks is
+unauditable)."""
 
 from pyspark.sql import functions as F
 
@@ -39,60 +38,3 @@ def test_run_records_s2_dropped_blocks(spark, tmp_path):
     run(spark, c, PipelineConfig(warehouse=dflt))
     assert _stage_row(spark, dflt, "s2")["counters"]["dropped_blocks"] == 0
     c.unpersist()
-
-
-def test_compact_table(spark, tmp_path):
-    from ht_ner_spark.storage import catalog as cat
-
-    wh = str(tmp_path)
-    df = spark.range(0, 2000).selectExpr(
-        "id", "cast(id % 3 as string) as pred")
-    # simulate many tiny micro-batch files
-    cat.write_table(df.repartition(24), wh, "t", partition_by=["pred"])
-    # materialize the pre-compaction content (a lazy frame would re-list
-    # the swapped files)
-    before_rows = sorted(
-        (r["id"], r["pred"])
-        for r in cat.read_table(spark, wh, "t").collect())
-    stats = cat.compact_table(spark, wh, "t",
-                              target_file_bytes=10 * 1024 * 1024)
-    after = cat.read_table(spark, wh, "t")
-    assert stats["files_after"] < stats["files_before"]
-    after_rows = sorted((r["id"], r["pred"]) for r in after.collect())
-    assert after_rows == before_rows                # identical content
-    # partitioning preserved (hive dirs still there)
-    import os
-    assert any(d.startswith("pred=") for d in os.listdir(f"{wh}/t"))
-
-
-def test_recover_compact_semantics(spark, tmp_path):
-    """r4 review: readers RESTORE a mid-swap crash but never delete swap
-    dirs (an in-flight __compact_tmp must survive concurrent reads); the
-    compactor cleans stale swap garbage itself and its second rename
-    retries through a concurrent reader-restore."""
-    import os
-
-    from ht_ner_spark.storage import catalog as cat
-
-    wh = str(tmp_path)
-    df = spark.range(0, 100).selectExpr("id")
-    cat.write_table(df, wh, "t")
-    path, old, tmp = f"{wh}/t", f"{wh}/t__compact_old", f"{wh}/t__compact_tmp"
-
-    # 1. reader must NOT delete an in-flight tmp beside a live table
-    os.makedirs(tmp)
-    with open(f"{tmp}/part-0.parquet", "w") as f:
-        f.write("in-flight")
-    assert cat.read_table(spark, wh, "t").count() == 100
-    assert os.path.isdir(tmp)  # untouched by the reader
-
-    # 2. mid-swap crash (path missing, old present): reader restores
-    os.rename(path, old)
-    assert cat.table_exists(spark, wh, "t")
-    assert os.path.isdir(path) and not os.path.isdir(old)
-
-    # 3. the next compaction cleans the stale tmp and still works
-    stats = cat.compact_table(spark, wh, "t", target_file_bytes=1 << 30)
-    assert not os.path.isdir(tmp) and not os.path.isdir(old)
-    assert cat.read_table(spark, wh, "t").count() == 100
-    assert stats["files_after"] >= 1

@@ -44,7 +44,7 @@ def arrow_batches(rows):
 
 
 def vec_frame(rows, gaz, ranks, cutoffs):
-    out = fused_vec.run_arrow_batches(arrow_batches(rows), 1,
+    out = fused_vec.run_arrow_batches(arrow_batches(rows),
                                       build_trie(gaz), ranks, cutoffs)
     return pa.Table.from_batches(list(out), schema=fused_vec._ARROW_SCHEMA
                                  ).to_pandas()

@@ -1,12 +1,16 @@
 """End-to-end pipeline: triples written partitionBy(pred), sha invariant,
-and resume-after-restart == single-run output (SURVEY §5.4)."""
+resume-after-restart == single-run output (SURVEY §5.4), and one stage-1
+table whatever the frequency budget, so a shared warehouse never mixes two
+runs' votes."""
 
 import os
 
 from pyspark.sql import functions as F
 
+from ht_ner_spark import pipeline
 from ht_ner_spark.corpus import synthetic_corpus
 from ht_ner_spark.pipeline import PipelineConfig, run
+from ht_ner_spark.storage import catalog as cat
 from ht_ner_spark.storage import checkpoint as ck
 
 
@@ -47,8 +51,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     from ht_ner_spark.pipeline import stage1_combined
     from ht_ner_spark.storage import catalog as cat
 
-    combined, extra_votes = stage1_combined(c, cfg2.gazetteer)
-    assert extra_votes is None
+    combined = stage1_combined(c, cfg2.gazetteer)
     cat.write_table(combined, wh2, "s1_combined", partition_by=["kind"])
     m = split_mentions(cat.read_table(spark, wh2, "s1_combined"))
     ck.record_stage(spark, wh2, "r2", "s1", rows_out=m.count())
@@ -71,3 +74,33 @@ def test_checkpoint_partition_stats_recorded(spark, tmp_path):
     assert {"s1", "s1b", "s2", "s3", "s4"} <= stages
     # per-partition lineage rows exist for s1 and s4
     assert ckpt.where("stage='s1' and partition_id >= 0").count() >= 1
+
+
+def _run_sets(spark, corpus, wh, run_id):
+    """(triple set, entity set) of one run() into warehouse ``wh``."""
+    triples = _triple_set(run(spark, corpus, PipelineConfig(
+        warehouse=wh, run_id=run_id)))
+    ents = {(r["row_id"], tuple(sorted(r["entities"])))
+            for r in cat.read_table(spark, wh, "entities").collect()}
+    return triples, ents
+
+
+def test_vocab_fallback_and_shared_warehouse(spark, tmp_path, monkeypatch):
+    """The relational frequency fallback (MAX_BROADCAST_VOCAB=0) gives the
+    default budget's triples and entities through run(); a second corpus
+    run afterwards in the same warehouse, under a new run_id, equals that
+    corpus's run in a fresh warehouse: no table the first run left behind
+    is read."""
+    a = synthetic_corpus(spark, 300, seed=42).cache()
+    b = synthetic_corpus(spark, 300, seed=7).cache()
+    want_a = _run_sets(spark, a, str(tmp_path / "fresh_a"), "a")
+    want_b = _run_sets(spark, b, str(tmp_path / "fresh_b"), "b")
+    assert want_a[0] and want_a[1]
+
+    shared = str(tmp_path / "shared")
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "MAX_BROADCAST_VOCAB", 0)
+        assert _run_sets(spark, a, shared, "a") == want_a
+    assert _run_sets(spark, b, shared, "b") == want_b
+    a.unpersist()
+    b.unpersist()

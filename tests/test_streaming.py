@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
 from ht_ner_spark.operators.fused import fused_stage1, split_mentions
 from ht_ner_spark.storage import catalog as cat
+from ht_ner_spark.storage.checkpoint import read_checkpoints
 from ht_ner_spark.streaming.incremental import merged_triples, stream_triples
 
 
@@ -61,6 +62,17 @@ def test_stream_triples_merge_on_read_equals_batch(spark, tmp_path):
     _drop_files(spark, corpus_dir, 30, 50)
     stream_triples(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
     assert merged() == batch_expected(50)
+
+    # each batch's checkpoint row counts the rows of its own delta partition
+    deltas = cat.read_table(spark, wh, "triple_deltas")
+    per_batch = {r["batch_id"]: r["count"]
+                 for r in deltas.groupBy("batch_id").count().collect()}
+    rows = read_checkpoints(spark, wh).where(
+        F.col("stage") == "s4-stream").collect()
+    assert len(per_batch) == 2
+    assert {r["counters"]["batch_id"] for r in rows} == set(per_batch)
+    for r in rows:
+        assert r["rows_out"] == per_batch[r["counters"]["batch_id"]]
 
 
 def test_stream_triples_retried_batch_replaces_partition(spark, tmp_path):
