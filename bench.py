@@ -342,17 +342,19 @@ def scaling_series() -> dict | None:
 
 def _label_in_batches(batches, trie, ranks, cutoffs) -> None:
     """Label the RecordBatches with the fused pass's mapInArrow body,
-    emission included."""
+    emission included, in the mode pipeline.run uses: votes folded into
+    per-row entity rows."""
     from ht_ner_spark.operators import fused_vec
 
-    for _ in fused_vec.run_arrow_batches(batches, trie, ranks, cutoffs):
+    for _ in fused_vec.run_arrow_batches(batches, trie, ranks, cutoffs,
+                                         entities=True):
         pass
 
 
 def fused_labeler_microbench(rows: int | None = None) -> dict:
     """tokens/s/core of the fused stage-1 labeler, the engine's CPU floor.
     Runs fused_vec.run_arrow_batches, the mapInArrow body the Spark pass
-    runs (tokenize, label, Arrow emission), single-threaded in THIS Python
+    runs (tokenize, label, fold the vote, Arrow emission), single-threaded in THIS Python
     process over ``ARROW_BATCH_ROWS``-row RecordBatches of the text of
     ``synthetic_rows`` (the rows ``synthetic_corpus`` holds), the batches
     the session hands the pass. No Spark runs, so the number is per-core

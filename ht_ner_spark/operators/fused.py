@@ -7,7 +7,9 @@ scans the corpus once per LF family (gazetteer, rules, caps) plus once per
 vote projection.  The north_star instead prescribes mention detection
 "gazetteer trie + regex labelers fused with batched transformer scoring
 inside a GPU-aware mapInPandas loop": a single pass that tokenizes each row
-once and emits every mention AND every LF vote for it.
+once and emits every mention AND every LF vote for it — or, on the
+pipeline's default path, the row's entities: the weighted vote is row-local,
+so the labeler folds it and no vote row leaves Python (``entities=True``).
 
 At 10^12-file scale this is the difference between ~8 corpus scans + 3
 shuffles and exactly ONE scan with ZERO shuffles (the output is written
@@ -29,7 +31,8 @@ Frequency antirules inside the fused pass: the ranked common-word list is
 collected and broadcast when its top-k fits ``pipeline.MAX_BROADCAST_VOCAB``
 (reference vocabularies are 10k-30k entries); above that the caller falls
 back to the relational broadcast-join form, whose votes join this frame as
-kind='v' rows (votes_as_combined) — the adaptive path is chosen in
+kind='v' rows (votes_as_combined), and the labeler emits votes, not
+entities, so one aggregation sees both — the adaptive path is chosen in
 pipeline.stage1_combined. A caller that passes no ranks (a stream
 micro-batch, whose facts keep mentions only) gets no frequency votes.
 """
@@ -53,10 +56,13 @@ from ..schemas import MENTIONS
 from .gazetteer import build_trie
 from .rules import RULE_PATTERNS
 
-# combined stage-1 frame: mention rows (kind='m') + vote rows (kind='v').
-# Votes reuse begin as pos and surface as tok; unused numeric fields are 0.
+# combined stage-1 frame: mention rows (kind='m') + either vote rows
+# (kind='v') or per-row entity rows (kind='e', the votes folded in the
+# labeler). Votes reuse begin as pos and surface as tok. An entity row has
+# lf_name 'weighted_vote' and the row's distinct original-case PERSON_NAME
+# tokens, space-joined, as surface. Unused numeric fields are 0.
 # begin_char/end_char are the mention's character span (Entity.begin_offset
-# semantics, neat_base_classes.py:33-34) — 0 on vote rows.
+# semantics, neat_base_classes.py:33-34) — 0 on vote and entity rows.
 S1_COMBINED = StructType(
     [
         StructField("kind", StringType(), False),
@@ -88,10 +94,11 @@ for _idx, (_pname, _trig, _conf) in enumerate(RULE_PATTERNS):
 
 def fused_stage1(corpus: DataFrame, gazetteer: dict[str, float],
                  common_ranks: dict[str, int] | None = None,
-                 freq_cutoffs: list[tuple[str, int]] | None = None
-                 ) -> DataFrame:
-    """corpus -> S1_COMBINED (mention + vote rows) in one Arrow pass of the
-    columnar labeler (operators/fused_vec.py)."""
+                 freq_cutoffs: list[tuple[str, int]] | None = None,
+                 entities: bool = False) -> DataFrame:
+    """corpus -> S1_COMBINED in one Arrow pass of the columnar labeler
+    (operators/fused_vec.py): mention + vote rows, or with ``entities``
+    mention + per-row entity rows (the weighted vote folded in)."""
     from . import fused_vec
 
     spark = corpus.sparkSession
@@ -106,7 +113,7 @@ def fused_stage1(corpus: DataFrame, gazetteer: dict[str, float],
         # per 220k-row batch) and one RecordBatch per LF family (no
         # concat). Input columns are (row_id, content), selected below.
         yield from fused_vec.run_arrow_batches(
-            batches, trie_b.value, ranks_b.value, cutoffs)
+            batches, trie_b.value, ranks_b.value, cutoffs, entities)
 
     return corpus.select("row_id", "content").mapInArrow(run_vec, S1_COMBINED)
 
@@ -128,6 +135,18 @@ def split_votes(combined: DataFrame) -> DataFrame:
         "label",
         "weight",
         F.col("surface").alias("tok"),
+    )
+
+
+def split_entities(combined: DataFrame) -> DataFrame:
+    """S1_COMBINED kind='e' rows -> (row_id, entities): the row's lowered
+    distinct tokens, sorted. A narrow projection; Spark's ``lower`` is the
+    lowering aggregate.predicted_entities applies, so both write the same
+    arrays."""
+    return combined.where(F.col("kind") == "e").select(
+        "row_id",
+        F.array_sort(F.array_distinct(
+            F.split(F.lower("surface"), " "))).alias("entities"),
     )
 
 

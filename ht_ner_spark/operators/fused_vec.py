@@ -27,12 +27,20 @@ output (~29%).  This module removes all three from the per-token path:
   pandas hash join: (row, surface, lf) triples extracted this batch are
   merged against the token stream on (row, exact token text).
 
+- The weighted vote folds in per batch on the pipeline's default path
+  (``entities=True``): every vote is indexed by flat token position, so a
+  token's score is a ``np.bincount`` over each family's positions, and the
+  labeler emits one kind='e' row per corpus row with its PERSON_NAME
+  tokens instead of the vote rows.
+
 The one entry point is run_arrow_batches, the mapInArrow body of the
-fused pass: RecordBatches in, one RecordBatch per LF family out.
+fused pass: RecordBatches in, one RecordBatch per LF family (and one of
+entity rows) out.
 tests/test_fused_vec.py feeds it 2,048-row RecordBatches, the size the
 session's Arrow conf produces, and holds its output row-multiset
 identical to the per-row reference in tests/oracle.py on adversarial
-Unicode, caps, trigger, embedded-newline and fuzz corpora;
+Unicode, caps, trigger, embedded-newline and fuzz corpora, and its entity
+rows equal the oracle's weighted vote over the oracle's votes;
 tests/test_fused.py diffs the Spark path against the composed relational
 operators (ASCII text: those tokenize with the JVM regex engine).
 """
@@ -171,11 +179,34 @@ def tokenize_batch(row_ids, texts):
     return rid_tok, pos, n_tok, start, end, tok_obj, codes, uniques
 
 
-def _label_parts(row_ids, texts, trie, common_ranks,
-                 freq_cutoffs) -> list[dict]:
+def _entity_part(rid_tok, codes, uniques, hit) -> dict:
+    """kind='e' rows from the flat positions ``hit`` voted PERSON_NAME: one
+    row per corpus row, its distinct original-case tokens space-joined in
+    first-seen order (no token contains U+0020: every TOKEN_PATTERN
+    alternative is a non-whitespace run). A row's tokens are contiguous in
+    the flat stream, so a run of equal row ids is one corpus row."""
+    rows: list[int] = []
+    toks: list[dict] = []
+    prev = None
+    for r, c in zip(rid_tok[hit].tolist(), codes[hit].tolist()):
+        if r != prev:
+            prev = r
+            rows.append(r)
+            toks.append({})
+        toks[-1][c] = None
+    surf = [" ".join(uniques[c] for c in d) for d in toks]
+    return _part("e", np.asarray(rows, dtype=_I64), "weighted_vote", 0, 0,
+                 surf, "PERSON_NAME", 0.0, 0.0, 0.0, 0, 0, len(rows))
+
+
+def _label_parts(row_ids, texts, trie, common_ranks, freq_cutoffs,
+                 entities: bool = False) -> list[dict]:
     """Columnar stage-1 labeling of one batch -> list of per-LF-family
     column-array dicts (see _part). ``trie`` is gazetteer.build_trie's
-    dict trie."""
+    dict trie. The votes become kind='v' rows, or with ``entities`` are
+    folded here into kind='e' rows: a token is PERSON_NAME iff the sum of
+    its ±1.0 votes is > 0.0, aggregate.weighted_vote's rule, and a row
+    with no such token gets no row, as in aggregate.predicted_entities."""
     (rid_tok, pos, n_tok, start, end, tok_obj, codes,
      uniques) = tokenize_batch(row_ids, texts)
     if len(codes) == 0:
@@ -192,6 +223,9 @@ def _label_parts(row_ids, texts, trie, common_ranks,
         dtype=np.bool_, count=nu)
 
     parts: list[dict] = []
+    # vote families: (flat token positions, lf name(s), label); every vote
+    # weighs 1.0
+    votes: list[tuple[np.ndarray, object, str]] = []
     # (rid, surface, lf) triples feeding the J2 re-projection vote pass.
     # Bulk emitters append ARRAY parts (deduped later by drop_duplicates:
     # one vote per (row, token, lf) however many extractions share the
@@ -312,9 +346,7 @@ def _label_parts(row_ids, texts, trie, common_ranks,
         parts.append(_part("m", rid_tok[ac_idx], "all_caps", pos[ac_idx],
                            pos[ac_idx] + 1, tok_obj[ac_idx], "PERSON_NAME",
                            0.5, 0.5, 0.0, start[ac_idx], end[ac_idx], n))
-        parts.append(_part("v", rid_tok[ac_idx], "all_caps", pos[ac_idx],
-                           pos[ac_idx] + 1, tok_obj[ac_idx], "PERSON_NAME",
-                           0.0, 0.0, 1.0, 0, 0, n))
+        votes.append((ac_idx, "all_caps", "PERSON_NAME"))
     nc_idx = np.nonzero((len_ok & (u_len < 15) & u_first)[codes]
                         & (pos >= 1) & (pos < n_tok - 2))[0]
     if nc_idx.size:
@@ -322,9 +354,7 @@ def _label_parts(row_ids, texts, trie, common_ranks,
         parts.append(_part("m", rid_tok[nc_idx], "name_case", pos[nc_idx],
                            pos[nc_idx] + 1, tok_obj[nc_idx], "PERSON_NAME",
                            0.5, 0.5, 0.0, start[nc_idx], end[nc_idx], n))
-        parts.append(_part("v", rid_tok[nc_idx], "name_case", pos[nc_idx],
-                           pos[nc_idx] + 1, tok_obj[nc_idx], "PERSON_NAME",
-                           0.0, 0.0, 1.0, 0, 0, n))
+        votes.append((nc_idx, "name_case", "PERSON_NAME"))
 
     # ---- J2 span re-projection (labeling_functions.py:27-54): hash join
     #      of the token stream vs this batch's extracted (row, surface, lf)
@@ -346,12 +376,8 @@ def _label_parts(row_ids, texts, trie, common_ranks,
                                  "tok": tok_obj[cand], "f": cand})
             mg = left.merge(right, on=["rid", "tok"], how="inner")
             if len(mg):
-                mf = mg["f"].to_numpy()
-                n = len(mg)
-                parts.append(_part(
-                    "v", mg["rid"].to_numpy(), mg["lf"].to_numpy(),
-                    pos[mf], pos[mf] + 1, mg["tok"].to_numpy(),
-                    "PERSON_NAME", 0.0, 0.0, 1.0, 0, 0, n))
+                votes.append((mg["f"].to_numpy(), mg["lf"].to_numpy(),
+                              "PERSON_NAME"))
 
     # ---- frequency antirules (create_lfs.py:17-34 +
     #      labeling_functions.py:135-143): rank gather per unique token
@@ -365,10 +391,22 @@ def _label_parts(row_ids, texts, trie, common_ranks,
         for lf, max_rank in freq_cutoffs:
             fi = np.nonzero(rank_flat <= max_rank)[0]
             if fi.size:
-                parts.append(_part("v", rid_tok[fi], lf, pos[fi],
-                                   pos[fi] + 1, tok_obj[fi], "NOT_NAME",
-                                   0.0, 0.0, 1.0, 0, 0, fi.size))
+                votes.append((fi, lf, "NOT_NAME"))
 
+    if entities:
+        # weighted vote per flat token position: one bincount per family
+        score = np.zeros(len(codes), dtype=_I64)
+        for idx, _, label in votes:
+            tally = np.bincount(idx, minlength=len(codes))
+            score += tally if label == "PERSON_NAME" else -tally
+        hit = np.nonzero(score > 0)[0]
+        if hit.size:
+            parts.append(_entity_part(rid_tok, codes, uniques, hit))
+        return parts
+    for idx, lf, label in votes:
+        parts.append(_part("v", rid_tok[idx], lf, pos[idx], pos[idx] + 1,
+                           tok_obj[idx], label, 0.0, 0.0, 1.0, 0, 0,
+                           idx.size))
     return parts
 
 
@@ -401,10 +439,12 @@ def _parts_to_record_batches(parts: list[dict]):
             schema=_ARROW_SCHEMA)
 
 
-def run_arrow_batches(batches, trie, common_ranks, freq_cutoffs):
+def run_arrow_batches(batches, trie, common_ranks, freq_cutoffs,
+                      entities: bool = False):
     """mapInArrow body of the fused pass: coalesce input RecordBatches
     (row_id, text) up to COALESCE_ROWS, label, stream one RecordBatch per
-    LF family."""
+    LF family. ``entities`` folds the votes into kind='e' rows
+    (_label_parts)."""
 
     def one(chunks: list) -> list[dict]:
         if len(chunks) == 1:
@@ -414,7 +454,8 @@ def run_arrow_batches(batches, trie, common_ranks, freq_cutoffs):
             texts = []
             for c in chunks:
                 texts.extend(c[1])
-        return _label_parts(rid, texts, trie, common_ranks, freq_cutoffs)
+        return _label_parts(rid, texts, trie, common_ranks, freq_cutoffs,
+                            entities)
 
     buf: list = []
     nbuf = 0

@@ -27,14 +27,13 @@ votes.py, not here: mentions keep true span positions for linking.
 
 from __future__ import annotations
 
-import re
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKEN_PATTERN
 from ..schemas import MENTIONS
 
 LF_NAME = "dictionary"
@@ -144,27 +143,31 @@ def match_trie(corpus: DataFrame, weights: dict[str, float],
                lf_name: str = LF_NAME, text_col: str = "content") -> DataFrame:
     """Arrow mapInPandas trie match -> MENTIONS rows (greedy-all semantics:
     every match at every start position, exactly the span set
-    PhraseMatcher returns), sorted by (begin, end) per document. The trie is
-    built once on the driver and broadcast: building it per input task is
-    O(|gazetteer|) repeated work."""
+    PhraseMatcher returns), sorted by (begin, end) per document. Tokens and
+    char spans come from fused_vec.tokenize_batch, the fused labeler's own
+    tokenizer. The trie is built once on the driver and broadcast: building
+    it per input task is O(|gazetteer|) repeated work."""
     spark = corpus.sparkSession
     trie_b = spark.sparkContext.broadcast(build_trie(dict(weights)))
-    tok_re = re.compile(TOKEN_PATTERN)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from .fused_vec import tokenize_batch
+
         trie = trie_b.value
         for pdf in batches:
+            rid, pos, n_tok, start, end, tok, _, _ = tokenize_batch(
+                pdf["row_id"].to_numpy(), pdf[text_col].tolist())
+            rid, n_tok, start, end, tok = (
+                rid.tolist(), n_tok.tolist(), start.tolist(), end.tolist(),
+                tok.tolist())
             rows_out: list[tuple] = []
-            for row_id, text in zip(pdf["row_id"], pdf[text_col]):
-                # finditer instead of findall: same tokens, plus the char
-                # spans that feed MENTIONS.begin_char/end_char for free
-                matches = list(tok_re.finditer(text or ""))
-                toks = [m.group(0) for m in matches]
+            # a row's tokens are contiguous in the flat stream from pos 0
+            for a in np.flatnonzero(pos == 0).tolist():
+                toks = tok[a:a + n_tok[a]]
                 for i, j, w in trie_matches(trie, [t.lower() for t in toks]):
                     rows_out.append(
-                        (row_id, lf_name, i, j, " ".join(toks[i:j]),
-                         "PERSON_NAME", w, w,
-                         matches[i].start(), matches[j - 1].end())
+                        (rid[a], lf_name, i, j, " ".join(toks[i:j]),
+                         "PERSON_NAME", w, w, start[a + i], end[a + j - 1])
                     )
             yield pd.DataFrame(
                 rows_out,

@@ -1,7 +1,8 @@
 """The 4-stage KG-construction pipeline with keyed resume.
 
-stage 1  mentions   corpus -> MENTIONS + VOTES      (gazetteer + rules + caps
-                                                     + frequency antirules)
+stage 1  mentions   corpus -> MENTIONS + entities   (gazetteer + rules + caps
+                                                     + frequency antirules,
+                                                     weighted vote)
 stage 2  linking    mentions -> alias edges          (MinHash/LSH + Jaccard)
 stage 3  cc         edges -> COMPONENTS              (iterative min-label)
 stage 4  triples    corpus ⋈ entities ⋈ components -> TRIPLES partitioned by pred
@@ -9,6 +10,14 @@ stage 4  triples    corpus ⋈ entities ⋈ components -> TRIPLES partitioned by
 Every stage writes its output table atomically (overwrite) to the warehouse
 and appends per-partition checkpoint rows; ``run()`` skips stages already
 recorded for the same run_id (resume = restart with the same run_id).
+
+Stage 1 is one labeler pass and one table, ``s1_combined``, partitioned by
+kind. The weighted vote is row-local, so on the default path (aggregator
+'vote', frequency top-k within MAX_BROADCAST_VOCAB) the labeler folds each
+row's votes into one kind='e' entity row and writes no votes; ``s1b`` is
+then a narrow projection of those rows. The hmm aggregator (corpus-global
+EM) and the oversized-vocabulary fallback (votes from a separate pass)
+write kind='v' vote rows, and ``s1b`` aggregates them.
 """
 
 from __future__ import annotations
@@ -126,20 +135,26 @@ def _frequency_inputs(corpus: DataFrame):
 
 
 def stage1_combined(corpus: DataFrame, gazetteer: dict[str, float],
-                    freq_inputs: tuple | None = None) -> DataFrame:
-    """Fused stage 1 -> the S1_COMBINED frame. When the frequency top-k
-    exceeds the broadcast budget, the relational fallback's votes are
-    unioned in as kind='v' rows, so stage 1 is one table either way.
+                    freq_inputs: tuple | None = None,
+                    entities: bool = False) -> DataFrame:
+    """Fused stage 1 -> the S1_COMBINED frame. With ``entities`` and the
+    frequency top-k inside the broadcast budget, the labeler folds the votes
+    into kind='e' entity rows. Otherwise it emits kind='v' vote rows; when
+    the top-k exceeds the budget, the relational fallback's votes are
+    unioned in as more kind='v' rows, so stage 1 is one table either way.
     ``freq_inputs`` lets the caller pre-run (and sub-time) the frequency
     pass."""
-    from .operators.fused import fused_stage1, votes_as_combined
+    from .operators import fused
 
     ranks, cutoffs, fallback_votes = (
         freq_inputs if freq_inputs is not None else _frequency_inputs(corpus))
-    combined = fused_stage1(corpus, gazetteer,
-                            common_ranks=ranks, freq_cutoffs=cutoffs)
+    # through the module attribute, so a wrapped fused_stage1 is the one run
+    combined = fused.fused_stage1(
+        corpus, gazetteer, common_ranks=ranks, freq_cutoffs=cutoffs,
+        entities=entities and fallback_votes is None)
     if fallback_votes is not None:
-        combined = combined.unionByName(votes_as_combined(fallback_votes))
+        combined = combined.unionByName(
+            fused.votes_as_combined(fallback_votes))
     return combined
 
 
@@ -161,10 +176,11 @@ def _read_mentions(spark: SparkSession, wh: str) -> DataFrame:
     return split_mentions(cat.read_table(spark, wh, "s1_combined"))
 
 
-def _read_votes(spark: SparkSession, wh: str) -> DataFrame:
-    from .operators.fused import split_votes
-
-    return split_votes(cat.read_table(spark, wh, "s1_combined"))
+def _vote_rows(wh: str) -> int:
+    """Vote rows of the stored stage-1 table, from parquet footers (no
+    Spark job). Every s1 overwrites the table, so these are this run's."""
+    return sum(n for _, n in ck.partition_stats_files(
+        os.path.join(wh, "s1_combined", "kind=v")))
 
 
 def _observed_count(df: DataFrame, name: str):
@@ -207,7 +223,7 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
     done = ck.completed_stages(wh, cfg.run_id)
 
     # ---- stage 1
-    mentions = votes = None
+    mentions = None
     if "s1" not in done:
         with _timed(timings, "s1"):
             # sub-time the corpus-global frequency pass (pass 1 of 2) so
@@ -216,21 +232,23 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
             # shuffle and scales differently.
             with _timed(timings, "s1_freq"):
                 freq_inputs = _frequency_inputs(corpus)
-            # ONE corpus pass, ONE write: the combined mention+vote frame IS
-            # the stage-1 table; mentions/votes are kind-filtered projections
-            # of the stored copy. partitionBy(kind) prunes those reads at
-            # directory level (no repartition — each task writes both kind
-            # dirs, write parallelism intact). NOTE: a localCheckpoint of
-            # this frame was tried and is 4x SLOWER — 26M rows pinned as
-            # deserialized JVM objects blow the heap; the columnar zstd
-            # round-trip through the stored table is the cheap path.
+            # ONE corpus pass, ONE write: the combined frame (mentions plus
+            # entity rows, or vote rows for hmm and the vocabulary fallback)
+            # IS the stage-1 table; s2 and s1b read kind-filtered
+            # projections of the stored copy. partitionBy(kind) prunes those
+            # reads at directory level (no repartition — each task writes
+            # every kind dir, write parallelism intact). NOTE: a
+            # localCheckpoint of this frame was tried and is 4x SLOWER — 26M
+            # rows pinned as deserialized JVM objects blow the heap; the
+            # columnar zstd round-trip through the stored table is the
+            # cheap path.
             corpus_in, in_obs = _observed_count(corpus, "s1_in")
             combined = stage1_combined(corpus_in, cfg.gazetteer,
-                                       freq_inputs=freq_inputs)
+                                       freq_inputs=freq_inputs,
+                                       entities=cfg.aggregator == "vote")
             cat.write_table(combined, wh, "s1_combined", partition_by=["kind"])
             rows_in = int(in_obs.get["n"])
             mentions = _read_mentions(spark, wh)
-            votes = _read_votes(spark, wh)
             # per-partition lineage from the written files' parquet footers —
             # driver-side metadata read, NO table re-scan job (mentions = the
             # kind=m partition of the combined table).
@@ -242,24 +260,30 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
                             rows_out=rows_out, counters=ck.LINEAGE_SOURCE_FILES)
     if mentions is None:
         mentions = _read_mentions(spark, wh)
-        votes = _read_votes(spark, wh)
 
-    # ---- aggregate votes -> per-row entities (part of stage 1 output contract)
+    # ---- per-row entities (part of stage 1 output contract)
     entities = None
     if "s1b" not in done:
         with _timed(timings, "s1b"):
+            from .operators.fused import split_entities, split_votes
+
+            s1 = cat.read_table(spark, wh, "s1_combined")
             if cfg.aggregator == "hmm":
                 from .operators.hmm import hmm_decode, hmm_fit
 
+                votes = split_votes(s1)
                 # token counts from the labeler's own tokenizer, which
                 # its vote positions come from (not the JVM regex)
                 doc_lens = char_token_view(corpus).groupBy("row_id").agg(
                     F.count("*").cast("int").alias("n_toks"))
                 params = hmm_fit(votes, doc_lens)
-                agg = hmm_decode(votes, doc_lens, params)
+                ents = predicted_entities(hmm_decode(votes, doc_lens, params))
+            elif _vote_rows(wh) == 0:
+                # the labeler folded the vote: a narrow projection
+                ents = split_entities(s1)
             else:
-                agg = weighted_vote(votes)
-            ents = predicted_entities(agg)  # votes carry tok: no corpus re-join
+                # votes carry tok: no corpus re-join
+                ents = predicted_entities(weighted_vote(split_votes(s1)))
             ents, obs = _observed_count(ents, "s1b")
             cat.write_table(ents, wh, "entities")
             ck.record_stage(spark, wh, cfg.run_id, "s1b", rows_out=obs.get["n"],

@@ -59,7 +59,10 @@ MENTIONS = StructType(
 # ``tok`` carries the voted token's text so downstream aggregation
 # (weighted_vote -> predicted_entities) never has to re-join the corpus —
 # at 100 TB that join is a full re-tokenize + shuffle; carrying 1 string
-# per vote row is strictly cheaper.
+# per vote row is strictly cheaper. The pipeline's default path stores no
+# votes (the fused labeler folds the weighted vote per row); this shape is
+# what stage1_mentions returns and what the hmm aggregator and the
+# oversized-vocabulary fallback aggregate.
 VOTES = StructType(
     [
         StructField("row_id", LongType(), False),

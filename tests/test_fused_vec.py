@@ -43,9 +43,10 @@ def arrow_batches(rows):
         for lo in range(0, len(rows), ARROW_BATCH_ROWS)]
 
 
-def vec_frame(rows, gaz, ranks, cutoffs):
+def vec_frame(rows, gaz, ranks, cutoffs, entities=False):
     out = fused_vec.run_arrow_batches(arrow_batches(rows),
-                                      build_trie(gaz), ranks, cutoffs)
+                                      build_trie(gaz), ranks, cutoffs,
+                                      entities=entities)
     return pa.Table.from_batches(list(out), schema=fused_vec._ARROW_SCHEMA
                                  ).to_pandas()
 
@@ -54,11 +55,38 @@ def multiset(df):
     return sorted(map(tuple, df[_COLS].itertuples(index=False)))
 
 
+def oracle_entities(rows, ok):
+    """oracle.weighted_vote -> oracle.predicted_entities over the vote rows
+    of the oracle frame ``ok``: {row_id: lowered token set}."""
+    v = ok[ok["kind"] == "v"]
+    votes = zip(v["row_id"], v["begin"], v["lf_name"], v["label"],
+                v["weight"])
+    toks = {rid: oracle.tokenize(text) for rid, text in rows}
+    return oracle.predicted_entities(toks, oracle.weighted_vote(votes))
+
+
+def entity_sets(df):
+    """kind='e' rows -> {row_id: lowered token set}; Python's str.lower
+    agrees with Spark's lower on the fixtures (pinned on Unicode rows by
+    test_entity_rows_spark_projection)."""
+    e = df[df["kind"] == "e"]
+    assert e["row_id"].is_unique
+    return {int(r): set(s.lower().split(" "))
+            for r, s in zip(e["row_id"], e["surface"])}
+
+
 def assert_parity(rows, gaz=None, ranks=None, cutoffs=None):
+    """The labeler's m+v rows equal the oracle's; with entities=True its
+    mention rows are unchanged, it emits no vote rows, and its kind='e'
+    rows equal the oracle's weighted vote over the oracle's votes."""
     gaz = gaz if gaz is not None else dict(DEFAULT_GAZETTEER)
-    ok = multiset(oracle_frame(rows, gaz, ranks or {}, cutoffs or []))
-    vk = multiset(vec_frame(rows, gaz, ranks or {}, cutoffs or []))
-    assert ok == vk
+    ranks, cutoffs = ranks or {}, cutoffs or []
+    ok = oracle_frame(rows, gaz, ranks, cutoffs)
+    assert multiset(ok) == multiset(vec_frame(rows, gaz, ranks, cutoffs))
+    folded = vec_frame(rows, gaz, ranks, cutoffs, entities=True)
+    assert multiset(folded[folded["kind"] != "e"]) == multiset(
+        ok[ok["kind"] == "m"])
+    assert entity_sets(folded) == oracle_entities(rows, ok)
 
 
 def test_synthetic_corpus_parity():
@@ -85,8 +113,37 @@ def test_unicode_case_and_whitespace():
         (1, "ΣΙΓΜΑ σίγμα Δὲν ΞΕΡΩ"),
         (2, "naïve CAFÉ résumé"),
         (3, "tab\tsep thin　ideographic"),
+        # an all-caps Greek word ending in Σ (final-sigma lowering) and a
+        # word with İ (lowers to two code points), both voted PERSON_NAME
+        (4, "met ΟΔΥΣΣΕΥΣ and İlker Kaya today"),
     ]
     assert_parity(rows)
+
+
+UNICODE_ROWS = [
+    (0, "met ΟΔΥΣΣΕΥΣ and İlker Kaya today"),
+    (1, "ΣΙΓΜΑ saw ΣΙΓΜΑΣ Δὲν ΞΕΡΩ Ωμέγα ok"),
+    (2, "naïve CAFÉ résumé and Zoë Ångström left"),
+    (3, "Mr İZMİR and mr ĲSBRAND met ẞEТA there"),
+]
+
+
+def test_entity_rows_spark_projection(spark):
+    """fused.split_entities, the stage-1b projection, lowers the stored
+    kind='e' surfaces with Spark's lower; on Unicode rows its arrays equal
+    the oracle's weighted vote, sorted."""
+    from ht_ner_spark.operators.fused import S1_COMBINED, split_entities
+
+    gaz = dict(DEFAULT_GAZETTEER)
+    folded = vec_frame(UNICODE_ROWS, gaz, {}, [], entities=True)
+    assert (folded["kind"] == "e").sum() == len(UNICODE_ROWS)
+    df = spark.createDataFrame(folded[_COLS].values.tolist(), S1_COMBINED)
+    got = {r["row_id"]: r["entities"]
+           for r in split_entities(df).collect()}
+    want = oracle_entities(UNICODE_ROWS,
+                           oracle_frame(UNICODE_ROWS, gaz, {}, []))
+    assert got == {k: sorted(v) for k, v in want.items()}
+    assert {"οδυσσευς", "i̇lker"} <= set(got[0])
 
 
 def test_dollar_numbers_and_punctuation_glue():

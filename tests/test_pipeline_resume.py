@@ -4,11 +4,12 @@ table whatever the frequency budget, so a shared warehouse never mixes two
 runs' votes."""
 
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
 from ht_ner_spark import pipeline
-from ht_ner_spark.corpus import synthetic_corpus
+from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
 from ht_ner_spark.pipeline import PipelineConfig, run
 from ht_ner_spark.storage import catalog as cat
 from ht_ner_spark.storage import checkpoint as ck
@@ -104,3 +105,61 @@ def test_vocab_fallback_and_shared_warehouse(spark, tmp_path, monkeypatch):
     assert _run_sets(spark, b, shared, "b") == want_b
     a.unpersist()
     b.unpersist()
+
+
+def _unicode_corpus(spark):
+    """synthetic_corpus rows plus cased Unicode rows the caps detectors
+    vote on (final sigma, İ, ß)."""
+    import hashlib
+
+    from ht_ner_spark.schemas import CORPUS
+
+    texts = ["met ΟΔΥΣΣΕΥΣ and İlker Kaya today",
+             "Mr İZMİR and mr ĲSBRAND met ẞEТA there",
+             "naïve CAFÉ résumé and Zoë Ångström left", "", None]
+    extra = spark.createDataFrame(
+        [(10_000 + i, "u/repo", "f.py", "c0", "py", t,
+          hashlib.sha256((t or "").encode()).hexdigest())
+         for i, t in enumerate(texts)], CORPUS)
+    return synthetic_corpus(spark, 200).unionByName(extra).cache()
+
+
+def test_default_run_folds_the_vote(spark, tmp_path):
+    """On the default path stage 1 writes entity rows, no vote rows, and
+    run()'s entities equal predicted_entities(weighted_vote(votes)) over
+    stage1_mentions' votes on the same corpus."""
+    from ht_ner_spark.operators.aggregate import predicted_entities, weighted_vote
+
+    c = _unicode_corpus(spark)
+    wh = str(tmp_path / "wh")
+    _, got = _run_sets(spark, c, wh, "f")
+    assert not os.path.exists(os.path.join(wh, "s1_combined", "kind=v"))
+    assert os.path.isdir(os.path.join(wh, "s1_combined", "kind=e"))
+    _, votes = pipeline.stage1_mentions(c, dict(DEFAULT_GAZETTEER))
+    want = {(r["row_id"], tuple(r["entities"]))
+            for r in predicted_entities(weighted_vote(votes)).collect()}
+    assert got == want
+    assert any(r >= 10_000 for r, _ in want)
+    c.unpersist()
+
+
+def test_resume_at_s1_s1b_boundary(spark, tmp_path):
+    """A run that stops after record_stage('s1'): drop the checkpoint rows
+    of s1b..s4 and the entities table, re-run with the same run_id, and get
+    the same entities and triples from the stored entity rows."""
+    import pyarrow.parquet as pq
+
+    c = _unicode_corpus(spark)
+    wh = str(tmp_path / "wh")
+    want = _run_sets(spark, c, wh, "r")
+    ck_dir = os.path.join(wh, ck.CHECKPOINT_TABLE)
+    for f in os.listdir(ck_dir):
+        path = os.path.join(ck_dir, f)
+        if set(pq.read_table(path, columns=["stage"])["stage"].to_pylist()) \
+                & {"s1b", "s2", "s3", "s4"}:
+            os.remove(path)
+    shutil.rmtree(os.path.join(wh, "entities"))
+    assert ck.completed_stages(wh, "r") == {"s1"}
+    assert _run_sets(spark, c, wh, "r") == want
+    assert ck.completed_stages(wh, "r") == {"s1", "s1b", "s2", "s3", "s4"}
+    c.unpersist()
