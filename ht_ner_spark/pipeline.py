@@ -17,7 +17,10 @@ kind. The weighted vote is row-local, so on the default path (aggregator
 row's votes into one kind='e' entity row and writes no votes; ``s1b`` is
 then a narrow projection of those rows. The hmm aggregator (corpus-global
 EM) and the oversized-vocabulary fallback (votes from a separate pass)
-write kind='v' vote rows, and ``s1b`` aggregates them.
+write kind='v' vote rows, and ``s1b`` aggregates them. Which of the two a
+stage 1 stored is recorded on its checkpoint rows (FOLDED_VOTE), so a
+resumed ``s1b`` takes the right path, and an hmm resume of a folded stage 1
+is refused rather than decoded over no votes.
 """
 
 from __future__ import annotations
@@ -72,6 +75,10 @@ AUDIT_BROADCAST_MAX_ROWS = 4_000_000
 # entries); larger ones are ranked distributed and voted by a broadcast
 # join (_frequency_inputs).
 MAX_BROADCAST_VOCAB = 1_000_000
+
+# Counter on the s1 checkpoint rows: 1 when the labeler folded the vote
+# into kind='e' entity rows and stored no votes.
+FOLDED_VOTE = "folded_vote"
 
 
 def _frequency_inputs(corpus: DataFrame):
@@ -176,13 +183,6 @@ def _read_mentions(spark: SparkSession, wh: str) -> DataFrame:
     return split_mentions(cat.read_table(spark, wh, "s1_combined"))
 
 
-def _vote_rows(wh: str) -> int:
-    """Vote rows of the stored stage-1 table, from parquet footers (no
-    Spark job). Every s1 overwrites the table, so these are this run's."""
-    return sum(n for _, n in ck.partition_stats_files(
-        os.path.join(wh, "s1_combined", "kind=v")))
-
-
 def _observed_count(df: DataFrame, name: str):
     """Attach an Observation so the write action itself yields the row count —
     no separate count() job (one fewer corpus-scale pass per stage)."""
@@ -243,9 +243,12 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
             # columnar zstd round-trip through the stored table is the
             # cheap path.
             corpus_in, in_obs = _observed_count(corpus, "s1_in")
+            # the labeler folds the vote unless hmm needs the votes or the
+            # vocabulary fallback's votes come from a separate pass
+            folded = cfg.aggregator == "vote" and freq_inputs[2] is None
             combined = stage1_combined(corpus_in, cfg.gazetteer,
                                        freq_inputs=freq_inputs,
-                                       entities=cfg.aggregator == "vote")
+                                       entities=folded)
             cat.write_table(combined, wh, "s1_combined", partition_by=["kind"])
             rows_in = int(in_obs.get["n"])
             mentions = _read_mentions(spark, wh)
@@ -257,7 +260,9 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
             rows_out = sum(n for _, n in pstats_rows)
             ck.record_stage(spark, wh, cfg.run_id, "s1",
                             partition_rows=pstats_rows, rows_in=rows_in,
-                            rows_out=rows_out, counters=ck.LINEAGE_SOURCE_FILES)
+                            rows_out=rows_out,
+                            counters={**ck.LINEAGE_SOURCE_FILES,
+                                      FOLDED_VOTE: int(folded)})
     if mentions is None:
         mentions = _read_mentions(spark, wh)
 
@@ -268,9 +273,18 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
             from .operators.fused import split_entities, split_votes
 
             s1 = cat.read_table(spark, wh, "s1_combined")
+            # which rows stage 1 holds is recorded with its checkpoint, not
+            # probed in the table: the check costs no Spark job and holds
+            # under any catalog
+            folded = ck.stage_counters(wh, cfg.run_id, "s1").get(FOLDED_VOTE)
             if cfg.aggregator == "hmm":
                 from .operators.hmm import hmm_decode, hmm_fit
 
+                if folded:
+                    raise ValueError(
+                        f"run {cfg.run_id!r}: stage 1 was written by the "
+                        "'vote' aggregator, which folds the votes into "
+                        "entity rows; re-run stage 1 with a new run_id")
                 votes = split_votes(s1)
                 # token counts from the labeler's own tokenizer, which
                 # its vote positions come from (not the JVM regex)
@@ -278,11 +292,12 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
                     F.count("*").cast("int").alias("n_toks"))
                 params = hmm_fit(votes, doc_lens)
                 ents = predicted_entities(hmm_decode(votes, doc_lens, params))
-            elif _vote_rows(wh) == 0:
+            elif folded:
                 # the labeler folded the vote: a narrow projection
                 ents = split_entities(s1)
             else:
-                # votes carry tok: no corpus re-join
+                # the vocabulary fallback's votes, or a stage 1 the hmm
+                # aggregator wrote; votes carry tok: no corpus re-join
                 ents = predicted_entities(weighted_vote(split_votes(s1)))
             ents, obs = _observed_count(ents, "s1b")
             cat.write_table(ents, wh, "entities")

@@ -28,20 +28,33 @@ def _ckpt_dir(warehouse: str) -> str:
     return os.path.join(warehouse, CHECKPOINT_TABLE)
 
 
-def completed_stages(warehouse: str, run_id: str) -> set[str]:
-    """All completed stages for a run, in one driver-side checkpoint scan
-    (pyarrow, no Spark job): the table is a handful of metadata rows, and
-    scheduling a cluster job to read it is pure serial overhead on every
-    resume check."""
+def _read_rows(warehouse: str, columns: list[str]) -> list[dict]:
+    """Checkpoint rows in one driver-side scan (pyarrow, no Spark job): the
+    table is a handful of metadata rows, and scheduling a cluster job to
+    read it is pure serial overhead on every resume check."""
     import pyarrow.dataset as ds
 
     path = _ckpt_dir(warehouse)
     if not os.path.isdir(path):
-        return set()
-    data = ds.dataset(path, format="parquet").to_table(
-        columns=["run_id", "stage"]
-    ).to_pylist()
-    return {r["stage"] for r in data if r["run_id"] == run_id}
+        return []
+    return ds.dataset(path, format="parquet").to_table(
+        columns=columns).to_pylist()
+
+
+def completed_stages(warehouse: str, run_id: str) -> set[str]:
+    """All completed stages for a run."""
+    return {r["stage"] for r in _read_rows(warehouse, ["run_id", "stage"])
+            if r["run_id"] == run_id}
+
+
+def stage_counters(warehouse: str, run_id: str, stage: str) -> dict[str, int]:
+    """The counters recorded with a completed stage of a run ({} when the
+    stage is not recorded; every row of one record carries the same
+    counters)."""
+    for r in _read_rows(warehouse, ["run_id", "stage", "counters"]):
+        if r["run_id"] == run_id and r["stage"] == stage:
+            return dict(r["counters"] or [])
+    return {}
 
 
 def record_stage(

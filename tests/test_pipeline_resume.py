@@ -6,6 +6,7 @@ runs' votes."""
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from ht_ner_spark import pipeline
@@ -77,10 +78,10 @@ def test_checkpoint_partition_stats_recorded(spark, tmp_path):
     assert ckpt.where("stage='s1' and partition_id >= 0").count() >= 1
 
 
-def _run_sets(spark, corpus, wh, run_id):
+def _run_sets(spark, corpus, wh, run_id, aggregator="vote"):
     """(triple set, entity set) of one run() into warehouse ``wh``."""
     triples = _triple_set(run(spark, corpus, PipelineConfig(
-        warehouse=wh, run_id=run_id)))
+        warehouse=wh, run_id=run_id, aggregator=aggregator)))
     ents = {(r["row_id"], tuple(sorted(r["entities"])))
             for r in cat.read_table(spark, wh, "entities").collect()}
     return triples, ents
@@ -135,6 +136,7 @@ def test_default_run_folds_the_vote(spark, tmp_path):
     _, got = _run_sets(spark, c, wh, "f")
     assert not os.path.exists(os.path.join(wh, "s1_combined", "kind=v"))
     assert os.path.isdir(os.path.join(wh, "s1_combined", "kind=e"))
+    assert ck.stage_counters(wh, "f", "s1")[pipeline.FOLDED_VOTE] == 1
     _, votes = pipeline.stage1_mentions(c, dict(DEFAULT_GAZETTEER))
     want = {(r["row_id"], tuple(r["entities"]))
             for r in predicted_entities(weighted_vote(votes)).collect()}
@@ -143,15 +145,12 @@ def test_default_run_folds_the_vote(spark, tmp_path):
     c.unpersist()
 
 
-def test_resume_at_s1_s1b_boundary(spark, tmp_path):
-    """A run that stops after record_stage('s1'): drop the checkpoint rows
-    of s1b..s4 and the entities table, re-run with the same run_id, and get
-    the same entities and triples from the stored entity rows."""
+def _drop_after_s1(wh, run_id):
+    """Undo a finished run back to the s1/s1b boundary: drop the checkpoint
+    rows of s1b..s4 and the entities table, as if it stopped after
+    record_stage('s1')."""
     import pyarrow.parquet as pq
 
-    c = _unicode_corpus(spark)
-    wh = str(tmp_path / "wh")
-    want = _run_sets(spark, c, wh, "r")
     ck_dir = os.path.join(wh, ck.CHECKPOINT_TABLE)
     for f in os.listdir(ck_dir):
         path = os.path.join(ck_dir, f)
@@ -159,7 +158,38 @@ def test_resume_at_s1_s1b_boundary(spark, tmp_path):
                 & {"s1b", "s2", "s3", "s4"}:
             os.remove(path)
     shutil.rmtree(os.path.join(wh, "entities"))
-    assert ck.completed_stages(wh, "r") == {"s1"}
+    assert ck.completed_stages(wh, run_id) == {"s1"}
+
+
+def test_resume_at_s1_s1b_boundary(spark, tmp_path):
+    """A run that stops after record_stage('s1') and is re-run with the
+    same run_id gives the same entities and triples from the stored entity
+    rows."""
+    c = _unicode_corpus(spark)
+    wh = str(tmp_path / "wh")
+    want = _run_sets(spark, c, wh, "r")
+    _drop_after_s1(wh, "r")
     assert _run_sets(spark, c, wh, "r") == want
     assert ck.completed_stages(wh, "r") == {"s1", "s1b", "s2", "s3", "s4"}
+    c.unpersist()
+
+
+def test_resume_across_aggregators(spark, tmp_path):
+    """s1b takes its path from what the s1 checkpoint says stage 1 stored,
+    not from the resuming run's aggregator: a stage 1 the hmm aggregator
+    wrote (vote rows) resumed under 'vote' gives the default run's entities
+    and triples; a folded stage 1 (entity rows, no votes) resumed under
+    'hmm' is refused, not decoded into an empty entities table."""
+    c = synthetic_corpus(spark, 120).cache()
+    want = _run_sets(spark, c, str(tmp_path / "fresh"), "v")
+
+    wh = str(tmp_path / "hmm_then_vote")
+    _run_sets(spark, c, wh, "h", aggregator="hmm")
+    _drop_after_s1(wh, "h")
+    assert _run_sets(spark, c, wh, "h") == want
+
+    folded = str(tmp_path / "fresh")
+    _drop_after_s1(folded, "v")
+    with pytest.raises(ValueError, match="new run_id"):
+        _run_sets(spark, c, folded, "v", aggregator="hmm")
     c.unpersist()
