@@ -5901,7 +5901,11 @@ WHERE t.rn = 1
 # three, because each drain's query start/stop costs ~2 s and the slowest
 # contract queries must stay under the ~10 s sf0.01 line), each drain
 # writing its batch's facts as an idempotent batch_id=N delta partition;
-# the returned frame is the merge-on-read fold.
+# the returned frame is the merge-on-read fold. The 300-row slice lands
+# as two 150-row batches, each under one labeler chunk
+# (fused_vec.COALESCE_ROWS), so the driver folds them
+# (incremental._fold_facts); tests/test_streaming.py holds the mapInArrow
+# side of that budget to the same batch reference.
 # The delta facts use only associative-commutative merges (sum of
 # per-batch distinct witnesses — row_ids are unique across batches — and
 # max conf), so the DuckDB oracle is the FLAT batch aggregate over the

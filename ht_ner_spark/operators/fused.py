@@ -33,8 +33,9 @@ collected and broadcast when its top-k fits ``pipeline.MAX_BROADCAST_VOCAB``
 back to the relational broadcast-join form, whose votes join this frame as
 kind='v' rows (votes_as_combined), and the labeler emits votes, not
 entities, so one aggregation sees both — the adaptive path is chosen in
-pipeline.stage1_combined. A caller that passes no ranks (a stream
-micro-batch, whose facts keep mentions only) gets no frequency votes.
+pipeline.stage1_combined. A caller that passes no ranks gets no
+frequency votes; the stream's fact kernel (streaming/incremental.py) runs
+the columnar labeler that way, since its facts keep mentions only.
 """
 
 from __future__ import annotations

@@ -113,6 +113,22 @@ TRIPLES = StructType(
     ]
 )
 
+# streamed surface facts, one delta partition per micro-batch
+# (streaming/incremental.py): (repo, 'mentions_name', lowered surface) with
+# the number of distinct corpus rows behind it and its max confidence. The
+# two aggregates are nullable because Spark's sum and max are, so the
+# distributed fold and the driver fold write the same declared schema.
+STREAM_FACTS = StructType(
+    [
+        StructField("subj", StringType(), False),
+        StructField("pred", StringType(), False),
+        StructField("obj", StringType(), False),
+        StructField("n_witnesses", LongType(), True),
+        StructField("conf", DoubleType(), True),
+        StructField("batch_id", IntegerType(), False),
+    ]
+)
+
 # checkpoint/metrics table: resume keying per SURVEY.md §2.1 S7
 # (reference's positional pickle resume /root/reference/src/openai_infer.py:169-186
 # replaced by keyed, idempotent stage records).

@@ -10,13 +10,23 @@ Design:
 
 * `readStream` over the corpus directory (explicit CORPUS schema — streaming
   sources cannot infer), sha256 attached at scan (the per-row invariant).
-* `foreachBatch`: each micro-batch runs the SAME fused stage-1 labeler as
-  the batch pipeline (operators/fused.py — one code path, two drivers),
-  folds its PERSON_NAME mentions into (repo, mentions_name, surface) facts
-  and writes them to the ``triple_deltas`` table, recording a checkpoint
-  row per batch (stage "s4-stream"). ``merged_triples`` folds the deltas
-  at read time. Nothing rewrites the delta partitions afterwards: the file
-  count grows with the number of batches, and every read folds them all.
+* `foreachBatch`: each micro-batch is folded into (repo, mentions_name,
+  lowered surface) facts by one pyarrow kernel, ``_fold_facts``, around the
+  SAME fused stage-1 labeler as the batch pipeline (operators/fused_vec.py
+  — one labeler, two drivers). The facts are written to the
+  ``triple_deltas`` table (schemas.STREAM_FACTS) with a checkpoint row per
+  batch (stage "s4-stream"). Which side of one labeler chunk
+  (``fused_vec.COALESCE_ROWS`` rows) the batch falls on picks where the
+  kernel runs:
+  - at or below it, the driver collects the batch in one JVM-only job that
+    also sizes it, folds it, and writes one file: two jobs in all and no
+    Python worker hop, which dominates a small batch's cost;
+  - above it, ``mapInArrow`` runs the kernel on each chunk and one groupBy
+    sums the partial facts. That is exact because row_id is unique per
+    corpus row, so the per-chunk distinct-row counts add up.
+  ``merged_triples`` folds the deltas at read time. Nothing rewrites the
+  delta partitions afterwards: the file count grows with the number of
+  batches, and every read folds them all.
 * **Exactly-once data, at-least-once metrics**: foreachBatch alone is
   at-least-once (a crash between the data write and the offset commit
   re-runs the batch). The data writes are made idempotent by keying every
@@ -38,20 +48,26 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..schemas import CORPUS
+from ..operators import fused_vec
+from ..operators.gazetteer import build_trie
+from ..schemas import CORPUS, STREAM_FACTS
 from ..storage import catalog as cat
 from ..storage import checkpoint as ck
+
+# the kernel's output: STREAM_FACTS before a batch id is attached
+_FOLDED = StructType(STREAM_FACTS.fields[:-1])
 
 
 def read_corpus_stream(spark: SparkSession, corpus_dir: str) -> DataFrame:
     """Streaming scan of the Iceberg-shaped corpus directory (parquet files),
     sha256 attached at scan time (input_hint invariant)."""
     base = [f for f in CORPUS.fields if f.name != "content_sha256"]
-    from pyspark.sql.types import StructType
-
     stream = (
         spark.readStream.schema(StructType(base))
         .option("maxFilesPerTrigger", 16)
@@ -60,44 +76,112 @@ def read_corpus_stream(spark: SparkSession, corpus_dir: str) -> DataFrame:
     return stream.withColumn("content_sha256", F.sha2(F.col("content"), 256))
 
 
+def _fold_facts(rows: pa.Table, trie: dict) -> pa.Table:
+    """(row_id, repo, content) rows -> _FOLDED facts: per (repo, lowered
+    PERSON_NAME mention surface), the number of distinct rows with such a
+    mention and their max confidence. Labels with
+    ``fused_vec.run_arrow_batches`` and no frequency ranks (those emit only
+    NOT_NAME votes, never mentions).
+
+    Surfaces are lowered with Python's ``str.lower``, once per unique
+    surface: it is Spark's ``lower`` on final sigma (ΟΔΟΣ -> οδος) and on
+    dotted capital I (İ -> i̇), where pyarrow's ``utf8_lower`` is not."""
+    labeled = pa.Table.from_batches(
+        fused_vec.run_arrow_batches(
+            rows.select(["row_id", "content"]).to_batches(), trie, {}, []),
+        schema=fused_vec._ARROW_SCHEMA)
+    m = labeled.filter((pc.field("kind") == "m")
+                       & (pc.field("label") == "PERSON_NAME"))
+    surf = m["surface"].combine_chunks().dictionary_encode()
+    low = pa.array([s.lower() for s in surf.dictionary.to_pylist()],
+                   pa.string())
+    at = pc.index_in(m["row_id"], value_set=rows["row_id"].combine_chunks())
+    facts = pa.table({
+        "subj": rows["repo"].take(at),
+        "obj": low.take(surf.indices),
+        "row_id": m["row_id"],
+        "conf": m["confidence"],
+    }).group_by(["subj", "obj"]).aggregate(
+        [("row_id", "count_distinct"), ("conf", "max")])
+    return pa.table({
+        "subj": facts["subj"],
+        "pred": pa.repeat("mentions_name", facts.num_rows),
+        "obj": facts["obj"],
+        "n_witnesses": facts["row_id_count_distinct"],
+        "conf": facts["conf_max"],
+    })
+
+
 def stream_triples(spark: SparkSession, corpus_dir: str, warehouse: str,
                    gazetteer: dict[str, float],
                    run_id: str = "stream") -> None:
-    """Streaming KG maintenance, merge-on-read: each micro-batch runs fused
-    stage 1 and lands its mention-level facts as an APPEND-ONLY delta
-    partition ``batch_id=N`` (dynamic partition overwrite, so a
-    crash-and-retry of batch N replaces its own partition — idempotent,
-    exactly-once per source file); ``merged_triples`` folds the deltas at
-    read time.  The delta facts use only associative-commutative merges
-    (sum of witnesses, max of conf), so merge-on-read over any batch
+    """Streaming KG maintenance, merge-on-read: each micro-batch's
+    mention-level facts land as an APPEND-ONLY delta partition
+    ``batch_id=N`` (dynamic partition overwrite, so a crash-and-retry of
+    batch N replaces its own partition — idempotent, exactly-once per
+    source file); ``merged_triples`` folds the deltas at read time.  The
+    delta facts use only associative-commutative merges (sum of
+    witnesses, max of conf), so merge-on-read over any batch
     decomposition equals the full batch recompute — the invariant the
     tests pin.
+
+    A batch of at most ``fused_vec.COALESCE_ROWS`` rows is collected and
+    folded on the driver by ``_fold_facts`` and written as one file; a
+    larger one runs the same kernel per chunk in ``mapInArrow`` and sums
+    the chunks' facts in one groupBy. Both write STREAM_FACTS. The
+    gazetteer trie is built once per call and serves both sides.
 
     Entity linking / canonicalization (stages 2-3) stay batch: they are
     corpus-global (components over ALL mentions), so the streaming path
     emits surface-level facts and a periodic batch pass re-canonicalizes —
     the standard streaming-extract / batch-consolidate split, documented
     rather than silently approximated."""
-    from ..operators.fused import fused_stage1, split_mentions
     from ..pipeline import _observed_count
 
     os.makedirs(warehouse, exist_ok=True)
     stream = read_corpus_stream(spark, corpus_dir)
+    trie = build_trie(gazetteer)
+    trie_b = spark.sparkContext.broadcast(trie)
+    # one labeler chunk; read here so the workers get it by closure
+    budget = fused_vec.COALESCE_ROWS
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        facts = (
-            split_mentions(fused_stage1(batch_df, gazetteer))
-            .where(F.col("label") == "PERSON_NAME")
-            .join(batch_df.select("row_id", "repo"), "row_id")
-            .groupBy(F.col("repo").alias("subj"),
-                     F.lit("mentions_name").alias("pred"),
-                     F.lower(F.col("surface")).alias("obj"))
-            .agg(F.countDistinct("row_id").alias("n_witnesses"),
-                 F.max("confidence").alias("conf"))
-            .withColumn("batch_id", F.lit(int(batch_id)))
-        )
+        rows = batch_df.select("row_id", "repo", "content")
+        # one task reads at most budget + 1 rows; over several scan
+        # partitions a bare limit adds a single-partition shuffle
+        head = rows.coalesce(1).limit(budget + 1).toArrow()
+        if head.num_rows <= budget:
+            folded = _fold_facts(head, trie)
+            folded = folded.append_column("batch_id", pa.repeat(
+                pa.scalar(int(batch_id), pa.int32()), folded.num_rows))
+            # one file per partition: a local table is otherwise sliced
+            # into defaultParallelism partitions
+            facts = batch_df.sparkSession.createDataFrame(
+                folded, schema=STREAM_FACTS).coalesce(1)
+        else:
+            def fold_chunks(batches):
+                buf, n = [], 0
+                for rb in batches:
+                    buf.append(rb)
+                    n += rb.num_rows
+                    if n >= budget:
+                        yield from _fold_facts(pa.Table.from_batches(buf),
+                                               trie_b.value).to_batches()
+                        buf, n = [], 0
+                if buf:
+                    yield from _fold_facts(pa.Table.from_batches(buf),
+                                           trie_b.value).to_batches()
+
+            facts = (
+                rows.mapInArrow(fold_chunks, _FOLDED)
+                .groupBy("subj", "pred", "obj")
+                .agg(F.sum("n_witnesses").alias("n_witnesses"),
+                     F.max("conf").alias("conf"))
+                .withColumn("batch_id", F.lit(int(batch_id)))
+                .to(STREAM_FACTS)
+            )
         # the write itself yields the row count (one job per batch: a
-        # separate count() would re-run the fused-stage-1 DAG)
+        # separate count() would re-run the batch's plan)
         facts, obs = _observed_count(facts, "s4-stream")
         cat.write_table(facts, warehouse, "triple_deltas",
                         partition_by=["batch_id"], dynamic_overwrite=True)

@@ -4,24 +4,58 @@ delta partition, and merge-on-read equals the batch recompute."""
 
 from __future__ import annotations
 
+import json
+import os
+
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
+from ht_ner_spark.operators import fused_vec
 from ht_ner_spark.operators.fused import fused_stage1, split_mentions
+from ht_ner_spark.schemas import CORPUS, STREAM_FACTS
 from ht_ner_spark.storage import catalog as cat
 from ht_ner_spark.storage.checkpoint import read_checkpoints
 from ht_ner_spark.streaming.incremental import merged_triples, stream_triples
 
 
-def _drop_files(spark, corpus_dir, lo, hi, seed=42):
-    df = synthetic_corpus(spark, hi, seed=seed).where(
+# Cased rows the caps and rule LFs fire on, where lowering is not ASCII:
+# Greek final sigma (ΟΔΟΣ -> οδος) and Turkish dotted I (İ -> i̇), plus
+# empty and null content. Row k lands with the synthetic rows around index
+# 6 * k, so both drains of the merge test get some; ΟΔΟΣ is in both, from
+# one repo, so its witnesses add across batches.
+CASED = [
+    "x = 1  # review by ΟΔΟΣ today and more",
+    "call me İlker when the build is done",
+    "",
+    "my name is ΣΩΚΡΑΤΗΣ and the code is fine",
+    None,
+    "aka İSTANBUL office alias Ιάσονας is done",
+    "again ΟΔΟΣ wrote the ΣΟΦΟΣ parser ok",
+    "named Ωμέγας and ΣΣΣ in the tests",
+]
+
+
+def _corpus(spark, lo, hi, seed=42):
+    """Synthetic rows [lo, hi) plus the CASED rows placed in that range."""
+    base = StructType([f for f in CORPUS.fields if f.name != "content_sha256"])
+    cased = spark.createDataFrame(
+        [(1000 + k, f"cased/{k % 2}", f"doc{k}.txt", "c0", "md", text)
+         for k, text in enumerate(CASED) if lo <= 6 * k < hi], base)
+    return synthetic_corpus(spark, hi, seed=seed).where(
         (F.col("row_id") >= lo) & (F.col("row_id") < hi)
-    ).drop("content_sha256")
-    df.coalesce(1).write.mode("append").parquet(corpus_dir)
+    ).drop("content_sha256").unionByName(cased)
+
+
+def _drop_files(spark, corpus_dir, lo, hi, seed=42):
+    _corpus(spark, lo, hi, seed).coalesce(1).write.mode("append").parquet(
+        corpus_dir)
 
 
 def _facts(corpus):
-    """The per-batch mention facts stream_triples writes, over ``corpus``."""
+    """The per-batch mention facts stream_triples writes, over ``corpus``:
+    the reference plan, with Spark's ``lower``."""
     combined = fused_stage1(corpus, DEFAULT_GAZETTEER)
     return (
         split_mentions(combined)
@@ -40,19 +74,27 @@ def _keyed(rows):
             for r in rows}
 
 
-def test_stream_triples_merge_on_read_equals_batch(spark, tmp_path):
+@pytest.mark.parametrize("budget", [fused_vec.COALESCE_ROWS, 0],
+                         ids=["driver", "distributed"])
+def test_stream_triples_merge_on_read_equals_batch(spark, tmp_path,
+                                                   monkeypatch, budget):
+    """Both sides of the driver-fold budget: the default folds each
+    micro-batch on the driver, 0 sends every batch through mapInArrow."""
+    monkeypatch.setattr(fused_vec, "COALESCE_ROWS", budget)
     corpus_dir = str(tmp_path / "corpus")
     wh = str(tmp_path / "wh")
 
     def batch_expected(hi):
-        return _keyed(_facts(synthetic_corpus(spark, hi, seed=42)).collect())
+        return _keyed(_facts(_corpus(spark, 0, hi)).collect())
 
     def merged():
         return _keyed(merged_triples(spark, wh).collect())
 
     _drop_files(spark, corpus_dir, 0, 30)
     stream_triples(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
-    assert merged() == batch_expected(30)
+    first = merged()
+    assert first == batch_expected(30)
+    assert ("cased/0", "mentions_name", "οδος") in first
 
     # no new files -> drain is a no-op
     stream_triples(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
@@ -61,7 +103,9 @@ def test_stream_triples_merge_on_read_equals_batch(spark, tmp_path):
     # more files -> merge-on-read over deltas == full batch recompute
     _drop_files(spark, corpus_dir, 30, 50)
     stream_triples(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
-    assert merged() == batch_expected(50)
+    final = merged()
+    assert final == batch_expected(50)
+    assert final[("cased/0", "mentions_name", "οδος")][0] == 2
 
     # each batch's checkpoint row counts the rows of its own delta partition
     deltas = cat.read_table(spark, wh, "triple_deltas")
@@ -73,6 +117,16 @@ def test_stream_triples_merge_on_read_equals_batch(spark, tmp_path):
     assert {r["counters"]["batch_id"] for r in rows} == set(per_batch)
     for r in rows:
         assert r["rows_out"] == per_batch[r["counters"]["batch_id"]]
+
+    # either side declares the same delta schema; the driver side writes
+    # one file per batch partition
+    with open(os.path.join(wh, "_meta", "triple_deltas.json")) as f:
+        assert json.load(f)["schema"] == STREAM_FACTS.jsonValue()
+    if budget:
+        for b in per_batch:
+            part = os.path.join(wh, "triple_deltas", f"batch_id={b}")
+            assert len([p for p in os.listdir(part)
+                        if p.endswith(".parquet")]) == 1
 
 
 def test_stream_triples_retried_batch_replaces_partition(spark, tmp_path):
@@ -96,7 +150,7 @@ def test_stream_triples_retried_batch_replaces_partition(spark, tmp_path):
     assert before
 
     # the retry: the same batch's facts written again, the way process does
-    retry = _facts(synthetic_corpus(spark, 30, seed=42)).withColumn(
+    retry = _facts(_corpus(spark, 0, 30)).withColumn(
         "batch_id", F.lit(int(batch_id)))
     cat.write_table(retry, wh, "triple_deltas",
                     partition_by=["batch_id"], dynamic_overwrite=True)
