@@ -5936,8 +5936,10 @@ def q_stream_triples_merge(spark, sf_dir):
 
     corpus = load_documents(spark, sf_dir).where(F.col("row_id") < STREAM_SLICE)
     base = tempfile.mkdtemp(prefix="htner_stream_q_")
-    # the returned frame lazily reads the delta warehouse, so removal must
-    # outlive materialization: defer to process exit (no orphaned
+    # the 2-batch delta table is within merged_triples' driver budget, so
+    # it is read when merged_triples is called; a larger one is read
+    # lazily when the returned frame is materialized, so removal must
+    # outlive that: defer to process exit (no orphaned
     # /tmp/htner_stream_q_* accumulation across driver runs)
     atexit.register(shutil.rmtree, base, ignore_errors=True)
     corpus_dir = os.path.join(base, "corpus")

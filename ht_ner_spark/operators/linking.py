@@ -11,7 +11,7 @@ Design (hand-rolled, pure DataFrame — no ml.Vector detour, SURVEY §7.2.6):
 2. char 3-gram explode;
 3. per (surface, band) minhash: for band b, the signature is
    min(xxhash64(gram, seed=b)) over the surface's grams — groupBy partial agg;
-4. candidates = self-join on (band, signature) bucket — equi-join;
+4. candidates = the surface pairs within each (band, signature) bucket;
    **skew guard**: buckets larger than ``max_block`` are dropped with a
    logged counter (standard LSH practice; "no silent caps");
 5. verify: exact n-gram Jaccard >= ``min_jaccard`` via within-pair set ops;
@@ -24,7 +24,9 @@ whole-stage codegen).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -93,30 +95,54 @@ def minhash_signatures(grams: DataFrame, num_bands: int = 8,
     )
 
 
+def _sized_blocks(signatures: DataFrame) -> DataFrame:
+    """(surface, band, sig, block_size): each signature row with the size
+    of its (band, sig) block."""
+    return signatures.withColumn(
+        "block_size", F.count(F.lit(1)).over(Window.partitionBy("band", "sig"))
+    )
+
+
+def _block_pairs(sized: DataFrame, max_block: int) -> DataFrame:
+    """Distinct (src, dst) surface pairs, src < dst, that share a block of
+    at most ``max_block`` rows.
+
+    Pairs come from each block's sorted member list, not from a self-join
+    on (band, sig): the list's groupBy needs no shuffle after the window
+    and, like everything down to the distinct's shuffle write, reads all
+    of its input, so an Observation on ``sized`` sees every row (a
+    sort-merge join stops reading one side once the other runs out)."""
+    members = (
+        sized.where(F.col("block_size") <= max_block)
+        .groupBy("band", "sig")
+        .agg(F.sort_array(F.collect_list("surface")).alias("m"))
+    )
+    m = F.col("m")
+    pair = F.explode(F.flatten(F.transform(
+        m, lambda x, i: F.transform(
+            F.slice(m, i + 2, F.size(m)),
+            lambda y: F.struct(x.alias("src"), y.alias("dst"))))))
+    return (
+        members.select(pair.alias("p"))
+        .select(F.col("p.src").alias("src"), F.col("p.dst").alias("dst"))
+        .where(F.col("src") < F.col("dst"))
+        .distinct()
+    )
+
+
 def lsh_candidates(signatures: DataFrame, max_block: int = 50) -> tuple[DataFrame, DataFrame]:
-    """Self-join on (band, sig) buckets -> candidate pairs (src < dst).
+    """Bucket on (band, sig) -> candidate pairs (src < dst).
 
     Returns (pairs, dropped_blocks) — blocks larger than max_block are the
     hub-surface skew guard; they are excluded and REPORTED, never silently
     capped (SURVEY §7.3.3)."""
-    sized = signatures.withColumn(
-        "block_size", F.count(F.lit(1)).over(Window.partitionBy("band", "sig"))
-    )
+    sized = _sized_blocks(signatures)
     dropped = (
         sized.where(F.col("block_size") > max_block)
         .groupBy("band", "sig")
         .agg(F.max("block_size").alias("block_size"))
     )
-    ok = sized.where(F.col("block_size") <= max_block).select("surface", "band", "sig")
-    a = ok.alias("a")
-    b = ok.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig")))
-        .where(F.col("a.surface") < F.col("b.surface"))
-        .select(F.col("a.surface").alias("src"), F.col("b.surface").alias("dst"))
-        .distinct()
-    )
-    return pairs, dropped
+    return _block_pairs(sized, max_block), dropped
 
 
 def jaccard_verify(pairs: DataFrame, n: int = 3, min_jaccard: float = 0.4) -> DataFrame:
@@ -135,22 +161,36 @@ def jaccard_verify(pairs: DataFrame, n: int = 3, min_jaccard: float = 0.4) -> Da
 
 def link_surfaces(mentions: DataFrame, num_bands: int = 8,
                   min_jaccard: float = 0.5, max_block: int = 50
-                  ) -> tuple[DataFrame, DataFrame]:
-    """mentions -> (edges(src,dst,sim), dropped_blocks). Edges connect alias
-    surface variants (lower-cased) over char 3-grams with the xxhash64
-    signatures; exact-equality duplicates collapse in the initial
-    distinct."""
+                  ) -> tuple[DataFrame, Callable[[int], int]]:
+    """mentions -> (edges(src,dst,sim), dropped_blocks). Edges connect
+    alias surface variants (lower-cased) over char 3-grams with the
+    xxhash64 signatures; exact-equality duplicates collapse in the initial
+    distinct.
+
+    ``dropped_blocks(n_edges)``, called once the edges are computed with
+    their row count, is the number of blocks over ``max_block``
+    (``lsh_candidates``' dropped frame). The job that computes the edges
+    counts them in an Observation: each row of such a block adds
+    1/block_size. When no candidate pair reaches the edges' shuffle, AQE
+    replaces that empty stage, and the observation under it, with an
+    empty relation; with no edges the blocks are counted by a job."""
     surfaces = mentions.select(F.lower(F.col("surface")).alias("surface")).distinct()
     grams = surface_grams(surfaces)
     sigs = minhash_signatures(grams, num_bands=num_bands)
-    # materialize once: both downstream branches (candidate pairs AND the
-    # dropped-block report) read the signatures; localCheckpoint (unlike
-    # persist) is auto-released by the ContextCleaner when dereferenced, so
-    # repeated pipeline runs in one session don't accumulate cache entries.
-    sigs = sigs.localCheckpoint()
-    pairs, dropped = lsh_candidates(sigs, max_block=max_block)
-    edges = jaccard_verify(pairs, min_jaccard=min_jaccard)
-    return edges, dropped
+    seen = Observation("s2_dropped_blocks")
+    big = F.col("block_size") > max_block
+    sized = _sized_blocks(sigs).observe(seen, F.round(F.coalesce(
+        F.sum(F.when(big, 1.0 / F.col("block_size"))), F.lit(0.0))
+    ).cast("long").alias("n"))
+    edges = jaccard_verify(_block_pairs(sized, max_block),
+                           min_jaccard=min_jaccard)
+
+    def dropped_blocks(n_edges: int) -> int:
+        if n_edges:
+            return seen.get["n"]
+        return lsh_candidates(sigs, max_block=max_block)[1].count()
+
+    return edges, dropped_blocks
 
 
 def blocking_quality(cand_pairs: DataFrame, grams: DataFrame,

@@ -309,13 +309,13 @@ def run(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
     # ---- stage 2
     if "s2" not in done:
         with _timed(timings, "s2"):
-            edges, dropped = link_surfaces(mentions)
+            edges, dropped_blocks = link_surfaces(mentions)
             edges, obs = _observed_count(edges, "s2")
             cat.write_table(edges, wh, "edges")
-            n_dropped = dropped.count()
-            ck.record_stage(spark, wh, cfg.run_id, "s2",
-                            rows_out=obs.get["n"],
-                            counters={"dropped_blocks": n_dropped})
+            n_edges = obs.get["n"]
+            ck.record_stage(spark, wh, cfg.run_id, "s2", rows_out=n_edges,
+                            counters={"dropped_blocks":
+                                      dropped_blocks(n_edges)})
     edges = cat.read_table(spark, wh, "edges")
 
     # ---- stage 3

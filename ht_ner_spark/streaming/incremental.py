@@ -24,9 +24,13 @@ Design:
   - above it, ``mapInArrow`` runs the kernel on each chunk and one groupBy
     sums the partial facts. That is exact because row_id is unique per
     corpus row, so the per-chunk distinct-row counts add up.
-  ``merged_triples`` folds the deltas at read time. Nothing rewrites the
-  delta partitions afterwards: the file count grows with the number of
-  batches, and every read folds them all.
+* ``merged_triples`` folds the deltas when it is called (merge-on-read),
+  on the same budget: a ``triple_deltas`` table of at most
+  ``fused_vec.COALESCE_ROWS`` rows is read on the driver
+  (``catalog.read_arrow``, no Spark job) and grouped with pyarrow, a
+  larger one by a Spark groupBy. Nothing rewrites the delta partitions
+  afterwards: the file count grows with the number of batches, and every
+  read folds them all.
 * **Exactly-once data, at-least-once metrics**: foreachBatch alone is
   at-least-once (a crash between the data write and the offset commit
   re-runs the batch). The data writes are made idempotent by keying every
@@ -52,7 +56,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from ..operators import fused_vec
 from ..operators.gazetteer import build_trie
@@ -62,6 +66,10 @@ from ..storage import checkpoint as ck
 
 # the kernel's output: STREAM_FACTS before a batch id is attached
 _FOLDED = StructType(STREAM_FACTS.fields[:-1])
+# the merged view: _FOLDED with nullable keys, since Spark reads every
+# column of a file source as nullable; both merge sides declare it
+_MERGED = StructType([StructField(f.name, f.dataType, True)
+                      for f in _FOLDED.fields])
 
 
 def read_corpus_stream(spark: SparkSession, corpus_dir: str) -> DataFrame:
@@ -158,6 +166,7 @@ def stream_triples(spark: SparkSession, corpus_dir: str, warehouse: str,
             # into defaultParallelism partitions
             facts = batch_df.sparkSession.createDataFrame(
                 folded, schema=STREAM_FACTS).coalesce(1)
+            n_out, obs = folded.num_rows, None
         else:
             def fold_chunks(batches):
                 buf, n = [], 0
@@ -180,14 +189,16 @@ def stream_triples(spark: SparkSession, corpus_dir: str, warehouse: str,
                 .withColumn("batch_id", F.lit(int(batch_id)))
                 .to(STREAM_FACTS)
             )
-        # the write itself yields the row count (one job per batch: a
-        # separate count() would re-run the batch's plan)
-        facts, obs = _observed_count(facts, "s4-stream")
+            # the write itself yields the row count (a separate count()
+            # would re-run the batch's plan)
+            facts, obs = _observed_count(facts, "s4-stream")
         cat.write_table(facts, warehouse, "triple_deltas",
                         partition_by=["batch_id"], dynamic_overwrite=True)
+        if obs is not None:
+            n_out = obs.get["n"]
         ck.record_stage(
             spark, warehouse, run_id, "s4-stream",
-            rows_out=int(obs.get["n"]),
+            rows_out=int(n_out),
             counters={"batch_id": int(batch_id), **ck.LINEAGE_SOURCE_BATCH},
         )
 
@@ -203,9 +214,24 @@ def stream_triples(spark: SparkSession, corpus_dir: str, warehouse: str,
 
 def merged_triples(spark: SparkSession, warehouse: str) -> DataFrame:
     """Merge-on-read view of the streamed triple deltas: one row per
-    (subj, pred, obj) with summed witnesses and max confidence, read
-    over every ``batch_id`` delta partition."""
+    (subj, pred, obj) with summed witnesses and max confidence over every
+    ``batch_id`` delta partition, as ``_MERGED``.
+
+    A delta table of at most ``fused_vec.COALESCE_ROWS`` rows (the
+    stream's one driver budget) is read and folded with pyarrow when this
+    is called, and the view is a local relation: collecting it runs no
+    Spark job, and later writes to the table do not change it. A larger
+    table is folded lazily by a Spark groupBy over ``read_table``."""
+    t = cat.read_arrow(spark, warehouse, "triple_deltas",
+                       fused_vec.COALESCE_ROWS)
+    if t is not None:
+        m = t.group_by(["subj", "pred", "obj"]).aggregate(
+            [("n_witnesses", "sum"), ("conf", "max")])
+        return spark.createDataFrame(pa.table({
+            "subj": m["subj"], "pred": m["pred"], "obj": m["obj"],
+            "n_witnesses": m["n_witnesses_sum"], "conf": m["conf_max"],
+        }), schema=_MERGED)
     d = cat.read_table(spark, warehouse, "triple_deltas")
     return d.groupBy("subj", "pred", "obj").agg(
         F.sum("n_witnesses").alias("n_witnesses"),
-        F.max("conf").alias("conf"))
+        F.max("conf").alias("conf")).to(_MERGED)

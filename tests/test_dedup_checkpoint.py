@@ -5,7 +5,10 @@ unauditable)."""
 from pyspark.sql import functions as F
 
 from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
-from ht_ner_spark.pipeline import PipelineConfig, run
+from ht_ner_spark.operators.linking import (lsh_candidates,
+                                             minhash_signatures,
+                                             surface_grams)
+from ht_ner_spark.pipeline import PipelineConfig, _read_mentions, run
 from ht_ner_spark.storage.checkpoint import read_checkpoints
 
 from .test_fused import edge_rows_corpus
@@ -30,7 +33,14 @@ def test_run_records_s2_dropped_blocks(spark, tmp_path):
     gaz = {**DEFAULT_GAZETTEER, **{s: 0.9 for s in HUB_SURFACES}}
     hub_wh = str(tmp_path / "hub")
     t = run(spark, hub, PipelineConfig(warehouse=hub_wh, gazetteer=gaz))
-    assert _stage_row(spark, hub_wh, "s2")["counters"]["dropped_blocks"] > 0
+    n_dropped = _stage_row(spark, hub_wh, "s2")["counters"]["dropped_blocks"]
+    assert n_dropped > 0
+    # the count observed on the edges write is lsh_candidates' dropped
+    # frame over the same signatures
+    surfaces = _read_mentions(spark, hub_wh).select(
+        F.lower("surface").alias("surface")).distinct()
+    sigs = minhash_signatures(surface_grams(surfaces))
+    assert n_dropped == lsh_candidates(sigs)[1].count()
     assert t.where(F.col("pred") == "alias_of").count() > 0
     assert _stage_row(spark, hub_wh, "s4")["sha_ok"]
     # on the plain corpus nothing is dropped

@@ -2,6 +2,7 @@
 
 import itertools
 
+import pytest
 from pyspark.sql import functions as F
 
 from ht_ner_spark.operators.components import connected_components
@@ -50,7 +51,8 @@ def test_lsh_recall_vs_bruteforce(spark):
     """With enough bands the banded join must recover every pair whose true
     Jaccard clears the verify threshold (pinned fixture, deterministic)."""
     m = _mentions_df(spark)
-    edges, dropped = link_surfaces(m, num_bands=24, min_jaccard=0.4, max_block=50)
+    edges, dropped_blocks = link_surfaces(m, num_bands=24, min_jaccard=0.4,
+                                          max_block=50)
     got = {(r["src"], r["dst"]) for r in edges.collect()}
     # brute force over distinct lowered surfaces
     low = sorted({s.lower() for s in SURFACES})
@@ -61,7 +63,28 @@ def test_lsh_recall_vs_bruteforce(spark):
             want.add((min(a, b), max(a, b)))
     assert want == got
     assert ("carol", "karol") in got and ("mary ann", "maryann") in got
-    assert dropped.count() == 0
+    assert dropped_blocks(len(got)) == 0
+
+
+@pytest.mark.parametrize("max_block", [1, 2])
+def test_link_surfaces_counts_dropped_blocks(spark, max_block):
+    """The dropped-block count equals lsh_candidates' dropped frame both
+    when edges exist (observed on the edges job) and when the cap leaves
+    no candidate pair (AQE drops the empty stage with its observation)."""
+    # six near-identical surfaces: blocks of up to 6 rows in most bands
+    rows = [(i, "dictionary", 0, 1, s, "PERSON_NAME", 0.5, 0.5)
+            for i, s in enumerate(SURFACES + [f"bartholomewx{c}"
+                                              for c in "abcdef"])]
+    m = spark.createDataFrame(rows, MENTION_SCHEMA)
+    edges, dropped_blocks = link_surfaces(m, num_bands=24, min_jaccard=0.4,
+                                          max_block=max_block)
+    n_edges = len(edges.collect())
+    assert (n_edges > 0) == (max_block > 1)
+    surfaces = m.select(F.lower("surface").alias("surface")).distinct()
+    sigs = minhash_signatures(surface_grams(surfaces), num_bands=24)
+    want = lsh_candidates(sigs, max_block=max_block)[1].count()
+    assert want > 0
+    assert dropped_blocks(n_edges) == want
 
 
 def test_lsh_max_block_drops_and_reports(spark):

@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ht_ner_spark.corpus import DEFAULT_GAZETTEER, synthetic_corpus
@@ -17,7 +19,8 @@ from ht_ner_spark.operators.fused import fused_stage1, split_mentions
 from ht_ner_spark.schemas import CORPUS, STREAM_FACTS
 from ht_ner_spark.storage import catalog as cat
 from ht_ner_spark.storage.checkpoint import read_checkpoints
-from ht_ner_spark.streaming.incremental import merged_triples, stream_triples
+from ht_ner_spark.streaming.incremental import (_MERGED, merged_triples,
+                                                stream_triples)
 
 
 # Cased rows the caps and rule LFs fire on, where lowering is not ASCII:
@@ -78,8 +81,9 @@ def _keyed(rows):
                          ids=["driver", "distributed"])
 def test_stream_triples_merge_on_read_equals_batch(spark, tmp_path,
                                                    monkeypatch, budget):
-    """Both sides of the driver-fold budget: the default folds each
-    micro-batch on the driver, 0 sends every batch through mapInArrow."""
+    """Both sides of the driver budget: the default folds each micro-batch
+    and the merged view on the driver, 0 sends every batch through
+    mapInArrow and merges with a Spark groupBy."""
     monkeypatch.setattr(fused_vec, "COALESCE_ROWS", budget)
     corpus_dir = str(tmp_path / "corpus")
     wh = str(tmp_path / "wh")
@@ -88,7 +92,9 @@ def test_stream_triples_merge_on_read_equals_batch(spark, tmp_path,
         return _keyed(_facts(_corpus(spark, 0, hi)).collect())
 
     def merged():
-        return _keyed(merged_triples(spark, wh).collect())
+        view = merged_triples(spark, wh)
+        assert view.schema == _MERGED
+        return _keyed(view.collect())
 
     _drop_files(spark, corpus_dir, 0, 30)
     stream_triples(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
@@ -127,6 +133,63 @@ def test_stream_triples_merge_on_read_equals_batch(spark, tmp_path,
             part = os.path.join(wh, "triple_deltas", f"batch_id={b}")
             assert len([p for p in os.listdir(part)
                         if p.endswith(".parquet")]) == 1
+
+
+@pytest.mark.parametrize("budget", [fused_vec.COALESCE_ROWS, 0],
+                         ids=["driver", "distributed"])
+def test_stream_triples_drain_without_facts(spark, tmp_path, monkeypatch,
+                                            budget):
+    """A drain whose rows hold no mention (empty and null content) writes
+    no fact, and the merged view is empty with the declared schema."""
+    monkeypatch.setattr(fused_vec, "COALESCE_ROWS", budget)
+    corpus_dir = str(tmp_path / "corpus")
+    wh = str(tmp_path / "wh")
+    base = StructType([f for f in CORPUS.fields if f.name != "content_sha256"])
+    spark.createDataFrame(
+        [(1, "r/0", "a.txt", "c0", "md", ""),
+         (2, "r/1", "b.txt", "c0", "md", None)], base,
+    ).coalesce(1).write.parquet(corpus_dir)
+    stream_triples(spark, corpus_dir, wh, DEFAULT_GAZETTEER)
+    (row,) = read_checkpoints(spark, wh).where(
+        F.col("stage") == "s4-stream").collect()
+    assert row["rows_out"] == 0
+    view = merged_triples(spark, wh)
+    assert view.schema == _MERGED
+    assert view.collect() == []
+
+
+def test_read_arrow_budget_and_hidden_entries(spark, tmp_path):
+    """read_arrow returns the table within its row budget and None over
+    it, and reads no file under a name starting with '.' or '_' (a
+    writer's staging directory, _SUCCESS, checksums)."""
+    wh = str(tmp_path / "wh")
+    facts = spark.createDataFrame(
+        [("r/0", "mentions_name", "ann", 1, 0.5, 0),
+         ("r/0", "mentions_name", "ann", 2, 0.9, 1),
+         ("r/1", "mentions_name", "bob", 1, 0.7, 1)], STREAM_FACTS)
+    cat.write_table(facts.coalesce(1), wh, "triple_deltas", partition_by=["batch_id"],
+                    dynamic_overwrite=True)
+    table = os.path.join(wh, "triple_deltas")
+    # a job marker (not parquet), and a copy of a batch's data file left
+    # in a staging directory
+    with open(os.path.join(table, "_SUCCESS"), "w") as f:
+        f.write("not parquet")
+    part = os.path.join(table, "batch_id=1")
+    (data,) = [f for f in os.listdir(part) if f.endswith(".parquet")]
+    staged = os.path.join(table, ".spark-staging-1", "batch_id=1")
+    os.makedirs(staged)
+    shutil.copy(os.path.join(part, data), staged)
+
+    got = cat.read_arrow(spark, wh, "triple_deltas", 3)
+    assert got.schema == to_arrow_schema(STREAM_FACTS)
+    assert sorted(got.to_pylist(), key=str) == sorted(
+        (r.asDict() for r in cat.read_table(
+            spark, wh, "triple_deltas").collect()), key=str)
+    assert got.num_rows == 3
+    assert cat.read_arrow(spark, wh, "triple_deltas", 2) is None
+    assert _keyed(merged_triples(spark, wh).collect()) == {
+        ("r/0", "mentions_name", "ann"): (3, 0.9),
+        ("r/1", "mentions_name", "bob"): (1, 0.7)}
 
 
 def test_stream_triples_retried_batch_replaces_partition(spark, tmp_path):
